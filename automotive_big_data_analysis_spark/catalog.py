@@ -86,26 +86,43 @@ TESTDATA_TABLES = [
 ]
 
 
-# Columns stored as INT64 TIMESTAMP(NANOS) in parquet. How Spark reads them
-# differs by version: 3.x rejects them unless
-# ``spark.sql.legacy.parquet.nanosAsLong`` is on (then: LongType epoch-ns);
-# 4.1+ reads them natively as TimestampNTZType and the legacy conf is a
-# no-op. Both shapes are normalized to TimestampType (µs precision — the
-# same truncation DuckDB applies) so downstream epoch casts
-# (``cast('long')`` / ``cast('double')``) work uniformly.
-_NANOS_TS_COLUMNS = {"events": ["ts"]}
+# Columns stored as naive parquet timestamps (INT64 TIMESTAMP(MICROS),
+# isAdjustedToUTC=false). Spark reads them as TimestampNTZType;
+# :func:`ntz_to_instant` turns them into TimestampType so downstream epoch
+# casts (``cast('long')`` / ``cast('double')``) work uniformly. Spark 4.1
+# rejects TIMESTAMP(NANOS) files with PARQUET_TYPE_ILLEGAL (a loud error,
+# never a silent misread).
+_NAIVE_TS_COLUMNS = {"events": ["ts"]}
+
+
+def ntz_to_instant(df: DataFrame, col: str) -> DataFrame:
+    """Read a naive ``TimestampNTZType`` column as a UTC instant
+    (``TimestampType``), the oracle's naive-as-UTC reading. Other column
+    types pass through unchanged.
+
+    A plain ``cast('timestamp')`` interprets the wall clock in the session
+    time zone; subtracting the NTZ epoch gives a zone-free interval, and
+    adding it to the instant epoch keeps the result zone-free too, so no
+    session conf is read or written."""
+    if not isinstance(df.schema[col].dataType, T.TimestampNTZType):
+        return df
+    return df.withColumn(
+        col,
+        F.expr(
+            f"timestamp_seconds(0) + ({col} - timestamp_ntz'1970-01-01 00:00:00')"
+        ),
+    )
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one corpus table. Parquet scan → column pruning and predicate
     pushdown are free once downstream operators project/filter.
 
-    Works on ANY session, not just ones built by :func:`get_spark`: every
-    conf touched here is runtime-settable, so no build-time configuration
-    is required. For nanos timestamp columns (see ``_NANOS_TS_COLUMNS``)
-    the session time zone is pinned to UTC before the NTZ→timestamp
-    normalization so absolute-epoch arithmetic (``cast(ts as long)``)
-    agrees with DuckDB's ``EPOCH()`` regardless of host time zone.
+    Works on ANY session, not just ones built by :func:`get_spark`, and
+    reads and writes no session conf. Naive timestamp columns (see
+    ``_NAIVE_TS_COLUMNS``) are normalized by :func:`ntz_to_instant`, so
+    absolute-epoch arithmetic (``cast(ts as long)``) agrees with DuckDB's
+    ``EPOCH()`` regardless of the session time zone.
 
     The ANALYZED DataFrame is memoized per (session, sf_dir, table):
     ``spark.read.parquet`` pays a driver-side footer/schema read plus
@@ -124,63 +141,28 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     fingerprint and the stale plan (with its frozen file listing) is
     dropped rather than served. This keeps the documented
     ``release()``/corpus-refresh contract without the release hooks
-    having to know about this memo."""
+    having to know about this memo.
+
+    Concurrency: safe to call from driver threads without a lock. The
+    memo is a plain dict whose get/setdefault/item assignment are each
+    atomic under the GIL, so it holds at most one entry per
+    (sf_dir, table). Two threads that miss at once both build the
+    DataFrame and the last write wins; a duplicate build is benign
+    because both plans read the same files and touch no shared state."""
     from automotive_big_data_analysis_spark.sources.stored import (
         source_fingerprint,
     )
 
-    memo = getattr(spark, "_abda_table_memo", None)
-    if memo is None:
-        memo = {}
-        spark._abda_table_memo = memo
+    memo = vars(spark).setdefault("_abda_table_memo", {})
     key = (sf_dir, name)
     fp = source_fingerprint(sf_dir, name)
     cached = memo.get(key)
     if cached is not None and cached[0] == fp:
         return cached[1]
-    df = _load_table_fresh(spark, sf_dir, name)
+    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    for col in _NAIVE_TS_COLUMNS.get(name, []):
+        df = ntz_to_instant(df, col)
     memo[key] = (fp, df)
-    return df
-
-
-def _load_table_fresh(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    path = f"{sf_dir}/{name}.parquet"
-    if name in _NANOS_TS_COLUMNS:
-        try:
-            # Spark 3.x needs this to read INT64 TIMESTAMP(NANOS) at all;
-            # harmless no-op on 4.1+ (kept for version portability).
-            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        except Exception:
-            pass
-    try:
-        df = spark.read.parquet(path)
-    except Exception as exc:  # AnalysisException: PARQUET_TYPE_ILLEGAL
-        if "PARQUET_TYPE_ILLEGAL" not in str(exc):
-            raise
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(path)
-    for col in _NANOS_TS_COLUMNS.get(name, []):
-        dt = df.schema[col].dataType
-        if isinstance(dt, T.LongType):
-            # Spark 3.x + nanosAsLong: epoch-ns longs. `div` = integer
-            # division; float division would lose precision (ns-epoch
-            # values exceed double's 2^53 exact-integer range).
-            df = df.withColumn(col, F.expr(f"timestamp_micros({col} div 1000)"))
-        elif isinstance(dt, T.TimestampNTZType):
-            # Spark 4.1+: native NTZ read. NTZ→timestamp interprets the
-            # wall-clock in the session zone — pin UTC around the cast so
-            # the resulting epoch values are zone-independent and match
-            # the oracle's naive-as-UTC reading. The zone is captured at
-            # ANALYSIS time (withColumn resolves eagerly; verified by
-            # executing under a different session zone), so restoring the
-            # prior value keeps unrelated queries' timestamp semantics —
-            # year()/date extraction over instant columns — untouched.
-            prior_tz = spark.conf.get("spark.sql.session.timeZone")
-            spark.conf.set("spark.sql.session.timeZone", "UTC")
-            try:
-                df = df.withColumn(col, F.col(col).cast("timestamp"))
-            finally:
-                spark.conf.set("spark.sql.session.timeZone", prior_tz)
     return df
 
 

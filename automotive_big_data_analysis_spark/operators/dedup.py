@@ -602,60 +602,46 @@ def _component_labels_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     a billion-edge graph (this is the standard large-scale CC layout);
     ``localCheckpoint`` truncates the growing lineage each round.
 
-    The loop's shuffle width is sized to the GRAPH, not the corpus: the
-    pair graph is orders of magnitude smaller than its input, and
-    ``localCheckpoint`` materializes at the static shuffle width (AQE
-    coalescing doesn't reach it), so iterating a few-hundred-edge graph
-    at corpus width turns each round into pure task-scheduling overhead
-    (measured 2.7 s → 0.7 s at sf0.1). The pair list is already cached,
-    so the sizing count is free; a billion-edge graph gets full width."""
+    The loop runs at the session shuffle width: AQE coalesces each
+    round's shuffle to the size of the graph before ``localCheckpoint``
+    materializes it, so a few-hundred-edge graph iterates on a partition
+    or two while a billion-edge graph gets full width."""
     pairs = ngram_jaccard_pairs(spark, sf_dir).select("doc_a", "doc_b")
-    defaults = spark.sparkContext.defaultParallelism
-    n_parts = max(1, min(defaults, pairs.count() // 65_536 + 1))
     edges = (
         pairs.union(pairs.select(F.col("doc_b"), F.col("doc_a")))
         .toDF("src", "dst")
         .cache()
     )
-    prior_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(n_parts))
-    try:
-        labels = (
-            edges.select(F.col("src").alias("doc_id"))
-            .distinct()
-            .withColumn("label", F.col("doc_id"))
+    labels = (
+        edges.select(F.col("src").alias("doc_id"))
+        .distinct()
+        .withColumn("label", F.col("doc_id"))
+        .localCheckpoint()
+    )
+    for _ in range(CC_MAX_ITERS):
+        neighbor_min = (
+            edges.join(labels, edges.dst == labels.doc_id)
+            .groupBy("src")
+            .agg(F.min("label").alias("nmin"))
+        )
+        # carry the previous label through the checkpoint so convergence
+        # is a scan of the just-materialized round, not a second
+        # join-and-recompute of it (that doubled per-round work)
+        stepped = (
+            labels.join(neighbor_min, labels.doc_id == neighbor_min.src, "left")
+            .select(
+                "doc_id",
+                F.col("label").alias("_prev"),
+                F.least(
+                    F.col("label"), F.coalesce(F.col("nmin"), F.col("label"))
+                ).alias("label"),
+            )
             .localCheckpoint()
         )
-        for _ in range(CC_MAX_ITERS):
-            neighbor_min = (
-                edges.join(labels, edges.dst == labels.doc_id)
-                .groupBy("src")
-                .agg(F.min("label").alias("nmin"))
-            )
-            # carry the previous label through the checkpoint so
-            # convergence is a scan of the just-materialized round, not a
-            # second join-and-recompute of it (that doubled per-round work)
-            stepped = (
-                labels.join(
-                    neighbor_min, labels.doc_id == neighbor_min.src, "left"
-                )
-                .select(
-                    "doc_id",
-                    F.col("label").alias("_prev"),
-                    F.least(
-                        F.col("label"), F.coalesce(F.col("nmin"), F.col("label"))
-                    ).alias("label"),
-                )
-                .localCheckpoint()
-            )
-            changed = (
-                stepped.where(F.col("label") != F.col("_prev")).limit(1).count()
-            )
-            labels = stepped.select("doc_id", "label")
-            if changed == 0:
-                break
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prior_parts)
+        changed = stepped.where(F.col("label") != F.col("_prev")).limit(1).count()
+        labels = stepped.select("doc_id", "label")
+        if changed == 0:
+            break
     # labels are materialized checkpoints — the edge cache is no longer an
     # input of the returned plan, so don't leave it resident
     edges.unpersist()

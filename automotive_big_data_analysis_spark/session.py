@@ -53,10 +53,6 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.filterPushdown", "true")
-        # Some corpus files carry INT64 TIMESTAMP(NANOS) columns, which the
-        # vectorized reader rejects; read them as long nanos and let the
-        # catalog normalize to TimestampType (µs, matching the oracle).
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.parquet.aggregatePushdown", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))

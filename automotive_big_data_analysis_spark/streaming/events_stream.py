@@ -44,11 +44,11 @@ def read_event_stream(spark: SparkSession, path: str) -> DataFrame:
 
     Handles both layouts the corpus uses: a parquet *directory* (normal
     streaming source) and a single parquet *file* (FileStreamSource wants
-    a directory, so stream the parent with a ``pathGlobFilter``). Files
-    storing ``ts`` as INT64 TIMESTAMP(NANOS) arrive as longs (see
-    ``session.py`` nanosAsLong) and are normalized to µs timestamps with
-    the same integer division the batch catalog applies."""
-    import os
+    a directory, so stream the parent with a ``pathGlobFilter``). A naive
+    ``ts`` (the corpus ``events`` layout) gets the batch catalog's
+    normalization (``ntz_to_instant``), so the stream's ``ts`` equals
+    ``load_table``'s."""
+    from automotive_big_data_analysis_spark.catalog import ntz_to_instant
 
     reader = spark.readStream.option("maxFilesPerTrigger", 8)
     src = path
@@ -57,9 +57,7 @@ def read_event_stream(spark: SparkSession, path: str) -> DataFrame:
         reader = reader.option("pathGlobFilter", os.path.basename(path))
     # probe the physical schema batch-side: streaming needs it declared
     physical = spark.read.parquet(path).schema
-    stream = reader.schema(physical).parquet(src)
-    if isinstance(physical["ts"].dataType, T.LongType):
-        stream = stream.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
+    stream = ntz_to_instant(reader.schema(physical).parquet(src), "ts")
     return stream.select([f.name for f in EVENT_SCHEMA.fields])
 
 
@@ -358,42 +356,6 @@ def conversion_stream(
     ).select("user_id", "click_id", "purchase_id", "click_ts", "purchase_ts", "value")
 
 
-# Shuffle-partition count scoped to the streaming gates: every stateful
-# streaming operator maintains ONE state store per shuffle partition, and
-# every micro-batch checkpoints every store — so the gates' constant
-# factor is (stores x partitions x micro-batches) of checkpoint I/O. At
-# the session default of 32, the stream-stream join gate paid eight state
-# stores x 32 partitions x 4 micro-batches for a 100k-event replay
-# (~7 s); the aggregate/join VALUES are partitioning-independent (the
-# hash gates prove it), so the harness runs the stream at a bounded
-# count sized to the replay, not the batch session. Production sizes
-# this to the cluster and the keyspace, same knob.
-# Round-12 probe (r11 VERDICT item 7), warm quiet-probe A/B over all
-# seven gates at sf0.1: 8 → 22.9/23.6 s, 4 → 22.2/21.6 s, 2 → no
-# further gain (24.9 s cold-ordered run); hashes byte-identical at
-# every width. 4 was the knee — below it per-store checkpoint savings
-# stopped paying for lost replay parallelism.
-# Round-13 re-probe AFTER the checkpoints moved to node-local scratch
-# (/dev/shm): the per-store fsync cost that set the r12 knee is gone,
-# so state-pass parallelism wins again — evict-gate A/B 1 → 13.1 s,
-# 2 → 10.0, 4 → 8.6, 8 → 7.0; all-seven-gates sweep 4 → 26.5-27.1 s,
-# 16 → 23.9, 32 → 24.4.
-# Round-14 re-validation (r13 VERDICT item 2 — the driver's clean
-# full-suite run contradicted the 16 pick): cold-PROCESS sweeps
-# (scripts/ab_stream_cold.py, fresh JVM per config, all seven gates in
-# bench order, cold + warm rep, two interleaved rounds, quiet probes
-# 0.09-0.13): cold totals 16 → 30.0/29.9 s, 8 → 27.3/27.4, 4 →
-# 28.0/29.0; warm totals 16 → 21.7/20.8, 8 → 19.4/19.7, 4 → 20.2/20.0.
-# 8 wins BOTH brackets in BOTH rounds — the r13 pick of 16 was a
-# warm-pin artifact (isolated pins miss the per-store setup cost a
-# cold suite pays). Scratch re-checked at 8: /dev/shm 27.3/19.4 vs
-# disk 28.0-28.3/19.6-21.2 — shm stays. Hashes identical at every
-# width (the gates prove partition-independence). Production sizes
-# this to the cluster and keyspace via the env knob.
-STREAM_SHUFFLE_PARTITIONS = int(
-    os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS", "8")
-)
-
 # Scratch root for the BOUNDED-replay gates' checkpoints. Without an
 # explicit checkpointLocation Spark puts the temp checkpoint under
 # java.io.tmpdir (/tmp — disk-backed on this host), and every
@@ -429,26 +391,15 @@ def run_to_memory(
     stream_df: DataFrame,
     query_name: str,
     output_mode: str = "append",
-    shuffle_partitions: int | None = STREAM_SHUFFLE_PARTITIONS,
 ) -> DataFrame:
     """Drive a bounded stream to completion into an in-memory table and
-    return the batch DataFrame of results (test/demo harness). The
-    shuffle-partition override is captured by the streaming query at
-    start and restored for the session afterwards — batch plans issued
-    SEQUENTIALLY in the same session never see it. NOT concurrency-safe
-    (round-9 ADVICE): the set/restore mutates session-global conf, so a
-    batch query or second stream planned CONCURRENTLY in this session
-    would silently pick up the bounded value — fine in this repo's
-    single-threaded harness/tests by construction; a concurrent harness
-    would scope the override via a cloned SparkSession
-    (``spark.newSession()`` shares the catalog but isolates conf)
-    instead of set/restore."""
+    return the batch DataFrame of results (test/demo harness). Stateful
+    operators keep one state store per shuffle partition at the session
+    width. The session conf is neither read nor written, so queries
+    planned concurrently in the same session are unaffected."""
     import shutil
 
     spark = stream_df.sparkSession
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    if shuffle_partitions is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
     ckpt = _scratch_checkpoint()
     try:
         writer = stream_df.writeStream.outputMode(output_mode)
@@ -460,8 +411,6 @@ def run_to_memory(
         finally:
             q.stop()
     finally:
-        if shuffle_partitions is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
         if ckpt is not None:
             shutil.rmtree(ckpt, ignore_errors=True)
     return spark.sql(f"SELECT * FROM {query_name}")
@@ -577,21 +526,7 @@ def stream_conversions(spark: SparkSession, sf_dir: str) -> DataFrame:
     # holds only the columns the accounting reads (the two timestamps
     # exist to express the join condition, not the result).
     name = f"stream_conv_{uuid.uuid4().hex[:8]}"
-    # Half the family width for THIS gate: a stream-stream join keeps
-    # state on BOTH sides, so per-batch commit cost is 2× the aggregate
-    # gates' per partition, while its keyspace (users) is no larger.
-    # Round-14 cold-process sweep, 4 reps each: width 4 → 6.46/6.42 s
-    # cold, 2.69/2.66 warm; width 8 → 6.91/6.79 cold, 3.02/2.96 warm —
-    # the join gate alone prefers the narrower width on every rep while
-    # the aggregate/evict gates prefer the family default. Derived from
-    # the env-overridable family knob, so production scaling carries
-    # the same 2-sides-per-key discount.
-    out = run_to_memory(
-        joined,
-        name,
-        output_mode="append",
-        shuffle_partitions=max(1, STREAM_SHUFFLE_PARTITIONS // 2),
-    )
+    out = run_to_memory(joined, name, output_mode="append")
     rows = out.groupBy("user_id").agg(
         F.count("*").alias("n_pairs"),
         F.count_distinct("click_id").alias("n_clicks_converted"),
@@ -713,10 +648,6 @@ def stream_user_totals_evict(spark: SparkSession, sf_dir: str) -> DataFrame:
             read_event_stream_jsonl(spark, landing)
         )
         name = f"stream_evict_{uuid.uuid4().hex[:8]}"
-        prev = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set(
-            "spark.sql.shuffle.partitions", str(STREAM_SHUFFLE_PARTITIONS)
-        )
         ckpt = _scratch_checkpoint()
         try:
             writer = totals.writeStream.outputMode("append")
@@ -732,7 +663,6 @@ def stream_user_totals_evict(spark: SparkSession, sf_dir: str) -> DataFrame:
             finally:
                 q.stop()
         finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
             if ckpt is not None:
                 shutil.rmtree(ckpt, ignore_errors=True)
         out = spark.sql(f"SELECT * FROM {name}")

@@ -70,8 +70,8 @@ def main() -> int:
     # Deliberately a PLAIN session (no get_spark) to replicate the driver's
     # correctness harness: every query must work without any build-time conf.
     # Time-zone note: queries over `events` are zone-safe regardless of host
-    # TZ — catalog.load_table pins spark.sql.session.timeZone=UTC (runtime
-    # conf) before normalizing the NTZ timestamp column, matching DuckDB's
+    # TZ — catalog.load_table normalizes the NTZ timestamp column with a
+    # zone-free expression (catalog.ntz_to_instant), matching DuckDB's
     # naive-as-UTC reading. Other tables carry no timestamp columns.
     import os
 

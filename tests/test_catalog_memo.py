@@ -5,8 +5,15 @@ from __future__ import annotations
 
 import os
 import shutil
+import sys
+from concurrent.futures import ThreadPoolExecutor
+
+import pyarrow as pa
+import pyarrow.parquet as pq
+from pyspark.sql import functions as F
 
 from automotive_big_data_analysis_spark.catalog import load_table
+from tests.conftest import SF_SMOKE
 
 
 def test_load_table_memo_hits_and_self_invalidates(spark, tmp_path):
@@ -28,3 +35,30 @@ def test_load_table_memo_hits_and_self_invalidates(spark, tmp_path):
     fresh = load_table(spark, work, "documents")
     assert fresh is not first
     assert fresh.count() == 25
+
+
+def test_load_table_is_zone_free_and_thread_safe(spark):
+    """4 threads load ``events`` on a cold memo under a non-UTC session:
+    the epoch values match the naive-as-UTC reading, the session zone is
+    untouched, and the memo ends with one entry for the table."""
+    ts = pq.read_table(f"{SF_SMOKE}/events.parquet", columns=["ts"]).column("ts")
+    us = ts.cast(pa.timestamp("us")).cast(pa.int64()).to_pylist()
+    expected = sum(v // 10**6 for v in us)
+
+    kolkata = spark.newSession()  # own conf and own memo, shared context
+    kolkata.conf.set("spark.sql.session.timeZone", "Asia/Kolkata")
+
+    def epoch_sum(_):
+        df = load_table(kolkata, SF_SMOKE, "events")
+        return df.agg(F.sum(F.col("ts").cast("long"))).first()[0]
+
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)  # interleave the threads' memo accesses
+    try:
+        with ThreadPoolExecutor(max_workers=4) as pool:
+            sums = list(pool.map(epoch_sum, range(4), timeout=300))
+    finally:
+        sys.setswitchinterval(switch)
+    assert sums == [expected] * 4
+    assert kolkata.conf.get("spark.sql.session.timeZone") == "Asia/Kolkata"
+    assert list(kolkata._abda_table_memo) == [(SF_SMOKE, "events")]

@@ -75,6 +75,45 @@ def test_streaming_sessions_match_batch(spark, stream_dir):
     assert len(got_set) >= len(batch_set) - 3  # last open sessions unflushed
 
 
+def test_stream_over_naive_parquet_matches_load_table(spark, tmp_path):
+    """A stream over a raw naive-timestamp file (the corpus ``events``
+    layout) normalizes ``ts`` exactly as ``load_table`` does: same type,
+    same epoch values. A TIMESTAMP(NANOS) file fails loudly instead."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.errors import AnalysisException
+
+    from automotive_big_data_analysis_spark.catalog import load_table
+
+    us = [1_704_067_207_123_456, 1_704_070_800_000_001]
+    cols = {
+        "event_id": pa.array([1, 2], pa.int64()),
+        "ts": pa.array(us, pa.timestamp("us")),
+        "user_id": pa.array([7, 8], pa.int64()),
+        "event_type": ["click", "view"],
+        "value": [1.0, 2.0],
+        "props": ["{}", "{}"],
+    }
+    pq.write_table(pa.table(cols), tmp_path / "events.parquet")
+    stream = st.read_event_stream(spark, str(tmp_path / "events.parquet"))
+    got = st.run_to_memory(stream, "naive_stream_out")
+    batch = load_table(spark, str(tmp_path), "events")
+    assert got.schema["ts"].dataType == batch.schema["ts"].dataType
+
+    def epochs(df):
+        return sorted(r[0] for r in df.select(F.unix_micros("ts")).collect())
+
+    assert epochs(got) == epochs(batch) == us
+    spark.catalog.dropTempView("naive_stream_out")
+
+    nanos = tmp_path / "nanos"
+    nanos.mkdir()
+    cols["ts"] = pa.array([v * 1000 for v in us], pa.timestamp("ns"))
+    pq.write_table(pa.table(cols), nanos / "events.parquet")
+    with pytest.raises(AnalysisException, match="PARQUET_TYPE_ILLEGAL"):
+        load_table(spark, str(nanos), "events")
+
+
 def test_streaming_anomalies_match_batch(spark, tmp_path_factory):
     """Streaming detector vs batch detector against the SAME batch-trained
     baseline: a planted hourly spike must be flagged identically."""
