@@ -81,10 +81,12 @@ def get_recommendations(cars: DataFrame, **filters) -> dict:
 
 
 def get_market_overview(cars: DataFrame) -> dict:
-    """GET /api/v1/market/overview (backend/app.py:378-401)."""
+    """GET /api/v1/market/overview (backend/app.py:378-401): one query,
+    whose row carries ``popular_brands`` as (brand, n_cars) pairs; here
+    they become the reference's brand → count dict (a null brand is the
+    ``None`` key)."""
     row = q.market_overview(cars).first().asDict()
-    brands = {r.brand: r.n_cars for r in q.popular_brands(cars).collect()}
-    row["popular_brands"] = brands
+    row["popular_brands"] = {r.brand: r.n_cars for r in row["popular_brands"]}
     return _ok(row)
 
 
@@ -133,7 +135,12 @@ def generate_random(
     the message says so, leaving the append to the caller via
     ``sources.tables.insert_df``. The bound applies to this facade only —
     the underlying distributed generator (``sources/synthetic.py``)
-    scales to any row count."""
+    scales to any row count.
+
+    An append costs one write job plus its rebalance shuffle and adds one
+    file per ``manufacture_year`` present; the generator is one parsed
+    projection, and the returned frame is lazy (re-running it regenerates
+    the same rows)."""
     if num_records <= 0:
         raise ApiError("Number of records must be positive")
     if num_records > MAX_GENERATE_ROWS:

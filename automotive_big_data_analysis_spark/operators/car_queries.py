@@ -18,8 +18,8 @@ its test suite ``backend/test_app.py``):
 * the ``新能源 → 电动汽车`` category remap before grouping (reference
   ``backend/app.py:149-151``);
 * all five histogram buckets emitted even when empty (reference
-  ``backend/app.py:425-457``) — done with a static bucket dimension and a
-  broadcast left join, never a driver-side loop;
+  ``backend/app.py:425-457``) — done with one conditional aggregate that
+  yields every bucket's count, never a driver-side loop;
 * non-unique ``model_id`` resolved first-match (reference
   ``backend/app.py:300``) — emulated deterministically with ``row_number``.
 
@@ -44,22 +44,19 @@ def car_view(df: DataFrame) -> DataFrame:
     (brand_model, spaces → underscores). Reference: backend/app.py:33-57.
 
     Pure projection — no shuffle; Catalyst prunes unused source columns.
+    One parsed ``selectExpr``: the same tree built from ``Column``
+    operators costs one py4j round trip per node, on every request.
     """
-    renamed = [F.col(db).alias(api) for db, api in CAR_FIELD_MAPPING.items()]
-    history = F.transform(
-        F.map_entries("historical_price"),
-        lambda e: F.struct(e["key"].alias("date"), e["value"].alias("price")),
-    ).alias("history_prices")
-    model_id = F.regexp_replace(
-        F.concat_ws("_", F.col("car_brand"), F.col("car_model")), " ", "_"
-    )
-    return df.select(
+    renamed = [f"`{db}` AS `{api}`" for db, api in CAR_FIELD_MAPPING.items()]
+    model_id = "regexp_replace(concat_ws('_', car_brand, car_model), ' ', '_')"
+    return df.selectExpr(
         *renamed,
-        F.col("city_license_plates"),
-        F.col("manufacture_year"),
-        history,
-        model_id.alias("id"),
-        model_id.alias("model_id"),
+        "city_license_plates",
+        "manufacture_year",
+        "transform(map_entries(historical_price), "
+        "e -> named_struct('date', e.key, 'price', e.value)) AS history_prices",
+        f"{model_id} AS id",
+        f"{model_id} AS model_id",
     )
 
 
@@ -193,43 +190,35 @@ def recommendations(
 
 def market_overview(cars: DataFrame) -> DataFrame:
     """GET /market/overview → one row: total registrations (sum over all
-    maps), avg attention (0 when empty), brand count, top car label
-    (backend/app.py:378-401). Single scan, one partial-agg reduce; the
-    top-car argmax uses ``max_by`` rather than a sort."""
+    maps), avg attention (0 when empty), brand count, top car label and
+    ``popular_brands``, an array of (brand, n_cars) with the null brand
+    as its own entry (backend/app.py:378-401).
+
+    One plan, two aggregation levels: per brand the registrations,
+    attention sum, car count and ``max(struct(attention, label))``; then
+    globally the sums, ``count(brand)`` (the distinct non-null brands)
+    and the argmax label. The struct order breaks attention ties by the
+    larger label — the reference takes the first car seen, which a
+    distributed scan does not define."""
     top_label = F.format_string(
         "%s %s (关注度: %d)", F.col("brand"), F.col("model"), F.col("attention")
     )
-    return cars.select(
-        map_value_sum("city_license_plates").alias("regs"),
-        F.coalesce(F.col("attention"), F.lit(0)).alias("attention_f"),
-        F.col("brand"),
-        # tie-break argmax deterministically: higher attention wins, then
-        # lexicographically smallest label (reference takes first-seen).
-        F.struct(
-            F.col("attention").alias("a"), top_label.alias("label")
-        ).alias("top_struct"),
-    ).agg(
+    per_brand = cars.groupBy("brand").agg(
+        F.sum(map_value_sum("city_license_plates")).alias("regs"),
+        F.sum(F.coalesce(F.col("attention"), F.lit(0))).alias("attention_sum"),
+        F.count("*").alias("n_cars"),
+        F.max(F.struct(F.col("attention"), top_label.alias("label"))).alias("top"),
+    )
+    return per_brand.agg(
         # Python `sum([])` is 0, not NULL (reference backend/app.py:380-384)
         F.coalesce(F.sum("regs"), F.lit(0)).cast("long").alias("total_registrations"),
-        F.coalesce(F.avg("attention_f"), F.lit(0.0)).alias("avg_attention"),
-        F.countDistinct("brand").alias("brand_count"),
-        F.max_by(
-            F.col("top_struct.label"),
-            F.struct(
-                F.col("top_struct.a").alias("a"),
-                # invert label ordering so max_by prefers the smaller label
-                # on attention ties — requires an orderable surrogate; use
-                # negative of nothing: fall back to label itself (larger
-                # label wins ties). Ties are broken deterministically.
-                F.col("top_struct.label").alias("l"),
-            ),
-        ).alias("top_car"),
+        F.coalesce(
+            F.sum("attention_sum") / F.sum("n_cars"), F.lit(0.0)
+        ).alias("avg_attention"),
+        F.count("brand").alias("brand_count"),
+        F.max("top").getField("label").alias("top_car"),
+        F.collect_list(F.struct("brand", "n_cars")).alias("popular_brands"),
     )
-
-
-def popular_brands(cars: DataFrame) -> DataFrame:
-    """Brand → car count portion of the overview (backend/app.py:386-388)."""
-    return cars.groupBy("brand").agg(F.count("*").alias("n_cars"))
 
 
 def market_trends(cars: DataFrame, metric: str = "registrations") -> DataFrame:
@@ -280,43 +269,36 @@ def price_distribution(cars: DataFrame) -> DataFrame:
     car count + avg attention, all 5 buckets always present (empty → 0/0.0)
     (backend/app.py:422-459).
 
-    The static 5-row bucket dimension joins LEFT from the dimension side so
-    empty buckets survive; the fact side aggregates first (so the join is a
-    broadcast of 5 rows against 5-ish rows, not a row-level join)."""
-    spark = cars.sparkSession
-    bucket_dim = spark.createDataFrame(
-        [(i, lbl) for i, (_, _, lbl) in enumerate(PRICE_BUCKETS)],
-        "bucket_id int, price_range string",
-    )
-    bucket_expr = F.lit(len(PRICE_BUCKETS) - 1)
-    for i in range(len(PRICE_BUCKETS) - 2, -1, -1):
-        lo, hi, _ = PRICE_BUCKETS[i]
-        bucket_expr = F.when(
-            (F.col("min_price") >= lo) & (F.col("min_price") < hi), F.lit(i)
-        ).otherwise(bucket_expr)
-    per_bucket = (
-        cars.where(F.col("min_price").isNotNull())
-        .select(
-            bucket_expr.alias("bucket_id"),
-            F.coalesce(F.col("attention"), F.lit(0)).alias("attention_f"),
+    One conditional aggregate (a count and an average per bucket, so an
+    empty bucket still gets its zero) over the bucket id, then ``inline``
+    turns the single result row into the five bucket rows in order."""
+    last = len(PRICE_BUCKETS) - 1
+    bucket = (
+        "CASE "
+        + " ".join(
+            f"WHEN min_price >= {lo} AND min_price < {hi} THEN {i}"
+            for i, (lo, hi, _) in enumerate(PRICE_BUCKETS[:last])
         )
-        .groupBy("bucket_id")
-        .agg(
-            F.count("*").alias("count"),
-            F.avg("attention_f").alias("avg_attention"),
+        + f" WHEN min_price IS NOT NULL THEN {last} END"
+    )
+    per_bucket = cars.selectExpr(
+        f"{bucket} AS b", "coalesce(attention, 0) AS attention_f"
+    ).selectExpr(
+        *(
+            expr
+            for i in range(len(PRICE_BUCKETS))
+            for expr in (
+                f"count_if(b = {i}) AS n{i}",
+                f"avg(if(b = {i}, attention_f, NULL)) AS a{i}",
+            )
         )
     )
-    return (
-        bucket_dim.join(F.broadcast(per_bucket), "bucket_id", "left")
-        .select(
-            "price_range",
-            F.coalesce(F.col("count"), F.lit(0)).cast("long").alias("count"),
-            F.coalesce(F.col("avg_attention"), F.lit(0.0)).alias("avg_attention"),
-            "bucket_id",
-        )
-        .orderBy("bucket_id")
-        .drop("bucket_id")
+    rows = ", ".join(
+        f"named_struct('price_range', '{label}', 'count', n{i}, "
+        f"'avg_attention', coalesce(a{i}, 0.0D))"
+        for i, (_, _, label) in enumerate(PRICE_BUCKETS)
     )
+    return per_bucket.selectExpr(f"inline(array({rows}))")
 
 
 def consumer_preferences(cars: DataFrame) -> DataFrame:

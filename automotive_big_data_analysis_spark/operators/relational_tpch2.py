@@ -212,7 +212,7 @@ def disjunctive_part_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     join condition on a broadcast dimension — Catalyst evaluates it inside
     the join, and the partkey equality still drives the hash lookup, so
     this stays a broadcast hash join, not a cartesian."""
-    li = spread(load_table(spark, sf_dir, "lineitem"))
+    li = load_table(spark, sf_dir, "lineitem")
     part = load_table(spark, sf_dir, "part")
     branch1 = (
         (F.col("p_brand") == "Brand#1")

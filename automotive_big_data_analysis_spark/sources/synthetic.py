@@ -16,8 +16,7 @@ map columns (historical_price monthly, city_license_plates per city).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame, SparkSession
 
 BRAND_MODELS: dict[str, list[str]] = {
     "比亚迪": ["汉", "唐", "秦", "宋"],
@@ -33,80 +32,82 @@ CITIES = ["北京", "上海", "广州", "深圳", "杭州", "成都", "西安", 
 CAR_TYPES = ["轿车", "SUV", "MPV", "跑车", "皮卡", "新能源", "电动汽车"]
 
 
-def _u(seed: int, *cols: Column) -> Column:
+def _str(s: str) -> str:
+    """A Spark SQL string literal (backslash and quote escaped)."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def _u(seed: int, *args: str) -> str:
     """Deterministic uniform double in [0, 1) from the row id + a seed —
-    xxhash64 is a JVM built-in, evaluated per-row with no Python."""
-    h = F.xxhash64(F.lit(seed), *cols)
-    return (F.pmod(h, F.lit(1_000_000_007)) / F.lit(1_000_000_007.0)).cast("double")
+    xxhash64 is a JVM built-in, evaluated per-row with no Python. It hashes
+    INT and BIGINT differently: the seed literal is INT when it fits and
+    BIGINT otherwise, and the pinned generator checksums depend on that."""
+    lit = str(seed) if -(2**31) <= seed < 2**31 else f"{seed}L"
+    h = f"xxhash64({', '.join((lit, *args))})"
+    return f"(pmod({h}, 1000000007) / 1000000007.0D)"
 
 
-def _pick(options: list[str], u: Column) -> Column:
-    arr = F.array(*[F.lit(o) for o in options])
-    return F.element_at(arr, (u * len(options)).cast("int") + 1)
+def _pick(options: list[str], u: str) -> str:
+    arr = ", ".join(_str(o) for o in options)
+    return f"element_at(array({arr}), CAST({u} * {len(options)} AS INT) + 1)"
 
 
 def generate_car_data(spark: SparkSession, n_rows: int, seed: int = 42) -> DataFrame:
-    """Deterministic distributed car_data generator."""
-    df = spark.range(n_rows).select(F.col("id"))
-    rid = F.col("id")
+    """Deterministic distributed car_data generator.
 
-    brands = list(BRAND_MODELS)
-    brand_u = _u(seed + 1, rid)
-    brand = _pick(brands, brand_u)
+    The columns are SQL text parsed in one ``selectExpr`` call: the same
+    tree built from ``Column`` operators costs one py4j round trip per
+    node, several hundred ms of driver time per call (cf.
+    ``vectors.sq_dist_unrolled``)."""
+    brand = _pick(list(BRAND_MODELS), _u(seed + 1, "id"))
     # model pool depends on the brand (brand-consistent, like the reference)
-    model = F.lit(None).cast("string")
-    model_u = _u(seed + 2, rid)
-    for b, models in BRAND_MODELS.items():
-        model = F.when(brand == b, _pick(models, model_u)).otherwise(model)
-
-    suggested = F.round(80_000 + _u(seed + 3, rid) * 420_000, 2)
-    min_price = F.round(suggested * (0.8 + _u(seed + 4, rid) * 0.2), 2)
-    car_type = _pick(CAR_TYPES, _u(seed + 5, rid))
-
-    n_hist = (_u(seed + 6, rid) * 5).cast("int") + 3  # 3-7 monthly points
-    hist_entries = F.transform(
-        F.sequence(F.lit(1), n_hist),
-        lambda i: F.struct(
-            F.concat(
-                F.lit("2023-"), F.lpad(i.cast("string"), 2, "0")
-            ).alias("key"),
-            (50_000 + (_u(seed + 7, rid, i) * 350_000).cast("int")).alias("value"),
-        ),
+    model_u = _u(seed + 2, "id")
+    model = (
+        f"CASE {brand} "
+        + " ".join(
+            f"WHEN {_str(b)} THEN {_pick(models, model_u)}"
+            for b, models in BRAND_MODELS.items()
+        )
+        + " END"
     )
-    n_cities = (_u(seed + 8, rid) * 4).cast("int") + 2  # 2-5 cities
-    city_entries = F.transform(
-        F.sequence(F.lit(1), n_cities),
-        lambda i: F.struct(
-            _pick(CITIES, _u(seed + 9, rid, i)).alias("key"),
-            (1_000 + (_u(seed + 10, rid, i) * 99_000).cast("int")).alias("value"),
-        ),
+    suggested = f"round(80000 + {_u(seed + 3, 'id')} * 420000, 2)"
+    # double literals need the D suffix: a bare 0.8 parses as DECIMAL
+    min_price = f"round({suggested} * (0.8D + {_u(seed + 4, 'id')} * 0.2D), 2)"
+    car_type = _pick(CAR_TYPES, _u(seed + 5, "id"))
+
+    n_hist = f"CAST({_u(seed + 6, 'id')} * 5 AS INT) + 3"  # 3-7 monthly points
+    hist_entries = (
+        f"transform(sequence(1, {n_hist}), i -> named_struct("
+        "'key', concat('2023-', lpad(CAST(i AS STRING), 2, '0')), "
+        f"'value', 50000 + CAST({_u(seed + 7, 'id', 'i')} * 350000 AS INT)))"
+    )
+    n_cities = f"CAST({_u(seed + 8, 'id')} * 4 AS INT) + 2"  # 2-5 cities
+    city_entries = (
+        f"transform(sequence(1, {n_cities}), j -> named_struct("
+        f"'key', {_pick(CITIES, _u(seed + 9, 'id', 'j'))}, "
+        f"'value', 1000 + CAST({_u(seed + 10, 'id', 'j')} * 99000 AS INT)))"
+    )
+    # duplicate city keys within one row would fail map creation — dedup
+    # by key keeping the first occurrence
+    unique_cities = (
+        f"filter({city_entries}, (e, k) -> NOT array_contains("
+        f"transform(slice({city_entries}, 1, k), p -> p.key), e.key))"
     )
 
-    return df.select(
-        brand.alias("car_brand"),
-        _pick(CITIES, _u(seed + 11, rid)).alias("city"),
-        model.alias("car_model"),
-        suggested.alias("manufacturer_suggested_price"),
-        (80 + (_u(seed + 12, rid) * 421).cast("int")).alias("engine_horsepower"),
-        _pick(["2", "4", "5"], _u(seed + 13, rid)).cast("int").alias("num_doors"),
-        min_price.alias("min_reference_price"),
-        car_type.alias("car_type"),
-        (2010 + (_u(seed + 14, rid) * 16).cast("int")).alias("manufacture_year"),
-        F.when(car_type.isin("新能源", "电动汽车"), F.lit(0.0))
-        .otherwise(F.round(30 + _u(seed + 15, rid) * 50, 2))
-        .alias("fuel_capacity"),
-        (1 + (_u(seed + 16, rid) * 1000).cast("int")).alias("popularity"),
-        F.round(_u(seed + 17, rid) * 20, 2).alias("discount_percentage"),
-        F.map_from_entries(hist_entries).alias("historical_price"),
-        # duplicate city keys within one row would fail map creation —
-        # dedup by key keeping the first occurrence
-        F.map_from_entries(
-            F.filter(
-                city_entries,
-                lambda e, i: ~F.array_contains(
-                    F.transform(F.slice(city_entries, 1, i), lambda p: p["key"]),
-                    e["key"],
-                ),
-            )
-        ).alias("city_license_plates"),
+    return spark.range(n_rows).selectExpr(
+        f"{brand} AS car_brand",
+        f"{_pick(CITIES, _u(seed + 11, 'id'))} AS city",
+        f"{model} AS car_model",
+        f"{suggested} AS manufacturer_suggested_price",
+        f"80 + CAST({_u(seed + 12, 'id')} * 421 AS INT) AS engine_horsepower",
+        f"CAST({_pick(['2', '4', '5'], _u(seed + 13, 'id'))} AS INT) AS num_doors",
+        f"{min_price} AS min_reference_price",
+        f"{car_type} AS car_type",
+        f"2010 + CAST({_u(seed + 14, 'id')} * 16 AS INT) AS manufacture_year",
+        f"CASE WHEN {car_type} IN ('新能源', '电动汽车') THEN 0.0D"
+        f" ELSE round(30 + {_u(seed + 15, 'id')} * 50, 2) END AS fuel_capacity",
+        f"1 + CAST({_u(seed + 16, 'id')} * 1000 AS INT) AS popularity",
+        f"round({_u(seed + 17, 'id')} * 20, 2) AS discount_percentage",
+        f"map_from_entries({hist_entries}) AS historical_price",
+        f"map_from_entries({unique_cities}) AS city_license_plates",
     )

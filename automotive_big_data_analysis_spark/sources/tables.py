@@ -9,13 +9,16 @@ partition-parallel.
 
 Table layout is chosen for the 100 TB case: parquet, partitioned by a
 low-cardinality column when given (partition pruning for year-filtered
-queries), append or overwrite semantics explicit at the call site.
+queries), append or overwrite semantics explicit at the call site. A
+partitioned append writes one file per partition value (AQE splits a
+large one to its advisory size): nothing caches a read of the table, so
+every read lists and opens every file, and the file count is a cost each
+later request pays.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from automotive_big_data_analysis_spark.catalog import (
@@ -54,11 +57,25 @@ def insert_rows(
 def insert_df(
     df: DataFrame, path: str, partition_by: str | None = "manufacture_year"
 ) -> int:
-    writer = df.write.mode("append")
+    """Append ``df`` at ``path``; returns the row count written.
+
+    A partitioned append writes one file per partition value: the
+    ``rebalance`` hint hash-routes each value to one shuffle partition,
+    which AQE packs into one task for a small append and splits to its
+    advisory size for a large one. Without it every write task emits a
+    file for every value it holds (tasks × values), and every later read
+    lists and opens them all.
+
+    The count comes from an ``Observation`` on the written rows, not a
+    second ``count()`` job that would re-run the source."""
+    if partition_by:
+        df = df.hint("rebalance", partition_by)
+    written = Observation()
+    writer = df.observe(written, F.count(F.lit(1)).alias("rows")).write.mode("append")
     if partition_by:
         writer = writer.partitionBy(partition_by)
     writer.parquet(path)
-    return df.count()
+    return written.get["rows"]
 
 
 def read_car_table(spark: SparkSession, path: str) -> DataFrame:

@@ -6,7 +6,9 @@ from __future__ import annotations
 import pytest
 
 from automotive_big_data_analysis_spark import api
+from automotive_big_data_analysis_spark.catalog import car_data_from_rows
 from automotive_big_data_analysis_spark.operators import car_queries as q
+from tests.conftest import MOCK_CAR_DATA
 
 
 @pytest.fixture(scope="module")
@@ -56,6 +58,72 @@ def test_market_overview_endpoint(cars):
     assert data["brand_count"] == 3
     assert data["popular_brands"] == {"Brand1": 2, "Brand2": 1, "Brand3": 1}
     assert data["top_car"] == "Brand3 Model1 (关注度: 95)"
+
+
+TOP = "Brand3 Model1 (关注度: 95)"
+MOCK_BRANDS = {"Brand1": 2, "Brand2": 1, "Brand3": 1}
+
+
+def _overview(regs, avg, n_brands, top, brands) -> dict:
+    return {
+        "total_registrations": regs,
+        "avg_attention": avg,
+        "brand_count": n_brands,
+        "top_car": top,
+        "popular_brands": brands,
+    }
+
+
+@pytest.mark.parametrize(
+    "rows, overview, counts, avgs",
+    [
+        pytest.param(
+            [], _overview(0, 0.0, 0, None, {}), [0] * 5, [0.0] * 5, id="empty"
+        ),
+        # a null brand is its own popular_brands key but no counted brand
+        pytest.param(
+            MOCK_CAR_DATA + [dict(MOCK_CAR_DATA[0], car_brand=None)],
+            _overview(340, 84.0, 3, TOP, {None: 1, **MOCK_BRANDS}),
+            [2, 0, 1, 1, 1],
+            [75.0, 0.0, 90.0, 85.0, 95.0],
+            id="null_brand",
+        ),
+        # null attention counts as 0 in both averages
+        pytest.param(
+            MOCK_CAR_DATA + [dict(MOCK_CAR_DATA[3], popularity=None)],
+            _overview(305, 69.0, 3, TOP, {**MOCK_BRANDS, "Brand3": 2}),
+            [1, 0, 1, 1, 2],
+            [75.0, 0.0, 90.0, 85.0, 47.5],
+            id="null_attention",
+        ),
+        # an attention tie goes to the larger label, either way round
+        pytest.param(
+            MOCK_CAR_DATA
+            + [dict(MOCK_CAR_DATA[3], car_brand="Brand0", car_model="Model9")],
+            _overview(305, 88.0, 4, TOP, {"Brand0": 1, **MOCK_BRANDS}),
+            [1, 0, 1, 1, 2],
+            [75.0, 0.0, 90.0, 85.0, 95.0],
+            id="tie_kept",
+        ),
+        pytest.param(
+            MOCK_CAR_DATA
+            + [dict(MOCK_CAR_DATA[3], car_brand="Brand9", car_model="Model0")],
+            _overview(
+                305, 88.0, 4, "Brand9 Model0 (关注度: 95)", {"Brand9": 1, **MOCK_BRANDS}
+            ),
+            [1, 0, 1, 1, 2],
+            [75.0, 0.0, 90.0, 85.0, 95.0],
+            id="tie_taken",
+        ),
+    ],
+)
+def test_overview_and_prices_edge_cases(spark, rows, overview, counts, avgs):
+    cars = q.car_view(car_data_from_rows(spark, rows))
+    assert api.get_market_overview(cars)["data"] == overview
+    assert api.get_price_distribution(cars)["data"] == [
+        {"price_range": label, "count": n, "avg_attention": avg}
+        for (_, _, label), n, avg in zip(q.PRICE_BUCKETS, counts, avgs)
+    ]
 
 
 def test_trends_endpoint(cars):

@@ -172,5 +172,6 @@ def test_consumer_preferences_ev_remap(spark):
 
 
 def test_popular_brands(cars):
-    got = {(r.brand, r.n_cars) for r in q.popular_brands(cars).collect()}
+    row = q.market_overview(cars).first()
+    got = {(r.brand, r.n_cars) for r in row.popular_brands}
     assert got == {("Brand1", 2), ("Brand2", 1), ("Brand3", 1)}

@@ -2,7 +2,9 @@
 
 from __future__ import annotations
 
+import glob
 import os
+from collections import Counter
 
 import pytest
 from pyspark.sql import functions as F
@@ -128,6 +130,76 @@ def test_generator_feeds_query_library(spark):
     assert {r.car_type for r in prefs} <= {"轿车", "SUV", "MPV", "跑车", "皮卡", "电动汽车"}
     dist = q.price_distribution(cars).collect()
     assert sum(r["count"] for r in dist) == 500
+
+
+GEN_SCHEMA = (
+    "struct<car_brand:string,city:string,car_model:string,"
+    "manufacturer_suggested_price:double,engine_horsepower:int,num_doors:int,"
+    "min_reference_price:double,car_type:string,manufacture_year:int,"
+    "fuel_capacity:double,popularity:int,discount_percentage:double,"
+    "historical_price:map<string,int>,city_license_plates:map<string,int>>"
+)
+VIEW_SCHEMA = (
+    "struct<brand:string,model:string,guide_price:double,horsepower:int,"
+    "doors:int,min_price:double,attention:int,discount:double,car_type:string,"
+    "city_license_plates:map<string,int>,manufacture_year:int,"
+    "history_prices:array<struct<date:string,price:int>>,id:string,model_id:string>"
+)
+
+
+def _checksum(df) -> tuple[str, int]:
+    """Order-free (sum of row xxhash64, row count) over every column; maps
+    hash as their sorted entry arrays, since Spark cannot hash a map."""
+    cols = [
+        F.array_sort(F.map_entries(f.name))
+        if f.dataType.typeName() == "map"
+        else F.col(f.name)
+        for f in df.schema.fields
+    ]
+    row = (
+        df.select(F.xxhash64(*cols).cast("decimal(38,0)").alias("h"))
+        .agg(F.sum("h").cast("string"), F.count("*"))
+        .first()
+    )
+    return row[0], row[1]
+
+
+@pytest.mark.parametrize(
+    "seed, gen_sum, view_sum",
+    [
+        (1, "-527307788284102090815", "-287009639380175084026"),
+        (42, "-133119599300367455427", "-653725675741475793471"),
+        (2**31 - 30, "149341019454460058438", "497113834356173390843"),
+    ],
+)
+def test_generator_and_view_values_pinned(spark, seed, gen_sum, view_sum):
+    """The generator's columns and the car view over them, pinned by
+    schema and checksum at 5,000 rows: a rewrite of either expression set
+    must stay row-identical."""
+    gen = synthetic.generate_car_data(spark, 5000, seed=seed)
+    view = q.car_view(gen)
+    assert gen.schema.simpleString() == GEN_SCHEMA
+    assert view.schema.simpleString() == VIEW_SCHEMA
+    assert _checksum(gen) == (gen_sum, 5000)
+    assert _checksum(view) == (view_sum, 5000)
+
+
+def test_partitioned_append_writes_one_file_per_year(spark, tmp_path):
+    """Each append adds exactly one data file to every year directory it
+    touches, whatever the session width: every read lists and opens every
+    file, so tasks × years files per append is a cost paid on each read."""
+    path = str(tmp_path / "car_table")
+
+    def files_per_year() -> Counter:
+        files = glob.glob(os.path.join(path, "manufacture_year=*", "part-*.parquet"))
+        return Counter(os.path.basename(os.path.dirname(f)) for f in files)
+
+    assert tables.insert_df(synthetic.generate_car_data(spark, 1000, seed=5), path) == 1000
+    first = files_per_year()
+    assert len(first) == 16 and set(first.values()) == {1}
+    assert tables.insert_df(synthetic.generate_car_data(spark, 1000, seed=6), path) == 1000
+    assert files_per_year() == {d: 2 for d in first}
+    assert tables.read_car_table(spark, path).count() == 2000
 
 
 def test_write_path_roundtrip(spark, tmp_path):
