@@ -21,9 +21,13 @@ the SQL API — Catalyst produces the same plan for both.
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from automotive_big_data_analysis_spark.sources.stored import source_fingerprint
 
 # Reference table: backend/config.py:8-23.
 CAR_DATA_SCHEMA = T.StructType(
@@ -124,46 +128,78 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     absolute-epoch arithmetic (``cast(ts as long)``) agrees with DuckDB's
     ``EPOCH()`` regardless of the session time zone.
 
-    The ANALYZED DataFrame is memoized per (session, sf_dir, table):
+    The ANALYZED DataFrame is memoized (:func:`memoized`):
     ``spark.read.parquet`` pays a driver-side footer/schema read plus
     file listing on EVERY call (measured 70-290 ms per table, ~2 calls
-    per registered query → tens of seconds across the suite), while the
-    table's schema and file set are immutable for the life of a corpus
-    directory. This is metadata/plan reuse only — the DataFrame is an
-    unexecuted plan, every action still scans the parquet files — and is
-    exactly what reading from a catalog table (saved metadata, no
-    per-query inference) gives a production deployment. The memo lives
-    on the session object, so a stopped/replaced session drops it.
+    per registered query). This is metadata/plan reuse only — the
+    DataFrame is an unexecuted plan, every action still scans the
+    parquet files — and is what reading from a catalog table (saved
+    metadata, no per-query inference) gives a production deployment."""
 
-    The key embeds ``source_fingerprint`` (file names/sizes/mtimes —
-    an ``os.stat`` walk, no data read), so an in-session rewrite of the
-    table directory self-invalidates: the rewritten files produce a new
-    fingerprint and the stale plan (with its frozen file listing) is
-    dropped rather than served. This keeps the documented
-    ``release()``/corpus-refresh contract without the release hooks
-    having to know about this memo.
+    def read() -> DataFrame:
+        df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+        for col in _NAIVE_TS_COLUMNS.get(name, []):
+            df = ntz_to_instant(df, col)
+        return df
+
+    return memoized(spark, sf_dir, name, "scan", read)
+
+
+def memoized(
+    spark: SparkSession, sf_dir: str, table: str, what: str, build: Callable
+):
+    """The session memo for anything derived from one corpus table:
+    ``build()``'s result, kept per (sf_dir, table, what) while that
+    table's ``source_fingerprint`` (file names/sizes/mtimes — an
+    ``os.stat`` walk, no data read) is unchanged. An in-session rewrite
+    of the table directory self-invalidates the entry: it is rebuilt,
+    and the superseded value's blocks are freed (:func:`_free`). The
+    memo lives on the session object, so a stopped or replaced session
+    drops it.
 
     Concurrency: safe to call from driver threads without a lock. The
-    memo is a plain dict whose get/setdefault/item assignment are each
-    atomic under the GIL, so it holds at most one entry per
-    (sf_dir, table). Two threads that miss at once both build the
-    DataFrame and the last write wins; a duplicate build is benign
-    because both plans read the same files and touch no shared state."""
-    from automotive_big_data_analysis_spark.sources.stored import (
-        source_fingerprint,
-    )
-
+    memo is a plain dict whose get/item assignment are each atomic under
+    the GIL, so it holds at most one entry per key. Two threads that
+    miss at once both build and the last write wins; the loser's value
+    is not freed, as its caller may still be using it."""
     memo = vars(spark).setdefault("_abda_table_memo", {})
-    key = (sf_dir, name)
-    fp = source_fingerprint(sf_dir, name)
+    key = (sf_dir, table, what)
+    fp = source_fingerprint(sf_dir, table)
     cached = memo.get(key)
     if cached is not None and cached[0] == fp:
         return cached[1]
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-    for col in _NAIVE_TS_COLUMNS.get(name, []):
-        df = ntz_to_instant(df, col)
-    memo[key] = (fp, df)
-    return df
+    value = build()
+    stale = memo.get(key)
+    memo[key] = (fp, value)
+    if stale is not None and stale[0] != fp:
+        _free(stale[1])
+    return value
+
+
+def _free(value) -> None:
+    """Release the executor blocks a memoized value pins. A
+    ``localCheckpoint``-ed frame's blocks belong to the checkpointed RDD
+    under its ``LogicalRDD`` plan, which ``unpersist()`` does not reach."""
+    if not isinstance(value, DataFrame):
+        return
+    value.unpersist()
+    plan = value._jdf.queryExecution().logical()
+    if plan.nodeName() == "LogicalRDD":
+        plan.rdd().unpersist(False)
+
+
+def release(sf_dir: str | None = None) -> int:
+    """Drop the active session's derived memo entries (every corpus, or
+    ``sf_dir``'s) and free their blocks; table scan plans stay. Entries
+    self-invalidate on a corpus rewrite, so this is only about memory:
+    long-lived callers run it between workload families. Returns the
+    number of entries dropped."""
+    spark = SparkSession.getActiveSession()
+    memo = vars(spark).get("_abda_table_memo", {}) if spark else {}
+    keys = [k for k in list(memo) if k[2] != "scan" and sf_dir in (None, k[0])]
+    for key in keys:
+        _free(memo.pop(key, (None, None))[1])
+    return len(keys)
 
 
 def spread(df: DataFrame, partitions: int | None = None) -> DataFrame:

@@ -35,6 +35,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from automotive_big_data_analysis_spark.catalog import load_table, spread
+
+# the session memo's release hook, re-exported for long-lived callers
+from automotive_big_data_analysis_spark.catalog import release  # noqa: F401
 from automotive_big_data_analysis_spark.functions import text as tx
 
 JACCARD_THRESHOLD = 0.6
@@ -82,48 +85,9 @@ def _shingle_df(docs: DataFrame, n: int = 3) -> DataFrame:
     )
 
 
-# Build-time intermediates, keyed by (application, corpus dir). Since
-# round 6 the long-lived artifacts (shingle fingerprint table, verified
-# pair list, MinHash candidate list) are STORED tables
-# (``sources/stored.py``) read as files by every consumer; this memo now
-# caches only the pair computation WHILE an index build is in flight, so
-# a build never runs the shingle self-join twice. Retention is bounded:
-# entries for any OTHER (application, corpus) pair are unpersisted when
-# a new corpus is first touched; release() drops everything.
-_SHARED: dict[tuple, DataFrame] = {}
-
-
-def _shared_put(key: tuple, df: DataFrame) -> DataFrame:
-    for other in [k for k in _SHARED if k[:2] != key[:2]]:
-        try:
-            _SHARED.pop(other).unpersist()
-        except Exception:
-            pass
-    _SHARED[key] = df
-    return df
-
-
-def release(sf_dir: str | None = None) -> int:
-    """Unpersist any build-time intermediates (all corpora, or one).
-
-    Consumers read the stored index tables, so after an index build
-    completes nothing needs to stay resident; the bench harness and
-    long-lived services call this between workload families so cached
-    build blocks never tax later queries with eviction/GC pressure.
-    Returns the number of entries dropped; safe to call at any time."""
-    dropped = 0
-    for key in [k for k in _SHARED if sf_dir is None or k[1] == sf_dir]:
-        try:
-            _SHARED.pop(key).unpersist()
-            dropped += 1
-        except Exception:
-            pass
-    return dropped
-
-
 def _shingles_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The shingle FINGERPRINT table (doc_id, word-3-gram) — a stored
-    index artifact since round 6: tokenization runs once per corpus
+    index artifact: tokenization runs once per corpus
     snapshot; pair generation, MinHash signatures, and candidate
     verification all read fingerprint files bucketed by doc_id."""
     from automotive_big_data_analysis_spark.sources.stored import stored_table
@@ -175,11 +139,9 @@ def _computed_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-doc set sizes → Jaccard. The shingle join is hash-partitioned on
     the shingle; hot shingles (high document frequency) are the skew
     risk at scale — AQE skew-join splits them, and the MinHash variant
-    below avoids them entirely. Memoized per (session, corpus) so a
-    rebuild within one session never re-runs the self-join."""
-    key = (spark.sparkContext.applicationId, sf_dir, "ngram_pairs")
-    if key in _SHARED:
-        return _SHARED[key]
+    below avoids them entirely. Only :func:`pair_index_table`'s build
+    runs this, once per corpus snapshot, and a single write consumes
+    it."""
     sh = _shingles_cached(spark, sf_dir)
     sizes = sh.groupBy("doc_id").agg(F.count("*").alias("sz"))
     a = sh.alias("a")
@@ -194,7 +156,7 @@ def _computed_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("sz").alias("sz_a"))
     sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("sz").alias("sz_b"))
-    pairs = (
+    return (
         inter.join(sa, "doc_a")
         .join(sb, "doc_b")
         .select(
@@ -205,9 +167,7 @@ def _computed_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("jaccard"),
         )
         .where(F.col("jaccard") >= JACCARD_THRESHOLD)
-        .cache()
     )
-    return _shared_put(key, pairs)
 
 
 def _minhash_signatures(sh: DataFrame) -> DataFrame:

@@ -28,8 +28,6 @@ row data after the one inventory scan.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -38,6 +36,7 @@ from automotive_big_data_analysis_spark.operators.sampling import (
     _bucket_sql,
     hash_bucket,
 )
+from automotive_big_data_analysis_spark.sources import stored
 
 MAINT_LOCATION = "/tmp/abda_maintenance"
 N_FRAGMENTS = 64  # small files the simulated ingest leaves behind
@@ -52,88 +51,59 @@ def _frag_col():
     return hash_bucket(F.col("event_id").cast("string"), N_FRAGMENTS)
 
 
+def _events_us(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The mirrored events columns, ``ts`` as epoch microseconds."""
+    return load_table(spark, sf_dir, "events").select(
+        "event_id",
+        F.unix_micros("ts").alias("ts_us"),
+        "user_id",
+        "event_type",
+        "value",
+    )
+
+
 def ensure_fragmented(spark: SparkSession, sf_dir: str) -> str:
-    """Write the fragmented events mirror once per corpus snapshot.
+    """Write the fragmented events mirror once per corpus snapshot
+    (:func:`stored.mirror`).
 
     Layout: ``frag=K`` directory partitions, ONE file each — the
     repartition keys every fragment to a single task, and a task writes
-    one file per directory partition it holds. Idempotent per (corpus,
-    version, source-content fingerprint), superseded generations pruned
-    (the ``sources/text_formats._ensure_written`` discipline)."""
-    from automotive_big_data_analysis_spark.sources.stored import (
-        source_fingerprint,
-    )
+    one file per directory partition it holds."""
 
-    base = os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
-    fp = source_fingerprint(sf_dir, "events")
-    path = f"{MAINT_LOCATION}/{base}/events_frag_v{FRAG_VERSION}_{fp}"
-    if not os.path.exists(f"{path}/_SUCCESS"):
-        import shutil
-
-        parent = os.path.dirname(path)
-        if os.path.isdir(parent):
-            for d in os.listdir(parent):
-                if d.startswith("events_frag_v") and d != os.path.basename(
-                    path
-                ):
-                    shutil.rmtree(os.path.join(parent, d), ignore_errors=True)
-        ev = load_table(spark, sf_dir, "events")
+    def write(path: str) -> None:
         (
-            ev.select(
-                "event_id",
-                F.unix_micros("ts").alias("ts_us"),
-                "user_id",
-                "event_type",
-                "value",
-            )
+            _events_us(spark, sf_dir)
             .withColumn("frag", _frag_col())
             .repartition(N_FRAGMENTS, "frag")
             .write.mode("overwrite")
             .partitionBy("frag")
             .parquet(path)
         )
-    return path
+
+    return stored.mirror(
+        MAINT_LOCATION, sf_dir, "events", f"events_frag_v{FRAG_VERSION}", write
+    )
 
 
 def ensure_bydate(spark: SparkSession, sf_dir: str) -> str:
     """Write the TIME-partitioned layout of the same rows once per
     corpus snapshot: ``day=K`` directories (epoch-day of the event),
     one file each — the layout a compaction/clustering job would
-    produce for a time-series table. Same idempotence discipline as
-    :func:`ensure_fragmented`."""
-    from automotive_big_data_analysis_spark.sources.stored import (
-        source_fingerprint,
-    )
+    produce for a time-series table."""
 
-    base = os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
-    fp = source_fingerprint(sf_dir, "events")
-    path = f"{MAINT_LOCATION}/{base}/events_bydate_v{DATE_VERSION}_{fp}"
-    if not os.path.exists(f"{path}/_SUCCESS"):
-        import shutil
-
-        parent = os.path.dirname(path)
-        if os.path.isdir(parent):
-            for d in os.listdir(parent):
-                if d.startswith("events_bydate_v") and d != os.path.basename(
-                    path
-                ):
-                    shutil.rmtree(os.path.join(parent, d), ignore_errors=True)
-        ev = load_table(spark, sf_dir, "events")
+    def write(path: str) -> None:
         (
-            ev.select(
-                "event_id",
-                F.unix_micros("ts").alias("ts_us"),
-                "user_id",
-                "event_type",
-                "value",
-            )
+            _events_us(spark, sf_dir)
             .withColumn("day", F.expr(f"ts_us div {US_PER_DAY}"))
             .repartition("day")
             .write.mode("overwrite")
             .partitionBy("day")
             .parquet(path)
         )
-    return path
+
+    return stored.mirror(
+        MAINT_LOCATION, sf_dir, "events", f"events_bydate_v{DATE_VERSION}", write
+    )
 
 
 def ensure_layout_mirrors(spark: SparkSession, sf_dir: str) -> None:

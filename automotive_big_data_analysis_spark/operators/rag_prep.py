@@ -32,7 +32,10 @@ from pyspark.sql import functions as F
 
 from automotive_big_data_analysis_spark.functions import vectors as V
 
-from automotive_big_data_analysis_spark.catalog import load_table
+from automotive_big_data_analysis_spark.catalog import load_table, memoized
+
+# the session memo's release hook, re-exported for long-lived callers
+from automotive_big_data_analysis_spark.catalog import release  # noqa: F401
 from automotive_big_data_analysis_spark.functions import text as tx
 
 CHUNK_TOKENS = 32  # retrieval window, in whitespace tokens
@@ -118,32 +121,6 @@ def docs_chunk_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# checkpointed postings per (session, corpus) — the inverted index is
-# built once and shared by every retrieval consumer in the session
-_POSTINGS_MEMO: dict = {}
-
-
-def release(sf_dir: str | None = None) -> int:
-    """Drop the session's checkpointed postings memo (all corpora, or
-    one) and unpersist the pinned checkpoint blocks.
-
-    Mirrors ``dedup.release``: without it, a ``documents.parquet``
-    rewritten under the same sf_dir within one Spark application would
-    silently serve STALE checkpointed postings to every BM25/hybrid
-    consumer, and the localCheckpoint blocks would stay pinned for the
-    application lifetime across corpora. Fixtures that rewrite a corpus
-    in-session call this; the bench harness may call it between
-    families. Returns the number of memo entries dropped."""
-    dropped = 0
-    for key in [k for k in _POSTINGS_MEMO if sf_dir is None or k[1] == sf_dir]:
-        df = _POSTINGS_MEMO.pop(key)
-        try:
-            df.unpersist()
-        except Exception:
-            pass
-        dropped += 1
-    return dropped
-
 BM25_K1 = 1.2
 BM25_B = 0.75
 BM25_K1P1 = 2.2  # k1 + 1, as ONE literal so both engines parse identical bits
@@ -185,19 +162,18 @@ def _bm25_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     # terms, df, doc lengths, scoring); without materialization Catalyst
     # re-plans the scan+tokenize+explode subtree into each one — five
     # fact scans instead of one (verified via plan regexp count).
-    # localCheckpoint pins it once, memoized per (session, corpus) so
-    # the top-k gate and the hybrid fusion share one build; in
-    # production this table IS the stored inverted index (the
-    # sources/stored.py discipline).
-    memo_key = (spark.sparkContext.applicationId, sf_dir)
-    tf = _POSTINGS_MEMO.get(memo_key)
-    if tf is None:
-        tf = (
-            posting.groupBy("doc_id", "term")
-            .agg(F.count("*").alias("tf"))
-            .localCheckpoint()
-        )
-        _POSTINGS_MEMO[memo_key] = tf
+    # localCheckpoint pins it once per corpus snapshot in the session
+    # memo, so the top-k gate and the hybrid fusion share one build; in
+    # production this table IS the stored inverted index.
+    tf = memoized(
+        spark,
+        sf_dir,
+        "documents",
+        "bm25_postings",
+        lambda: posting.groupBy("doc_id", "term")
+        .agg(F.count("*").alias("tf"))
+        .localCheckpoint(),
+    )
     dl = tf.groupBy("doc_id").agg(F.sum("tf").cast("long").alias("dl"))
     totals = dl.agg(
         F.count("*").alias("n_docs"),

@@ -32,38 +32,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from automotive_big_data_analysis_spark.catalog import load_table, spread
+from automotive_big_data_analysis_spark.catalog import load_table, memoized, spread
+
+# the session memo's release hook, re-exported for long-lived callers
+from automotive_big_data_analysis_spark.catalog import release  # noqa: F401
 from automotive_big_data_analysis_spark.functions import exact as ex
 from automotive_big_data_analysis_spark.functions import vectors as V
 
 N_QUERIES = 10  # vec_id < 10 are the demo query set
 TOP_K = 5
 
-# Since round 6 the ANN index structures (codebook / cell assignment /
-# PQ codes) are STORED tables (``_stored_index``) — trained once per
-# corpus snapshot and read as files by every search, exactly the
-# production index lifecycle. No session memos remain in this family;
-# ``release()`` stays as the (now no-op) cache hook the bench harness
-# calls between query groups.
-_SHARED: dict[tuple, DataFrame] = {}
-
-
-def release(sf_dir: str | None = None) -> int:
-    """Drop any session-resident index memos (none since the stored-index
-    migration — retained for harness compatibility). Also drops the
-    cached corpus row counts that parameterize the IVF index, so a
-    rewritten corpus re-derives its operating point."""
-    dropped = 0
-    for key in [k for k in _SHARED if sf_dir is None or k[1] == sf_dir]:
-        _SHARED.pop(key)
-        dropped += 1
-    for key in [
-        k
-        for k in _N_CACHE
-        if sf_dir is None or k.split("@", 1)[0] == sf_dir
-    ]:
-        _N_CACHE.pop(key)
-    return dropped
 # The corpus has no near-identical embeddings (max pairwise cosine ≈0.51),
 # so the pair threshold is set where the operator has observable output.
 DUP_COSINE = 0.45
@@ -216,8 +194,6 @@ IVF_K_FACTOR = 2.0
 IVF_K_MIN = 8
 IVF_K_MAX = 65536  # a 2^16-cell codebook covers ~10^9-vector corpora
 
-_N_CACHE: dict[str, int] = {}
-
 
 class IvfParams:
     """Derived per-corpus index parameters (pure function of N)."""
@@ -250,22 +226,17 @@ class IvfParams:
 
 def _corpus_n(spark: SparkSession, sf_dir: str) -> int:
     """Corpus row count — the single scalar that parameterizes the IVF
-    index. Counted once per (process, corpus GENERATION) and cached;
-    this is an index-build-time metadata lookup (parquet count-star,
-    satisfied from footer statistics), not a hot-path collect. The
-    cache key folds in ``source_fingerprint`` (file names/sizes/mtimes
-    — metadata-only, same staleness rule the stored-index paths use),
-    so a corpus rewritten in-process self-invalidates and re-derives N
-    without relying on callers to invoke ``release()`` (round-9
-    ADVICE)."""
-    from automotive_big_data_analysis_spark.sources.stored import (
-        source_fingerprint,
+    index. Counted once per corpus snapshot in the session memo
+    (:func:`catalog.memoized`); this is an index-build-time metadata
+    lookup (parquet count-star, satisfied from footer statistics), not a
+    hot-path collect."""
+    return memoized(
+        spark,
+        sf_dir,
+        "embeddings",
+        "corpus_n",
+        lambda: load_table(spark, sf_dir, "embeddings").count(),
     )
-
-    key = f"{sf_dir}@{source_fingerprint(sf_dir, 'embeddings')}"
-    if key not in _N_CACHE:
-        _N_CACHE[key] = load_table(spark, sf_dir, "embeddings").count()
-    return _N_CACHE[key]
 
 
 def ivf_params(spark: SparkSession, sf_dir: str) -> IvfParams:

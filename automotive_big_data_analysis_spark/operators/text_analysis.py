@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 from automotive_big_data_analysis_spark.catalog import load_table, spread
 from automotive_big_data_analysis_spark.functions import exact as ex
 from automotive_big_data_analysis_spark.functions import text as tx
+from automotive_big_data_analysis_spark.sources import stored
 
 _STOP_EN_SQL = ", ".join(f"'{w}'" for w in tx.STOPWORDS_EN)
 _STOP_ES_SQL = ", ".join(f"'{w}'" for w in tx.STOPWORDS_ES)
@@ -419,34 +420,21 @@ _PLANTED_TEXT_SQL = f"""text
 
 def _planted_mirror_path(spark: SparkSession, sf_dir: str) -> str:
     """Materialize the PII-planted documents mirror once per corpus
-    snapshot (fingerprinted path, superseded mirrors pruned — the
-    ``sources/text_formats._ensure_written`` discipline)."""
-    import os
-    import shutil
+    snapshot (:func:`stored.mirror`)."""
 
-    from automotive_big_data_analysis_spark.sources.stored import (
-        source_fingerprint,
-    )
-
-    base = os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
-    fp = source_fingerprint(sf_dir, "documents")
-    path = (
-        f"{PII_MIRROR_LOCATION}/{base}/documents_pii"
-        f"_v{PII_MIRROR_VERSION}_{fp}"
-    )
-    if not os.path.exists(f"{path}/_SUCCESS"):
-        parent = os.path.dirname(path)
-        if os.path.isdir(parent):
-            for d in os.listdir(parent):
-                if d.startswith("documents_pii_v") and d != os.path.basename(
-                    path
-                ):
-                    shutil.rmtree(os.path.join(parent, d), ignore_errors=True)
+    def write(path: str) -> None:
         docs = load_table(spark, sf_dir, "documents")
         spread(docs).select(
             "doc_id", "lang", "source", _planted_text_col().alias("text")
         ).write.mode("overwrite").parquet(path)
-    return path
+
+    return stored.mirror(
+        PII_MIRROR_LOCATION,
+        sf_dir,
+        "documents",
+        f"documents_pii_v{PII_MIRROR_VERSION}",
+        write,
+    )
 
 
 def pii_scrub_planted(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -23,12 +23,11 @@ generation-1 files).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from automotive_big_data_analysis_spark.functions import exact as ex
+from automotive_big_data_analysis_spark.sources import stored
 from automotive_big_data_analysis_spark.sources.text_formats import (
     _interchange_frame,
 )
@@ -42,29 +41,10 @@ _GEN1_COND = "event_id % 2 = 0"  # old producer: no `value` column
 
 def ensure_generations(spark: SparkSession, sf_dir: str) -> str:
     """Write the two-generation mirror once per corpus snapshot
-    (idempotent per (corpus, version, source fingerprint); superseded
-    generations pruned — the ``text_formats._ensure_written``
-    discipline)."""
-    from automotive_big_data_analysis_spark.sources.stored import (
-        source_fingerprint,
-    )
+    (:func:`stored.mirror`). A root ``_SUCCESS`` marks it complete once
+    both generations are written; readers skip ``_`` files."""
 
-    base = os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
-    fp = source_fingerprint(sf_dir, "events")
-    path = f"{SCHEMA_EVO_LOCATION}/{base}/events_gen_v{EVO_VERSION}_{fp}"
-    if not (
-        os.path.exists(f"{path}/gen=1/_SUCCESS")
-        and os.path.exists(f"{path}/gen=2/_SUCCESS")
-    ):
-        import shutil
-
-        parent = os.path.dirname(path)
-        if os.path.isdir(parent):
-            for d in os.listdir(parent):
-                if d.startswith("events_gen_v") and d != os.path.basename(
-                    path
-                ):
-                    shutil.rmtree(os.path.join(parent, d), ignore_errors=True)
+    def write(path: str) -> None:
         # epoch-µs interchange columns (bit-lossless timestamps across
         # engines — text_formats' rule applies to parquet mirrors too)
         ev = _interchange_frame(spark, sf_dir)
@@ -72,7 +52,11 @@ def ensure_generations(spark: SparkSession, sf_dir: str) -> str:
         gen2 = ev.where(~F.expr(_GEN1_COND)).drop("props")
         gen1.write.mode("overwrite").parquet(f"{path}/gen=1")
         gen2.write.mode("overwrite").parquet(f"{path}/gen=2")
-    return path
+        open(f"{path}/_SUCCESS", "w").close()
+
+    return stored.mirror(
+        SCHEMA_EVO_LOCATION, sf_dir, "events", f"events_gen_v{EVO_VERSION}", write
+    )
 
 
 def read_merged(spark: SparkSession, sf_dir: str) -> DataFrame:

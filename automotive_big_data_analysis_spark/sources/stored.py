@@ -1,56 +1,57 @@
-"""Store-through staged tables: the persisted-index lifecycle.
+"""The derived-data lifecycle: everything built once per corpus snapshot
+and persisted, so every consumer reads FILES.
 
-A training-data pipeline's expensive derived structures — near-dup pair
-lists, shingle fingerprint tables, ANN codebooks/cells/codes — are built
-ONCE per corpus snapshot and persisted; every consumer reads index
-FILES. This helper gives that lifecycle to any builder:
+Three pieces, one freshness rule — an artifact's path carries
+``source_fingerprint`` of the corpus table it derives from, so a
+regenerated corpus in the same directory is never served from files
+built over the previous one:
 
-* idempotent per (corpus basename, parameter tag): an existing table is
-  reused, never rebuilt;
-* the parameter tag is part of the path, so changing the semantics that
-  shaped a structure (thresholds, K, band widths) builds a FRESH index
-  instead of silently serving files computed under the old definition;
-* bucketed+sorted by the consumer-side join key (``sources/bucketed.py``
-  discipline) so fact-side joins against the index can co-locate;
-* files that outlive the in-memory session catalog (a NEW session — the
-  nightly-batch case) are re-attached via CLUSTERED BY DDL with no data
-  movement.
+* :func:`mirror` — a derived file set (interchange mirrors, maintenance
+  layouts, planted corpora) at ``{location}/{corpus}/{family}_{fp}``,
+  complete once ``_SUCCESS`` exists there.
+* :func:`stored_table` / :func:`ensure_bucketed_table` — bucketed+sorted
+  catalog tables (index structures, the orders⋈lineitem layout). The
+  parameter tag and bucket count are part of the path too, so changed
+  semantics build FRESH files instead of reusing old ones; files that
+  outlive the in-memory catalog (a NEW session) are re-attached by
+  CLUSTERED BY DDL with no data movement.
+* :func:`prune_superseded` — a new generation removes the superseded
+  siblings of its family; :func:`gc_stale_generations` is the standalone
+  sweep for generations orphaned without a rebuild.
+
+Concurrency: pool threads share one session. The registration set lives
+on the session object (``vars(spark)``, dropped with the session) and is
+keyed by (database, table, path); its membership test, ``add`` and
+``discard`` are each atomic under the GIL, so no lock is needed. Two
+threads that miss at once both verify, and a duplicate verification only
+repeats idempotent DDL (``CREATE ... IF NOT EXISTS``). Concurrent FIRST
+builds of the same artifact are not deduplicated: the build pools give
+each thread disjoint artifacts.
 """
 
 from __future__ import annotations
 
 import os
+import shutil
 from collections.abc import Callable
+from urllib.parse import unquote, urlparse
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
-
-from automotive_big_data_analysis_spark.sources.bucketed import (
-    _register_existing,
-)
 
 DEFAULT_BUCKETS = 8
 
-# Registration memo (round-13 optimization): once a stored table has been
-# verified registered in THIS application, later accesses skip the
-# catalog round-trips (CREATE DATABASE IF NOT EXISTS + listTables — each
-# a driver-side job; the ANN recall reports touch ~10 stored tables per
-# query and the footprint audit ran ~100 such jobs per invocation).
-# Staleness is unaffected: the key embeds the full generation path —
-# corpus basename, parameter tag, bucket count, and the source-table
-# content fingerprint — so a regenerated corpus or changed parameters
-# produce a NEW key and take the slow verification path. External
-# deletion (the bench wipes index dirs between runs, tests exercise
-# rebuilds) is caught by re-checking the _SUCCESS marker on every hit —
-# an os.stat, not a catalog call.
-_REGISTERED: set[tuple[str, str, str]] = set()
+
+def corpus_name(sf_dir: str) -> str:
+    """The corpus directory's basename as a path/database-safe token."""
+    return os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
 
 
 def source_fingerprint(sf_dir: str, table: str) -> str:
     """Cheap content fingerprint of a source table: a hash of every file's
-    (relative name, size, mtime). An index path carrying this can never
+    (relative name, size, mtime). An artifact path carrying this can never
     serve structures built from a PREVIOUS corpus generation that reused
-    the same directory names — the staleness the parameter tag alone
-    cannot see. Metadata-only: no data is read."""
+    the same directory names. Metadata-only: no data is read."""
     import hashlib
 
     path = f"{sf_dir}/{table}.parquet"
@@ -65,17 +66,51 @@ def source_fingerprint(sf_dir: str, table: str) -> str:
     return hashlib.md5("|".join(parts).encode()).hexdigest()[:10]
 
 
+def prune_superseded(parent: str, prefix: str, keep: str) -> None:
+    """Remove every directory in ``parent`` whose name starts with
+    ``prefix``, except ``keep`` — the superseded generations of one
+    artifact family. Nothing outside the prefix is touched."""
+    if not os.path.isdir(parent):
+        return
+    for d in os.listdir(parent):
+        stale = os.path.join(parent, d)
+        if d.startswith(prefix) and d != keep and os.path.isdir(stale):
+            shutil.rmtree(stale, ignore_errors=True)
+
+
+def mirror(
+    location: str,
+    sf_dir: str,
+    src_table: str,
+    family: str,
+    write: Callable[[str], None],
+) -> str:
+    """Return the path of ``family``'s mirror of ``src_table``, calling
+    ``write(path)`` once per corpus snapshot to produce it.
+
+    ``family`` ends in ``_v<version>`` (bump it when the layout changes);
+    the path is ``{location}/{corpus}/{family}_{fingerprint}``. Before
+    writing, the family's superseded versions and fingerprints are
+    pruned. ``write`` must leave ``{path}/_SUCCESS`` last: the mirror
+    counts as complete once that marker exists."""
+    parent = f"{location}/{corpus_name(sf_dir)}"
+    name = f"{family}_{source_fingerprint(sf_dir, src_table)}"
+    path = f"{parent}/{name}"
+    if not os.path.exists(f"{path}/_SUCCESS"):
+        prune_superseded(parent, family[: family.rindex("_v") + 2], keep=name)
+        write(path)
+    return path
+
+
 def scan_generations(location: str, corpus_prefix: str) -> list[dict]:
     """One dict per on-disk index GENERATION (database directory) under
     ``location`` belonging to ``corpus_prefix``: its base name, the
     table directories it contains, and the bytes it holds. Driver-side
-    metadata walk (``os.stat`` only — the ``source_fingerprint``
-    discipline); no data files are opened. This is the inventory half
-    of the warehouse GC an index fleet runs per corpus snapshot: the
-    parameter-tagged path scheme guarantees a SUPERSEDED tag is never
-    read again, so every generation that is not the live base is pure
-    disk leak (round-12 ADVICE observed exactly that class on a
-    tag-format change)."""
+    metadata walk (``os.stat`` only); no data files are opened. This is
+    the inventory half of the warehouse GC an index fleet runs per
+    corpus snapshot: the parameter-tagged path scheme guarantees a
+    SUPERSEDED tag is never read again, so every generation that is not
+    the live base is pure disk leak."""
     out: list[dict] = []
     if not os.path.isdir(location):
         return out
@@ -106,14 +141,11 @@ def gc_stale_generations(
     as live (its base is in ``keep_bases``) or stale, and — with
     ``remove`` — reclaim the stale ones from disk. Returns the
     pre-removal inventory with ``live``/``removed`` flags. Only
-    directories owned by this corpus prefix are ever touched; other
-    corpora and unrelated locations are invisible to the walk. The
-    complement of ``stored_table``'s build-time pruning (which only
+    directories owned by this corpus prefix are ever touched. The
+    complement of the build-time :func:`prune_superseded` (which only
     fires when a NEW generation is built): this is the standalone
     nightly sweep that reclaims generations orphaned by parameter-tag
     changes with no rebuild in between."""
-    import shutil
-
     gens = scan_generations(location, corpus_prefix)
     for g in gens:
         g["live"] = g["base"] in keep_bases
@@ -122,6 +154,105 @@ def gc_stale_generations(
             shutil.rmtree(os.path.join(location, g["base"]), ignore_errors=True)
             g["removed"] = True
     return gens
+
+
+def _register_existing(
+    spark: SparkSession, table: str, path: str, key: str, n_buckets: int
+) -> None:
+    """Attach already-written bucket files as an external bucketed table.
+
+    The session catalog is in-memory, so a new session forgets the table
+    even though the files (and their bucket-id filenames) persist. The
+    CLUSTERED BY DDL re-declares the layout over the existing LOCATION —
+    no data movement, and scans regain the no-shuffle bucket guarantee.
+    The column list comes from the files' own footers.
+
+    ``n_buckets`` MUST match the count the files were written with: the
+    DDL is a declaration Spark trusts (co-location guarantees for
+    sort-merge joins ride on it), so a mismatch would silently mis-route
+    bucket pruning. The filename check below makes a wrong declaration a
+    loud error instead."""
+    import re
+
+    # bucketed part files are named part-...._00007.c000... — the
+    # trailing _NNNNN group is the bucket id. Assert the declared count
+    # strictly exceeds every observed id (ids are 0-based).
+    ids = [
+        int(m.group(1))
+        for fn in os.listdir(path)
+        if (m := re.search(r"_(\d{5})(?:\.|$)", fn)) and fn.startswith("part-")
+    ]
+    if ids and max(ids) >= n_buckets:
+        raise ValueError(
+            f"bucket files at {path} carry bucket id {max(ids)} but the "
+            f"re-attach DDL declares only {n_buckets} buckets"
+        )
+    schema = spark.read.parquet(path).schema
+    cols = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in schema)
+    spark.sql(
+        f"CREATE TABLE IF NOT EXISTS {table} ({cols}) USING PARQUET"
+        f" CLUSTERED BY ({key}) SORTED BY ({key}) INTO {n_buckets} BUCKETS"
+        f" LOCATION '{path}'"
+    )
+
+
+def _catalog_path(spark: SparkSession, table: str) -> str:
+    """The local path the catalog maps ``table`` to."""
+    (row,) = (
+        spark.sql(f"DESCRIBE TABLE EXTENDED {table}")
+        .where("col_name = 'Location'")
+        .collect()
+    )
+    return unquote(urlparse(row.data_type).path)
+
+
+def ensure_bucketed_table(
+    spark: SparkSession,
+    db: str,
+    name: str,
+    path: str,
+    bucket_col: str,
+    build: Callable[[], DataFrame],
+    n_buckets: int = DEFAULT_BUCKETS,
+) -> DataFrame:
+    """Return ``db.name``, backed by the bucketed files at ``path``: the
+    one register-or-write step. Files already complete there are
+    re-attached; otherwise ``build()`` is written bucketed+sorted by
+    ``bucket_col``. A table the catalog still maps to another path (a
+    superseded generation) or to files that vanished is dropped first.
+
+    Once verified, the (db, name, path) triple joins the session's
+    registration set and later calls skip the catalog round-trips
+    (CREATE DATABASE, the location check) — an ``os.stat`` of the
+    ``_SUCCESS`` marker still catches files wiped from disk."""
+    registered = vars(spark).setdefault("_abda_registered", set())
+    key = (db, name, path)
+    table = f"{db}.{name}"
+    complete = os.path.exists(f"{path}/_SUCCESS")
+    if key in registered and complete:
+        try:
+            return spark.table(table)
+        except AnalysisException:
+            pass  # the catalog forgot the table: re-attach below
+    registered.discard(key)
+    spark.sql(
+        f"CREATE DATABASE IF NOT EXISTS {db} LOCATION '{os.path.dirname(path)}'"
+    )
+    exists = spark.catalog.tableExists(table)
+    if exists and not (
+        complete and _catalog_path(spark, table) == os.path.abspath(path)
+    ):
+        spark.sql(f"DROP TABLE {table}")
+        exists = False
+    if not exists:
+        if complete:
+            _register_existing(spark, table, path, bucket_col, n_buckets)
+        else:
+            build().write.bucketBy(n_buckets, bucket_col).sortBy(
+                bucket_col
+            ).option("path", path).mode("overwrite").saveAsTable(table)
+    registered.add(key)
+    return spark.table(table)
 
 
 def stored_table(
@@ -141,87 +272,31 @@ def stored_table(
     write-through from ``build()`` on first touch. Pass ``src_table``
     (the corpus table the structure derives from) to fold its content
     fingerprint into the path — regenerated source data then forces a
-    fresh build instead of reading a stale index.
+    fresh build, and the superseded fingerprints' generations of this
+    (corpus, tag) are pruned.
 
     ``supersede_prefix`` marks ``name`` as the SOLE live generation of a
     table family whose name embeds its own parameter tag (e.g.
     ``recall_frontier_<frontier-tag>``): on first build of a new tag,
-    sibling tables in the same database that share the prefix but not
-    the current name are dropped and their files removed — a tag-format
-    change would otherwise orphan the old generation forever (round-12
-    ADVICE: it is never read under the new tag and never cleaned)."""
+    sibling tables in the same database that share the prefix are
+    dropped and their files removed — a tag-format change would
+    otherwise orphan the old generation forever."""
     # the bucket count shapes the physical layout exactly like any
-    # semantic parameter: folding it into the path means a changed
-    # count builds a fresh layout instead of re-attaching old files
-    # under a wrong CLUSTERED BY declaration (the filename check in
-    # _register_existing only catches counts SMALLER than the layout)
-    tag = f"{tag}nb{n_buckets}"
-    stem = None
-    if src_table:
-        corpus = os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
-        stem = f"{corpus}_{tag}_"
-        tag = f"{tag}_{source_fingerprint(sf_dir, src_table)}"
-    base = f"{os.path.basename(sf_dir.rstrip('/')).replace('.', '_')}_{tag}"
+    # semantic parameter: in the path, a changed count builds a fresh
+    # layout instead of re-attaching old files under a wrong declaration
+    stem = f"{corpus_name(sf_dir)}_{tag}nb{n_buckets}"
+    base = f"{stem}_{source_fingerprint(sf_dir, src_table)}" if src_table else stem
     db = f"{db_prefix}_{base}"
-    loc = f"{location}/{base}"
-    path = f"{loc}/{name}"
-    memo_key = (spark.sparkContext.applicationId, loc, name)
-    if memo_key in _REGISTERED:
-        if os.path.exists(f"{path}/_SUCCESS"):
-            try:
-                return spark.table(f"{db}.{name}")
-            except Exception:
-                # catalog forgot the entry while the memo stayed warm
-                # (table dropped / fresh catalog) — re-attach below via
-                # the full DDL path (lifecycle test pins this)
-                pass
-        _REGISTERED.discard(memo_key)  # wiped or detached — re-verify
-    spark.sql(f"CREATE DATABASE IF NOT EXISTS {db} LOCATION '{loc}'")
-    existing = {t.name for t in spark.catalog.listTables(db)}
-    if supersede_prefix and name not in existing:
-        # GC superseded same-family generations: attached stale tables
-        # are dropped from the catalog, and stale dirs (attached or
-        # left by a previous session) are removed from disk. Only this
-        # database's tables sharing the family prefix are touched.
-        import shutil
-
-        for t in sorted(existing):
-            if t.startswith(supersede_prefix):
-                spark.sql(f"DROP TABLE IF EXISTS {db}.{t}")
-                existing.discard(t)
-        if os.path.isdir(loc):
-            for d in os.listdir(loc):
-                stale = os.path.join(loc, d)
-                if (
-                    d.startswith(supersede_prefix)
-                    and d != name
-                    and os.path.isdir(stale)
-                ):
-                    shutil.rmtree(stale, ignore_errors=True)
-    if name not in existing:
-        if stem and not os.path.exists(f"{path}/_SUCCESS"):
-            # first touch of a NEW corpus generation: prune this
-            # (corpus, tag)'s index dirs for SUPERSEDED fingerprints —
-            # each regeneration would otherwise leave a full orphan
-            # index behind forever (``text_formats`` discipline). Only
-            # sibling dirs sharing the exact parameter stem are
-            # touched; other tags/corpora are untouched.
-            import shutil
-
-            if os.path.isdir(location):
-                for d in os.listdir(location):
-                    if d.startswith(stem) and d != base:
-                        shutil.rmtree(
-                            os.path.join(location, d), ignore_errors=True
-                        )
-        df = build()
-        if os.path.exists(f"{path}/_SUCCESS"):
-            _register_existing(
-                spark, db, name, path, df, bucket_col, n_buckets=n_buckets
-            )
-        else:
-            df.write.bucketBy(n_buckets, bucket_col).sortBy(bucket_col).option(
-                "path", path
-            ).mode("overwrite").saveAsTable(f"{db}.{name}")
-    _REGISTERED.add(memo_key)
-    return spark.table(f"{db}.{name}")
+    path = f"{location}/{base}/{name}"
+    if not os.path.exists(f"{path}/_SUCCESS"):
+        if src_table:
+            prune_superseded(location, f"{stem}_", keep=base)
+        if supersede_prefix:
+            if spark.catalog.databaseExists(db):
+                for t in spark.catalog.listTables(db):
+                    if t.name.startswith(supersede_prefix) and t.name != name:
+                        spark.sql(f"DROP TABLE IF EXISTS {db}.{t.name}")
+            prune_superseded(f"{location}/{base}", supersede_prefix, keep=name)
+    return ensure_bucketed_table(
+        spark, db, name, path, bucket_col, build, n_buckets
+    )

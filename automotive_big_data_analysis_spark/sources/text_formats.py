@@ -21,19 +21,18 @@ FileScan json/csv with empty PushedFilters), which is WHY the ingest
 job's first act is a parquet/bucketed rewrite; compression-codec choice
 governs splittability (gzip text is unsplittable — one task per file;
 plain, bzip2-block, or zstd-framed text splits). The one-time writes here mirror the
-corpus into /tmp (idempotent per corpus basename, _SUCCESS-guarded)
-purely to exercise the read path.
+corpus once per snapshot (``sources/stored.py``) purely to exercise the
+read path.
 """
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from automotive_big_data_analysis_spark.catalog import load_table
 from automotive_big_data_analysis_spark.functions import exact as ex
+from automotive_big_data_analysis_spark.sources import stored
 
 TEXTFMT_LOCATION = "/tmp/abda_text_formats"
 
@@ -80,35 +79,12 @@ CORRUPT_MOD = 97
 
 
 def _ensure_written(spark: SparkSession, sf_dir: str, fmt: str) -> str:
-    """Write the events interchange files once per (corpus, format).
-    The path carries the interchange version (a schema change never
-    reads stale files written under the old layout) AND the source
-    table's content fingerprint (``sources/stored.py`` discipline) — a
-    regenerated parquet corpus in the same directory forces a fresh
-    mirror instead of comparing stale text data against the new oracle."""
-    from automotive_big_data_analysis_spark.sources.stored import (
-        source_fingerprint,
-    )
+    """The events interchange files for (corpus, format), written once
+    per corpus snapshot (:func:`stored.mirror`). The family carries the
+    interchange version, so a schema change never reads stale files
+    written under the old layout."""
 
-    base = os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
-    fp = source_fingerprint(sf_dir, "events")
-    path = (
-        f"{TEXTFMT_LOCATION}/{base}/events_{fmt}"
-        f"_v{INTERCHANGE_VERSION}_{fp}"
-    )
-    if not os.path.exists(f"{path}/_SUCCESS"):
-        # prune this format's mirrors for SUPERSEDED fingerprints/
-        # versions — each corpus regeneration would otherwise leave a
-        # full-size orphan mirror behind forever
-        import shutil
-
-        parent = os.path.dirname(path)
-        if os.path.isdir(parent):
-            for d in os.listdir(parent):
-                if d.startswith(f"events_{fmt}_v") and d != os.path.basename(
-                    path
-                ):
-                    shutil.rmtree(os.path.join(parent, d), ignore_errors=True)
+    def write(path: str) -> None:
         frame = _interchange_frame(spark, sf_dir)
         writer = frame.write.mode("overwrite")
         if fmt == "csv":
@@ -139,7 +115,14 @@ def _ensure_written(spark: SparkSession, sf_dir: str, fmt: str) -> str:
             ).write.mode("overwrite").text(path)
         else:
             writer.json(path)
-    return path
+
+    return stored.mirror(
+        TEXTFMT_LOCATION,
+        sf_dir,
+        "events",
+        f"events_{fmt}_v{INTERCHANGE_VERSION}",
+        write,
+    )
 
 
 def ensure_mirrors(spark: SparkSession, sf_dir: str) -> None:

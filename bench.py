@@ -182,15 +182,12 @@ def main() -> None:
 
     queries = entrymod.queries()
 
-    # Two families stage shared intermediates in executor memory while
-    # their consumers run (dedup: shingle table + verified pair list;
-    # similarity: coarse-cell ranking + PQ encode table). Group each
-    # family's consumers together and release its caches when the family
+    # The dedup and similarity families read stored index FILES; all that
+    # stays in the session is the catalog memo's derived entries (the
+    # BM25 postings checkpoint, the IVF corpus count). Group each
+    # family's consumers together and release() those entries when it
     # finishes, so resident blocks never tax unrelated queries with
-    # eviction/GC pressure — in a production pipeline these are staged
-    # tables with a bounded lifetime, not session-lifetime cache (round-3
-    # bench measured a diffuse 2-7× slowdown on every query scheduled
-    # after the dedup family when its caches stayed resident).
+    # eviction/GC pressure.
     from automotive_big_data_analysis_spark.operators import dedup, similarity
 
     def _uses_dedup_cache(name: str) -> bool:

@@ -61,4 +61,4 @@ def test_load_table_is_zone_free_and_thread_safe(spark):
         sys.setswitchinterval(switch)
     assert sums == [expected] * 4
     assert kolkata.conf.get("spark.sql.session.timeZone") == "Asia/Kolkata"
-    assert list(kolkata._abda_table_memo) == [(SF_SMOKE, "events")]
+    assert list(kolkata._abda_table_memo) == [(SF_SMOKE, "events", "scan")]

@@ -183,11 +183,24 @@ def test_cdc_short_and_empty_docs(spark, tmp_path_factory):
 # --- shared-intermediate lifecycle -------------------------------------------
 
 
+BASE2 = (
+    "rojo azul verde amarillo morado naranja blanco negro gris rosa "
+    "uno dos tres cuatro cinco seis siete ocho nueve diez"
+)
+NEAR2 = BASE2.replace("cinco", "CINCO-X")
+
+
+def _derived_keys(spark, sf_dir):
+    """The session memo's derived (non-scan) entries for ``sf_dir``."""
+    memo = vars(spark).get("_abda_table_memo", {})
+    return [k for k in memo if k[0] == sf_dir and k[2] != "scan"]
+
+
 def test_release_then_reuse_rebuilds(spark, doc_dir, tmp_path_factory):
-    """Index-build memos are session-scoped: building a FRESH corpus's
-    index populates them, release() drops them, and consumers keep
-    serving identical results afterwards (now from the stored index —
-    no recompute needed)."""
+    """An index build leaves nothing session-resident: building a FRESH
+    corpus's index stores it as files, release() has nothing of it to
+    drop, and consumers keep serving identical results afterwards from
+    the stored index."""
     import shutil
 
     fresh = str(tmp_path_factory.mktemp("fresh_docs"))
@@ -195,35 +208,63 @@ def test_release_then_reuse_rebuilds(spark, doc_dir, tmp_path_factory):
         f"{doc_dir}/documents.parquet", f"{fresh}/documents.parquet"
     )
     before = dedup.ngram_jaccard_pairs(spark, fresh).collect()
-    # the build pass staged shingles (+ pair memo) for this corpus
-    assert dedup.release(fresh) >= 1
-    assert not any(k[1] == fresh for k in dedup._SHARED)
+    assert _derived_keys(spark, fresh) == []
+    assert dedup.release(fresh) == 0
     after = dedup.ngram_jaccard_pairs(spark, fresh).collect()
     assert sorted(map(tuple, before)) == sorted(map(tuple, after))
-    # the re-read came from the store, not a rebuild: no memo repopulated
-    assert not any(k[1] == fresh for k in dedup._SHARED)
+    assert _derived_keys(spark, fresh) == []
 
 
 def test_cache_evicts_on_corpus_change(spark, doc_dir, tmp_path_factory):
-    """Touching a different corpus evicts the previous corpus's staged
-    entries — a long-lived session holds at most one corpus resident."""
+    """Touching a different corpus keeps neither corpus's build
+    resident, and each corpus is served its own pairs."""
     dedup.ngram_jaccard_pairs(spark, doc_dir).count()
     other = str(tmp_path_factory.mktemp("other_docs"))
     rows = [(0, BASE, "en", "s", len(BASE)), (1, BASE, "en", "s", len(BASE))]
     spark.createDataFrame(
         rows, "doc_id long, text string, lang string, source string, n_chars long"
     ).coalesce(1).write.mode("overwrite").parquet(f"{other}/documents.parquet")
-    dedup.ngram_jaccard_pairs(spark, other).count()
-    assert not any(k[1] == doc_dir for k in dedup._SHARED)
-    assert any(k[1] == other for k in dedup._SHARED)
-    dedup.release(other)
+    got = dedup.ngram_jaccard_pairs(spark, other).collect()
+    assert [(r.doc_a, r.doc_b) for r in got] == [(0, 1)]
+    assert _derived_keys(spark, doc_dir) == []
+    assert _derived_keys(spark, other) == []
 
 
-BASE2 = (
-    "rojo azul verde amarillo morado naranja blanco negro gris rosa "
-    "uno dos tres cuatro cinco seis siete ocho nueve diez"
-)
-NEAR2 = BASE2.replace("cinco", "CINCO-X")
+def test_pairs_follow_an_in_session_corpus_rewrite(spark, tmp_path):
+    """Rewriting documents.parquet in place, with no release() call, must
+    serve the NEW corpus's pairs — and the generation written for it
+    must hold them too, so a new session reads the same pairs."""
+    path = str(tmp_path)
+    schema = "doc_id long, text string, lang string, source string, n_chars long"
+
+    def write(rows):
+        spark.createDataFrame(rows, schema).coalesce(1).write.mode(
+            "overwrite"
+        ).parquet(f"{path}/documents.parquet")
+
+    write(
+        [
+            (0, BASE, "en", "s", len(BASE)),
+            (1, NEAR, "en", "s", len(NEAR)),
+            (2, FAR, "en", "s", len(FAR)),
+            (3, BASE, "en", "s", len(BASE)),
+        ]
+    )
+    old = dedup.ngram_jaccard_pairs(spark, path).collect()
+    assert sorted((r.doc_a, r.doc_b) for r in old) == [(0, 1), (0, 3), (1, 3)]
+    write(
+        [
+            (10, BASE2, "en", "s", len(BASE2)),
+            (11, NEAR2, "en", "s", len(NEAR2)),
+            (12, FAR, "en", "s", len(FAR)),
+        ]
+    )
+    new = dedup.ngram_jaccard_pairs(spark, path).collect()
+    assert sorted((r.doc_a, r.doc_b) for r in new) == [(10, 11)]
+    again = dedup.ngram_jaccard_pairs(spark.newSession(), path).collect()
+    assert sorted(map(tuple, again)) == sorted(map(tuple, new))
+
+
 
 
 def test_incremental_dedup_policy(spark, tmp_path_factory):

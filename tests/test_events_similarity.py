@@ -297,13 +297,16 @@ def test_kmeans_lloyd_iterations_never_increase_inertia(spark):
 def test_similarity_stored_index_lifecycle(spark):
     """The ANN index structures are STORED tables: after the first build
     the search plan reads index FILES (no training subtree), results are
-    identical across re-reads, release() has nothing session-resident to
-    drop, and a fresh catalog re-attaches the existing files by DDL."""
+    identical across re-reads, release() leaves nothing session-resident
+    for the corpus (only its row count was memoized), and a fresh
+    catalog re-attaches the existing files by DDL."""
     from automotive_big_data_analysis_spark.plans import explain as px
     from tests.conftest import SF_SMOKE
 
     before = sim.knn_ivfpq(spark, SF_SMOKE).collect()
-    assert sim.release(SF_SMOKE) == 0  # nothing memoized in-session
+    sim.release(SF_SMOKE)
+    memo = vars(spark)["_abda_table_memo"]
+    assert [k for k in memo if k[0] == SF_SMOKE and k[2] != "scan"] == []
     after_df = sim.knn_ivfpq(spark, SF_SMOKE)
     plan = px.physical_plan(after_df)
     assert "pq_codes" in plan and "cells" in plan  # file-backed index

@@ -139,29 +139,65 @@ def test_hybrid_rrf_fuses_both_retrievers(spark, tmp_path):
 
 def test_bm25_postings_memo_shared_across_consumers(spark, tmp_path):
     """The checkpointed postings build must happen once per (session,
-    corpus): a second consumer gets the SAME materialized frame."""
+    corpus snapshot): a second consumer gets the SAME materialized
+    frame from the session memo, and release() drops it."""
     from automotive_big_data_analysis_spark.operators import rag_prep as rp
 
     rows = [(0, "alpha beta gamma delta", "en", "s", 22)]
     spark.createDataFrame(
         rows, "doc_id long, text string, lang string, source string, n_chars long"
     ).coalesce(1).write.mode("overwrite").parquet(f"{tmp_path}/documents.parquet")
-    key = (spark.sparkContext.applicationId, str(tmp_path))
-    rp._POSTINGS_MEMO.pop(key, None)
+    memo = vars(spark)["_abda_table_memo"]
+    key = (str(tmp_path), "documents", "bm25_postings")
     rp._bm25_scores(spark, str(tmp_path)).collect()
-    first = rp._POSTINGS_MEMO[key]
+    first = memo[key][1]
     rp._bm25_scores(spark, str(tmp_path)).collect()
-    assert rp._POSTINGS_MEMO[key] is first
+    assert memo[key][1] is first
     assert rp.release(str(tmp_path)) == 1
-    assert key not in rp._POSTINGS_MEMO
+    assert key not in memo
+
+
+def test_release_frees_the_checkpointed_postings(spark, tmp_path):
+    """release() must free the executor blocks it claims to: the
+    postings are a localCheckpoint, whose blocks ``unpersist()`` on the
+    frame does not reach. The same holds when a corpus rewrite replaces
+    the entry."""
+    from automotive_big_data_analysis_spark.operators import rag_prep as rp
+
+    jsc = spark.sparkContext._jsc.sc()
+
+    def cached_rdds():
+        return {info.id() for info in jsc.getRDDStorageInfo()}
+
+    schema = "doc_id long, text string, lang string, source string, n_chars long"
+
+    def write(rows):
+        spark.createDataFrame(rows, schema).coalesce(1).write.mode(
+            "overwrite"
+        ).parquet(f"{tmp_path}/documents.parquet")
+
+    write([(0, "alpha alpha beta gamma delta epsilon", "en", "s", 36)])
+    baseline = cached_rdds()
+    rp.docs_bm25_topk(spark, str(tmp_path)).collect()
+    assert len(cached_rdds() - baseline) == 1
+    assert rp.release(str(tmp_path)) == 1
+    assert cached_rdds() <= baseline  # unrelated blocks may be cleaned
+    rp.docs_bm25_topk(spark, str(tmp_path)).collect()
+    built = cached_rdds() - baseline
+    write([(7, "omega omega kappa sigma theta", "en", "s", 29)])
+    rp.docs_bm25_topk(spark, str(tmp_path)).collect()  # replaces the entry
+    rebuilt = cached_rdds() - baseline
+    assert len(rebuilt) == 1 and rebuilt != built
+    assert rp.release(str(tmp_path)) == 1
+    assert cached_rdds() <= baseline
 
 
 def test_release_invalidates_postings_after_in_session_corpus_rewrite(
     spark, tmp_path
 ):
     """A corpus rewritten under the same sf_dir within one application
-    must not serve stale checkpointed postings once release() is called
-    (without it the memo WOULD — that is the documented hazard)."""
+    must not serve stale checkpointed postings, with no release() call:
+    the memo entry is keyed on the corpus fingerprint."""
     from automotive_big_data_analysis_spark.operators import rag_prep as rp
 
     schema = "doc_id long, text string, lang string, source string, n_chars long"
@@ -181,7 +217,6 @@ def test_release_invalidates_postings_after_in_session_corpus_rewrite(
             (8, "omega kappa sigma zeta lambda mubar", "en", "s", 36),
         ]
     )
-    rp.release(str(tmp_path))  # the fixture-side invalidation contract
     fresh = rp.docs_bm25_topk(spark, str(tmp_path)).collect()
     assert {r.doc_id for r in fresh} == {7, 8}  # stale memo would say {0}
     rp.release(str(tmp_path))

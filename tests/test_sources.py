@@ -398,23 +398,16 @@ def test_stored_table_reattaches_across_sessions_without_rebuild(
     }
     assert before == after  # re-attach moved no data
     # the DDL must declare the bucket count the files were written with
-    # (round-6 ADVICE: _register_existing hard-coded 8)
     detail = spark.sql(f"DESCRIBE TABLE EXTENDED {db}.idx").collect()
     nb = [r.data_type for r in detail if r.col_name == "Num Buckets"]
     assert nb == ["4"]
 
     # a wrong declared count must be a loud error, not a silent
     # co-location lie
-    from automotive_big_data_analysis_spark.sources.bucketed import (
-        _register_existing,
-    )
-
     spark.sql(f"DROP TABLE {db}.idx")
     with pytest.raises(ValueError, match="bucket id"):
-        _register_existing(
-            spark, db, "idx", path, build(), "doc_id", n_buckets=2
-        )
-    _register_existing(spark, db, "idx", path, build(), "doc_id", n_buckets=4)
+        stored._register_existing(spark, f"{db}.idx", path, "doc_id", n_buckets=2)
+    stored._register_existing(spark, f"{db}.idx", path, "doc_id", n_buckets=4)
 
     # touching the source (new mtime, same bytes is enough — the
     # fingerprint is metadata-based) must route to a FRESH build
@@ -456,6 +449,44 @@ def test_bzip2_jsonl_connector_matches_plain(spark):
     assert parts and all(f.endswith(".bz2") for f in parts)
     with open(os.path.join(path, parts[0]), "rb") as fh:
         assert fh.read(3) == b"BZh"  # the bzip2 magic, really compressed
+
+
+def test_stored_table_concurrent_verification_is_idempotent(spark, tmp_path):
+    """8 threads verify one stored table whose catalog entry is gone
+    (the registration set on the session is cold): every thread gets
+    the full table, the files are re-attached rather than rewritten, and
+    the set ends with the table's one entry."""
+    import sys
+    from concurrent.futures import ThreadPoolExecutor
+
+    from automotive_big_data_analysis_spark.sources import stored
+
+    src = str(tmp_path / "corpus")
+    spark.range(20).toDF("doc_id").write.parquet(f"{src}/documents.parquet")
+
+    def make(_=None):
+        return stored.stored_table(
+            spark, str(tmp_path / "wh"), "cc_test", src, "t1", "idx", "doc_id",
+            lambda: spark.read.parquet(f"{src}/documents.parquet"),
+            src_table="documents",
+        ).count()
+
+    assert make() == 20
+    registered = vars(spark)["_abda_registered"]
+    (key,) = [k for k in registered if k[0].startswith("cc_test_")]
+    success = os.path.getmtime(f"{key[2]}/_SUCCESS")
+    spark.sql(f"DROP TABLE {key[0]}.idx")
+    registered.discard(key)
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)  # interleave the threads' set accesses
+    try:
+        with ThreadPoolExecutor(max_workers=8) as pool:
+            counts = list(pool.map(make, range(8), timeout=300))
+    finally:
+        sys.setswitchinterval(switch)
+    assert counts == [20] * 8
+    assert os.path.getmtime(f"{key[2]}/_SUCCESS") == success
+    assert [k for k in registered if k[0].startswith("cc_test_")] == [key]
 
 
 def test_stored_table_prunes_superseded_fingerprints(spark, tmp_path):
@@ -542,6 +573,60 @@ def test_stored_table_supersede_prefix_gcs_stale_generations(spark, tmp_path):
     )
     tables = {t.name for t in spark.catalog.listTables(db)}
     assert "frontier_012" not in tables and "frontier_0_1_2" in tables
+
+
+def test_bucketed_layout_follows_an_in_place_corpus_rewrite(spark, tmp_path):
+    """Regenerating ``orders`` in place must lay out fresh bucketed files:
+    the co-located join equals the raw-parquet join over the NEW corpus,
+    in the same session and in a new one."""
+    import shutil
+
+    from automotive_big_data_analysis_spark.catalog import load_table
+    from automotive_big_data_analysis_spark.functions import exact as ex
+    from automotive_big_data_analysis_spark.sources import bucketed as bk
+    from tests.conftest import SF_SMOKE
+
+    corpus = str(tmp_path / "corpus")
+    os.makedirs(corpus)
+    for t in ("orders", "lineitem"):
+        shutil.copyfile(f"{SF_SMOKE}/{t}.parquet", f"{corpus}/{t}.parquet")
+    wh = str(tmp_path / "wh")
+
+    def bucketed(session):
+        bk.write_bucketed_tables(session, corpus, database="bk_regen", location=wh)
+        df = bk.bucketed_join_revenue(session, "bk_regen")
+        return sorted(map(tuple, df.collect()))
+
+    def raw():
+        li = load_table(spark, corpus, "lineitem")
+        o = load_table(spark, corpus, "orders")
+        return sorted(
+            map(
+                tuple,
+                li.join(o, li.l_orderkey == o.o_orderkey)
+                .groupBy("o_orderpriority")
+                .agg(
+                    ex.dsum(F.col("l_extendedprice") * (1 - F.col("l_discount"))),
+                    F.count("*"),
+                )
+                .collect(),
+            )
+        )
+
+    before = bucketed(spark)
+    assert before == raw()
+    prios = sorted(r[0] for r in before)
+    # same keys, priorities reassigned: only a fresh layout sees it
+    rotated = F.element_at(
+        F.array(*map(F.lit, prios)), (F.col("o_orderkey") % 5 + 1).cast("int")
+    )
+    spark.read.parquet(f"{SF_SMOKE}/orders.parquet").withColumn(
+        "o_orderpriority", rotated
+    ).write.mode("overwrite").parquet(f"{corpus}/orders.parquet")
+    after = raw()
+    assert after != before
+    assert bucketed(spark) == after
+    assert bucketed(spark.newSession()) == after
 
 
 def test_schema_evolution_merged_read_null_fills_exactly(spark):
