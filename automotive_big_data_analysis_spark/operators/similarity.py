@@ -3,31 +3,42 @@ embedding, label).
 
 Training-data-pipeline extension: brute-force cosine top-k as the
 correctness baseline, with three scale paths — multi-probe hyperplane-LSH
-(Hamming radius ``LSH_RADIUS``), IVF coarse-quantizer cells, and
-product-quantization codes with ADC scoring (composing as IVF-PQ,
-shipped with an exact-cosine rerank stage — ``knn_ivfpq_rerank``) —
-plus cosine near-dup pairs (blocked GEMM) and per-label centroids.
-Since round 9 the IVF operating point is CORPUS-DERIVED (``ivf_params``:
-K = clamp(ceil(2·√N), 8, 65536) cells, nprobe = ceil(K/3), stored
-postings depth ceil(K/2)) — round 8 measured that the previous fixed
-point decays with corpus growth (recall@5 0.82 → 0.56 at 10×); the
-derived rule holds recall@5 ≥ 0.8 at bench scale (0.82 at sf0.1,
-0.84 at sf0.01 — ``scripts/calibrate_ivf.py``), and the probe/K
-fractions themselves are calibrated from the measured
-``knn_recall_tradeoff`` frontier, which stays the per-corpus
-recalibration instrument. All scoring runs in JVM higher-order
-functions (``functions/vectors.py``); the DuckDB oracle executes the
-same arithmetic via ``list_dot_product`` and derives the SAME integer
-parameters from a COUNT(*) scalar subquery.
+(Hamming radius ``LSH_RADIUS``, single- and multi-table), IVF
+coarse-quantizer cells, and product-quantization codes with ADC scoring
+(composing as IVF-PQ, shipped with an exact-cosine rerank stage) — plus
+cosine near-dup pairs (blocked GEMM) and per-label centroids. The IVF
+operating point is CORPUS-DERIVED (``ivf_params``: K = clamp(ceil(2·√N),
+8, 65536) cells, shipped probe depth ceil(K/3), stored postings depth
+ceil(K/2)): a fixed point decays with corpus growth (recall@5 0.82 →
+0.56 at 10×), the derived rule holds recall@5 ≥ 0.8 at bench scale, and
+the probe/K fractions are calibrated from the ``knn_recall_tradeoff``
+frontier, which stays the per-corpus recalibration instrument. All
+scoring runs in JVM higher-order functions (``functions/vectors.py``);
+the DuckDB oracle executes the same arithmetic via ``list_dot_product``
+and derives the SAME integer parameters from a COUNT(*) scalar subquery.
+
+One search path per method. Each ANN method has ONE candidate function
+that carries the probe depth ``pr`` that discovered each (query_id,
+vec_id) pair — ``_ivf_candidates`` (postings rank), ``_lsh_scored``
+(mask radius), ``_lsh_mt_scored`` (radius and table count),
+``_ivfpq_adc_scored`` / ``_ivf_sq8_scored`` (IVF candidates scored from
+codes). Exact scoring is ``_exact_scored`` and the per-query cut is
+``_top``. The registered searches, the reranks, the recall reports and
+the stored recall frontier all read these: a search cuts at its shipped
+depth, the frontier keeps ``pr`` and folds every level out of one
+max-depth pass, so a frontier row and the search it describes cannot
+drift apart.
 
 Scale shape: the query side of a top-k search is small → broadcast it; the
 corpus side streams partition-parallel with no shuffle until the final
-per-query top-k (TakeOrdered on |queries|×k rows). The LSH variant
-replaces the full scan with a bucket equi-join — at 100 TB the bucket key
-becomes the partitioning key and only bucket-local pairs are scored.
+per-query top-k (|queries|×k rows). The LSH variant replaces the full
+scan with a bucket equi-join — at 100 TB the bucket key becomes the
+partitioning key and only bucket-local pairs are scored.
 """
 
 from __future__ import annotations
+
+import functools
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -53,29 +64,52 @@ def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spread(e).select("vec_id", "label", V.as_double("embedding").alias("v"))
 
 
+def _query_side(vecs: DataFrame) -> DataFrame:
+    """(query_id, qv): the query rows of a (vec_id, v) relation — always
+    |queries| rows, so every caller broadcasts it."""
+    return vecs.where(F.col("vec_id") < N_QUERIES).select(
+        F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
+    )
+
+
+def _cosine():
+    """The exact cosine of ``qv`` and ``v``, rounded to 6 decimals — the
+    score every exact-ranked method and the oracle share."""
+    return F.round(V.cosine(F.col("qv"), F.col("v")), 6)
+
+
+def _exact_scored(spark: SparkSession, sf_dir: str, pairs: DataFrame) -> DataFrame:
+    """``pairs`` (query_id, vec_id, …) plus their exact ``cosine``: the
+    candidate's vector joins on vec_id, the query side is broadcast."""
+    emb = _emb(spark, sf_dir)
+    return (
+        pairs.join(emb.select("vec_id", "v"), "vec_id")
+        .join(F.broadcast(_query_side(emb)), "query_id")
+        .select(*pairs.columns, _cosine().alias("cosine"))
+    )
+
+
+def _top(scored: DataFrame, order: list, depth: int = TOP_K) -> DataFrame:
+    """The per-query top-``depth`` window of a scored relation: rows
+    ranked within each query by ``order`` with ``vec_id`` breaking ties
+    (every engine ranks identically), the position in ``rank``."""
+    w = Window.partitionBy("query_id").orderBy(*order, F.col("vec_id"))
+    return scored.withColumn("rank", F.row_number().over(w)).where(
+        F.col("rank") <= depth
+    )
+
+
 def knn_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact cosine top-5 neighbors for each query vector (vec_id < 10).
 
     The query set is broadcast; each corpus partition scores locally and
     only |q|×k candidate rows reach the final ordering."""
     emb = _emb(spark, sf_dir)
-    queries = emb.where(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
-    )
     scored = emb.join(
-        F.broadcast(queries), F.col("vec_id") != F.col("query_id")
-    ).select(
-        "query_id",
-        "vec_id",
-        F.round(V.cosine(F.col("qv"), F.col("v")), 6).alias("cosine"),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("vec_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= TOP_K)
-        .select("query_id", "rank", "vec_id", "cosine")
+        F.broadcast(_query_side(emb)), F.col("vec_id") != F.col("query_id")
+    ).select("query_id", "vec_id", _cosine().alias("cosine"))
+    return _top(scored, [F.col("cosine").desc()]).select(
+        "query_id", "rank", "vec_id", "cosine"
     )
 
 
@@ -83,13 +117,11 @@ def _bf_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The STORED brute-force ground truth — |queries| × k rows, a
     deterministic function of the corpus and (N_QUERIES, TOP_K), so it
     is a per-snapshot evaluation artifact exactly like the recall
-    frontier (round 11: before this table the four per-family recall
-    reports each re-ran the full exact scan — at 100 TB the ground
-    truth is the expensive half of every evaluation query, and it never
-    changes between them). Consumers (recall reports, the frontier
-    build) read the stored rows; the registered ``knn_bruteforce``
-    query remains a LIVE search — it is the baseline the correctness
-    gate exercises, not a table read."""
+    frontier: the ground truth is the expensive half of every
+    evaluation query and never changes between them. Consumers (recall
+    reports, the frontier build) read the stored rows; the registered
+    ``knn_bruteforce`` query remains a LIVE search — it is the baseline
+    the correctness gate exercises, not a table read."""
     return _stored_index(
         spark,
         sf_dir,
@@ -99,22 +131,52 @@ def _bf_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _sigged_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(sig, vec_id, v): the STORED LSH postings — searches scan index
-    files only; no per-query re-hash and no corpus join (the postings
-    carry the vector payload, so in-bucket exact scoring needs nothing
-    else)."""
-    return _lsh_postings(spark, sf_dir)
-
-
 # Multi-probe Hamming radius for knn_lsh, chosen from the measured
-# knn_recall_tradeoff frontier (round 7, sf0.01): radius 0 — the single
-# signature bucket — gave recall@5 = 0.04 (too low to ship); radius 1
-# reached 0.18; radius 2 reached 0.42 for 769 scanned candidate rows,
-# still ~26x under brute force. The sweep stays the tool for re-deriving
-# this per corpus; raising recall further is IVF/IVF-PQ-rerank territory
-# (knn_ivf at the derived ceil(K/3) probe depth holds recall@5 ≥ 0.8).
+# knn_recall_tradeoff frontier (sf0.01): radius 0 — the single signature
+# bucket — gave recall@5 = 0.04 (too low to ship); radius 1 reached
+# 0.18; radius 2 reached 0.42 for 769 scanned candidate rows, still ~26x
+# under brute force. The sweep stays the tool for re-deriving this per
+# corpus; raising recall further is multi-table LSH or IVF territory.
 LSH_RADIUS = 2
+
+
+def _mask_probes(radius: int):
+    """The (mask, d) probe array of every XOR mask within ``radius`` —
+    ONE parsed literal: a per-mask ``struct(lit, lit)`` tree costs ~185
+    py4j calls, paid again on every search."""
+    items = ", ".join(
+        f"named_struct('mask', {m}, 'd', {d})" for m, d in _lsh_probe_masks(radius)
+    )
+    return F.expr(f"array({items})")
+
+
+def _lsh_scored(spark: SparkSession, sf_dir: str, radius: int) -> DataFrame:
+    """(query_id, vec_id, pr, cosine): every pair whose stored signatures
+    lie within Hamming ``radius``, exact-scored, ``pr`` = the distance of
+    the discovering mask. Masks are distinct, so each pair is found once
+    — no dedup stage. The postings carry the vector payload, so both
+    join sides read the index alone; the probe side stays |queries| ×
+    |masks| rows, always broadcast."""
+    post = _lsh_postings(spark, sf_dir)
+    probes = (
+        post.where(F.col("vec_id") < N_QUERIES)
+        .select(
+            F.col("vec_id").alias("query_id"),
+            F.col("v").alias("qv"),
+            F.col("sig").alias("qsig"),
+            F.explode(_mask_probes(radius)).alias("e"),
+        )
+        .select(
+            "query_id",
+            "qv",
+            F.col("qsig").bitwiseXOR(F.col("e.mask")).alias("psig"),
+            F.col("e.d").alias("pr"),
+        )
+    )
+    return post.join(
+        F.broadcast(probes),
+        (F.col("sig") == F.col("psig")) & (F.col("vec_id") != F.col("query_id")),
+    ).select("query_id", "vec_id", "pr", _cosine().alias("cosine"))
 
 
 def knn_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -126,39 +188,10 @@ def knn_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     buckets. Trades recall for a probe-bounded candidate set — the
     100 TB path. Signatures come from the stored bucket index (built
     once per corpus snapshot, bucketed by ``sig`` so bucket-equality
-    joins co-locate); the probe side stays |queries| x |masks| rows,
-    always broadcast. Masks are distinct, so each (query, candidate)
-    pair is discovered at most once — no dedup stage needed."""
-    emb = _sigged_corpus(spark, sf_dir)
-    mask_arr = F.array(
-        *[F.lit(m) for m, _ in _lsh_probe_masks(LSH_RADIUS)]
-    )
-    queries = emb.where(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("v").alias("qv"),
-        F.explode(mask_arr).alias("mask"),
-        F.col("sig").alias("qsig"),
-    ).select(
-        "query_id",
-        "qv",
-        F.col("qsig").bitwiseXOR(F.col("mask")).alias("psig"),
-    )
-    scored = emb.join(
-        F.broadcast(queries),
-        (F.col("sig") == F.col("psig")) & (F.col("vec_id") != F.col("query_id")),
-    ).select(
-        "query_id",
-        "vec_id",
-        F.round(V.cosine(F.col("qv"), F.col("v")), 6).alias("cosine"),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("vec_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= TOP_K)
-        .select("query_id", "rank", "vec_id", "cosine")
-    )
+    joins co-locate)."""
+    return _top(
+        _lsh_scored(spark, sf_dir, LSH_RADIUS), [F.col("cosine").desc()]
+    ).select("query_id", "rank", "vec_id", "cosine")
 
 
 # —— Corpus-derived IVF operating point (round 9) ————————————————————
@@ -366,9 +399,7 @@ def _lsh_postings(spark: SparkSession, sf_dir: str) -> DataFrame:
     index alone, never joining back to the corpus (an id-only
     signature table would force a corpus-wide vec_id join per search,
     destroying the sig co-location it was bucketed for). Storage
-    duplicates the vectors into the index — the standard trade. The
-    only ANN structure that was still recomputed per search before
-    round 7."""
+    duplicates the vectors into the index — the standard trade."""
 
     def build() -> DataFrame:
         return _emb(spark, sf_dir).select(
@@ -378,31 +409,28 @@ def _lsh_postings(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _stored_index(spark, sf_dir, "lsh_postings", "sig", build)
 
 
-# Multi-table LSH operating point (round 9 — the standard lever for
-# single-table LSH's recall ceiling): L = vectors.LSH_TABLES (4)
-# independent plane-sets, each probed at Hamming radius LSH_MT_RADIUS;
-# a candidate qualifies when ANY table buckets it within the radius
+# Multi-table LSH operating point (the standard lever for single-table
+# LSH's recall ceiling): L = vectors.LSH_TABLES (4) independent
+# plane-sets, each probed at Hamming radius LSH_MT_RADIUS; a candidate
+# qualifies when ANY table buckets it within the radius
 # (OR-amplification: per-table miss rates multiply). Measured on the
-# DuckDB replay (round 9, both SFs): L=4/r=2 reaches recall@5 0.86 at
-# sf0.1 / 0.82 at sf0.01 — the first LSH point to CLEAR the 0.8 target
-# (single-table radius-2 tops out at 0.40-0.42) — scanning ~47% of the
-# corpus; L=6/r=2 reaches 0.94 at ~61% (past the knee). IVF remains
-# the cheaper path on this corpus (0.82 at ~33%): data-adaptive cells
-# beat data-independent hyperplanes on scan efficiency, and the reason
-# to keep the LSH family is structural — no training pass, and inserts
-# are pure appends to the postings (no codebook to age).
+# DuckDB replay: L=4/r=2 reaches recall@5 0.86 at sf0.1 / 0.82 at
+# sf0.01 — the first LSH point to CLEAR the 0.8 target (single-table
+# radius-2 tops out at 0.40-0.42) — scanning ~47% of the corpus; L=6/r=2
+# reaches 0.94 at ~61% (past the knee). IVF remains the cheaper path on
+# this corpus (0.82 at ~33%): data-adaptive cells beat data-independent
+# hyperplanes on scan efficiency, and the reason to keep the LSH family
+# is structural — no training pass, and inserts are pure appends to the
+# postings (no codebook to age).
 #
-# GOVERNANCE (round 10): these constants are no longer an offline-only
-# measurement — ``knn_recall_tradeoff`` sweeps BOTH multi-table axes
-# (radius at full L as ``lsh_mt``; table count at the shipped radius
-# as ``lsh_mt_tables``) as registered, DuckDB-replayed frontier rows,
-# and ``knn_operating_point`` emits the per-snapshot recommendation.
-# Measured r10: the recommendation equals (radius 2, tables 4) at
-# every test SF — meets_target at sf0.01/sf0.1 (recall@5 0.82/0.86),
-# best-recall-flagged at sf0.001 (0.76 — the 200-vector corpus is too
-# small for any LSH point to clear 0.8). A corpus whose frontier
-# drifts shows up in these rows; retargeting is a constant change the
-# index tag rebuilds automatically (tests pin the consistency).
+# Governance: ``knn_recall_tradeoff`` sweeps BOTH multi-table axes
+# (radius at full L as ``lsh_mt``; table count at the shipped radius as
+# ``lsh_mt_tables``) as registered, DuckDB-replayed frontier rows, and
+# ``knn_operating_point`` emits the per-snapshot recommendation — (radius
+# 2, tables 4) at every test SF: meets_target at sf0.01/sf0.1 (recall@5
+# 0.82/0.86), best-recall-flagged at sf0.001 (0.76 — no LSH point
+# clears 0.8 on that corpus). Retargeting is a constant change the index
+# tag rebuilds automatically.
 LSH_MT_RADIUS = 2
 
 
@@ -414,8 +442,6 @@ def _lsh_mt_postings(spark: SparkSession, sf_dir: str) -> DataFrame:
     recall with no training pass."""
 
     def build() -> DataFrame:
-        import functools
-
         emb = _emb(spark, sf_dir)
         parts = [
             emb.select(
@@ -431,37 +457,24 @@ def _lsh_mt_postings(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _stored_index(spark, sf_dir, "lsh_mt_postings", "sig", build)
 
 
-def knn_lsh_multitable(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ANN top-5 via MULTI-TABLE multi-probe LSH: each query probes, in
-    EVERY one of the L independent hash tables, all buckets within
-    Hamming radius ``LSH_MT_RADIUS`` of its signature in that table;
-    candidates found by any table are exact-scored ONCE (the
-    (query, candidate) pair set is deduplicated before ranking — the
-    same pair can surface from several tables).
+def _lsh_mt_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(query_id, vec_id, cosine, pr_r, pr_t): every pair that some
+    table buckets within ``LSH_MT_RADIUS``, exact-scored, ONE row per
+    pair (a pair can surface from several tables and masks; its cosine
+    is deterministic, so grouping on it is pair-level dedup). The two
+    depths are the frontier's two axes: ``pr_r`` is the MINIMUM
+    per-table signature distance (the pair qualifies at radius r iff
+    ANY table buckets it within r); ``pr_t`` is 1 + the FIRST table that
+    buckets it within the radius (probing tables 0..l-1 finds exactly
+    the pairs with pr_t ≤ l).
 
-    Scale shape: the probe side is |queries| × L × |masks| rows —
-    always broadcast; the postings are bucket-equality-joined per
-    (table, signature) exactly like :func:`knn_lsh`, so at 100 TB each
-    table's postings co-locate by signature and a query reads L × probe
-    bucket lists. See ``LSH_MT_RADIUS`` for the measured operating
-    point and the honest comparison against IVF.
-
-    Round-14 restructure (same values — hash-gated): the probe side
-    reads each query's per-table signature FROM the stored postings
-    (``vec_id < N_QUERIES`` rows carry exactly the signature the build
-    computed) the way :func:`knn_lsh` always has, instead of
-    re-deriving it per query via an L-branch union that re-scanned and
-    re-spread the embeddings per table — 4 scans + 4 round-robin
-    exchanges, and ~2.5k py4j calls constructing the L×8-plane literal
-    tree, pure driver latency (guide §2.4/§5). Probe-bracketed pins:
-    3.7 -> ~1.4 s. (A cosine_unrolled swap for the pair scoring was
-    ALSO probed and rejected family-wide: at these dimension-sized
-    candidate counts the ~800-node unrolled tree costs more in plan
-    analysis than the interpreted fold costs at execution —
-    knn_bruteforce pinned 0.44 fold vs 0.72 unrolled.)"""
+    The probe side reads each query's per-table signature FROM the
+    stored postings (the ``vec_id < N_QUERIES`` rows carry exactly the
+    signature the build computed): re-deriving it per query means an
+    L-branch union that re-scans and re-spreads the embeddings per table
+    plus ~2.5k py4j calls for the L×8-plane literal tree — pure planning
+    latency (3.7 → ~1.4 s per search when it moved)."""
     post = _lsh_mt_postings(spark, sf_dir)
-    masks = [m for m, _ in _lsh_probe_masks(LSH_MT_RADIUS)]
-    mask_arr = F.array(*[F.lit(m) for m in masks])
     probes = (
         post.where(F.col("vec_id") < N_QUERIES)
         .select(
@@ -469,45 +482,50 @@ def knn_lsh_multitable(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("vec_id").alias("query_id"),
             F.col("v").alias("qv"),
             F.col("sig").alias("qsig"),
+            F.explode(_mask_probes(LSH_MT_RADIUS)).alias("e"),
         )
         .select(
             "ptbl",
             "query_id",
             "qv",
-            "qsig",
-            F.explode(mask_arr).alias("mask"),
-        )
-        .select(
-            "ptbl",
-            "query_id",
-            "qv",
-            F.col("qsig").bitwiseXOR(F.col("mask")).alias("psig"),
+            F.col("qsig").bitwiseXOR(F.col("e.mask")).alias("psig"),
+            F.col("e.d").alias("d"),
         )
     )
-    scored = (
+    return (
         post.join(
             F.broadcast(probes),
             (F.col("tbl") == F.col("ptbl"))
             & (F.col("sig") == F.col("psig"))
             & (F.col("vec_id") != F.col("query_id")),
         )
-        .select(
-            "query_id",
-            "vec_id",
-            F.round(V.cosine(F.col("qv"), F.col("v")), 6).alias("cosine"),
+        .select("query_id", "vec_id", "tbl", "d", _cosine().alias("cosine"))
+        .groupBy("query_id", "vec_id", "cosine")
+        .agg(
+            F.min("d").alias("pr_r"),
+            (F.min("tbl") + F.lit(1)).alias("pr_t"),
         )
-        # a pair discovered by several tables (or several masks across
-        # tables) must rank once; cosine is deterministic per pair so
-        # the row-level distinct is exactly pair-level dedup
-        .distinct()
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("vec_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= TOP_K)
-        .select("query_id", "rank", "vec_id", "cosine")
+
+
+def knn_lsh_multitable(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """ANN top-5 via MULTI-TABLE multi-probe LSH: each query probes, in
+    EVERY one of the L independent hash tables, all buckets within
+    Hamming radius ``LSH_MT_RADIUS`` of its signature in that table;
+    candidates found by any table rank ONCE (:func:`_lsh_mt_scored`
+    dedups the pairs).
+
+    Scale shape: the probe side is |queries| × L × |masks| rows —
+    always broadcast; the postings are bucket-equality-joined per
+    (table, signature) exactly like :func:`knn_lsh`, so at 100 TB each
+    table's postings co-locate by signature and a query reads L × probe
+    bucket lists. See ``LSH_MT_RADIUS`` for the measured operating
+    point and the comparison against IVF. (A cosine_unrolled swap for
+    the pair scoring was probed and rejected family-wide: at these
+    candidate counts the ~800-node unrolled tree costs more in plan
+    analysis than the interpreted fold costs at execution.)"""
+    return _top(_lsh_mt_scored(spark, sf_dir), [F.col("cosine").desc()]).select(
+        "query_id", "rank", "vec_id", "cosine"
     )
 
 
@@ -556,9 +574,26 @@ def _ranked_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _stored_index(spark, sf_dir, "cells", "vec_id", build)
 
 
-def knn_ivf(
-    spark: SparkSession, sf_dir: str, nprobe: int | None = None
-) -> DataFrame:
+def _ivf_candidates(spark: SparkSession, sf_dir: str, depth: int) -> DataFrame:
+    """(query_id, vec_id, pr): every vector assigned to one of the
+    query's ``depth`` nearest cells, ``pr`` = that cell's rank. The probe
+    depth is a query-time filter over the ceil(K/2)-deep stored postings
+    skeleton, so the frontier sweeps it without retraining. The probe
+    side is |queries| × depth rows, always broadcast."""
+    cells = _ranked_cells(spark, sf_dir)
+    probes = cells.where(
+        (F.col("vec_id") < N_QUERIES) & (F.col("r") <= depth)
+    ).select(F.col("vec_id").alias("query_id"), "cell_id", F.col("r").alias("pr"))
+    return (
+        cells.where(F.col("r") == 1)
+        .select("vec_id", "cell_id")
+        .join(F.broadcast(probes), "cell_id")
+        .where(F.col("vec_id") != F.col("query_id"))
+        .select("query_id", "vec_id", "pr")
+    )
+
+
+def knn_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANN top-5 via an IVF coarse quantizer: a TRAINED corpus-sized
     codebook (``_codebook`` — Lloyd's algorithm from the md5-top-K
     deterministic initializer, K ≈ 2·√N) defines cells; every vector is
@@ -576,41 +611,10 @@ def knn_ivf(
     co-located — the classic IVF layout. Assignment ties and near-ties
     round to 6 decimals with a cell-id tiebreak so the cell structure
     is bit-identical on every engine."""
-    emb = _emb(spark, sf_dir)
-    if nprobe is None:
-        nprobe = ivf_params(spark, sf_dir).nprobe
-    ranked_cells = _ranked_cells(spark, sf_dir)
-    assign = (
-        ranked_cells.where(F.col("r") == 1)
-        .join(emb, "vec_id")
-        .select("vec_id", "v", "cell_id")
-    )
-    # probe depth is a query-time filter over the ceil(K/2)-deep stored
-    # postings skeleton
-    probes = ranked_cells.where(
-        (F.col("vec_id") < N_QUERIES) & (F.col("r") <= nprobe)
-    ).select(F.col("vec_id").alias("query_id"), "cell_id")
-    queries = emb.where(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
-    )
-    scored = (
-        assign.join(F.broadcast(probes), "cell_id")
-        .where(F.col("vec_id") != F.col("query_id"))
-        .join(F.broadcast(queries), "query_id")
-        .select(
-            "query_id",
-            "vec_id",
-            F.round(V.cosine(F.col("qv"), F.col("v")), 6).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("vec_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= TOP_K)
-        .select("query_id", "rank", "vec_id", "cosine")
-    )
+    cand = _ivf_candidates(spark, sf_dir, ivf_params(spark, sf_dir).nprobe)
+    return _top(
+        _exact_scored(spark, sf_dir, cand), [F.col("cosine").desc()]
+    ).select("query_id", "rank", "vec_id", "cosine")
 
 
 FILTER_LABEL_MOD = 2  # demo metadata predicate: even labels only
@@ -630,41 +634,21 @@ def knn_ivf_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
     ceil(K/3).
 
     Scale shape: identical to :func:`knn_ivf` — stored cells + broadcast
-    probes/queries, bucket-local scoring — with the label predicate
-    applied to the postings side BEFORE scoring (the filter rides the
-    assignment join's output, so pruned vectors are never scored)."""
+    probes/queries, bucket-local scoring — with the label predicate on
+    the vector side of the scoring join, so pruned vectors are never
+    scored (a semi-join ahead of the scoring join would add a stage)."""
     emb = _emb(spark, sf_dir)
-    ranked_cells = _ranked_cells(spark, sf_dir)
-    assign = (
-        ranked_cells.where(F.col("r") == 1)
-        .join(emb, "vec_id")
-        .where(F.col("label") % FILTER_LABEL_MOD == 0)
-        .select("vec_id", "v", "cell_id")
-    )
-    probes = ranked_cells.where(
-        (F.col("vec_id") < N_QUERIES)
-        & (F.col("r") <= ivf_params(spark, sf_dir).maxprobe)
-    ).select(F.col("vec_id").alias("query_id"), "cell_id")
-    queries = emb.where(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
-    )
+    cand = _ivf_candidates(spark, sf_dir, ivf_params(spark, sf_dir).maxprobe)
     scored = (
-        assign.join(F.broadcast(probes), "cell_id")
-        .where(F.col("vec_id") != F.col("query_id"))
-        .join(F.broadcast(queries), "query_id")
-        .select(
-            "query_id",
+        cand.join(
+            emb.where(F.col("label") % FILTER_LABEL_MOD == 0).select("vec_id", "v"),
             "vec_id",
-            F.round(V.cosine(F.col("qv"), F.col("v")), 6).alias("cosine"),
         )
+        .join(F.broadcast(_query_side(emb)), "query_id")
+        .select("query_id", "vec_id", _cosine().alias("cosine"))
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("vec_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= TOP_K)
-        .select("query_id", "rank", "vec_id", "cosine")
+    return _top(scored, [F.col("cosine").desc()]).select(
+        "query_id", "rank", "vec_id", "cosine"
     )
 
 
@@ -867,27 +851,19 @@ def knn_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("query_id", "vec_id")
         .agg(F.sum(ex.dec("qd2")).alias("adec"))
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("adec").asc(), F.col("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= TOP_K)
-        .select(
-            "query_id",
-            "rank",
-            "vec_id",
-            F.round(F.col("adec").cast("double"), 6).alias("approx_d2"),
-        )
+    return _top(scored, [F.col("adec").asc()]).select(
+        "query_id",
+        "rank",
+        "vec_id",
+        F.round(F.col("adec").cast("double"), 6).alias("approx_d2"),
     )
 
 
-def knn_ivfpq(
-    spark: SparkSession, sf_dir: str, nprobe: int | None = None
-) -> DataFrame:
+def knn_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANN top-5 via IVF-PQ — the production ANN layout: the IVF coarse
-    quantizer prunes the candidate set to the query's nprobe nearest
-    cells (corpus-derived ceil(K/3) by default), and PQ/ADC scores the
-    survivors from their M codebook ids — the scan touches neither the
-    full corpus nor any full vector.
+    quantizer prunes the candidate set to the query's nprobe = ceil(K/3)
+    nearest cells, and PQ/ADC scores the survivors from their M codebook
+    ids — the scan touches neither the full corpus nor any full vector.
 
     This composes :func:`knn_ivf`'s cell assignment with :func:`knn_pq`'s
     code table; both stay broadcast-or-bucket-local, so at 100 TB the
@@ -898,86 +874,55 @@ def knn_ivfpq(
     (``_ranked_cells`` / ``_pq_codes``) — one coarse assignment and one
     encode pass per corpus snapshot serve knn_ivf, knn_pq, and this
     composition, and every search reads index files."""
-    return _ivfpq_topk(_ivfpq_adc_scored(spark, sf_dir, nprobe))
-
-
-def _ivfpq_topk(scored: DataFrame) -> DataFrame:
-    """Top-``TOP_K`` cut of an ADC-scored candidate relation (split out
-    so the family recall report can score once and cut twice — round-11
-    VERDICT item 3)."""
-    w = Window.partitionBy("query_id").orderBy(F.col("adec").asc(), F.col("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= TOP_K)
-        .select(
-            "query_id",
-            "rank",
-            "vec_id",
-            F.round(F.col("adec").cast("double"), 6).alias("approx_d2"),
-        )
+    scored = _ivfpq_adc_scored(spark, sf_dir, ivf_params(spark, sf_dir).nprobe)
+    return _top(scored, [F.col("adec").asc()]).select(
+        "query_id",
+        "rank",
+        "vec_id",
+        F.round(F.col("adec").cast("double"), 6).alias("approx_d2"),
     )
 
 
-def _ivfpq_adc_scored(
-    spark: SparkSession, sf_dir: str, nprobe: int | None
-) -> DataFrame:
-    """(query_id, vec_id, adec): the IVF-pruned, ADC-scored candidate
-    relation shared by :func:`knn_ivfpq` and the re-ranked variant."""
-    if nprobe is None:
-        nprobe = ivf_params(spark, sf_dir).nprobe
-    ranked_cells = _ranked_cells(spark, sf_dir)
-    cell_assign = ranked_cells.where(F.col("r") == 1).select(
-        "vec_id", F.col("cell_id").alias("vcell")
-    )
-    probes = ranked_cells.where(
-        (F.col("vec_id") < N_QUERIES) & (F.col("r") <= nprobe)
-    ).select(F.col("vec_id").alias("query_id"), "cell_id")
-    codes = _pq_codes(spark, sf_dir)
+def _ivfpq_adc_scored(spark: SparkSession, sf_dir: str, depth: int) -> DataFrame:
+    """(query_id, vec_id, pr, adec): the IVF candidates at ``depth``,
+    ADC-scored from their PQ codes alone."""
     qdists = _pq_query_dists(spark, sf_dir).select(
         F.col("query_id").alias("qq"),
         F.col("m").alias("qm"),
         F.col("cell_id").alias("qcell"),
         "qd2",
     )
-    # cell-pruned candidates, ADC-scored from codes alone
-    cand = (
-        cell_assign.join(
-            F.broadcast(probes), cell_assign.vcell == probes.cell_id
-        )
-        .where(F.col("vec_id") != F.col("query_id"))
-        .select("query_id", "vec_id")
-    )
     return (
-        cand.join(codes, "vec_id")
+        _ivf_candidates(spark, sf_dir, depth)
+        .join(_pq_codes(spark, sf_dir), "vec_id")
         .join(
             F.broadcast(qdists),
             (F.col("query_id") == F.col("qq"))
             & (F.col("m") == F.col("qm"))
             & (F.col("code") == F.col("qcell")),
         )
-        .groupBy("query_id", "vec_id")
+        # pr is fixed per pair, so grouping on it keeps one row per pair
+        .groupBy("query_id", "vec_id", "pr")
         .agg(F.sum(ex.dec("qd2")).alias("adec"))
     )
 
 
 RERANK_R = 150  # exact-rescored shortlist per query (30×k — at this
 # R the rerank recovers the FULL IVF candidate ceiling at every test SF
-# under the round-9 PQ point (M=16): measured recall@5 0.82/0.84/0.76
-# at sf0.1/0.01/0.001 = the IVF ceilings exactly; the residual gap to
-# 1.0 is governed by nprobe, not R. R is a resolution-dependent knob:
-# the same sweep showed the old M=8 codes needed R≈350 to recover the
-# sf0.1 ceiling — sharper codes buy a 2.3× smaller rerank read.)
+# under the PQ point (M=16): measured recall@5 0.82/0.84/0.76 at
+# sf0.1/0.01/0.001 = the IVF ceilings exactly; the residual gap to 1.0
+# is governed by nprobe, not R. R is a resolution-dependent knob: the
+# same sweep showed M=8 codes needed R≈350 to recover the sf0.1 ceiling
+# — sharper codes buy a 2.3× smaller rerank read.)
 
 
-def knn_ivfpq_rerank(
-    spark: SparkSession, sf_dir: str, nprobe: int | None = None
-) -> DataFrame:
+def knn_ivfpq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANN top-5 via the full production three-stage pipeline: IVF
     prunes to nprobe cells, PQ/ADC shortlists the top ``RERANK_R``
     candidates from codes alone, and an EXACT cosine pass re-ranks only
     those R full vectors per query. This is the standard answer to the
     PQ distortion ceiling (ADC-only recall saturates ~0.34 at the
-    round-9 resolution point — and sub-codebook SIZE barely moves it;
+    shipped resolution point — and sub-codebook SIZE barely moves it;
     see the PQ_M comment): re-ranking recovers recall up to the IVF
     candidate ceiling while reading just R × DIM floats per query
     instead of a full scan — measured to recover the ceiling exactly
@@ -990,8 +935,8 @@ def knn_ivfpq_rerank(
     return _rerank_exact(
         spark,
         sf_dir,
-        _ivfpq_adc_scored(spark, sf_dir, nprobe),
-        [F.col("adec").asc(), F.col("vec_id")],
+        _ivfpq_adc_scored(spark, sf_dir, ivf_params(spark, sf_dir).nprobe),
+        [F.col("adec").asc()],
         RERANK_R,
     )
 
@@ -1007,37 +952,11 @@ def _rerank_exact(
     and :func:`knn_sq8_rerank`: cut the approximate-scored candidate
     relation to the per-query top-``depth`` shortlist (under the
     method's own ordering), then re-score exactly those rows with the
-    exact cosine and emit the final top-``TOP_K``. Taking ``scored`` as
-    a parameter lets the family recall report run the expensive scoring
-    pass ONCE for a composition and its rerank (round-11 VERDICT
-    item 3)."""
-    shortlist_w = Window.partitionBy("query_id").orderBy(*shortlist_order)
-    shortlist = (
-        scored.withColumn("rr", F.row_number().over(shortlist_w))
-        .where(F.col("rr") <= depth)
-        .select("query_id", "vec_id")
-    )
-    emb = _emb(spark, sf_dir)
-    queries = emb.where(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
-    )
-    exact = (
-        shortlist.join(emb, "vec_id")
-        .join(F.broadcast(queries), "query_id")
-        .select(
-            "query_id",
-            "vec_id",
-            F.round(V.cosine(F.col("qv"), F.col("v")), 6).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("vec_id")
-    )
-    return (
-        exact.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= TOP_K)
-        .select("query_id", "rank", "vec_id", "cosine")
-    )
+    exact cosine and emit the final top-``TOP_K``."""
+    shortlist = _top(scored, shortlist_order, depth).select("query_id", "vec_id")
+    return _top(
+        _exact_scored(spark, sf_dir, shortlist), [F.col("cosine").desc()]
+    ).select("query_id", "rank", "vec_id", "cosine")
 
 
 # --- Scalar quantization (SQ8) ----------------------------------------
@@ -1116,41 +1035,40 @@ def _sq8_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _stored_index(spark, sf_dir, "sq8_codes", "vec_id", build)
 
 
+def _sq8_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(vec_id, v): the stored SQ8 codes widened to long — the integer
+    image both sides of an SQ8 dot read (queries are corpus members)."""
+    return _sq8_codes(spark, sf_dir).select(
+        "vec_id", F.transform("qv", lambda x: x.cast("long")).alias("v")
+    )
+
+
+def _sq8_dot():
+    """The symmetric integer SQ8 dot of ``qv`` and ``v`` (≤ 64 · 127² ≈
+    10⁶ per pair — overflow-free in long)."""
+    return V.dot_unrolled(F.col("qv"), F.col("v")).cast("long").alias("qdot")
+
+
 def knn_sq8(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANN top-5 over the SQ8 code table: symmetric quantized dot —
     queries are corpus members, so BOTH sides read codes from the
-    stored index and the score is a pure INTEGER dot product (≤ 64 ·
-    127² ≈ 10⁶ per pair — overflow-free in long), making the ranking
-    bit-deterministic on any engine with no float comparison anywhere.
+    stored index and the score is a pure INTEGER dot product, making
+    the ranking bit-deterministic on any engine with no float
+    comparison anywhere.
 
     Scale shape: same as brute force (broadcast query side, partition-
     parallel scan, per-query top-k) but the scan touches 1/8 the bytes;
     the unrolled integer product chain stays in whole-stage codegen."""
-    codes = _sq8_codes(spark, sf_dir)
-    queries = codes.where(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.transform("qv", lambda x: x.cast("long")).alias("qq"),
-    )
-    scored = codes.select(
-        "vec_id", F.transform("qv", lambda x: x.cast("long")).alias("qc")
-    ).join(F.broadcast(queries), F.col("vec_id") != F.col("query_id")).select(
-        "query_id",
-        "vec_id",
-        V.dot_unrolled(F.col("qq"), F.col("qc")).cast("long").alias("qdot"),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("qdot").desc(), F.col("vec_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= TOP_K)
-        .select("query_id", "rank", "vec_id", "qdot")
+    codes = _sq8_vectors(spark, sf_dir)
+    scored = codes.join(
+        F.broadcast(_query_side(codes)), F.col("vec_id") != F.col("query_id")
+    ).select("query_id", "vec_id", _sq8_dot())
+    return _top(scored, [F.col("qdot").desc()]).select(
+        "query_id", "rank", "vec_id", "qdot"
     )
 
 
-def knn_ivf_sq8(
-    spark: SparkSession, sf_dir: str, nprobe: int | None = None
-) -> DataFrame:
+def knn_ivf_sq8(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANN top-5 via the IVF × SQ8 COMPOSITION — the production point
     the two mechanisms exist for (cf. FAISS IVF-SQ): the trained coarse
     quantizer prunes to nprobe cells (the scan-fraction lever), and the
@@ -1163,63 +1081,25 @@ def knn_ivf_sq8(
     Ranking is pure integer comparison; both stored indexes are the
     ones the standalone methods read, so the composition adds zero
     index state."""
-    return _ivf_sq8_topk(_ivf_sq8_scored(spark, sf_dir, nprobe))
-
-
-def _ivf_sq8_topk(scored: DataFrame) -> DataFrame:
-    """Top-``TOP_K`` cut of an integer-SQ8-scored candidate relation
-    (split out so the family recall report can score once and cut twice
-    — round-11 VERDICT item 3)."""
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("qdot").desc(), F.col("vec_id")
+    scored = _ivf_sq8_scored(spark, sf_dir, ivf_params(spark, sf_dir).nprobe)
+    return _top(scored, [F.col("qdot").desc()]).select(
+        "query_id", "rank", "vec_id", "qdot"
     )
+
+
+def _ivf_sq8_scored(spark: SparkSession, sf_dir: str, depth: int) -> DataFrame:
+    """(query_id, vec_id, pr, qdot): the IVF candidates at ``depth``,
+    scored by the integer SQ8 dot."""
+    codes = _sq8_vectors(spark, sf_dir)
     return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= TOP_K)
-        .select("query_id", "rank", "vec_id", "qdot")
+        _ivf_candidates(spark, sf_dir, depth)
+        .join(codes, "vec_id")
+        .join(F.broadcast(_query_side(codes)), "query_id")
+        .select("query_id", "vec_id", "pr", _sq8_dot())
     )
 
 
-def _ivf_sq8_scored(
-    spark: SparkSession, sf_dir: str, nprobe: int | None
-) -> DataFrame:
-    """(query_id, vec_id, qdot): the IVF-pruned, integer-SQ8-scored
-    candidate relation shared by :func:`knn_ivf_sq8` and the re-ranked
-    variant (the sq8 analog of :func:`_ivfpq_adc_scored`)."""
-    codes = _sq8_codes(spark, sf_dir)
-    if nprobe is None:
-        nprobe = ivf_params(spark, sf_dir).nprobe
-    ranked_cells = _ranked_cells(spark, sf_dir)
-    assign = ranked_cells.where(F.col("r") == 1).select("vec_id", "cell_id")
-    probes = ranked_cells.where(
-        (F.col("vec_id") < N_QUERIES) & (F.col("r") <= nprobe)
-    ).select(F.col("vec_id").alias("query_id"), "cell_id")
-    qcodes = codes.where(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.transform("qv", lambda x: x.cast("long")).alias("qq"),
-    )
-    return (
-        assign.join(
-            codes.select(
-                "vec_id",
-                F.transform("qv", lambda x: x.cast("long")).alias("qc"),
-            ),
-            "vec_id",
-        )
-        .join(F.broadcast(probes), "cell_id")
-        .where(F.col("vec_id") != F.col("query_id"))
-        .join(F.broadcast(qcodes), "query_id")
-        .select(
-            "query_id",
-            "vec_id",
-            V.dot_unrolled(F.col("qq"), F.col("qc")).cast("long").alias("qdot"),
-        )
-    )
-
-
-def knn_sq8_rerank(
-    spark: SparkSession, sf_dir: str, nprobe: int | None = None
-) -> DataFrame:
+def knn_sq8_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANN top-5 via IVF × SQ8 with EXACT RE-RANKING (cf. FAISS
     IndexRefine over IVF-SQ): the trained cells prune, the integer SQ8
     dot shortlists the top ``SQ8_RERANK_R`` candidates per query, and an
@@ -1237,8 +1117,8 @@ def knn_sq8_rerank(
     return _rerank_exact(
         spark,
         sf_dir,
-        _ivf_sq8_scored(spark, sf_dir, nprobe),
-        [F.col("qdot").desc(), F.col("vec_id")],
+        _ivf_sq8_scored(spark, sf_dir, ivf_params(spark, sf_dir).nprobe),
+        [F.col("qdot").desc()],
         SQ8_RERANK_R,
     )
 
@@ -1255,21 +1135,15 @@ RECALL_METHODS = (
     "sq8_rr",
 )
 
-# Per-family recall reports (round 11 — the round-10 verdict's split:
-# the single 8-method report was the bench's most expensive query and
-# its cost grew with EVERY new ANN method; now each family pays its own
-# ground-truth comparison once and a new method only enlarges its own
-# family's bill). The union of the family reports is the full
-# per-method report exactly (pinned by test): the families partition
-# RECALL_METHODS.
-#
-# Round 12: the 4-method hybrid family (5.5 s — the heaviest registered
-# query) is split into its pq and sq8 halves. Measured at sf0.1, the
-# report's cost is CRITICAL-PATH latency (~15 sequential tiny stages
-# per method pipeline), not redundant compute — sharing the scored
-# pass bought nothing (see knn_recall_report) — so the bounding lever
-# is methods-per-report: each half carries one composition plus its
-# rerank (~2.5-3 s), and the partition/union invariant still holds.
+# Per-family recall reports: one all-methods report was the bench's
+# most expensive query and its cost grew with EVERY new ANN method, so
+# each family pays its own ground-truth comparison and a new method only
+# enlarges its own family's bill. The report's cost is CRITICAL-PATH
+# latency (~15 sequential tiny stages per method pipeline), not
+# redundant compute, so the bounding lever is methods-per-report: each
+# hybrid half carries one composition plus its rerank. The families
+# partition RECALL_METHODS, so their union is the full per-method
+# report exactly (pinned by test).
 RECALL_FAMILIES: dict[str, tuple[str, ...]] = {
     "lsh": ("lsh", "lsh_mt"),
     "prune": ("ivf",),
@@ -1298,22 +1172,23 @@ def knn_recall_report(
     comparison is dimension-sized regardless of corpus size, and every
     index structure comes from the shared memoized builders, so a
     report costs one brute-force scan plus per-method tiny joins.
-    Recall is an exact integer ratio (one IEEE division, round 6) —
-    fully oracle-able because every input ranking is deterministic.
+    Recall is an exact integer ratio (one IEEE division) — fully
+    oracle-able because every input ranking is deterministic.
 
-    Sharing note (round-11 VERDICT item 3, measured and REJECTED): a
-    composition and its rerank do re-derive the same scored-candidate
-    relation, but materializing it once (eager ``localCheckpoint`` or
-    ``persist``+count) made the report SLOWER at sf0.1 (6.6-7.6 s vs
-    5.5 s): the duplicate subtrees run in PARALLEL union branches on
-    idle cores, so the redundancy costs CPU, not wall-clock, while an
-    eager materialization serializes scoring before the report (a lazy
-    ``persist`` is a no-op — both branches race past the unfilled
-    cache inside the single action). The structural fix is the
-    verdict's alternative: the hybrid family is SPLIT into pq/sq8
-    halves below, bounding each registered query's critical path."""
-    import functools
+    A composition and its rerank re-derive the same scored-candidate
+    relation; materializing it once (eager ``localCheckpoint`` or
+    ``persist``+count) measured SLOWER at sf0.1 (6.6-7.6 s vs 5.5 s):
+    the duplicate subtrees run in PARALLEL union branches on idle
+    cores, so the redundancy costs CPU, not wall-clock, while an eager
+    materialization serializes scoring before the report (a lazy
+    ``persist`` is a no-op — both branches race past the unfilled cache
+    inside the single action).
 
+    Per method the only stages are its own search pipeline plus one
+    shared count aggregate: recall_at_k = Σ hits / Σ truth, and
+    n_queries/n_true are method-independent corpus constants, attached
+    by a constant-key broadcast join. Seeding from the literal method
+    list guarantees a row per method even at zero hits."""
     bf = _bf_table(spark, sf_dir).select("query_id", "vec_id")
     impls = {
         "lsh": knn_lsh,
@@ -1326,17 +1201,6 @@ def knn_recall_report(
         "ivf_sq8": knn_ivf_sq8,
         "sq8_rr": knn_sq8_rerank,
     }
-    # Round-13 restructure (same values, fewer exchanges): the old shape
-    # aggregated hits PER QUERY, left-joined the per-query truth counts,
-    # then immediately re-aggregated everything to per-method totals —
-    # two shuffle stages per method plus a truth groupBy that the final
-    # SUMs collapse anyway (recall_at_k = Σ hits / Σ truth, and
-    # n_queries/n_true are method-independent corpus constants). Count
-    # the semi-join survivors per method directly and attach the two
-    # global totals via a constant-key broadcast join: per method the
-    # only remaining stages are its own search pipeline plus one shared
-    # count aggregate. The per-method row is guaranteed even at zero
-    # hits by seeding from the literal method list.
     per = [
         bf.join(
             impls[name](spark, sf_dir).select("query_id", "vec_id"),
@@ -1494,274 +1358,85 @@ def _recall_frontier_rows(
     )
 
 
-def _lsh_probe_masks(radius: int | None = None) -> list[tuple[int, int]]:
-    """All (xor-mask, Hamming distance) pairs up to ``radius`` (default:
-    the swept maximum) — 37 masks for 8 planes at radius ≤ 2.
-    Multi-probe LSH: a query also scans the buckets whose signature
-    differs in ≤ radius bits, the standard recall lever that needs no
-    extra tables. ``knn_lsh`` ships at ``LSH_RADIUS``; the tradeoff
-    sweep enumerates every radius in ``TRADEOFF_RADII``."""
-    r = max(TRADEOFF_RADII) if radius is None else radius
+def _lsh_probe_masks(radius: int) -> list[tuple[int, int]]:
+    """All (xor-mask, Hamming distance) pairs up to ``radius`` — 37
+    masks for 8 planes at radius ≤ 2. Multi-probe LSH: a query also
+    scans the buckets whose signature differs in ≤ radius bits, the
+    standard recall lever that needs no extra tables."""
     return [
         (m, bin(m).count("1"))
         for m in range(2**V.N_PLANES)
-        if bin(m).count("1") <= r
+        if bin(m).count("1") <= radius
     ]
 
 
 def _recall_tradeoff_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The frontier COMPUTATION (one max-depth scoring pass per method;
-    see :func:`knn_recall_tradeoff` for semantics). Runs once per
-    corpus snapshot as the ``recall_frontier`` stored-index build —
-    queries read the materialized rows."""
-    emb = _emb(spark, sf_dir)
-    levels = ivf_params(spark, sf_dir).levels
+    """The frontier COMPUTATION (see :func:`knn_recall_tradeoff` for
+    semantics): six (method, scored, levels, order) slices, each scored
+    ONCE at its maximum depth by the same candidate function its
+    registered search calls, folded through :func:`_recall_frontier_rows`.
+    Runs once per corpus snapshot as the ``recall_frontier``
+    stored-index build — queries read the materialized rows.
+
+    ``cand_rows`` counts the scored pairs at each level: distinct
+    (query, candidate) pairs for every method (the multi-table pairs
+    are deduplicated before the count), and for ``sq8_rr`` the rows the
+    exact pass re-scores at rerank depth C — the full-vector reads that
+    method pays. The L× postings-read amplification of multi-table LSH
+    is index IO, reported by the index footprint, not here.
+
+    The slices stay one fused union: materializing them concurrently
+    via pooled eager ``localCheckpoint``s measured as noise (ann build
+    19.5 → 19.2 s), because they share the IVF candidate subtree and
+    recomputing it per thread cancels the overlap."""
+    p = ivf_params(spark, sf_dir)
     bf = _bf_table(spark, sf_dir).select("query_id", "vec_id")
     truth = bf.groupBy("query_id").agg(F.count("*").alias("n_true"))
-    queries = emb.where(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
-    )
-
-    # —— IVF / IVF-PQ: shared candidate set with postings-rank depth ——
-    ranked_cells = _ranked_cells(spark, sf_dir)
-    assign = (
-        ranked_cells.where(F.col("r") == 1)
-        .join(emb, "vec_id")
-        .select("vec_id", "v", "cell_id")
-    )
-    probes = ranked_cells.where(
-        (F.col("vec_id") < N_QUERIES) & (F.col("r") <= max(levels))
-    ).select(F.col("vec_id").alias("query_id"), "cell_id", F.col("r").alias("pr"))
-    cand = (
-        assign.join(F.broadcast(probes), "cell_id")
-        .where(F.col("vec_id") != F.col("query_id"))
-        .select("query_id", "vec_id", "pr", "v")
-    )
-    ivf_scored = cand.join(F.broadcast(queries), "query_id").select(
-        "query_id",
-        "vec_id",
-        "pr",
-        F.round(V.cosine(F.col("qv"), F.col("v")), 6).alias("cos"),
-    )
-    ivf = _recall_frontier_rows(
-        ivf_scored, bf, truth, levels, "ivf", [F.col("cos").desc()]
-    )
-
-    codes = _pq_codes(spark, sf_dir)
-    qdists = _pq_query_dists(spark, sf_dir).select(
-        F.col("query_id").alias("qq"),
-        F.col("m").alias("qm"),
-        F.col("cell_id").alias("qcell"),
-        "qd2",
-    )
-    pq_scored = (
-        cand.select("query_id", "vec_id", "pr")
-        .join(codes, "vec_id")
-        .join(
-            F.broadcast(qdists),
-            (F.col("query_id") == F.col("qq"))
-            & (F.col("m") == F.col("qm"))
-            & (F.col("code") == F.col("qcell")),
-        )
-        .groupBy("query_id", "vec_id", "pr")
-        .agg(F.sum(ex.dec("qd2")).alias("adec"))
-    )
-    ivfpq = _recall_frontier_rows(
-        pq_scored, bf, truth, levels, "ivfpq", [F.col("adec").asc()]
-    )
-
-    # —— LSH: Hamming multi-probe; depth = the discovering mask's radius —
-    sigged = _sigged_corpus(spark, sf_dir)
-    mask_arr = F.array(
-        *[
-            F.struct(F.lit(m).alias("mask"), F.lit(d).alias("d"))
-            for m, d in _lsh_probe_masks()
-        ]
-    )
-    qsigs = sigged.where(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("v").alias("qv"),
-        F.col("sig").alias("qsig"),
-    )
-    probe_sigs = qsigs.select(
-        "query_id", "qv", "qsig", F.explode(mask_arr).alias("e")
-    ).select(
-        "query_id",
-        "qv",
-        F.col("qsig").bitwiseXOR(F.col("e.mask")).alias("psig"),
-        F.col("e.d").alias("pr"),
-    )
-    lsh_scored = (
-        sigged.join(
-            F.broadcast(probe_sigs),
-            (F.col("sig") == F.col("psig"))
-            & (F.col("vec_id") != F.col("query_id")),
-        )
-        .select(
-            "query_id",
-            "vec_id",
-            "pr",
-            F.round(V.cosine(F.col("qv"), F.col("v")), 6).alias("cos"),
-        )
-    )
-    lsh = _recall_frontier_rows(
-        lsh_scored, bf, truth, TRADEOFF_RADII, "lsh", [F.col("cos").desc()]
-    )
-
-    # —— multi-table LSH: TWO frontier axes from one scoring pass ——
-    # (round 10 — the governance the round-9 verdict asked for: the
-    # shipped L=4/radius-2 point was a fixed constant measured offline;
-    # now both knobs are swept IN the registered frontier, so
-    # ``knn_operating_point`` emits the multi-table recommendation per
-    # corpus snapshot and drift is observable.) Axis 1 (``lsh_mt``):
-    # Hamming radius ∈ TRADEOFF_RADII at the full L stored tables — a
-    # pair's depth is its MINIMUM per-table signature distance (it
-    # qualifies at radius r iff ANY table buckets it within r). Axis 2
-    # (``lsh_mt_tables``): table count l ∈ 1..L at the shipped radius —
-    # a pair's depth is 1 + the FIRST table index that buckets it
-    # within the radius (probing tables 0..l-1 finds exactly the pairs
-    # with depth ≤ l). Both axes project the same per-pair scoring pass
-    # (one cosine per deduplicated pair — matching the search operator,
-    # which dedups before scoring); ``cand_rows`` therefore counts
-    # DISTINCT pairs exact-scored, consistent with every other method's
-    # frontier (single-table LSH and IVF candidates are pair-unique by
-    # construction). The L× postings-read amplification is index IO,
-    # not scoring cost — it scales the stored postings size, reported
-    # by the index build, not this frontier.
-    mt_levels = tuple(range(1, V.LSH_TABLES + 1))
-    mt_mask_arr = F.array(
-        *[
-            F.struct(F.lit(m).alias("mask"), F.lit(d).alias("d"))
-            for m, d in _lsh_probe_masks(LSH_MT_RADIUS)
-        ]
-    )
-    # the STORED multi-table postings — the sweep discipline every other
-    # method already follows (sweeping never recomputes index
-    # structures; the first r10 cut re-derived 4×N interpreted
-    # signature folds on BOTH join sides and cost ~6 s at sf0.1)
-    mt_sigged = _lsh_mt_postings(spark, sf_dir)
-    mt_probes = (
-        mt_sigged.where(F.col("vec_id") < N_QUERIES)
-        .select(
-            F.col("tbl").alias("ptbl"),
-            F.col("vec_id").alias("query_id"),
-            F.explode(mt_mask_arr).alias("e"),
-            F.col("sig").alias("qsig"),
-        )
-        .select(
-            "ptbl",
-            "query_id",
-            F.col("qsig").bitwiseXOR(F.col("e.mask")).alias("psig"),
-            F.col("e.d").alias("d"),
-        )
-    )
-    mt_pairs = (
-        mt_sigged.join(
-            F.broadcast(mt_probes),
-            (F.col("tbl") == F.col("ptbl"))
-            & (F.col("sig") == F.col("psig"))
-            & (F.col("vec_id") != F.col("query_id")),
-        )
-        .groupBy("query_id", "vec_id")
-        .agg(
-            F.min("d").alias("pr_r"),
-            (F.min("tbl") + F.lit(1)).alias("pr_t"),
-            F.first("v").alias("v"),  # constant per vec_id
-        )
-    )
-    mt_scored = mt_pairs.join(F.broadcast(queries), "query_id").select(
-        "query_id",
-        "vec_id",
-        "pr_r",
-        "pr_t",
-        F.round(V.cosine(F.col("qv"), F.col("v")), 6).alias("cos"),
-    )
-    lsh_mt = _recall_frontier_rows(
-        mt_scored.select("query_id", "vec_id", F.col("pr_r").alias("pr"), "cos"),
-        bf,
-        truth,
-        TRADEOFF_RADII,
-        "lsh_mt",
-        [F.col("cos").desc()],
-    )
-    lsh_mt_tables = _recall_frontier_rows(
-        mt_scored.select("query_id", "vec_id", F.col("pr_t").alias("pr"), "cos"),
-        bf,
-        truth,
-        mt_levels,
-        "lsh_mt_tables",
-        [F.col("cos").desc()],
-    )
-
-    # —— sq8_rr: rerank DEPTH axis (round 11) — how deep an exact-cosine
-    # re-scoring pass must read the integer-SQ8 shortlist to buy back
-    # the quantization loss. A candidate's depth is its integer-dot rank
-    # within the query's IVF×SQ8 candidate set at the SHIPPED nprobe, so
-    # recall at probe C = the exact recall of knn_sq8_rerank with R = C,
-    # and cand_rows counts the exactly-rescored rows (the cost this
-    # method actually pays — full-vector reads). The shipped
-    # SQ8_RERANK_R is a swept level, putting it under the same frontier
-    # governance as the IVF nprobe and the multi-table (L, radius).
-    nprobe = ivf_params(spark, sf_dir).nprobe
-    codes8 = _sq8_codes(spark, sf_dir)
-    q8 = codes8.where(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.transform("qv", lambda x: x.cast("long")).alias("qq"),
-    )
-    sq8_dots = (
-        cand.where(F.col("pr") <= nprobe)
-        .select("query_id", "vec_id")
-        .join(
-            codes8.select(
-                "vec_id",
-                F.transform("qv", lambda x: x.cast("long")).alias("qc"),
-            ),
-            "vec_id",
-        )
-        .join(F.broadcast(q8), "query_id")
-        .select(
-            "query_id",
-            "vec_id",
-            V.dot_unrolled(F.col("qq"), F.col("qc")).cast("long").alias("qdot"),
-        )
-    )
-    w8 = Window.partitionBy("query_id").orderBy(
-        F.col("qdot").desc(), F.col("vec_id")
-    )
-    sq8_rk = (
-        sq8_dots.withColumn("pr", F.row_number().over(w8))
-        # depth beyond the deepest swept level never qualifies — prune
-        # before paying the full-vector join (semantics-free: the level
-        # join in _recall_frontier_rows drops those rows anyway)
-        .where(F.col("pr") <= max(SQ8_RERANK_LEVELS))
-        .select("query_id", "vec_id", "pr")
-    )
-    sq8rr_scored = (
-        sq8_rk.join(emb.select("vec_id", "v"), "vec_id")
-        .join(F.broadcast(queries), "query_id")
-        .select(
-            "query_id",
-            "vec_id",
-            "pr",
-            F.round(V.cosine(F.col("qv"), F.col("v")), 6).alias("cos"),
-        )
-    )
-    sq8_rr = _recall_frontier_rows(
-        sq8rr_scored, bf, truth, SQ8_RERANK_LEVELS, "sq8_rr",
-        [F.col("cos").desc()],
-    )
-
-    # (Round 14, measured and NOT kept: materializing the six slices
-    # concurrently via pooled eager localCheckpoints changed the ann
-    # build 19.5 -> 19.2 s — noise — because the slices share the IVF
-    # candidate subtree and recomputing it per thread cancels the
-    # overlap. The fused union stays.)
-    return (
-        lsh.unionByName(ivf)
-        .unionByName(ivfpq)
-        .unionByName(lsh_mt)
-        .unionByName(lsh_mt_tables)
-        .unionByName(sq8_rr)
+    by_cos = [F.col("cosine").desc()]
+    mt = _lsh_mt_scored(spark, sf_dir)
+    # sq8_rr depth = the candidate's integer-dot rank within the query's
+    # IVF×SQ8 candidates at the SHIPPED nprobe, so recall at level C is
+    # knn_sq8_rerank's recall with R = C; depths past the deepest level
+    # never qualify, so they are cut before the full-vector join
+    sq8_short = _top(
+        _ivf_sq8_scored(spark, sf_dir, p.nprobe),
+        [F.col("qdot").desc()],
+        max(SQ8_RERANK_LEVELS),
+    ).select("query_id", "vec_id", F.col("rank").alias("pr"))
+    slices = [
+        (
+            "lsh",
+            _lsh_scored(spark, sf_dir, max(TRADEOFF_RADII)),
+            TRADEOFF_RADII,
+            by_cos,
+        ),
+        (
+            "ivf",
+            _exact_scored(spark, sf_dir, _ivf_candidates(spark, sf_dir, max(p.levels))),
+            p.levels,
+            by_cos,
+        ),
+        (
+            "ivfpq",
+            _ivfpq_adc_scored(spark, sf_dir, max(p.levels)),
+            p.levels,
+            [F.col("adec").asc()],
+        ),
+        ("lsh_mt", mt.withColumnRenamed("pr_r", "pr"), TRADEOFF_RADII, by_cos),
+        (
+            "lsh_mt_tables",
+            mt.withColumnRenamed("pr_t", "pr"),
+            tuple(range(1, V.LSH_TABLES + 1)),
+            by_cos,
+        ),
+        ("sq8_rr", _exact_scored(spark, sf_dir, sq8_short), SQ8_RERANK_LEVELS, by_cos),
+    ]
+    return functools.reduce(
+        DataFrame.unionByName,
+        [
+            _recall_frontier_rows(scored, bf, truth, levels, method, order)
+            for method, scored, levels, order in slices
+        ],
     )
 
 
@@ -1809,32 +1484,32 @@ def _frontier_table(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def knn_recall_tradeoff(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The recall-vs-scanned-rows frontier for every tunable ANN method
-    — the evaluation that picks an operating point (round-6 recall
-    report: LSH recall@5 0.04, IVF-PQ 0.10 at the defaults — too low to
-    ship, so sweep the knobs): IVF and IVF-PQ over the corpus-derived
-    probe depths (``IvfParams.levels`` — ceil of K/16 … K/2; the
-    shipped ceil(K/3) point and the stored-depth maximum are both
-    levels), LSH over Hamming multi-probe radius ∈ ``TRADEOFF_RADII``,
-    and (round 10) the MULTI-TABLE family over both of its knobs —
-    ``lsh_mt`` sweeps the radius at the full L stored tables,
-    ``lsh_mt_tables`` sweeps the table count at the shipped radius —
-    so the shipped (L, radius) operating point is governed by a
-    registered, DuckDB-replayed frontier instead of an offline grid.
-    Output per (method, probe): micro-averaged recall@k against the
-    brute-force ground truth plus the scanned candidate-row count — the
-    cost axis of the frontier.
+    — the evaluation that picks an operating point (at the defaults LSH
+    reached recall@5 0.04 and IVF-PQ 0.10 — too low to ship, so sweep
+    the knobs): IVF and IVF-PQ over the corpus-derived probe depths
+    (``IvfParams.levels`` — ceil of K/16 … K/2; the shipped ceil(K/3)
+    point and the stored-depth maximum are both levels), LSH over
+    Hamming multi-probe radius ∈ ``TRADEOFF_RADII``, the MULTI-TABLE
+    family over both of its knobs — ``lsh_mt`` sweeps the radius at the
+    full L stored tables, ``lsh_mt_tables`` sweeps the table count at
+    the shipped radius — and ``sq8_rr`` over the rerank depth, so every
+    shipped operating point is governed by a registered, DuckDB-replayed
+    frontier instead of an offline grid. Output per (method, probe):
+    micro-averaged recall@k against the brute-force ground truth plus
+    the scanned candidate-row count — the cost axis of the frontier.
 
     Scale shape: every level reuses ONE scoring pass per method (each
     candidate pair carries the probe depth that discovered it: the
     stored postings rank for IVF, the mask's Hamming distance for LSH),
     so the sweep costs one max-depth search per method, not one search
-    per level. All index structures come from the STORED builders —
-    sweeping never retrains — and since round-10 session 2 the frontier
-    ROWS are themselves a stored per-snapshot artifact
-    (:func:`_frontier_table`, billed with the index builds): this query
-    and :func:`knn_operating_point` both read the materialized table
-    instead of each re-running the scoring pass. Deterministic
-    end-to-end, so DuckDB replays the whole frontier exactly."""
+    per level; the pass is the registered search's own candidate
+    function. All index structures are STORED artifacts — sweeping
+    never retrains — and the frontier ROWS are themselves a
+    stored per-snapshot artifact (:func:`_frontier_table`, billed with
+    the index builds): this query and :func:`knn_operating_point` both
+    read the materialized table instead of each re-running the scoring
+    pass. Deterministic end-to-end, so DuckDB replays the whole frontier
+    exactly."""
     return _frontier_table(spark, sf_dir)
 
 
@@ -1901,8 +1576,6 @@ def knn_index_footprint(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: nine metadata-scale aggregates over stored index
     tables plus one corpus count; nothing touches vector payloads."""
-    import functools
-
     n = _corpus_n(spark, sf_dir)
     arts = [
         ("ground_truth", _bf_table),
@@ -1987,7 +1660,6 @@ def knn_index_gc_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     entry point is ``gc_stale_generations(remove=True)``, pytest-gated
     (a lazily-evaluated report cannot read files its own builder
     already deleted)."""
-    import functools
     import os
 
     from automotive_big_data_analysis_spark.sources.stored import (
@@ -3182,7 +2854,9 @@ def _tradeoff_sql() -> str:
 
     rd_vals = ", ".join(f"({x})" for x in TRADEOFF_RADII)
     rr_vals = ", ".join(f"({x})" for x in SQ8_RERANK_LEVELS)
-    mask_vals = ", ".join(f"({m}, {d})" for m, d in _lsh_probe_masks())
+    mask_vals = ", ".join(
+        f"({m}, {d})" for m, d in _lsh_probe_masks(max(TRADEOFF_RADII))
+    )
     # multi-table mirror: per-table signature literals, radius-bounded
     # masks, and the two level axes (radius reuses rd; tables get tl)
     emt_parts = "\n        UNION ALL ".join(

@@ -477,8 +477,9 @@ def test_knn_recall_tradeoff_frontier_consistent(spark):
     a superset can only gain ground-truth hits... recall monotonicity
     actually isn't guaranteed for PQ-distorted scores, so assert it only
     for the exact-scored methods), every configured level is present,
-    and the IVF/IVF-PQ rows at probe=NPROBE reproduce the
-    knn_recall_report numbers (same index, same operating point)."""
+    and the row at each shipped point (IVF/IVF-PQ at nprobe, LSH and
+    multi-table LSH at their radii, the SQ8 rerank depth) reproduces
+    the knn_recall_report numbers (same index, same operating point)."""
     from automotive_big_data_analysis_spark.operators import similarity as sim
 
     sf = "/root/testdata/sf0.001"
@@ -536,6 +537,10 @@ def test_knn_recall_tradeoff_frontier_consistent(spark):
     # knn_lsh ships the multi-probe operating point (round-7 frontier:
     # radius 0 = 0.04 recall@5 at sf0.01 was too low to ship)
     assert rows[("lsh", sim.LSH_RADIUS)].recall_at_k == report["lsh"]
+    # the frontier and the searches share one candidate path per method,
+    # so every shipped point reproduces its search's recall
+    assert rows[("lsh_mt", sim.LSH_MT_RADIUS)].recall_at_k == report["lsh_mt"]
+    assert rows[("sq8_rr", sim.SQ8_RERANK_R)].recall_at_k == report["sq8_rr"]
 
 
 def test_ivfpq_rerank_recovers_ivf_exactly_at_saturating_r(spark):
