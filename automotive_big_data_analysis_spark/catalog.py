@@ -202,7 +202,7 @@ def release(sf_dir: str | None = None) -> int:
     return len(keys)
 
 
-def spread(df: DataFrame, partitions: int | None = None) -> DataFrame:
+def spread(df: DataFrame) -> DataFrame:
     """Round-robin repartition a small scan before CPU-heavy per-row work.
 
     A small parquet file arrives as ONE input split, so an expensive
@@ -214,7 +214,7 @@ def spread(df: DataFrame, partitions: int | None = None) -> DataFrame:
     the repartition only fires when scan parallelism is under the
     session default.
     """
-    n = partitions or df.sparkSession.sparkContext.defaultParallelism
+    n = df.sparkSession.sparkContext.defaultParallelism
     # Two-stage guard. inputFiles() probes the file index without
     # compiling a physical plan (cheap) — fewer files than cores always
     # means under-parallelism, so repartition straight away. When the

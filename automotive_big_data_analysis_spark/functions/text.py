@@ -39,6 +39,27 @@ def token_count(col: str | Column = "text") -> Column:
     return F.size(tokens(col))
 
 
+def ngrams(arr: str | Column, n: int) -> Column:
+    """Every window of ``n`` consecutive elements, space-joined, in
+    order; empty when the array has fewer than ``n`` elements (Spark's
+    ``sequence(1, 0)`` would count down). DuckDB: ``list_transform(
+    range(1, GREATEST(len(arr) - (n-1), 0) + 1), i -> list_aggregate(
+    list_slice(arr, i, i + n-1), 'string_agg', ' '))``.
+
+    Explode the result as an expression, never through a projected
+    attribute: Spark infers a ``size(x) > 0`` filter for a bare
+    attribute and pushes it below any staging exchange, where it
+    re-runs the whole pipeline that produced the array."""
+    a = F.col(arr) if isinstance(arr, str) else arr
+    return F.when(
+        F.size(a) >= n,
+        F.transform(
+            F.sequence(F.lit(1), F.size(a) - (n - 1)),
+            lambda i: F.concat_ws(" ", F.slice(a, i, n)),
+        ),
+    ).otherwise(F.array().cast("array<string>"))
+
+
 def stopword_count(tokens_col: Column, stopwords: list[str]) -> Column:
     """How many tokens (lowercased) are in the stopword list."""
     arr = F.array(*[F.lit(s) for s in stopwords])

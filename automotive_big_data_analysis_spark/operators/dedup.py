@@ -31,7 +31,7 @@ from __future__ import annotations
 
 import functools
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from automotive_big_data_analysis_spark.catalog import load_table, spread
@@ -46,43 +46,17 @@ JACCARD_THRESHOLD = 0.6
 N_MINHASH = 16
 BAND_SIZE = 2
 N_BANDS = N_MINHASH // BAND_SIZE
+SHINGLE_N = 3  # shingles are word 3-grams
 
 
-def _shingle_df(docs: DataFrame, n: int = 3) -> DataFrame:
-    """(doc_id, shingle) with distinct word n-gram shingles per doc.
-
-    Built with higher-order functions: tokens → sliding n-gram join →
-    array_distinct → explode. The tokenizer output is staged behind a
-    narrow round-robin exchange so the n-gram lambda slices a bound
-    attribute — inlined, Catalyst's projection collapse would re-run the
-    tokenizer regexp once per shingle (O(tokens²) per document; staging
-    measured ~7× faster on this corpus). The downstream join shuffles on
-    the shingle string."""
-    staged = docs.select("doc_id", tx.tokens("text").alias("toks")).repartition(
-        docs.sparkSession.sparkContext.defaultParallelism
-    )
-    tk = F.col("toks")
-    # Guard: sequence(1, 0) would count DOWN in Spark; emit an empty array
-    # for docs with fewer than n tokens (DuckDB's range(1, 1) is empty).
-    ngrams = F.when(
-        F.size(tk) >= n,
-        F.transform(
-            F.sequence(F.lit(1), F.size(tk) - (n - 1)),
-            lambda i: F.concat_ws(" ", F.slice(tk, i, n)),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    # explode_outer, NOT explode: plain explode infers a `size(arr) > 0`
-    # filter that Catalyst pushes below the staging exchange, re-inlining
-    # the whole shingle pipeline (tokenizer included) into a per-row
-    # pre-shuffle filter — the exact recomputation the staging exists to
-    # prevent (measured 6×). The outer variant infers nothing; empty docs
-    # surface as one null shingle, dropped above the Generate.
-    return (
-        staged.select(
-            "doc_id", F.explode_outer(F.array_distinct(ngrams)).alias("shingle")
-        )
-        .where(F.col("shingle").isNotNull())
-    )
+def _shingle_df(docs: DataFrame) -> DataFrame:
+    """(doc_id, shingle) with distinct word n-gram shingles per doc:
+    tokens → :func:`tx.ngrams` → array_distinct → explode. The token
+    arrays are spread over the cores before the per-row gram work; the
+    downstream join shuffles on the shingle string."""
+    staged = spread(docs.select("doc_id", tx.tokens("text").alias("toks")))
+    shingles = F.array_distinct(tx.ngrams("toks", SHINGLE_N))
+    return staged.select("doc_id", F.explode(shingles).alias("shingle"))
 
 
 def _shingles_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -143,29 +117,45 @@ def _computed_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     runs this, once per corpus snapshot, and a single write consumes
     it."""
     sh = _shingles_cached(spark, sf_dir)
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("sz"))
-    a = sh.alias("a")
-    b = sh.alias("b")
-    inter = (
-        a.join(b, (F.col("a.shingle") == F.col("b.shingle")))
+    return _near_duplicates(_shared_shingles(sh), sh)
+
+
+def _shared_shingles(sh: DataFrame) -> DataFrame:
+    """(doc_a, doc_b, inter): every pair doc_a < doc_b sharing a
+    shingle, with the count shared — one self-equi-join on the shingle,
+    so the cost is bounded by shingle document frequency, never
+    all-pairs."""
+    a, b = sh.alias("a"), sh.alias("b")
+    return (
+        a.join(b, F.col("a.shingle") == F.col("b.shingle"))
         .where(F.col("a.doc_id") < F.col("b.doc_id"))
         .groupBy(
             F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
         )
         .agg(F.count("*").alias("inter"))
     )
+
+
+def _sized(inter: DataFrame, sh: DataFrame) -> DataFrame:
+    """``inter`` with both documents' shingle-set sizes (sz_a, sz_b)."""
+    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("sz"))
     sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("sz").alias("sz_a"))
     sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("sz").alias("sz_b"))
+    return inter.join(sa, "doc_a").join(sb, "doc_b")
+
+
+def _jaccard() -> Column:
+    """|A∩B| / |A∪B| over a :func:`_sized` row — integer set sizes, so
+    both engines compute the identical IEEE division."""
+    i = F.col("inter")
+    return F.round(i / (F.col("sz_a") + F.col("sz_b") - i), 6)
+
+
+def _near_duplicates(inter: DataFrame, sh: DataFrame) -> DataFrame:
+    """(doc_a, doc_b, jaccard) for the pairs at Jaccard ≥ the threshold."""
     return (
-        inter.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            F.round(
-                F.col("inter") / (F.col("sz_a") + F.col("sz_b") - F.col("inter")), 6
-            ).alias("jaccard"),
-        )
+        _sized(inter, sh)
+        .select("doc_a", "doc_b", _jaccard().alias("jaccard"))
         .where(F.col("jaccard") >= JACCARD_THRESHOLD)
     )
 
@@ -304,7 +294,6 @@ def _verify_candidates(sh: DataFrame, candidates: DataFrame) -> DataFrame:
         .distinct()
     )
     sh_cand = sh.join(cand_docs, "doc_id", "left_semi")
-    sizes = sh_cand.groupBy("doc_id").agg(F.count("*").alias("sz"))
     a_sh = sh_cand.select(F.col("doc_id").alias("doc_a"), "shingle")
     b_sh = sh_cand.select(F.col("doc_id").alias("doc_b"), "shingle")
     inter = (
@@ -313,20 +302,7 @@ def _verify_candidates(sh: DataFrame, candidates: DataFrame) -> DataFrame:
         .groupBy("doc_a", "doc_b")
         .agg(F.count("*").alias("inter"))
     )
-    sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("sz").alias("sz_a"))
-    sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("sz").alias("sz_b"))
-    return (
-        inter.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            F.round(
-                F.col("inter") / (F.col("sz_a") + F.col("sz_b") - F.col("inter")), 6
-            ).alias("jaccard"),
-        )
-        .where(F.col("jaccard") >= JACCARD_THRESHOLD)
-    )
+    return _near_duplicates(inter, sh_cand)
 
 
 def keep_list_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -367,7 +343,7 @@ def _index_tag() -> str:
     """Index paths encode every parameter that shapes the stored
     structures — a semantics change builds a fresh index instead of
     silently reading files computed under the old definition."""
-    return f"j{int(JACCARD_THRESHOLD * 100)}w3mh{N_MINHASH}b{BAND_SIZE}"
+    return f"j{int(JACCARD_THRESHOLD * 100)}w{SHINGLE_N}mh{N_MINHASH}b{BAND_SIZE}"
 
 
 def pair_index_table(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -641,15 +617,9 @@ def _simhash_signature_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     partial row per (partition, doc) instead of 16 exploded rows per
     token, and there's one aggregation, not two."""
     docs = load_table(spark, sf_dir, "documents")
-    # explode_outer: the inferred size>0 filter of plain explode would run
-    # the tokenizer regexp a second time per row (cf. _shingle_df)
     tok = (
         spread(docs.select("doc_id", "text"))
-        .select(
-            "doc_id",
-            F.explode_outer(F.array_distinct(tx.tokens("text"))).alias("t"),
-        )
-        .where(F.col("t").isNotNull())
+        .select("doc_id", F.explode(F.array_distinct(tx.tokens("text"))).alias("t"))
         .select("doc_id", F.md5("t").alias("h"))
     )
     nibs = tok.select(
@@ -1016,24 +986,9 @@ def duplicate_span_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     frequency) are bounded because each doc contributes each position
     once."""
     docs = load_table(spark, sf_dir, "documents")
-    staged = docs.select(
-        "doc_id", "lang", tx.tokens("text").alias("toks")
-    ).repartition(spark.sparkContext.defaultParallelism)
-    tk = F.col("toks")
-    # sequence(1, 0) counts DOWN in Spark — guard short docs to empty.
-    spans = F.when(
-        F.size(tk) >= SPAN_TOKENS,
-        F.transform(
-            F.sequence(F.lit(1), F.size(tk) - (SPAN_TOKENS - 1)),
-            lambda s: F.md5(F.concat_ws(" ", F.slice(tk, s, SPAN_TOKENS))),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    # explode_outer: plain explode's inferred non-empty filter would push
-    # below the staging exchange and re-inline the tokenizer (the
-    # _shingle_df lesson).
-    pos = staged.select(
-        "doc_id", "lang", F.explode_outer(spans).alias("h")
-    ).where(F.col("h").isNotNull())
+    staged = spread(docs.select("doc_id", "lang", tx.tokens("text").alias("toks")))
+    spans = F.transform(tx.ngrams("toks", SPAN_TOKENS), F.md5)
+    pos = staged.select("doc_id", "lang", F.explode(spans).alias("h"))
     per_span = pos.groupBy("lang", "h").agg(
         F.count("*").alias("n_pos"),
         F.count_distinct("doc_id").alias("n_docs"),
@@ -1077,26 +1032,9 @@ def containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     report aggregates pair scores to one row. Exact integer set sizes
     → identical IEEE division on both engines."""
     sh = _shingles_cached(spark, sf_dir)
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("sz"))
-    a, b = sh.alias("a"), sh.alias("b")
-    inter = (
-        a.join(b, (F.col("a.shingle") == F.col("b.shingle")))
-        .where(F.col("a.doc_id") < F.col("b.doc_id"))
-        .groupBy(
-            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
-        )
-        .agg(F.count("*").alias("inter"))
-    )
-    sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("sz").alias("sz_a"))
-    sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("sz").alias("sz_b"))
     cont = F.round(F.col("inter") / F.least("sz_a", "sz_b"), 6)
-    jac = F.round(
-        F.col("inter") / (F.col("sz_a") + F.col("sz_b") - F.col("inter")), 6
-    )
-    scored = (
-        inter.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .select(cont.alias("containment"), jac.alias("jaccard"))
+    scored = _sized(_shared_shingles(sh), sh).select(
+        cont.alias("containment"), _jaccard().alias("jaccard")
     )
     low_jac = F.col("jaccard") < JACCARD_THRESHOLD
     blind = low_jac & (F.col("containment") >= CONTAINMENT_THRESHOLD)

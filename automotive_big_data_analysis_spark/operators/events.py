@@ -132,13 +132,9 @@ def props_key_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     per key. ``from_json`` + ``explode`` run map-side; the shuffle carries
     |keys| × partitions partial aggregates."""
     ev = load_table(spark, sf_dir, "events")
-    # explode_outer: plain explode infers a size(map) > 0 filter that
-    # evaluates a SECOND from_json parse per row (cf. dedup._shingle_df)
     parsed = ev.select(
-        F.explode_outer(
-            F.from_json("props", "map<string,bigint>")
-        ).alias("key", "val")
-    ).where(F.col("key").isNotNull())
+        F.explode(F.from_json("props", "map<string,bigint>")).alias("key", "val")
+    )
     return parsed.groupBy("key").agg(
         F.count("*").alias("n_events"),
         F.sum("val").cast("long").alias("total"),

@@ -16,13 +16,12 @@ zero-token document produces zero chunks. Chunk identity is the md5 of
 the space-joined token slice, so identity is content-defined —
 independent of doc ids, ordering, or partition layout.
 
-Scale shape: tokenization is staged behind a narrow exchange once (the
-``_gram_hashes`` staging discipline — an inlined tokenizer would be
-re-evaluated per chunk by projection collapse); chunk generation is a
-map-side higher-order array expression; the explode feeds ONE hash
-aggregation keyed on (lang, chunk hash) with map-side partial combine,
-so the shuffle is bounded by the distinct-chunk vocabulary, not the
-chunk stream. Nothing is pairwise, nothing leaves the JVM.
+Scale shape: the token arrays are spread over the cores once; chunk
+generation is a map-side higher-order array expression; the explode
+feeds ONE hash aggregation keyed on (lang, chunk hash) with map-side
+partial combine, so the shuffle is bounded by the distinct-chunk
+vocabulary, not the chunk stream. Nothing is pairwise, nothing leaves
+the JVM.
 """
 
 from __future__ import annotations
@@ -32,7 +31,7 @@ from pyspark.sql import functions as F
 
 from automotive_big_data_analysis_spark.functions import vectors as V
 
-from automotive_big_data_analysis_spark.catalog import load_table, memoized
+from automotive_big_data_analysis_spark.catalog import load_table, memoized, spread
 
 # the session memo's release hook, re-exported for long-lived callers
 from automotive_big_data_analysis_spark.catalog import release  # noqa: F401
@@ -43,11 +42,7 @@ CHUNK_STRIDE = 24  # 25% overlap between consecutive chunks
 
 
 def _chunk_hashes(toks_col):
-    """Array of md5 chunk fingerprints for a staged token-array COLUMN.
-
-    The argument must be a bound attribute (see
-    ``training_prep._gram_hashes`` — the lambda references it per chunk
-    and an inlined tokenizer regexp would re-run per chunk)."""
+    """Array of md5 chunk fingerprints of a token array."""
     starts = F.sequence(F.lit(1), F.size(toks_col), F.lit(CHUNK_STRIDE))
     return F.when(
         F.size(toks_col) > 0,
@@ -83,23 +78,16 @@ def docs_chunk_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedup would remove before embedding — the number a RAG ingest run
     budgets against."""
     docs = load_table(spark, sf_dir, "documents")
-    staged = docs.select(
-        "lang", tx.tokens("text").alias("toks")
-    ).repartition(spark.sparkContext.defaultParallelism)
-    # explode_outer + post-filter, NOT plain explode: explode infers a
-    # non-empty-array filter that pushes below the staging exchange and
-    # re-inlines the tokenizer per row (the contamination_stats lesson);
-    # the null-filter below references the GENERATED column, so it stays
-    # above the generate.
+    staged = spread(docs.select("lang", tx.tokens("text").alias("toks")))
     chunks = staged.select(
         "lang",
-        F.explode_outer(
+        F.explode(
             F.arrays_zip(
                 _chunk_hashes(F.col("toks")).alias("h"),
                 _chunk_sizes(F.col("toks")).alias("sz"),
             )
         ).alias("c"),
-    ).where(F.col("c.h").isNotNull())
+    )
     per_lang = chunks.groupBy("lang").agg(
         F.count_distinct(F.col("c.h")).alias("n_distinct_chunks"),
         F.count("*").alias("n_chunks"),
@@ -129,6 +117,20 @@ N_QUERY_TERMS = 3
 TERM_RE = "^[a-z]{4,}$"  # alpha terms only; drops punctuation + short stopwords
 
 
+def _postings(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The (doc_id, term, tf) postings of the lowercased alphabetic
+    terms: the raw rows are spread over the cores, then tokenized once."""
+    docs = load_table(spark, sf_dir, "documents")
+    terms = F.transform(tx.tokens("text"), lambda t: F.lower(t))
+    return (
+        spread(docs.select("doc_id", "text"))
+        .select("doc_id", F.explode(terms).alias("term"))
+        .where(F.col("term").rlike(TERM_RE))
+        .groupBy("doc_id", "term")
+        .agg(F.count("*").alias("tf"))
+    )
+
+
 def _bm25_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sparse lexical retrieval over an inverted index: BM25 top-k —
     the other half of a RAG ingest next to the dense ANN family
@@ -150,14 +152,6 @@ def _bm25_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     contributions in DECIMAL (order-free); consumers take top-k via
     TakeOrdered — no global sort materialization, no fact-scale
     window."""
-    docs = load_table(spark, sf_dir, "documents")
-    staged = docs.select(
-        "doc_id",
-        F.transform(tx.tokens("text"), lambda t: F.lower(t)).alias("toks"),
-    ).repartition(spark.sparkContext.defaultParallelism)
-    posting = staged.select(
-        "doc_id", F.explode_outer("toks").alias("term")
-    ).where(F.col("term").rlike(TERM_RE))
     # The (doc, term, tf) postings table feeds FOUR consumers (query
     # terms, df, doc lengths, scoring); without materialization Catalyst
     # re-plans the scan+tokenize+explode subtree into each one — five
@@ -170,9 +164,7 @@ def _bm25_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
         sf_dir,
         "documents",
         "bm25_postings",
-        lambda: posting.groupBy("doc_id", "term")
-        .agg(F.count("*").alias("tf"))
-        .localCheckpoint(),
+        lambda: _postings(spark, sf_dir).localCheckpoint(),
     )
     dl = tf.groupBy("doc_id").agg(F.sum("tf").cast("long").alias("dl"))
     totals = dl.agg(

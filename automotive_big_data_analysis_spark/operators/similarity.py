@@ -210,8 +210,8 @@ def knn_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 #   depth  = ceil(K / 2)     (stored postings truncation; the filtered
 #                             search and the tradeoff sweep's max)
 #
-# The K/3 and K/2 fractions are CALIBRATED from the measured recall
-# frontier (scripts/calibrate_ivf.py, round 9, three SFs × three c):
+# The K/3 and K/2 fractions are CALIBRATED from the recall frontier
+# measured in round 9 with DuckDB over three SFs × three c:
 # at sf0.1 (N=2000 → K=90) nprobe=30 gives recall@5 0.82 scanning
 # ~33% of the corpus (vs 0.80 at 38% for the old point, which decayed
 # with N); at sf0.01 (N=500 → K=45) nprobe=15 gives 0.84. On this
@@ -667,10 +667,10 @@ PQ_M = 16  # subspaces; PQ code = M small ids instead of DIM floats
 PQ_SUBDIM = V.DIM // PQ_M
 PQ_SUBK = 32  # sub-centroids per subspace (classic PQ: 256 at scale)
 
-# OPQ rotation: measured and REJECTED (round 10, verdict item 4 —
-# ``scripts/probe_opq.py``, a numpy replication of this pipeline whose
-# identity baseline reproduces the engine's frontier exactly at sf0.01
-# max depth, 0.56, and the sf0.1 non-monotone dip). The ADC ordering's
+# OPQ rotation: measured and REJECTED (round 10, with a numpy
+# replication of this pipeline whose identity baseline reproduced the
+# engine's frontier exactly at sf0.01 max depth, 0.56, and the sf0.1
+# non-monotone dip). The ADC ordering's
 # probe-depth non-monotonicity at sf0.1 IS a subspace-energy-imbalance
 # artifact — an OPQ-P rotation (PCA eigenbasis, eigendirections dealt
 # round-robin to subspaces; Ge et al. CVPR 2013) lifts sf0.1 recall at

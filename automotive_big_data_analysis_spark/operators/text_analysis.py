@@ -66,10 +66,7 @@ def word_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     |vocabulary|-sized; TakeOrdered avoids a global sort."""
     docs = load_table(spark, sf_dir, "documents")
     return (
-        # explode_outer: plain explode infers a size>0 filter that runs
-        # the tokenizer regexp a second time per row
-        docs.select(F.explode_outer(tx.tokens("text")).alias("w"))
-        .where(F.col("w").isNotNull())
+        docs.select(F.explode(tx.tokens("text")).alias("w"))
         .select(F.lower("w").alias("word"))
         .groupBy("word")
         .agg(F.count("*").alias("n"))
@@ -110,9 +107,8 @@ def lang_trigram_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     so the ceiling is distribution skew, ~2× over chance — the operator
     is graded on machinery + oracle parity, not on that ceiling.)
 
-    Plan shape: one exchange stages the normalized text (so the trigram
-    lambda reads an attribute, not an inlined regexp that would re-run
-    per element); profiles aggregate to ≤ |langs|·K rows and broadcast
+    Plan shape: the normalized text is checkpointed once (see below);
+    profiles aggregate to ≤ |langs|·K rows and broadcast
     into the classification join; per-doc hit counting shuffles on (doc,
     lang) — nothing corpus-quadratic."""
     docs = load_table(spark, sf_dir, "documents")
@@ -121,11 +117,9 @@ def lang_trigram_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     # classification, the final label join) and without a barrier each
     # would re-scan and re-normalize the corpus (plan showed 6 FileScans,
     # 0 ReusedExchange); one slim (id, lang, normalized-text) row per doc
-    staged = (
+    staged = spread(
         docs.select("doc_id", "lang", norm.alias("nt"))
-        .repartition(spark.sparkContext.defaultParallelism)
-        .localCheckpoint()
-    )
+    ).localCheckpoint()
     tg_arr = F.when(
         F.length("nt") >= 3,
         F.transform(
@@ -133,11 +127,7 @@ def lang_trigram_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
             lambda i: F.substring(F.col("nt"), i, 3),
         ),
     ).otherwise(F.array().cast("array<string>"))
-    # explode_outer avoids the inferred size>0 filter re-building the
-    # trigram array a second time per row (cf. dedup._shingle_df)
-    tri = staged.select(
-        "doc_id", "lang", F.explode_outer(tg_arr).alias("tg")
-    ).where(F.col("tg").isNotNull())
+    tri = staged.select("doc_id", "lang", F.explode(tg_arr).alias("tg"))
     w_prof = Window.partitionBy("lang").orderBy(F.col("c").desc(), F.col("tg"))
     prof = (
         tri.groupBy("lang", "tg")
@@ -212,22 +202,12 @@ def repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     an earlier one: ``1 − distinct/total``; per-lang output counts docs,
     flags heavy repeaters, and averages the ratio exactly.
 
-    Plan shape: token arrays stage behind one narrow exchange (the gram
-    lambda slices a bound attribute — see ``dedup._shingle_df``); the
-    ratio is pure per-row array arithmetic with NO explode (nothing ever
-    fans out), and the only other exchange is the |langs|-row rollup."""
+    Plan shape: token arrays are spread over the cores once; the ratio
+    is pure per-row array arithmetic with NO explode (nothing ever fans
+    out), and the only other exchange is the |langs|-row rollup."""
     docs = load_table(spark, sf_dir, "documents")
-    staged = docs.select("lang", tx.tokens("text").alias("toks")).repartition(
-        spark.sparkContext.defaultParallelism
-    )
-    tk = F.col("toks")
-    grams = F.when(
-        F.size(tk) >= REP_N,
-        F.transform(
-            F.sequence(F.lit(1), F.size(tk) - (REP_N - 1)),
-            lambda i: F.concat_ws(" ", F.slice(tk, i, REP_N)),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
+    staged = spread(docs.select("lang", tx.tokens("text").alias("toks")))
+    grams = tx.ngrams("toks", REP_N)
     n_g = F.size(grams)
     n_u = F.size(F.array_distinct(grams))
     ratio = F.when(n_g > 0, (n_g - n_u) / n_g).otherwise(F.lit(0.0))
@@ -666,10 +646,7 @@ def tfidf_topterms(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc_id (high cardinality). N is a one-row aggregate, broadcast."""
     docs = load_table(spark, sf_dir, "documents")
     tf = (
-        docs.select(
-            "doc_id", F.explode_outer(tx.tokens("text")).alias("w")
-        )
-        .where(F.col("w").isNotNull())
+        docs.select("doc_id", F.explode(tx.tokens("text")).alias("w"))
         .select("doc_id", F.lower("w").alias("word"))
         .groupBy("doc_id", "word")
         .agg(F.count("*").alias("tf"))
@@ -739,31 +716,21 @@ def collocation_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     so neither engine's integer-overflow semantics can diverge at scale);
     ties break on the words.
 
-    Scale shape: tokenization is staged behind a narrow exchange (the
-    ``_shingle_df`` discipline — an inlined array would re-run the
-    regexp per bigram); unigram and bigram counts are partial-combined
-    hash aggregates keyed on vocabulary-sized keys; the count joins
+    Scale shape: the token arrays are spread over the cores once, and
+    the unigram, bigram and total counts all read that one exchange;
+    the counts are partial-combined hash aggregates keyed on
+    vocabulary-sized keys; the count joins
     hash-partition on the word; the final top-k is a TakeOrdered over
     the support-filtered pair vocabulary, never a global sort."""
     docs = load_table(spark, sf_dir, "documents")
     staged = spread(docs.select(tx.tokens("text").alias("toks")))
-    tk = F.col("toks")
-    bigrams = F.when(
-        F.size(tk) >= 2,
-        F.transform(
-            F.sequence(F.lit(1), F.size(tk) - 1),
-            lambda i: F.concat_ws(" ", F.slice(tk, i, 2)),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
     uni = (
-        staged.select(F.explode_outer("toks").alias("w"))
-        .where(F.col("w").isNotNull())
+        staged.select(F.explode(tx.ngrams("toks", 1)).alias("w"))
         .groupBy("w")
         .agg(F.count("*").alias("c"))
     )
     bi = (
-        staged.select(F.explode_outer(bigrams).alias("bg"))
-        .where(F.col("bg").isNotNull())
+        staged.select(F.explode(tx.ngrams("toks", 2)).alias("bg"))
         .groupBy("bg")
         .agg(F.count("*").alias("c_ab"))
         .where(F.col("c_ab") >= COLLOC_MIN_PAIRS)
@@ -852,9 +819,9 @@ def unigram_surprisal(spark: SparkSession, sf_dir: str) -> DataFrame:
     double), so both engines rank identically; rounding is
     presentational.
 
-    Scale shape: one tokenization pass (staged explode_outer); the
-    token→frequency join hash-partitions on the vocabulary; per-doc
-    means are a (doc, lang) partial-combined aggregate. Top-k is
+    Scale shape: one tokenization pass; the token→frequency join
+    hash-partitions on the vocabulary; per-doc means are a (doc, lang)
+    partial-combined aggregate. Top-k is
     TWO-LEVEL: a per-(lang, input-partition) window pre-filters to k
     rows per partition — semantics-free (any global top-k row is its
     partition's top-k) — so the final per-lang window sorts
@@ -869,10 +836,7 @@ def unigram_surprisal(spark: SparkSession, sf_dir: str) -> DataFrame:
     # no-ops at scale (guide §2.2)
     toks = (
         spread(docs.select("doc_id", "lang", "text"))
-        .select(
-            "doc_id", "lang", F.explode_outer(tx.tokens("text")).alias("w")
-        )
-        .where(F.col("w").isNotNull())
+        .select("doc_id", "lang", F.explode(tx.tokens("text")).alias("w"))
         .select("doc_id", "lang", F.lower("w").alias("word"))
     )
     freq = toks.groupBy("word").agg(F.count("*").alias("cnt"))

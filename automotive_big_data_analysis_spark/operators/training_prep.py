@@ -32,7 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from automotive_big_data_analysis_spark.catalog import load_table
+from automotive_big_data_analysis_spark.catalog import load_table, spread
 from automotive_big_data_analysis_spark.functions import exact as ex
 from automotive_big_data_analysis_spark.functions import text as tx
 from automotive_big_data_analysis_spark.operators.sampling import (
@@ -52,25 +52,10 @@ CONTAM_N = 8
 CONTAM_FLAG_RATIO = 0.5  # flag a doc when ≥ half its 8-grams are benchmark
 
 
-def _gram_hashes(toks_col, n: int):
-    """Distinct word n-gram md5 hashes from a token-array COLUMN (md5
-    keeps joins/broadcasts at 32 bytes per gram).
-
-    The argument must be a bound attribute, not an inlined expression:
-    the transform lambda references it per element, and Catalyst's
-    projection collapse would re-evaluate an inlined tokenizer regexp for
-    every gram — O(tokens²) per document, measured 11× slower on this
-    corpus. Callers stage the token array behind an exchange first (the
-    same staging discipline as ``dedup._shingle_df`` and the trigram
-    language ID)."""
-    grams = F.when(
-        F.size(toks_col) >= n,
-        F.transform(
-            F.sequence(F.lit(1), F.size(toks_col) - (n - 1)),
-            lambda i: F.md5(F.concat_ws(" ", F.slice(toks_col, i, n))),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    return F.array_distinct(grams)
+def _gram_hashes(toks: str):
+    """Distinct word-8-gram md5 hashes of a token array (md5 keeps
+    joins/broadcasts at 32 bytes per gram)."""
+    return F.array_distinct(F.transform(tx.ngrams(toks, CONTAM_N), F.md5))
 
 
 def contamination_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -86,37 +71,25 @@ def contamination_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-doc count (keyed on doc_id, linear in gram volume, partial-agg
     combined) and the |langs|-row final rollup. Nothing is pairwise."""
     docs = load_table(spark, sf_dir, "documents")
-    n_parts = spark.sparkContext.defaultParallelism
     # each side tokenizes only its own slice (the source filter pushes to
-    # the scan) and stages the token array behind a narrow round-robin
-    # exchange so the gram lambda reads an attribute — see _gram_hashes
-    bench_toks = (
-        docs.where(F.col("source") == BENCH_SOURCE)
-        .select(tx.tokens("text").alias("toks"))
-        .repartition(n_parts)
-    )
-    # explode_outer everywhere grams are generated: plain explode infers a
-    # non-empty-array filter that pushes below the staging exchange and
-    # re-inlines the tokenizer into a per-row filter (measured 14× slower)
-    bench_grams = (
-        bench_toks.select(
-            F.explode_outer(_gram_hashes(F.col("toks"), CONTAM_N)).alias("g")
+    # the scan) and spreads the token arrays before the gram work
+    bench_toks = spread(
+        docs.where(F.col("source") == BENCH_SOURCE).select(
+            tx.tokens("text").alias("toks")
         )
-        .where(F.col("g").isNotNull())
+    )
+    bench_grams = (
+        bench_toks.select(F.explode(_gram_hashes("toks")).alias("g"))
         .distinct()
         .withColumn("_hit", F.lit(1))
     )
-    cand = (
-        docs.where(F.col("source") != BENCH_SOURCE)
-        .select("doc_id", "lang", tx.tokens("text").alias("toks"))
-        .repartition(n_parts)
-        .select(
-            "doc_id", "lang", _gram_hashes(F.col("toks"), CONTAM_N).alias("grams")
+    cand = spread(
+        docs.where(F.col("source") != BENCH_SOURCE).select(
+            "doc_id", "lang", tx.tokens("text").alias("toks")
         )
     )
     per_doc = (
-        cand.select("doc_id", F.explode_outer("grams").alias("g"))
-        .where(F.col("g").isNotNull())
+        cand.select("doc_id", F.explode(_gram_hashes("toks")).alias("g"))
         .join(F.broadcast(bench_grams), "g", "left")
         .groupBy("doc_id")
         .agg(
@@ -340,24 +313,9 @@ def bpe_pair_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     combine makes the shuffle |pair-vocabulary|-sized, not corpus-sized);
     top-k is TakeOrdered, never a global sort."""
     docs = load_table(spark, sf_dir, "documents")
-    # stage the piece array behind an exchange: the pair lambda indexes it
-    # per element, and an inlined regexp would re-tokenize per pair
-    staged = docs.select(tx.wordpieces("text").alias("p")).repartition(
-        spark.sparkContext.defaultParallelism
-    )
-    pieces = F.col("p")
-    pairs = F.when(
-        F.size(pieces) >= 2,
-        F.transform(
-            F.sequence(F.lit(1), F.size(pieces) - 1),
-            lambda i: F.concat_ws(
-                " ", F.element_at(pieces, i), F.element_at(pieces, i + F.lit(1))
-            ),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
+    staged = spread(docs.select(tx.wordpieces("text").alias("p")))
     return (
-        staged.select(F.explode_outer(pairs).alias("pair"))
-        .where(F.col("pair").isNotNull())
+        staged.select(F.explode(tx.ngrams("p", 2)).alias("pair"))
         .groupBy("pair")
         .agg(F.count("*").alias("n"))
         .orderBy(F.col("n").desc(), F.col("pair"))
@@ -442,16 +400,7 @@ def _train_bpe(
     rows = []
     cur = vocab
     for rnd in range(1, BPE_MERGE_ROUNDS + 1):
-        arr = F.split(F.trim(F.col("s")), " ")
-        pairs = F.when(
-            F.size(arr) >= 2,
-            F.transform(
-                F.sequence(F.lit(1), F.size(arr) - 1),
-                lambda i: F.concat_ws(
-                    " ", F.element_at(arr, i), F.element_at(arr, i + F.lit(1))
-                ),
-            ),
-        ).otherwise(F.array().cast("array<string>"))
+        pairs = tx.ngrams(F.split(F.trim(F.col("s")), " "), 2)
         top = (
             cur.select(F.explode(pairs).alias("pair"), "cnt")
             .groupBy("pair")

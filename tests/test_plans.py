@@ -355,17 +355,36 @@ def test_unpartitioned_window_detector_not_vacuous(spark):
     assert len(px.unpartitioned_window_specs(ok)) == 0
 
 
+def test_explode_infers_a_filter_only_for_a_bare_attribute(spark):
+    """The rule the text families rely on (Spark 4.1): explode of an
+    EXPRESSION infers no filter, while explode of a bare attribute
+    infers ``size(x) > 0``, which Catalyst pushes below the staging
+    exchange as a per-row re-run of the tokenizer."""
+    from automotive_big_data_analysis_spark.catalog import load_table, spread
+    from automotive_big_data_analysis_spark.functions import text as tx
+    from pyspark.sql import functions as F
+
+    docs = load_table(spark, SF, "documents")
+    staged = spread(docs.select(tx.tokens("text").alias("toks")))
+    expr = staged.select(F.explode(tx.ngrams("toks", 1)).alias("w"))
+    assert px.filters_containing(expr, "regexp_extract_all") == 0
+    bare = staged.select(F.explode(F.col("toks")).alias("w"))
+    assert px.filters_containing(bare, "regexp_extract_all") >= 1
+
+
 def test_generate_paths_keep_tokenizer_out_of_filters(spark):
-    """Regression guard for the explode inferred-filter pathology: plain
-    explode over a staged array infers a size>0 filter that Catalyst
+    """Regression guard for the explode inferred-filter pathology:
+    explode of a bare attribute infers a size>0 filter that Catalyst
     pushes below the staging exchange, re-running the tokenizer regexp
-    per row (measured 14x on the 8-gram explode; detection validated to
-    flag the plain-explode formulation of these exact plans). The guard
+    (or the JSON parse) per row (measured 14x on the 8-gram explode).
+    Every generate path here explodes an expression instead. The guard
     reads the FORMATTED plan — toString elides long filter conditions,
     which would make the assertion vacuous."""
     from automotive_big_data_analysis_spark.catalog import load_table
     from automotive_big_data_analysis_spark.operators import (
         dedup,
+        events,
+        rag_prep,
         text_analysis,
         training_prep,
     )
@@ -373,13 +392,26 @@ def test_generate_paths_keep_tokenizer_out_of_filters(spark):
     dedup.release()
     dfs = [
         dedup._shingle_df(load_table(spark, SF, "documents")),
+        dedup.duplicate_span_stats(spark, SF),
         text_analysis.word_topk(spark, SF),
         text_analysis.tfidf_topterms(spark, SF),
+        text_analysis.collocation_lift(spark, SF),
+        text_analysis.repetition_stats(spark, SF),
+        text_analysis.unigram_surprisal(spark, SF),
+        text_analysis.lang_trigram_confusion(spark, SF),
         training_prep.contamination_stats(spark, SF),
         training_prep.bpe_pair_stats(spark, SF),
+        rag_prep.docs_chunk_stats(spark, SF),
     ]
     for df in dfs:
         assert px.filters_containing(df, "regexp_extract_all") == 0
+    props = events.props_key_rollup(spark, SF)
+    assert px.filters_containing(props, "from_json") == 0
+    # the registered BM25 plan reads the checkpointed postings, so the
+    # postings frame is checked as it is before its checkpoint
+    postings = rag_prep._postings(spark, SF)
+    assert px.filters_containing(postings, "regexp_extract_all") == 0
+    assert px.physical_plan(postings).count("regexp_extract_all") == 1
     dedup.release()
 
 

@@ -29,6 +29,21 @@ def test_token_count(docs):
     assert got[5] == 3
 
 
+@pytest.mark.parametrize("n", [1, 2, 3, 8, 16])
+def test_ngrams_matches_python_windows(spark, n):
+    """Every window of n consecutive elements, space-joined, in order;
+    empty below n elements — arrays shorter than, equal to and longer
+    than n, the empty array included."""
+    arrays = [[], ["solo"]] + [
+        [f"w{i % 5}" for i in range(m)] for m in (n - 1, n, n + 1, 3 * n + 2)
+    ]
+    df = spark.createDataFrame(list(enumerate(arrays)), "i int, a array<string>")
+    got = {r.i: r.g for r in df.select("i", tx.ngrams("a", n).alias("g")).collect()}
+    for i, a in enumerate(arrays):
+        want = [" ".join(a[j : j + n]) for j in range(len(a) - n + 1)]
+        assert got[i] == want, (n, a)
+
+
 def test_lang_id(docs):
     got = {r.doc_id: r.lang for r in docs.select("doc_id", tx.lang_id("text").alias("lang")).collect()}
     assert got[1] == "en"
