@@ -170,3 +170,18 @@ def quality_score(col: str | Column = "text") -> Column:
         + F.when(stop_ratio >= 0.05, F.lit(0.3)).otherwise(F.lit(0.0))
     )
     return F.round(score, 2)
+
+
+# The DuckDB mirrors every oracle shares: the stopword ``IN`` list and
+# :func:`quality_score` over a row that carries ``n_tok`` (token count),
+# ``n_chars`` (text length) and ``n_stop`` (stopword count).
+STOP_ALL_SQL = ", ".join(f"'{w}'" for w in STOPWORDS_EN + STOPWORDS_ES)
+QUALITY_SQL = """ROUND(
+    (CASE WHEN n_tok >= 20 AND n_tok <= 10000 THEN 0.4 ELSE 0.0 END)
+  + (CASE WHEN n_tok > 0
+          AND CAST(n_chars AS DOUBLE)/n_tok >= 3
+          AND CAST(n_chars AS DOUBLE)/n_tok <= 12
+         THEN 0.3 ELSE 0.0 END)
+  + (CASE WHEN n_tok > 0
+          AND CAST(n_stop AS DOUBLE)/n_tok >= 0.05
+         THEN 0.3 ELSE 0.0 END), 2)"""

@@ -548,7 +548,6 @@ def quality_regression(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _corr_sql() -> str:
     from automotive_big_data_analysis_spark.functions import text as tx
 
-    stop_sql = ", ".join(f"'{w}'" for w in tx.STOPWORDS_EN + tx.STOPWORDS_ES)
     toks = r"regexp_extract_all(text, '\S+')"
     dsx, dsy = "CAST(sx AS DOUBLE)", "CAST(sy AS DOUBLE)"
     dsxx, dsyy = "CAST(sxx AS DOUBLE)", "CAST(syy AS DOUBLE)"
@@ -556,20 +555,11 @@ def _corr_sql() -> str:
         WITH scored AS (
             SELECT doc_id, len({toks}) AS n_tok, length(text) AS n_chars,
                    len(list_filter({toks},
-                       x -> lower(x) IN ({stop_sql}))) AS n_stop
+                       x -> lower(x) IN ({tx.STOP_ALL_SQL}))) AS n_stop
             FROM documents
         ), q AS (
             SELECT doc_id,
-                   ROUND(
-                       (CASE WHEN n_tok >= 20 AND n_tok <= 10000
-                             THEN 0.4 ELSE 0.0 END)
-                     + (CASE WHEN n_tok > 0
-                             AND CAST(n_chars AS DOUBLE)/n_tok >= 3
-                             AND CAST(n_chars AS DOUBLE)/n_tok <= 12
-                            THEN 0.3 ELSE 0.0 END)
-                     + (CASE WHEN n_tok > 0
-                             AND CAST(n_stop AS DOUBLE)/n_tok >= 0.05
-                            THEN 0.3 ELSE 0.0 END), 2) AS q
+                   {tx.QUALITY_SQL} AS q
             FROM scored
         ), e AS (
             SELECT vec_id AS doc_id, label,
@@ -787,26 +777,16 @@ ORACLE["events_heavy_hitters_cms"] = f"""
 def _regression_sql() -> str:
     from automotive_big_data_analysis_spark.functions import text as tx
 
-    stop_sql = ", ".join(f"'{w}'" for w in tx.STOPWORDS_EN + tx.STOPWORDS_ES)
     toks = r"regexp_extract_all(text, '\S+')"
     return rf"""
         WITH scored AS (
             SELECT lang, len({toks}) AS n_tok, length(text) AS n_chars,
                    len(list_filter({toks},
-                       x -> lower(x) IN ({stop_sql}))) AS n_stop
+                       x -> lower(x) IN ({tx.STOP_ALL_SQL}))) AS n_stop
             FROM documents
         ), xy AS (
             SELECT lang, CAST(n_tok AS BIGINT) AS x,
-                   ROUND(
-                       (CASE WHEN n_tok >= 20 AND n_tok <= 10000
-                             THEN 0.4 ELSE 0.0 END)
-                     + (CASE WHEN n_tok > 0
-                             AND CAST(n_chars AS DOUBLE)/n_tok >= 3
-                             AND CAST(n_chars AS DOUBLE)/n_tok <= 12
-                            THEN 0.3 ELSE 0.0 END)
-                     + (CASE WHEN n_tok > 0
-                             AND CAST(n_stop AS DOUBLE)/n_tok >= 0.05
-                            THEN 0.3 ELSE 0.0 END), 2) AS y
+                   {tx.QUALITY_SQL} AS y
             FROM scored
         ), m AS (
             SELECT lang, COUNT(*) AS n_docs,

@@ -152,10 +152,6 @@ _CLEAN_SQL = (
     r" '\s+', ' ', 'g'))"
 )
 
-_STOP_ALL_SQL = ", ".join(
-    f"'{w}'" for w in tx.STOPWORDS_EN + tx.STOPWORDS_ES
-)
-
 _REPORT_SQL = (
     dedup._SHINGLES_CTE
     + dedup._PAIR_SQL_TAIL
@@ -171,20 +167,11 @@ _REPORT_SQL = (
                len(regexp_extract_all(clean_text, '\S+')) AS n_tok,
                length(clean_text) AS n_chars,
                len(list_filter(regexp_extract_all(clean_text, '\S+'),
-                   x -> lower(x) IN ({_STOP_ALL_SQL}))) AS n_stop
+                   x -> lower(x) IN ({tx.STOP_ALL_SQL}))) AS n_stop
         FROM cleaned
     ), quality AS (
         SELECT doc_id, lang, clean_text,
-               ROUND(
-                   (CASE WHEN n_tok >= 20 AND n_tok <= 10000
-                         THEN 0.4 ELSE 0.0 END)
-                 + (CASE WHEN n_tok > 0
-                         AND CAST(n_chars AS DOUBLE)/n_tok >= 3
-                         AND CAST(n_chars AS DOUBLE)/n_tok <= 12
-                        THEN 0.3 ELSE 0.0 END)
-                 + (CASE WHEN n_tok > 0
-                         AND CAST(n_stop AS DOUBLE)/n_tok >= 0.05
-                        THEN 0.3 ELSE 0.0 END), 2) AS quality
+               {tx.QUALITY_SQL} AS quality
         FROM scored
     ), ranked AS (
         SELECT *, ROW_NUMBER() OVER (

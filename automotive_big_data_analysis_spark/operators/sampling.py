@@ -302,7 +302,6 @@ ORACLE: dict[str, str] = {
 def _weighted_sql() -> str:
     from automotive_big_data_analysis_spark.functions import text as tx
 
-    stop_sql = ", ".join(f"'{w}'" for w in tx.STOPWORDS_EN + tx.STOPWORDS_ES)
     toks = r"regexp_extract_all(text, '\S+')"
     return rf"""
         WITH scored AS (
@@ -310,20 +309,11 @@ def _weighted_sql() -> str:
                    len({toks}) AS n_tok,
                    length(text) AS n_chars,
                    len(list_filter({toks},
-                       x -> lower(x) IN ({stop_sql}))) AS n_stop
+                       x -> lower(x) IN ({tx.STOP_ALL_SQL}))) AS n_stop
             FROM documents
         ), q AS (
             SELECT lang, doc_id,
-                   ROUND(
-                       (CASE WHEN n_tok >= 20 AND n_tok <= 10000
-                             THEN 0.4 ELSE 0.0 END)
-                     + (CASE WHEN n_tok > 0
-                             AND CAST(n_chars AS DOUBLE)/n_tok >= 3
-                             AND CAST(n_chars AS DOUBLE)/n_tok <= 12
-                            THEN 0.3 ELSE 0.0 END)
-                     + (CASE WHEN n_tok > 0
-                             AND CAST(n_stop AS DOUBLE)/n_tok >= 0.05
-                            THEN 0.3 ELSE 0.0 END), 2) AS q
+                   {tx.QUALITY_SQL} AS q
             FROM scored
         ), marked AS (
             SELECT lang, q,

@@ -19,7 +19,6 @@ from automotive_big_data_analysis_spark.sources import stored
 
 _STOP_EN_SQL = ", ".join(f"'{w}'" for w in tx.STOPWORDS_EN)
 _STOP_ES_SQL = ", ".join(f"'{w}'" for w in tx.STOPWORDS_ES)
-_STOP_ALL_SQL = ", ".join(f"'{w}'" for w in tx.STOPWORDS_EN + tx.STOPWORDS_ES)
 
 
 def token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -202,17 +201,18 @@ def repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     an earlier one: ``1 − distinct/total``; per-lang output counts docs,
     flags heavy repeaters, and averages the ratio exactly.
 
-    Plan shape: token arrays are spread over the cores once; the ratio
-    is pure per-row array arithmetic with NO explode (nothing ever fans
-    out), and the only other exchange is the |langs|-row rollup."""
+    Plan shape: token arrays are spread over the cores once; the 5-gram
+    window is projected once and the ratio is pure per-row array
+    arithmetic over it with NO explode (nothing ever fans out), and the
+    only other exchange is the |langs|-row rollup."""
     docs = load_table(spark, sf_dir, "documents")
     staged = spread(docs.select("lang", tx.tokens("text").alias("toks")))
-    grams = tx.ngrams("toks", REP_N)
-    n_g = F.size(grams)
-    n_u = F.size(F.array_distinct(grams))
+    grams = staged.select("lang", tx.ngrams("toks", REP_N).alias("grams"))
+    n_g = F.size("grams")
+    n_u = F.size(F.array_distinct("grams"))
     ratio = F.when(n_g > 0, (n_g - n_u) / n_g).otherwise(F.lit(0.0))
     return (
-        staged.select("lang", ratio.alias("rep"))
+        grams.select("lang", ratio.alias("rep"))
         .groupBy("lang")
         .agg(
             F.count("*").alias("n_docs"),
@@ -487,7 +487,7 @@ ORACLE: dict[str, str] = {
                    {_TOKENS} AS toks,
                    len({_TOKENS}) AS n_tok,
                    len(list_filter({_TOKENS},
-                       x -> lower(x) IN ({_STOP_ALL_SQL}))) AS n_stop
+                       x -> lower(x) IN ({tx.STOP_ALL_SQL}))) AS n_stop
             FROM documents
         )
         SELECT doc_id, lang,
@@ -498,15 +498,7 @@ ORACLE: dict[str, str] = {
                ROUND(CASE WHEN n_tok > 0
                           THEN CAST(n_chars AS DOUBLE) / n_tok ELSE 0.0 END, 6)
                    AS mean_token_len,
-               ROUND(
-                   (CASE WHEN n_tok >= 20 AND n_tok <= 10000 THEN 0.4 ELSE 0.0 END)
-                 + (CASE WHEN n_tok > 0
-                          AND CAST(n_chars AS DOUBLE)/n_tok >= 3
-                          AND CAST(n_chars AS DOUBLE)/n_tok <= 12
-                         THEN 0.3 ELSE 0.0 END)
-                 + (CASE WHEN n_tok > 0
-                          AND CAST(n_stop AS DOUBLE)/n_tok >= 0.05
-                         THEN 0.3 ELSE 0.0 END), 2) AS quality
+               {tx.QUALITY_SQL} AS quality
         FROM t
     """,
     "text_word_topk": f"""

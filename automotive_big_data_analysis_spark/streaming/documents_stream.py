@@ -29,6 +29,10 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from automotive_big_data_analysis_spark.functions import text as tx
+from automotive_big_data_analysis_spark.streaming.events_stream import (
+    file_stream,
+    run_to_memory,
+)
 
 DOCUMENT_SCHEMA = T.StructType(
     [
@@ -45,17 +49,9 @@ QUALITY_MIN = 0.4
 
 
 def read_document_stream(spark: SparkSession, path: str) -> DataFrame:
-    """File-source document stream (schema declared — streaming sources
-    never infer). Same single-file/directory handling as the events
-    reader."""
-    import os
-
-    reader = spark.readStream.option("maxFilesPerTrigger", 8)
-    src = path
-    if os.path.isfile(path):
-        src = os.path.dirname(path)
-        reader = reader.option("pathGlobFilter", os.path.basename(path))
-    return reader.schema(DOCUMENT_SCHEMA).parquet(src)
+    """Document stream over a parquet file or directory with the
+    declared :data:`DOCUMENT_SCHEMA` (:func:`file_stream`)."""
+    return file_stream(spark, path, DOCUMENT_SCHEMA)
 
 
 def clean_quality_stream(
@@ -122,25 +118,15 @@ def write_curated_stream(
 
 
 def read_corpus_stream(spark: SparkSession, path: str) -> DataFrame:
-    """Stream the REAL ``documents`` corpus parquet (schema probed
-    batch-side — streaming sources require a declared schema; same
-    single-file/directory handling as the events reader) and synthesize
-    a deterministic event-time column: ``ingest_ts`` = epoch + 1 day +
+    """Stream the REAL ``documents`` corpus parquet (:func:`file_stream`,
+    schema probed batch-side) and synthesize a deterministic event-time
+    column: ``ingest_ts`` = epoch + 1 day +
     doc_id seconds — the arrival order a replay of the corpus
     simulates. The one-day offset keeps every event time strictly above
     the stream's INITIAL watermark (epoch 0): a row landing exactly on
     the watermark is classified late and silently dropped (doc_id 0
     was, before the offset)."""
-    import os
-
-    reader = spark.readStream.option("maxFilesPerTrigger", 8)
-    src = path
-    if os.path.isfile(path):
-        src = os.path.dirname(path)
-        reader = reader.option("pathGlobFilter", os.path.basename(path))
-    physical = spark.read.parquet(path).schema
-    stream = reader.schema(physical).parquet(src)
-    return stream.withColumn(
+    return file_stream(spark, path).withColumn(
         "ingest_ts",
         F.timestamp_micros((F.col("doc_id") + 86_400) * 1_000_000),
     )
@@ -152,7 +138,7 @@ def stream_curated_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     stateless clean + quality gate, then STREAMING exact dedup via
     ``dropDuplicatesWithinWatermark`` keyed on (lang, cleaned-content
     hash) — with per-lang survivor accounting aggregated batch-side
-    over the collected survivors. This hash-gates the streaming
+    over the sink's survivors. This hash-gates the streaming
     stateful-dedup operator itself: the oracle computes the same
     survivors from the parquet table (distinct cleaned texts among
     quality passers per lang), so equality proves the state machine
@@ -165,12 +151,7 @@ def stream_curated_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus dedups globally; production bounds it (state eviction) and
     accepts re-admits beyond the horizon — the trade stated on the
     operator's tin."""
-    import uuid
-
     from automotive_big_data_analysis_spark.functions import exact as ex
-    from automotive_big_data_analysis_spark.streaming.events_stream import (
-        run_to_memory,
-    )
 
     docs = read_corpus_stream(spark, f"{sf_dir}/documents.parquet")
     gated = clean_quality_stream(docs).withColumn(
@@ -189,16 +170,15 @@ def stream_curated_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     slim = deduped.select(
         "lang", "quality", F.length("clean_text").alias("clean_len")
     )
-    name = f"stream_curated_{uuid.uuid4().hex[:8]}"
-    out = run_to_memory(slim, name, output_mode="append")
-    rows = out.groupBy("lang").agg(
-        F.count("*").alias("n_kept"),
-        ex.davg("quality").alias("avg_quality"),
-        F.sum("clean_len").cast("long").alias("total_chars"),
+    return (
+        run_to_memory(slim)
+        .groupBy("lang")
+        .agg(
+            F.count("*").alias("n_kept"),
+            ex.davg("quality").alias("avg_quality"),
+            F.sum("clean_len").cast("long").alias("total_chars"),
+        )
     )
-    result = spark.createDataFrame(rows.collect(), rows.schema)
-    spark.catalog.dropTempView(name)
-    return result
 
 
 def _curated_oracle_sql() -> str:
@@ -208,7 +188,6 @@ def _curated_oracle_sql() -> str:
     from automotive_big_data_analysis_spark.functions import exact as ex
     from automotive_big_data_analysis_spark.operators.pipeline import (
         _CLEAN_SQL,
-        _STOP_ALL_SQL,
     )
 
     return rf"""
@@ -219,20 +198,11 @@ def _curated_oracle_sql() -> str:
                len(regexp_extract_all(clean_text, '\S+')) AS n_tok,
                length(clean_text) AS n_chars,
                len(list_filter(regexp_extract_all(clean_text, '\S+'),
-                   x -> lower(x) IN ({_STOP_ALL_SQL}))) AS n_stop
+                   x -> lower(x) IN ({tx.STOP_ALL_SQL}))) AS n_stop
         FROM cleaned
     ), quality AS (
         SELECT lang, clean_text,
-               ROUND(
-                   (CASE WHEN n_tok >= 20 AND n_tok <= 10000
-                         THEN 0.4 ELSE 0.0 END)
-                 + (CASE WHEN n_tok > 0
-                         AND CAST(n_chars AS DOUBLE)/n_tok >= 3
-                         AND CAST(n_chars AS DOUBLE)/n_tok <= 12
-                        THEN 0.3 ELSE 0.0 END)
-                 + (CASE WHEN n_tok > 0
-                         AND CAST(n_stop AS DOUBLE)/n_tok >= 0.05
-                        THEN 0.3 ELSE 0.0 END), 2) AS quality
+               {tx.QUALITY_SQL} AS quality
         FROM scored
     ), survivors AS (
         SELECT lang, clean_text, MAX(quality) AS q

@@ -15,6 +15,11 @@ tests and demos.
 from __future__ import annotations
 
 import os
+import shutil
+import tempfile
+import uuid
+from collections.abc import Callable, Iterable
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -37,27 +42,31 @@ DEFAULT_WATERMARK = "10 minutes"
 SESSION_GAP = "30 minutes"
 
 
-def read_event_stream(spark: SparkSession, path: str) -> DataFrame:
-    """File-source event stream (declared schema — streaming sources never
-    infer). ``maxFilesPerTrigger`` keeps micro-batches bounded so a huge
-    backlog doesn't become one giant batch.
-
-    Handles both layouts the corpus uses: a parquet *directory* (normal
-    streaming source) and a single parquet *file* (FileStreamSource wants
-    a directory, so stream the parent with a ``pathGlobFilter``). A naive
-    ``ts`` (the corpus ``events`` layout) gets the batch catalog's
-    normalization (``ntz_to_instant``), so the stream's ``ts`` equals
-    ``load_table``'s."""
-    from automotive_big_data_analysis_spark.catalog import ntz_to_instant
-
+def file_stream(
+    spark: SparkSession, path: str, schema: T.StructType | None = None
+) -> DataFrame:
+    """Parquet file-source stream over ``path``, a directory or a single
+    file (FileStreamSource wants a directory, so a single file streams
+    its parent through a ``pathGlobFilter``). Streaming sources never
+    infer: ``schema`` declares it, else the physical schema is probed
+    batch-side. ``maxFilesPerTrigger`` keeps micro-batches bounded so a
+    huge backlog doesn't become one giant batch."""
     reader = spark.readStream.option("maxFilesPerTrigger", 8)
     src = path
     if os.path.isfile(path):
         src = os.path.dirname(path)
         reader = reader.option("pathGlobFilter", os.path.basename(path))
-    # probe the physical schema batch-side: streaming needs it declared
-    physical = spark.read.parquet(path).schema
-    stream = ntz_to_instant(reader.schema(physical).parquet(src), "ts")
+    return reader.schema(schema or spark.read.parquet(path).schema).parquet(src)
+
+
+def read_event_stream(spark: SparkSession, path: str) -> DataFrame:
+    """Event stream over the corpus ``events`` parquet layout
+    (:func:`file_stream`). A naive ``ts`` gets the batch catalog's
+    normalization (``ntz_to_instant``), so the stream's ``ts`` equals
+    ``load_table``'s."""
+    from automotive_big_data_analysis_spark.catalog import ntz_to_instant
+
+    stream = ntz_to_instant(file_stream(spark, path), "ts")
     return stream.select([f.name for f in EVENT_SCHEMA.fields])
 
 
@@ -368,52 +377,62 @@ def conversion_stream(
 # dirs or shuffle local dirs (guide §6). A real deployment with a
 # durable sink sets a durable checkpointLocation on its own query;
 # this root only serves the bounded-replay harness gates. Env override
-# for hosts without /dev/shm semantics.
+# for hosts without /dev/shm semantics; None → the Python temp dir.
 _STREAM_SCRATCH_ROOT = os.environ.get(
     "SPARK_GRAFT_STREAM_SCRATCH",
     "/dev/shm" if os.path.isdir("/dev/shm") else None,
 )
 
 
-def _scratch_checkpoint() -> str | None:
-    """A fresh checkpoint dir on the fast scratch root (None → let Spark
-    pick its default temp checkpoint). Caller removes it."""
-    if not _STREAM_SCRATCH_ROOT:
-        return None
-    import tempfile
-
-    return tempfile.mkdtemp(
-        prefix="abda_stream_ckpt_", dir=_STREAM_SCRATCH_ROOT
-    )
-
-
 def run_to_memory(
     stream_df: DataFrame,
-    query_name: str,
     output_mode: str = "append",
+    then: Iterable[Callable[[], None]] = (),
 ) -> DataFrame:
-    """Drive a bounded stream to completion into an in-memory table and
-    return the batch DataFrame of results (test/demo harness). Stateful
-    operators keep one state store per shuffle partition at the session
-    width. The session conf is neither read nor written, so queries
-    planned concurrently in the same session are unaffected."""
-    import shutil
+    """Drive a bounded stream to completion into an in-memory sink and
+    return the sink's rows as a batch DataFrame — the one bounded-replay
+    path of the package (gates, tests, demos).
 
+    Each callable in ``then`` runs after a drain and is followed by one
+    more drain (heartbeat files that move an event-time watermark). The
+    returned frame reads the sink itself, so its rows stay in the JVM
+    until the frame is dropped and no value passes through Python. The
+    sink's view and the scratch checkpoint are removed before return,
+    also when a batch fails. Stateful operators keep one state store per
+    shuffle partition at the session width; the session conf is neither
+    read nor written."""
     spark = stream_df.sparkSession
-    ckpt = _scratch_checkpoint()
+    name = f"run_to_memory_{uuid.uuid4().hex}"
+    ckpt = tempfile.mkdtemp(prefix="abda_stream_ckpt_", dir=_STREAM_SCRATCH_ROOT)
     try:
-        writer = stream_df.writeStream.outputMode(output_mode)
-        if ckpt is not None:
-            writer = writer.option("checkpointLocation", ckpt)
-        q = writer.format("memory").queryName(query_name).start()
+        q = (
+            stream_df.writeStream.outputMode(output_mode)
+            .option("checkpointLocation", ckpt)
+            .format("memory")
+            .queryName(name)
+            .start()
+        )
         try:
             q.processAllAvailable()
+            for step in then:
+                step()
+                q.processAllAvailable()
         finally:
             q.stop()
+        return spark.table(name)
     finally:
-        if ckpt is not None:
-            shutil.rmtree(ckpt, ignore_errors=True)
-    return spark.sql(f"SELECT * FROM {query_name}")
+        spark.catalog.dropTempView(name)
+        shutil.rmtree(ckpt, ignore_errors=True)
+
+
+def _landing_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The corpus ``events`` as the JSONL landing-directory stream the
+    gates replay (the interchange mirror, written once per snapshot)."""
+    from automotive_big_data_analysis_spark.sources.text_formats import (
+        _ensure_written,
+    )
+
+    return read_event_stream_jsonl(spark, _ensure_written(spark, sf_dir, "jsonl"))
 
 
 def stream_hourly_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -431,30 +450,14 @@ def stream_hourly_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     — the classic bounded-stream pitfall. In production this query runs
     ``update``/``append`` into a keyed sink with windows finalizing as
     the watermark passes; the memory sink here is the test-scale
-    harness (results collect to the driver), not the production sink.
+    harness, not the production sink.
 
     Determinism: micro-batch boundaries (``maxFilesPerTrigger``) change
     WHEN state updates, never the final aggregate values — counts and
     DECIMAL-exact sums are order- and batching-independent."""
-    import uuid
-
-    from automotive_big_data_analysis_spark.sources.text_formats import (
-        _ensure_written,
+    return run_to_memory(
+        hourly_rollup_stream(_landing_stream(spark, sf_dir)), "complete"
     )
-
-    path = _ensure_written(spark, sf_dir, "jsonl")
-    rolled = hourly_rollup_stream(read_event_stream_jsonl(spark, path))
-    name = f"stream_rollup_{uuid.uuid4().hex[:8]}"
-    out = run_to_memory(rolled, name, output_mode="complete")
-    # detach the (dimension-sized: hours × types) result from the
-    # memory-sink view and DROP the view — otherwise every invocation
-    # leaks one retained complete-mode result table in driver memory
-    rows = out.select(
-        "window_start", "event_type", "n_events", "total_value"
-    )
-    result = spark.createDataFrame(rows.collect(), rows.schema)
-    spark.catalog.dropTempView(name)
-    return result
 
 
 def stream_user_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -474,20 +477,7 @@ def stream_user_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     would be withheld forever under ``append`` (the existing
     batch/stream agreement test shows exactly that). Production runs
     ``append`` into a keyed sink; the memory sink is the harness."""
-    import uuid
-
-    from automotive_big_data_analysis_spark.sources.text_formats import (
-        _ensure_written,
-    )
-
-    path = _ensure_written(spark, sf_dir, "jsonl")
-    sess = session_stream(read_event_stream_jsonl(spark, path))
-    name = f"stream_sessions_{uuid.uuid4().hex[:8]}"
-    out = run_to_memory(sess, name, output_mode="complete")
-    rows = out.select("user_id", "session_start", "n_events", "session_value")
-    result = spark.createDataFrame(rows.collect(), rows.schema)
-    spark.catalog.dropTempView(name)
-    return result
+    return run_to_memory(session_stream(_landing_stream(spark, sf_dir)), "complete")
 
 
 def stream_conversions(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -512,30 +502,22 @@ def stream_conversions(spark: SparkSession, sf_dir: str) -> DataFrame:
     Inner-join matches emit immediately, so ``append`` mode has no
     bounded-replay withholding problem (unlike the aggregation gates).
     """
-    import uuid
-
-    from automotive_big_data_analysis_spark.sources.text_formats import (
-        _ensure_written,
-    )
-
-    path = _ensure_written(spark, sf_dir, "jsonl")
     joined = conversion_stream(
-        read_event_stream_jsonl(spark, path), watermark="90 days"
+        _landing_stream(spark, sf_dir), watermark="90 days"
     ).select("user_id", "click_id", "purchase_id", "value")
     # ^ stateless projection after the stateful join: the memory sink
     # holds only the columns the accounting reads (the two timestamps
     # exist to express the join condition, not the result).
-    name = f"stream_conv_{uuid.uuid4().hex[:8]}"
-    out = run_to_memory(joined, name, output_mode="append")
-    rows = out.groupBy("user_id").agg(
-        F.count("*").alias("n_pairs"),
-        F.count_distinct("click_id").alias("n_clicks_converted"),
-        F.count_distinct("purchase_id").alias("n_purchases_attributed"),
-        ex.dsum("value").alias("attributed_value"),
+    return (
+        run_to_memory(joined)
+        .groupBy("user_id")
+        .agg(
+            F.count("*").alias("n_pairs"),
+            F.count_distinct("click_id").alias("n_clicks_converted"),
+            F.count_distinct("purchase_id").alias("n_purchases_attributed"),
+            ex.dsum("value").alias("attributed_value"),
+        )
     )
-    result = spark.createDataFrame(rows.collect(), rows.schema)
-    spark.catalog.dropTempView(name)
-    return result
 
 
 def stream_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -554,26 +536,17 @@ def stream_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     struct-max picks the final snapshot; the state itself is an
     order-free integer sum, so micro-batch boundaries change WHICH
     intermediate snapshots exist, never the final one."""
-    import uuid
-
-    from automotive_big_data_analysis_spark.sources.text_formats import (
-        _ensure_written,
+    totals = user_totals_stream(_landing_stream(spark, sf_dir))
+    return (
+        run_to_memory(totals, "update")
+        .groupBy("user_id")
+        .agg(F.max(F.struct("n_events", "total_value")).alias("s"))
+        .select(
+            "user_id",
+            F.col("s.n_events").alias("n_events"),
+            F.col("s.total_value").alias("total_value"),
+        )
     )
-
-    path = _ensure_written(spark, sf_dir, "jsonl")
-    totals = user_totals_stream(read_event_stream_jsonl(spark, path))
-    name = f"stream_totals_{uuid.uuid4().hex[:8]}"
-    out = run_to_memory(totals, name, output_mode="update")
-    rows = out.groupBy("user_id").agg(
-        F.max(F.struct("n_events", "total_value")).alias("s")
-    ).select(
-        "user_id",
-        F.col("s.n_events").alias("n_events"),
-        F.col("s.total_value").alias("total_value"),
-    )
-    result = spark.createDataFrame(rows.collect(), rows.schema)
-    spark.catalog.dropTempView(name)
-    return result
 
 
 def stream_user_totals_evict(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -602,10 +575,6 @@ def stream_user_totals_evict(spark: SparkSession, sf_dir: str) -> DataFrame:
     hard-linked into a gate-private directory so the sentinels never
     pollute the shared JSONL mirror the other five gates read."""
     import json as _json
-    import os
-    import shutil
-    import tempfile
-    import uuid
 
     from automotive_big_data_analysis_spark.catalog import load_table
     from automotive_big_data_analysis_spark.sources.text_formats import (
@@ -644,51 +613,30 @@ def stream_user_totals_evict(spark: SparkSession, sf_dir: str) -> DataFrame:
                 fh.write(_json.dumps(row) + "\n")
             os.rename(tmp, os.path.join(landing, f"zz_sentinel{seq}.json"))
 
-        totals = user_totals_evict_stream(
-            read_event_stream_jsonl(spark, landing)
+        # the first sentinel advances the watermark past every timeout,
+        # the second triggers the batch where the timeouts fire
+        out = run_to_memory(
+            user_totals_evict_stream(read_event_stream_jsonl(spark, landing)),
+            then=(partial(_sentinel, 1), partial(_sentinel, 2)),
         )
-        name = f"stream_evict_{uuid.uuid4().hex[:8]}"
-        ckpt = _scratch_checkpoint()
-        try:
-            writer = totals.writeStream.outputMode("append")
-            if ckpt is not None:
-                writer = writer.option("checkpointLocation", ckpt)
-            q = writer.format("memory").queryName(name).start()
-            try:
-                q.processAllAvailable()  # drain the corpus
-                _sentinel(1)  # advance the watermark past every timeout
-                q.processAllAvailable()
-                _sentinel(2)  # trigger the batch where timeouts fire
-                q.processAllAvailable()
-            finally:
-                q.stop()
-        finally:
-            if ckpt is not None:
-                shutil.rmtree(ckpt, ignore_errors=True)
-        out = spark.sql(f"SELECT * FROM {name}")
-        rows = (
-            out.where(F.col("user_id") >= 0)
-            .groupBy("user_id")
-            .agg(
-                F.sum("n_events").alias("n_events"),
-                F.sum("micro").alias("ms"),
-            )
-            .select(
-                "user_id",
-                "n_events",
-                (
-                    F.floor(F.col("ms") / F.lit(10000.0) + F.lit(0.5)).cast(
-                        "long"
-                    )
-                    / F.lit(100.0)
-                ).alias("total_value"),
-            )
-        )
-        result = spark.createDataFrame(rows.collect(), rows.schema)
-        spark.catalog.dropTempView(name)
-        return result
     finally:
         shutil.rmtree(landing, ignore_errors=True)
+    return (
+        out.where(F.col("user_id") >= 0)
+        .groupBy("user_id")
+        .agg(
+            F.sum("n_events").alias("n_events"),
+            F.sum("micro").alias("ms"),
+        )
+        .select(
+            "user_id",
+            "n_events",
+            (
+                F.floor(F.col("ms") / F.lit(10000.0) + F.lit(0.5)).cast("long")
+                / F.lit(100.0)
+            ).alias("total_value"),
+        )
+    )
 
 
 # Per-type enrichment weights for the stream-static gate: exactly
@@ -734,31 +682,24 @@ def stream_enriched_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     CASE of dyadic literal weights), so DuckDB replays it exactly;
     ``append`` mode has no withholding problem (stateless projection —
     rows emit in the micro-batch that reads them)."""
-    import uuid
-
     from automotive_big_data_analysis_spark.catalog import load_table
-    from automotive_big_data_analysis_spark.sources.text_formats import (
-        _ensure_written,
-    )
 
-    path = _ensure_written(spark, sf_dir, "jsonl")
     dim = (
         load_table(spark, sf_dir, "events")
         .select("event_type")
         .distinct()
         .select("event_type", _enrich_weight_case().alias("weight"))
     )
-    enriched = enriched_stream(read_event_stream_jsonl(spark, path), dim)
-    name = f"stream_enrich_{uuid.uuid4().hex[:8]}"
-    out = run_to_memory(enriched, name, output_mode="append")
-    rows = out.groupBy("event_type").agg(
-        F.count("*").alias("n_events"),
-        F.count_distinct("user_id").alias("n_users"),
-        ex.dsum("weighted_value", 6).alias("total_weighted"),
+    enriched = enriched_stream(_landing_stream(spark, sf_dir), dim)
+    return (
+        run_to_memory(enriched)
+        .groupBy("event_type")
+        .agg(
+            F.count("*").alias("n_events"),
+            F.count_distinct("user_id").alias("n_users"),
+            ex.dsum("weighted_value", 6).alias("total_weighted"),
+        )
     )
-    result = spark.createDataFrame(rows.collect(), rows.schema)
-    spark.catalog.dropTempView(name)
-    return result
 
 
 def _session_oracle_sql() -> str:

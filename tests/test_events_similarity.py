@@ -650,22 +650,43 @@ def test_knn_operating_point_selects_frontier_knee(spark):
     )
 
 
-def test_ivf_params_match_duckdb_derivation(spark):
-    """The Spark-side integer derivation (IvfParams) and the oracle's
-    scalar-subquery derivation (_PARAMS_CTE) must agree on every
-    component for a spread of corpus sizes — a drifted formula would
-    silently desync the two engines' index structures."""
+def test_ivf_params_match_duckdb_derivation():
+    """The Spark-side integer derivation (IvfParams) and the oracle's SQL,
+    run as committed over an ``n``-row corpus, must agree for a spread of
+    corpus sizes — a drifted formula would silently desync the two
+    engines' index structures. ``_PARAMS_CTE`` counts the rows and
+    derives (k, nprobe, maxprobe); the GC audit sizes its live and
+    stale-params generations from ``k`` and from ``_gc_k_old``. The test
+    corpora all hold 500 embeddings, so the oracle gates alone check one
+    ``k``; 16/17 straddle the ``IVF_K_MIN`` clamp of ``k``."""
     import duckdb
 
-    for n in (1, 7, 20, 100, 499, 500, 2000, 10_000, 1_000_000):
-        p = sim.IvfParams(n)
-        sql = sim._PARAMS_CTE.replace(
-            "FROM (SELECT COUNT(*) AS n FROM e)", f"FROM (SELECT {n} AS n)"
+    con = duckdb.connect()
+    for n in (1, 7, 16, 17, 20, 100, 499, 500, 2000, 10_000, 100_000, 1_000_000):
+        con.execute(
+            "CREATE OR REPLACE VIEW embeddings AS"
+            f" SELECT range AS vec_id FROM range({n})"
         )
-        row = duckdb.sql(f"WITH x AS (SELECT 1){sql} SELECT * FROM pk").fetchone()
-        assert row == (n, p.k, p.nprobe, p.maxprobe), (n, row)
+        p = sim.IvfParams(n)
+        pk = con.execute(
+            f"WITH e AS (SELECT vec_id FROM embeddings){sim._PARAMS_CTE}"
+            " SELECT n, k, nprobe, maxprobe FROM pk"
+        ).fetchone()
+        assert pk == (n, p.k, p.nprobe, p.maxprobe), (n, pk)
         assert p.maxprobe >= p.nprobe >= 1
         assert max(p.levels) == p.maxprobe and p.nprobe in p.levels
+        gens = dict(
+            con.execute(
+                "SELECT generation, n_rows"
+                f" FROM ({sim.ORACLE['knn_index_gc_audit']})"
+            ).fetchall()
+        )
+        k_old = sim._gc_k_old(n)
+        assert gens == {
+            "live": p.k + (p.k + 1) // 2,
+            "stale_corpus": p.k + (p.k + 1) // 2,
+            "stale_params": k_old + (k_old + 1) // 2,
+        }, (n, gens)
 
 
 def test_seed_rows_survive_sparse_id_sets(spark):

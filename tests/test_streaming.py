@@ -41,9 +41,7 @@ def stream_dir(spark, tmp_path_factory):
 
 def test_streaming_hourly_matches_batch(spark, stream_dir):
     stream = st.read_event_stream(spark, f"{stream_dir}/events.parquet")
-    got = st.run_to_memory(
-        st.hourly_rollup_stream(stream), "hourly_out", output_mode="append"
-    )
+    got = st.run_to_memory(st.hourly_rollup_stream(stream))
     batch = batch_ev.hourly_rollup(spark, stream_dir)
     got_set = {
         (r.window_start, r.event_type, r.n_events, r.total_value)
@@ -61,9 +59,7 @@ def test_streaming_hourly_matches_batch(spark, stream_dir):
 
 def test_streaming_sessions_match_batch(spark, stream_dir):
     stream = st.read_event_stream(spark, f"{stream_dir}/events.parquet")
-    got = st.run_to_memory(
-        st.session_stream(stream), "session_out", output_mode="append"
-    )
+    got = st.run_to_memory(st.session_stream(stream))
     batch = batch_ev.sessionize(spark, stream_dir)
     got_set = {
         (r.user_id, r.session_start, r.n_events) for r in got.collect()
@@ -96,7 +92,7 @@ def test_stream_over_naive_parquet_matches_load_table(spark, tmp_path):
     }
     pq.write_table(pa.table(cols), tmp_path / "events.parquet")
     stream = st.read_event_stream(spark, str(tmp_path / "events.parquet"))
-    got = st.run_to_memory(stream, "naive_stream_out")
+    got = st.run_to_memory(stream)
     batch = load_table(spark, str(tmp_path), "events")
     assert got.schema["ts"].dataType == batch.schema["ts"].dataType
 
@@ -104,7 +100,6 @@ def test_stream_over_naive_parquet_matches_load_table(spark, tmp_path):
         return sorted(r[0] for r in df.select(F.unix_micros("ts")).collect())
 
     assert epochs(got) == epochs(batch) == us
-    spark.catalog.dropTempView("naive_stream_out")
 
     nanos = tmp_path / "nanos"
     nanos.mkdir()
@@ -133,9 +128,7 @@ def test_streaming_anomalies_match_batch(spark, tmp_path_factory):
     ).parquet(f"{path}/events.parquet")
     moments = an.hourly_moments(spark, path)
     stream = st.read_event_stream(spark, f"{path}/events.parquet")
-    got = st.run_to_memory(
-        st.anomaly_stream(stream, moments), "anom_out", output_mode="append"
-    )
+    got = st.run_to_memory(st.anomaly_stream(stream, moments))
     got_set = {(r.event_type, r.hour, r.n, r.z) for r in got.collect()}
     batch_set = {
         (r.event_type, r.hour, r.n, r.z)
@@ -153,9 +146,7 @@ def test_stateful_user_totals_match_batch(spark, stream_dir):
     from pyspark.sql import functions as F
 
     stream = st.read_event_stream(spark, f"{stream_dir}/events.parquet")
-    got = st.run_to_memory(
-        st.user_totals_stream(stream), "user_totals_out", output_mode="update"
-    )
+    got = st.run_to_memory(st.user_totals_stream(stream), "update")
     final = {}
     for r in got.collect():  # later snapshots have strictly larger n_events
         if r.user_id not in final or r.n_events > final[r.user_id][0]:
@@ -186,6 +177,7 @@ def test_stateful_eviction_finalizes_and_reincarnates(spark, tmp_path_factory):
     gate query relies on."""
     import json
     import os
+    from functools import partial
 
     landing = str(tmp_path_factory.mktemp("evict_landing"))
     epoch = int(T0.timestamp())
@@ -210,44 +202,22 @@ def test_stateful_eviction_finalizes_and_reincarnates(spark, tmp_path_factory):
     DAY = 24 * 3600
     # file A: user 1 at T0; user 2 at T0 and T0+1h
     write("a.json", [(1, 0, 1, 1.5), (2, 0, 2, 0.25), (3, 3600, 2, 0.5)])
-    totals = st.user_totals_evict_stream(
-        st.read_event_stream_jsonl(spark, landing)
+    # heartbeats: the first advances max event time, the second's batch
+    # runs with the advanced watermark -> timeouts FIRE (the watermark
+    # used by a batch comes from the PRIOR batch); then user 1 returns
+    # 20 days in as a NEW state incarnation and two more heartbeats
+    # evict it again
+    got = st.run_to_memory(
+        st.user_totals_evict_stream(st.read_event_stream_jsonl(spark, landing)),
+        then=[
+            partial(write, "b1.json", [(90, 10 * DAY, -1, 0.0)]),
+            partial(write, "b2.json", [(91, 10 * DAY + 3600, -1, 0.0)]),
+            partial(write, "c.json", [(4, 20 * DAY, 1, 2.25)]),
+            partial(write, "d1.json", [(92, 40 * DAY, -1, 0.0)]),
+            partial(write, "d2.json", [(93, 40 * DAY + 3600, -1, 0.0)]),
+        ],
     )
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        q = (
-            totals.writeStream.outputMode("append")
-            .format("memory")
-            .queryName("evict_sem")
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-            # heartbeats: first advances max event time, second's batch
-            # runs with the advanced watermark -> timeouts FIRE (the
-            # watermark used by a batch comes from the PRIOR batch)
-            write("b1.json", [(90, 10 * DAY, -1, 0.0)])
-            q.processAllAvailable()
-            write("b2.json", [(91, 10 * DAY + 3600, -1, 0.0)])
-            q.processAllAvailable()
-            # user 1 returns 20 days in: a NEW state incarnation
-            write("c.json", [(4, 20 * DAY, 1, 2.25)])
-            q.processAllAvailable()
-            write("d1.json", [(92, 40 * DAY, -1, 0.0)])
-            q.processAllAvailable()
-            write("d2.json", [(93, 40 * DAY + 3600, -1, 0.0)])
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        rows = [
-            r
-            for r in spark.sql("SELECT * FROM evict_sem").collect()
-            if r.user_id >= 0
-        ]
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-        spark.catalog.dropTempView("evict_sem")
+    rows = got.where(F.col("user_id") >= 0).collect()
     by_user = {}
     for r in rows:
         by_user.setdefault(r.user_id, []).append((r.n_events, r.micro))
@@ -264,9 +234,7 @@ def test_stream_static_join_matches_batch(spark, stream_dir):
         [("click", 2.0), ("view", 0.5)], "event_type string, weight double"
     )
     stream = st.read_event_stream(spark, f"{stream_dir}/events.parquet")
-    got = st.run_to_memory(
-        st.enriched_stream(stream, dim), "enriched_out", output_mode="append"
-    )
+    got = st.run_to_memory(st.enriched_stream(stream, dim))
     rows = got.collect()
     assert len(rows) == 36  # every event enriched, none dropped
     for r in rows:
@@ -322,9 +290,7 @@ def test_stream_stream_join_matches_batch(spark, tmp_path_factory):
     df.repartition(3).write.mode("overwrite").parquet(f"{path}/events.parquet")
 
     stream = st.read_event_stream(spark, f"{path}/events.parquet")
-    got = st.run_to_memory(
-        st.conversion_stream(stream), "conv_out", output_mode="append"
-    )
+    got = st.run_to_memory(st.conversion_stream(stream))
     got_pairs = {(r.click_id, r.purchase_id) for r in got.collect()}
     assert got_pairs == {(1, 2)}
 
@@ -384,9 +350,7 @@ def test_streaming_curation_dedups_and_gates(spark, doc_stream_dir):
     cleaning strips the markup before hashing — survivor counts equal the
     batch pipeline's distinct-clean-text count among quality passers."""
     stream = ds.read_document_stream(spark, f"{doc_stream_dir}/documents.parquet")
-    got = st.run_to_memory(
-        ds.curated_stream(stream), "curated_out", output_mode="append"
-    )
+    got = st.run_to_memory(ds.curated_stream(stream))
     kept = got.collect()
     hashes = [r.content_hash for r in kept]
     assert len(hashes) == len(set(hashes))  # no duplicate content survived
@@ -415,9 +379,7 @@ def test_streaming_curation_counters_match_batch(spark, doc_stream_dir):
     aggregation over the curated survivors (append mode emits only
     watermark-closed windows; every emitted row must match batch)."""
     stream = ds.read_document_stream(spark, f"{doc_stream_dir}/documents.parquet")
-    got = st.run_to_memory(
-        ds.curation_counters_stream(stream), "cur_count_out", output_mode="append"
-    )
+    got = st.run_to_memory(ds.curation_counters_stream(stream))
     got_set = {(r.window_start, r.lang, r.n_kept) for r in got.collect()}
     # survivors of hour 0: doc 0 (en); hour 1: docs 3 (de) — doc 4 deduped
     assert (T0, "en", 1) in got_set
@@ -466,9 +428,7 @@ def test_streaming_jsonl_ingest_matches_batch(spark, stream_dir):
 
     path = tf._ensure_written(spark, stream_dir, "jsonl")
     stream = st.read_event_stream_jsonl(spark, path)
-    got = st.run_to_memory(
-        st.hourly_rollup_stream(stream), "jsonl_hourly_out", output_mode="append"
-    )
+    got = st.run_to_memory(st.hourly_rollup_stream(stream))
     batch = batch_ev.hourly_rollup(spark, stream_dir)
     got_set = {
         (r.window_start, r.event_type, r.n_events, r.total_value)
@@ -501,35 +461,111 @@ def test_stream_hourly_rollup_driver_gate_matches_batch(spark):
     assert got == want
 
 
-def test_stream_scratch_checkpoint_used_and_cleaned(spark):
-    """The bounded-replay gates checkpoint on the fast scratch root
-    (round-13 optimization: /tmp is disk-backed here, so the per-batch
-    offset-WAL/commit/state writes paid disk fsync) and must remove
-    their checkpoint directory when the query finishes — a leaked dir
-    per invocation would accumulate in tmpfs forever."""
+def _replay_leftovers(spark) -> tuple[set[str], set[str], list]:
+    """What a bounded replay could leave behind: checkpoint dirs on the
+    scratch root, temp views, active streaming queries."""
     import os
+    import tempfile
 
-    from automotive_big_data_analysis_spark.streaming import (
-        events_stream as es,
+    root = st._STREAM_SCRATCH_ROOT or tempfile.gettempdir()
+    ckpts = {d for d in os.listdir(root) if d.startswith("abda_stream_ckpt_")}
+    views = {t.name for t in spark.catalog.listTables() if t.isTemporary}
+    return ckpts, views, spark.streams.active
+
+
+def test_stream_scratch_checkpoint_used_and_cleaned(spark):
+    """Every registered stream gate checkpoints on the fast scratch root
+    (on a disk-backed /tmp every batch's offset-WAL, commit and state
+    writes pay a disk fsync) and leaves nothing behind: no checkpoint
+    dir (a leaked dir per invocation would accumulate in tmpfs forever),
+    no sink view, no running query."""
+    from tests.conftest import SF_SMOKE
+
+    gates = {**st.QUERIES, **ds.QUERIES}
+    assert len(gates) == 7
+    before = _replay_leftovers(spark)
+    assert before[2] == []
+    for name, gate in gates.items():
+        assert gate(spark, SF_SMOKE).count() > 0, name
+        assert _replay_leftovers(spark) == before, name
+
+
+def test_run_to_memory_cleans_up_after_a_failed_batch(spark, stream_dir):
+    """A batch that raises propagates out of ``run_to_memory`` and still
+    leaves no checkpoint, no sink view and no running query behind."""
+    from pyspark.errors import StreamingQueryException
+
+    before = _replay_leftovers(spark)
+    stream = st.read_event_stream(spark, f"{stream_dir}/events.parquet")
+    failing = stream.select(
+        F.coalesce(F.raise_error(F.lit("planted batch failure")), "value")
     )
+    with pytest.raises(StreamingQueryException, match="planted batch failure"):
+        st.run_to_memory(failing)
+    assert _replay_leftovers(spark) == before
 
-    root = es._STREAM_SCRATCH_ROOT
-    if not root:
-        import pytest
 
-        pytest.skip("no scratch root on this host")
+def test_stream_gates_keep_instants_in_a_repeated_dst_hour(spark, tmp_path):
+    """The window and session gates return each instant unchanged when
+    the driver process runs in a zone with a repeated hour: on
+    2024-11-03 America/New_York repeats 01:00-02:00, i.e. 05:00-07:00
+    UTC. Rows that go through Python as naive local datetimes come back
+    from the 06:00Z hour one hour early (``time.mktime`` picks the first
+    occurrence); rows kept in the JVM do not move."""
+    import os
+    import time
+    from datetime import timezone
 
-    def leftovers() -> set[str]:
-        return {
-            d
-            for d in os.listdir(root)
-            if d.startswith("abda_stream_ckpt_")
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    base = datetime(2024, 11, 3, 5, 0, tzinfo=timezone.utc)
+    # user 1: 05:10-06:10Z, one session; user 2 starts inside 06:00Z
+    planted = [(1, 10), (1, 30), (1, 50), (1, 70), (2, 90), (2, 110)]
+    us = [
+        int((base + timedelta(minutes=m)).timestamp()) * 1_000_000
+        for _, m in planted
+    ]
+    pq.write_table(
+        pa.table(
+            {
+                "event_id": pa.array(range(1, 7), pa.int64()),
+                "ts": pa.array(us, pa.timestamp("us")),
+                "user_id": pa.array([u for u, _ in planted], pa.int64()),
+                "event_type": ["view"] * 6,
+                "value": [1.0] * 6,
+                "props": ["{}"] * 6,
+            }
+        ),
+        tmp_path / "events.parquet",
+    )
+    hour = 3_600_000_000
+    prev_tz = os.environ.get("TZ")
+    os.environ["TZ"] = "America/New_York"
+    time.tzset()
+    try:
+        rollup = st.stream_hourly_rollup(spark, str(tmp_path))
+        sessions = st.stream_user_sessions(spark, str(tmp_path))
+        got_rollup = {
+            (r.w, r.n_events)
+            for r in rollup.select(
+                F.unix_micros("window_start").alias("w"), "n_events"
+            ).collect()
         }
-
-    before = leftovers()
-    es.stream_hourly_rollup(spark, "/root/testdata/sf0.001").collect()
-    es.stream_user_totals_evict(spark, "/root/testdata/sf0.001").collect()
-    assert leftovers() == before  # every gate cleaned its checkpoint
+        got_sessions = {
+            (r.user_id, r.s, r.n_events)
+            for r in sessions.select(
+                "user_id", F.unix_micros("session_start").alias("s"), "n_events"
+            ).collect()
+        }
+    finally:
+        if prev_tz is None:
+            os.environ.pop("TZ", None)
+        else:
+            os.environ["TZ"] = prev_tz
+        time.tzset()
+    assert got_rollup == {(us[0] - us[0] % hour, 3), (us[3] - us[3] % hour, 3)}
+    assert got_sessions == {(1, us[0], 4), (2, us[4], 2)}
 
 
 def test_stream_user_sessions_driver_gate_matches_batch(spark):
