@@ -223,11 +223,8 @@ def spread(df: DataFrame) -> DataFrame:
     # branch): maxPartitionBytes packing can coalesce many small files
     # into few splits, which is exactly the small-file CPU-heavy case
     # this helper exists for.
-    try:
-        if len(df.inputFiles()) >= n and df.rdd.getNumPartitions() >= n:
-            return df
-    except Exception:
-        pass
+    if len(df.inputFiles()) >= n and df.rdd.getNumPartitions() >= n:
+        return df
     return df.repartition(n)
 
 

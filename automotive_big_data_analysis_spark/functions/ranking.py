@@ -140,23 +140,6 @@ def _bucket_col(sv: str, bounds: list[float]) -> Column:
     return F.size(F.filter(arr, lambda b: b <= F.col(sv).cast("double")))
 
 
-def _offsets_literal(
-    withb: DataFrame, bk: str, fan_out: int
-) -> tuple[Column, int]:
-    """Per-bucket cumulative offsets, computed from a collected ≤fan-out
-    row aggregate and inlined as ONE literal array indexed by bucket id.
-    Returns (offset column, total rows)."""
-    counts = {
-        r[bk]: r["_c"]
-        for r in withb.groupBy(bk).agg(F.count("*").alias("_c")).collect()
-    }
-    offs, acc = [], 0
-    for b in range(fan_out):
-        offs.append(acc)
-        acc += counts.get(b, 0)
-    return F.element_at(F.lit(offs), F.col(bk) + 1), acc
-
-
 def _offsets_literal_multi(
     withb: DataFrame, bks: list[str], fan_out: int
 ) -> dict[str, tuple[Column, int]]:
@@ -167,8 +150,8 @@ def _offsets_literal_multi(
     formulation paid M job round-trips (plus M AQE materializations) for
     the same information — measured as the dominant cost of the RFM
     segmentation, whose count passes each touch only a dimension-sized
-    staged frame. Offsets per metric are inlined as literal arrays
-    exactly as :func:`_offsets_literal` does."""
+    staged frame. Each metric's cumulative offsets are inlined as ONE
+    literal array indexed by bucket id."""
     pairs = F.explode(
         F.array(
             *[

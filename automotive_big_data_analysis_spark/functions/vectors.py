@@ -13,8 +13,10 @@ the oracle SQL — the two engines run the exact same projection.
 from __future__ import annotations
 
 import numpy as np
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from automotive_big_data_analysis_spark.functions import exact as ex
 
 LSH_SEED = 7
 N_PLANES = 8
@@ -91,7 +93,7 @@ def dot(a: Column, b: Column) -> Column:
     )
 
 
-def dot_unrolled(a: Column, b: Column, dim: int = DIM) -> Column:
+def dot_unrolled(a: Column, b: Column) -> Column:
     """Σ aᵢ·bᵢ as an unrolled left-to-right addition chain of
     ``element_at`` products. Unlike ``aggregate``/``zip_with`` lambdas
     (interpreted per element), the unrolled tree is whole-stage-codegen'd —
@@ -99,7 +101,7 @@ def dot_unrolled(a: Column, b: Column, dim: int = DIM) -> Column:
     identical to the fold and to DuckDB's ``list_dot_product``, so results
     are bit-equal."""
     terms = [
-        F.element_at(a, i) * F.element_at(b, i) for i in range(1, dim + 1)
+        F.element_at(a, i) * F.element_at(b, i) for i in range(1, DIM + 1)
     ]
     out = terms[0]
     for t in terms[1:]:
@@ -145,27 +147,27 @@ def sq_dist_unrolled(a: str, b: str, dim: int = DIM) -> Column:
     return F.expr(terms)
 
 
-def _dot_chain_sql(a: str, b: str, dim: int) -> str:
+def _dot_chain_sql(a: str, b: str) -> str:
     """Unrolled ascending dot-product SQL. The leading ``CAST(0 AS
     DOUBLE) +`` replicates :func:`dot`'s fold seed exactly (a fold
     starting at 0.0 and a bare term chain differ only in the sign of an
     exact-zero partial, but hash-gated parity tolerates no exception)."""
     terms = " + ".join(
         f"(element_at({a}, {i}) * element_at({b}, {i}))"
-        for i in range(1, dim + 1)
+        for i in range(1, DIM + 1)
     )
     return f"(CAST(0 AS DOUBLE) + {terms})"
 
 
-def cosine_unrolled(a: str, b: str, dim: int = DIM) -> Column:
+def cosine_unrolled(a: str, b: str) -> Column:
     """Cosine similarity as one parsed, codegen'd unrolled expression —
     bit-identical to :func:`cosine` (same ascending folds, same seed),
     ~10× faster in |corpus|×|cells| scoring loops, ~3 ms to construct
     (vs ~1.5 s for the py4j operator tree)."""
     return F.expr(
-        f"{_dot_chain_sql(a, b, dim)}"
-        f" / (sqrt({_dot_chain_sql(a, a, dim)})"
-        f" * sqrt({_dot_chain_sql(b, b, dim)}))"
+        f"{_dot_chain_sql(a, b)}"
+        f" / (sqrt({_dot_chain_sql(a, a)})"
+        f" * sqrt({_dot_chain_sql(b, b)}))"
     )
 
 
@@ -177,45 +179,41 @@ def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (norm(a) * norm(b))
 
 
-def lsh_signature(a: Column) -> Column:
-    """Random-hyperplane signature: one sign bit per plane, packed into an
-    int (bit b set ⇔ dot(a, plane_b) >= 0). Same-bucket vectors are
+def mean_vector(df: DataFrame, keys: list[str], col: str) -> DataFrame:
+    """(*keys, col): the element-wise mean of the ``col`` vectors in each
+    ``keys`` group. Each dimension's sum accumulates in DECIMAL(25,10)
+    (order-free, engine-exact) and divides by the count in double; the
+    means repack into an array in dimension order."""
+    return (
+        df.select(*keys, F.posexplode(col).alias("dim", "x"))
+        .groupBy(*keys, "dim")
+        .agg((F.sum(ex.dec("x")).cast("double") / F.count("x")).alias("mu"))
+        .groupBy(*keys)
+        .agg(
+            F.transform(
+                F.array_sort(F.collect_list(F.struct("dim", "mu"))),
+                lambda s: s.mu,
+            ).alias(col)
+        )
+    )
+
+
+def lsh_signature(a: Column, planes: list[list[float]]) -> Column:
+    """Random-hyperplane signature over ``planes`` (``HYPERPLANES`` or
+    one table of ``MT_HYPERPLANES``): one sign bit per plane, packed into
+    an int (bit b set ⇔ dot(a, plane_b) >= 0). Same-bucket vectors are
     cosine-similar with high probability; used to prune ANN candidates."""
     sig = F.lit(0)
-    for b, plane in enumerate(HYPERPLANES):
+    for b, plane in enumerate(planes):
         plane_col = F.array(*[F.lit(v) for v in plane])
         sig = sig + F.when(dot(a, plane_col) >= 0, F.lit(2**b)).otherwise(F.lit(0))
     return sig
 
 
-def lsh_signature_sql(vec_expr: str) -> str:
+def lsh_signature_sql(vec_expr: str, planes: list[list[float]]) -> str:
     """The identical signature as DuckDB SQL over a double-list expression."""
     terms = []
-    for b, plane in enumerate(HYPERPLANES):
-        lit = "[" + ", ".join(str(v) for v in plane) + "]"
-        terms.append(
-            f"(CASE WHEN list_dot_product({vec_expr}, {lit}) >= 0 "
-            f"THEN {2**b} ELSE 0 END)"
-        )
-    return "(" + " + ".join(terms) + ")"
-
-
-def lsh_signature_mt(a: Column, tbl: int) -> Column:
-    """Table-``tbl`` signature of the multi-table family (same packing
-    rule as :func:`lsh_signature`, over that table's own planes)."""
-    sig = F.lit(0)
-    for b, plane in enumerate(MT_HYPERPLANES[tbl]):
-        plane_col = F.array(*[F.lit(v) for v in plane])
-        sig = sig + F.when(dot(a, plane_col) >= 0, F.lit(2**b)).otherwise(
-            F.lit(0)
-        )
-    return sig
-
-
-def lsh_signature_mt_sql(vec_expr: str, tbl: int) -> str:
-    """The identical table-``tbl`` signature as DuckDB SQL."""
-    terms = []
-    for b, plane in enumerate(MT_HYPERPLANES[tbl]):
+    for b, plane in enumerate(planes):
         lit = "[" + ", ".join(str(v) for v in plane) + "]"
         terms.append(
             f"(CASE WHEN list_dot_product({vec_expr}, {lit}) >= 0 "

@@ -445,8 +445,8 @@ def embedding_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     mislabeled-example screen a curation pipeline runs on labeled
     embedding data.
 
-    Determinism: centroids are per-dimension DECIMAL-exact means (the
-    ``label_centroids`` arithmetic) repacked into ordered arrays;
+    Determinism: centroids are per-dimension DECIMAL-exact means
+    (``vectors.mean_vector``) repacked into ordered arrays;
     distances are the codegen'd ascending-index fold; ties break on
     vec_id. Scale shape: the centroid table is |labels| × dim —
     broadcast; scoring is one map-side pass; the top-k window partitions
@@ -456,17 +456,8 @@ def embedding_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", "label", V.as_double("embedding").alias("v")
     )
-    centroids = (
-        emb.select("label", F.posexplode("v").alias("dim", "x"))
-        .groupBy("label", "dim")
-        .agg((F.sum(ex.dec("x")).cast("double") / F.count("x")).alias("m"))
-        .groupBy("label")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("dim", "m"))),
-                lambda s: s.m,
-            ).alias("cv")
-        )
+    centroids = V.mean_vector(
+        emb.select("label", F.col("v").alias("cv")), ["label"], "cv"
     )
     scored = emb.join(F.broadcast(centroids), "label").select(
         "label",

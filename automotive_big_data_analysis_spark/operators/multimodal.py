@@ -11,13 +11,12 @@ batches, numpy processes them vectorized-per-item, results return as
 batches — no row-at-a-time Python, no driver round-trip, partition
 parallelism preserved.
 
-Real codecs (PIL/librosa/ffmpeg) are NOT in this environment. The
-*plumbing* — schemas, batch iteration, UDF signatures, partitioning — is
-real and tested; the codec call itself is isolated in ``_decode_payload``:
-with a codec installed it decodes, without one it falls back to a
-clearly-marked DETERMINISTIC FAKE that interprets the raw bytes as the
-sample buffer. ``require_real_codec=True`` raises NotImplementedError
-instead of faking.
+No real codec (PIL/librosa/ffmpeg) decode path exists. The *plumbing*
+— schemas, batch iteration, UDF signatures, partitioning — is real and
+tested; the codec call itself is isolated in ``_decode_payload``, which
+runs a clearly-marked DETERMINISTIC FAKE that interprets the raw bytes
+as the sample buffer. ``require_real_codec=True`` always raises
+NotImplementedError instead of faking, whatever is installed.
 """
 
 from __future__ import annotations
@@ -68,26 +67,17 @@ RESIZE_MAX_SIDE = 256  # resize target: longest side, aspect preserved
 RESIZE_EXEC_PROBE = 32
 
 
-def _codec_available() -> bool:
-    try:  # pragma: no cover - not installed in this environment
-        import PIL.Image  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
 def _decode_payload(payload: bytes, kind: str, require_real_codec: bool) -> np.ndarray:
     """Decode payload bytes → sample array.
 
-    DETERMINISTIC FAKE when no codec is installed: the raw payload bytes
-    ARE the sample buffer (uint8 for images/video, int16 for audio). Real
-    decode would go through PIL/soundfile here — the call site, batch
-    shape, and output contract are identical either way."""
-    if require_real_codec and not _codec_available():
+    DETERMINISTIC FAKE: the raw payload bytes ARE the sample buffer
+    (uint8 for images/video, int16 for audio). Real decode would go
+    through PIL/soundfile here — the call site, batch shape, and output
+    contract would be identical."""
+    if require_real_codec:
         raise NotImplementedError(
-            f"no codec available to decode kind={kind!r}; install PIL/soundfile "
-            "or run with require_real_codec=False (deterministic fake decode)"
+            f"no codec decode path for kind={kind!r}; run with "
+            "require_real_codec=False (deterministic fake decode)"
         )
     if kind == "audio":
         buf = payload[: len(payload) - (len(payload) % 2)]
@@ -172,14 +162,14 @@ def resize_images(
     target math: ``floor(side · max_side / max(w, h))``).
 
     Arrow-batched ``mapInPandas``; the codec call is isolated exactly
-    like :func:`media_features`. With a real codec installed this is
-    where PIL would decode → resample → re-encode; the PUBLIC default
-    is FAIL-LOUD (``require_real_codec=True`` raises
-    NotImplementedError when no codec is installed — callers never
-    silently receive fake pixels). Passing ``require_real_codec=False``
-    explicitly (what :func:`resize_exec_stats` does for the oracle
-    gate) opts into the DETERMINISTIC FAKE resample: the payload bytes
-    are the sample buffer (the fake-decode contract), and a resize to
+    like :func:`media_features`. A real codec path would decode →
+    resample → re-encode here; the PUBLIC default is FAIL-LOUD
+    (``require_real_codec=True`` always raises NotImplementedError —
+    callers never silently receive fake pixels). Passing
+    ``require_real_codec=False`` explicitly (what
+    :func:`resize_exec_stats` does for the oracle gate) opts into the
+    DETERMINISTIC FAKE resample: the payload bytes are the sample
+    buffer (the fake-decode contract), and a resize to
     ``dst_w × dst_h`` is a 1-D nearest-neighbor resample to
     ``m = dst_w·dst_h`` samples, ``out[j] = buf[(j·n) // m]`` — exact
     integer index math a SQL oracle replays byte-for-byte.
@@ -201,10 +191,10 @@ def resize_images(
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import math
 
-        real = _codec_available()
-        if require_real_codec and not real:
+        if require_real_codec:
             raise NotImplementedError(
-                "image resize requires PIL; not available in this environment"
+                "image resize requires PIL decode, which is not implemented "
+                "(pass require_real_codec=False for the deterministic fake)"
             )
         for pdf in it:
             rows = []
@@ -296,9 +286,8 @@ def extract_frames(
 
     Arrow-batched ``mapInPandas``; the codec call is isolated exactly
     like :func:`media_features`/:func:`resize_images`, and the PUBLIC
-    default is FAIL-LOUD (``require_real_codec=True`` raises
-    NotImplementedError when no codec is installed — callers never
-    silently receive fake frames; the round-12 ADVICE discipline).
+    default is FAIL-LOUD (``require_real_codec=True`` always raises
+    NotImplementedError — callers never silently receive fake frames).
     With a real decoder this is where the container would be demuxed
     and the selected frames seek-decoded. The explicit
     ``require_real_codec=False`` opt-in (what :func:`frame_exec_stats`
@@ -323,11 +312,11 @@ def extract_frames(
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import math
 
-        if require_real_codec and not _codec_available():
+        if require_real_codec:
             raise NotImplementedError(
-                "frame extraction requires a video codec; not available "
-                "in this environment (pass require_real_codec=False for "
-                "the deterministic fake decode)"
+                "frame extraction requires a video codec decode path, which "
+                "is not implemented (pass require_real_codec=False for the "
+                "deterministic fake decode)"
             )
         for pdf in it:
             rows = []

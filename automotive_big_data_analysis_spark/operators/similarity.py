@@ -293,47 +293,74 @@ def _seed_rows(emb: DataFrame, k: int) -> DataFrame:
     )
 
 
-def _train_centroids(emb: DataFrame, iters: int, p: IvfParams) -> DataFrame:
-    """(cid, cv): Lloyd-trained centroids from the capped deterministic
-    initializer — the coarse-quantizer TRAINER (``embedding_kmeans`` is
-    the same loop exposed as a query; the IVF/PQ family consumes this).
+KM_ITERS = 2  # Lloyd rounds (fixed so the oracle can unroll them)
 
-    Each round scores |corpus| × K rows map-side against a BROADCAST
-    centroid table (codegen'd unrolled squared-L2, centroid-id tiebreak),
-    collapses them in a struct-min partial aggregate before the exchange
-    (one row per vector crosses the wire), and recomputes per-dimension
-    means with map-side combine (K × dim × partitions shuffle rows). The
-    K×dim model state is ``localCheckpoint``-ed per round to truncate
-    lineage. Determinism across engines: ascending-index distance folds,
-    cid tiebreaks, DECIMAL(25,10) mean accumulation (order-free)."""
-    cents = _seed_rows(emb, p.k).select(
+
+def _nearest(
+    points: DataFrame,
+    cents: DataFrame,
+    keys: list[str],
+    x: str,
+    c: str,
+    dim: int = V.DIM,
+    carry: tuple = (),
+) -> DataFrame:
+    """(vec_id, *keys, s, *carry): each point's nearest centroid — the
+    ONE assignment step of the Lloyd rounds and ``embedding_kmeans``.
+    ``points`` (vec_id, *keys, x) score the BROADCAST centroid table
+    ``cents`` (*keys, cid, c) of their own ``keys`` group (every centroid
+    when there are no keys) with the codegen'd unrolled squared-L2;
+    ``s = min(struct(d2, cid))`` breaks distance ties on the smaller cid
+    and collapses in a partial aggregate before the exchange, so one row
+    per (point, group) crosses the wire. ``carry`` adds aggregates."""
+    d2 = V.sq_dist_unrolled(x, c, dim)
+    # keys or None: DataFrame.join(on=[]) raises instead of cross-joining
+    return (
+        points.join(F.broadcast(cents), keys or None)
+        .groupBy("vec_id", *keys)
+        .agg(F.min(F.struct(d2.alias("d2"), F.col("cid"))).alias("s"), *carry)
+    )
+
+
+def _lloyd(
+    points: DataFrame,
+    cents: DataFrame,
+    keys: list[str],
+    x: str,
+    c: str,
+    dim: int = V.DIM,
+    iters: int = KM_ITERS,
+) -> DataFrame:
+    """(*keys, cid, c): ``iters`` Lloyd rounds from the initial centroid
+    table ``cents`` — the ONE trainer of the coarse codebooks (no keys)
+    and the PQ sub-codebooks (keyed by subspace ``m``: every subspace
+    trains in the same pass). Each round assigns every point to its
+    nearest centroid (:func:`_nearest`) and recomputes each centroid as
+    its members' DECIMAL-exact mean (``vectors.mean_vector``, map-side
+    combined: K × dim × partitions shuffle rows); a centroid that loses
+    all members drops out. The model state is ``localCheckpoint``-ed per
+    round to truncate lineage. Determinism across engines:
+    ascending-index distance folds, cid tiebreaks, order-free DECIMAL
+    mean accumulation."""
+    for _ in range(iters):
+        assigned = _nearest(points, cents, keys, x, c, dim, (F.first(x).alias(c),))
+        cents = V.mean_vector(
+            assigned.select(*keys, F.col("s.cid").alias("cid"), c),
+            [*keys, "cid"],
+            c,
+        ).localCheckpoint()
+    return cents
+
+
+def _coarse_codebook(emb: DataFrame, k: int) -> DataFrame:
+    """(cell_id, cv): a ``k``-cell coarse codebook, Lloyd-trained from
+    the md5 seed rows."""
+    seeds = _seed_rows(emb, k).select(
         F.col("vec_id").alias("cid"), F.col("v").alias("cv")
     )
-    for _ in range(iters):
-        d2 = V.sq_dist_unrolled("v", "cv")
-        assigned = (
-            emb.join(F.broadcast(cents))
-            .groupBy("vec_id")
-            .agg(
-                F.min(F.struct(d2.alias("d2"), F.col("cid"))).alias("s"),
-                F.first("v").alias("v"),
-            )
-        )
-        cents = (
-            assigned.select(F.col("s.cid").alias("cid"), "v")
-            .select("cid", F.posexplode("v").alias("dim", "x"))
-            .groupBy("cid", "dim")
-            .agg((F.sum(ex.dec("x")).cast("double") / F.count("x")).alias("m"))
-            .groupBy("cid")
-            .agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("dim", "m"))),
-                    lambda s: s.m,
-                ).alias("cv")
-            )
-            .localCheckpoint()
-        )
-    return cents
+    return _lloyd(emb, seeds, [], "v", "cv").select(
+        F.col("cid").alias("cell_id"), "cv"
+    )
 
 
 ANN_INDEX_LOCATION = "/tmp/abda_ann_index"
@@ -347,9 +374,8 @@ def _index_tag(p: IvfParams) -> str:
     dedup.pair_index_table). ``p.maxprobe`` is part of the tag because
     the stored cells table is truncated to r ≤ maxprobe at build time —
     widening it must build fresh postings, never serve the old
-    truncated ones (round-6 ADVICE). Since round 9 the k/depth
-    components are corpus-derived, so a corpus that grows re-tags and
-    retrains automatically."""
+    truncated ones. The k/depth components are corpus-derived, so a
+    corpus that grows re-tags and retrains automatically."""
     # all-lowercase components: the tag lands in Spark DATABASE names,
     # which the catalog lowercases
     return (
@@ -403,7 +429,7 @@ def _lsh_postings(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def build() -> DataFrame:
         return _emb(spark, sf_dir).select(
-            V.lsh_signature(F.col("v")).alias("sig"), "vec_id", "v"
+            V.lsh_signature(F.col("v"), V.HYPERPLANES).alias("sig"), "vec_id", "v"
         )
 
     return _stored_index(spark, sf_dir, "lsh_postings", "sig", build)
@@ -446,7 +472,7 @@ def _lsh_mt_postings(spark: SparkSession, sf_dir: str) -> DataFrame:
         parts = [
             emb.select(
                 F.lit(t).alias("tbl"),
-                V.lsh_signature_mt(F.col("v"), t).alias("sig"),
+                V.lsh_signature(F.col("v"), V.MT_HYPERPLANES[t]).alias("sig"),
                 "vec_id",
                 "v",
             )
@@ -539,9 +565,7 @@ def _codebook(spark: SparkSession, sf_dir: str) -> DataFrame:
         sf_dir,
         "codebook",
         "cell_id",
-        lambda: _train_centroids(
-            _emb(spark, sf_dir), KM_ITERS, ivf_params(spark, sf_dir)
-        ).select(F.col("cid").alias("cell_id"), F.col("cv")),
+        lambda: _coarse_codebook(_emb(spark, sf_dir), ivf_params(spark, sf_dir).k),
     )
 
 
@@ -686,14 +710,12 @@ PQ_SUBK = 32  # sub-centroids per subspace (classic PQ: 256 at scale)
 
 # Sub-codebook initializer: the same md5 top-K rule as the coarse
 # codebook (``_seed_rows``), truncated at PQ_SUBK — the resolution knob
-# is PQ_SUBK itself, never silently capped by seed availability (the
-# pre-round-9 modulo rule topped out at N/29 sub-centroids on small
-# corpora). The md5 order is id-keyed, so the sub-quantizer seed SET is
-# the K-prefix of the coarse seed set — harmless: sub-codebooks train
-# on SUBSPACE slices (their own Lloyd rounds), which decorrelates them
-# from the coarse cells (the round-7 recall frontier showed shared
-# codebook SLICES were the distortion floor; trained-per-subspace fixed
-# it).
+# is PQ_SUBK itself, never capped by seed availability. The md5 order
+# is id-keyed, so the sub-quantizer seed SET is the K-prefix of the
+# coarse seed set — harmless: sub-codebooks train on SUBSPACE slices
+# (their own Lloyd rounds), which decorrelates them from the coarse
+# cells (shared codebook SLICES were measured as the recall
+# frontier's distortion floor; training per subspace removed it).
 
 
 def _subvectors(emb: DataFrame) -> DataFrame:
@@ -721,51 +743,21 @@ def _subvectors(emb: DataFrame) -> DataFrame:
 
 def _pq_subcodebook(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(m, cell_id, sc): per-subspace TRAINED sub-codebooks — classic PQ
-    training: KM_ITERS Lloyd rounds over each subspace's own subvector
-    distribution (all PQ_M subspaces train in ONE pass per round; ``m``
-    is just another grouping column). Stored index artifact like the
-    coarse codebook; always tiny (≤ PQ_M × PQ_SUBK rows) and broadcast.
-
-    Same determinism discipline as ``_train_centroids``: ascending-index
-    distance folds, (d2, cid) tiebreak via struct-min, DECIMAL(25,10)
-    per-dimension means, localCheckpoint per round."""
+    training: KM_ITERS Lloyd rounds (:func:`_lloyd`, keyed by ``m``) over
+    each subspace's own subvector distribution, every subspace in ONE
+    pass per round. Stored index artifact like the coarse codebook;
+    always tiny (≤ PQ_M × PQ_SUBK rows) and broadcast."""
 
     def build() -> DataFrame:
         emb = _emb(spark, sf_dir)
         subs = _subvectors(emb)
         seed_ids = _seed_rows(emb, PQ_SUBK).select("vec_id")
-        cents = subs.join(F.broadcast(seed_ids), "vec_id").select(
+        seeds = subs.join(F.broadcast(seed_ids), "vec_id").select(
             "m", F.col("vec_id").alias("cid"), F.col("sv").alias("sc")
         )
-        for _ in range(KM_ITERS):
-            d2 = V.sq_dist_unrolled("sv", "sc", PQ_SUBDIM)
-            assigned = (
-                subs.join(F.broadcast(cents), "m")
-                .groupBy("vec_id", "m")
-                .agg(
-                    F.min(F.struct(d2.alias("d2"), F.col("cid"))).alias("s"),
-                    F.first("sv").alias("sv"),
-                )
-            )
-            cents = (
-                assigned.select("m", F.col("s.cid").alias("cid"), "sv")
-                .select("m", "cid", F.posexplode("sv").alias("dim", "x"))
-                .groupBy("m", "cid", "dim")
-                .agg(
-                    (F.sum(ex.dec("x")).cast("double") / F.count("x")).alias(
-                        "mu"
-                    )
-                )
-                .groupBy("m", "cid")
-                .agg(
-                    F.transform(
-                        F.array_sort(F.collect_list(F.struct("dim", "mu"))),
-                        lambda s: s.mu,
-                    ).alias("sc")
-                )
-                .localCheckpoint()
-            )
-        return cents.select("m", F.col("cid").alias("cell_id"), "sc")
+        return _lloyd(subs, seeds, ["m"], "sv", "sc", PQ_SUBDIM).select(
+            "m", F.col("cid").alias("cell_id"), "sc"
+        )
 
     return _stored_index(spark, sf_dir, "pq_subcodebook", "m", build)
 
@@ -1663,12 +1655,13 @@ def knn_index_gc_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
     from automotive_big_data_analysis_spark.sources.stored import (
+        corpus_name,
         gc_stale_generations,
         source_fingerprint,
     )
 
     p = ivf_params(spark, sf_dir)
-    corpus = os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
+    corpus = corpus_name(sf_dir)
     fp = source_fingerprint(sf_dir, "embeddings")
     assert fp != "0" * 10  # the planted stale-corpus fingerprint
     tag = _index_tag(p)
@@ -1892,54 +1885,33 @@ def semantic_keep_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-KM_ITERS = 2  # Lloyd rounds (fixed so the oracle can unroll them)
-
-
-def embedding_kmeans(
-    spark: SparkSession, sf_dir: str, iters: int = KM_ITERS
-) -> DataFrame:
-    """Distributed k-means (Lloyd's algorithm): the coarse-quantizer
-    TRAINER, exposed as a query — the IVF family consumes the same loop
-    through ``_codebook``. Initial centroids are the corpus-sized
-    deterministic seed set (``_seed_rows``: the K ≈ 2·√N rows with
-    the smallest md5(vec_id)); each of ``KM_ITERS``
-    rounds assigns every vector to its nearest centroid (squared L2,
-    centroid-id tiebreak) and recomputes centroids as per-dimension
-    means; output is the final assignment's per-cluster size and inertia.
+def embedding_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Distributed k-means (Lloyd's algorithm) exposed as a query: the
+    final assignment against the stored coarse codebook (``_codebook``:
+    ``KM_ITERS`` rounds of :func:`_lloyd` from the corpus-sized
+    deterministic seed set ``_seed_rows`` — the K ≈ 2·√N rows with the
+    smallest md5(vec_id)), so the whole IVF family (kmeans / ivf / pq /
+    ivfpq) trains ONCE per corpus. Every vector is assigned to its
+    nearest centroid (:func:`_nearest`: squared L2, centroid-id
+    tiebreak); output is each cluster's size and inertia.
 
     Scale shape — the standard Spark k-means layout (what MLlib does):
-    centroids are K×dim rows of model state, always broadcast; each
-    round scores |corpus|×K rows map-side (codegen'd unrolled distance,
-    built as one parsed SQL string — see ``vectors.sq_dist_unrolled``)
-    and collapses them in a struct-min partial aggregate BEFORE the
-    exchange, so the assignment shuffle carries one row per vector; the
-    update aggregates (cluster, dim, x) triples with map-side combine,
-    so its shuffle carries K×dim×partitions rows, never the corpus. The
-    driver loop only orchestrates — each round's centroid table is
-    ~K×dim values, ``localCheckpoint``-ed to truncate lineage (the loop
-    would otherwise double the plan depth per round).
+    centroids are K×dim rows of model state, always broadcast; the
+    assignment scores |corpus|×K rows map-side (codegen'd unrolled
+    distance, built as one parsed SQL string — see
+    ``vectors.sq_dist_unrolled``) and collapses them in a struct-min
+    partial aggregate BEFORE the exchange, so the shuffle carries one
+    row per vector.
 
     Determinism across engines: distances are ascending-index folds
     (bit-identical, see ``functions/vectors.sq_dist``); ties break on
     centroid id; per-dimension means accumulate in DECIMAL(25,10)
     (order-free) and divide in double; a cluster that loses all members
     drops out on both engines identically."""
-    emb = _emb(spark, sf_dir)
-    # the default-depth training IS the shared coarse codebook — reuse the
-    # session memo so the whole IVF family (kmeans / ivf / pq / ivfpq)
-    # trains ONCE per corpus instead of once per query
-    if iters == KM_ITERS:
-        centroids = _codebook(spark, sf_dir).select(
-            F.col("cell_id").alias("cid"), F.col("cv")
-        )
-    else:
-        centroids = _train_centroids(emb, iters, ivf_params(spark, sf_dir))
-    d2 = V.sq_dist_unrolled("v", "cv")
-    final = (
-        emb.join(F.broadcast(centroids))
-        .groupBy("vec_id")
-        .agg(F.min(F.struct(d2.alias("d2"), F.col("cid"))).alias("s"))
+    centroids = _codebook(spark, sf_dir).select(
+        F.col("cell_id").alias("cid"), F.col("cv")
     )
+    final = _nearest(_emb(spark, sf_dir), centroids, [], "v", "cv")
     return (
         final.select(F.col("s.cid").alias("cluster"), F.col("s.d2").alias("d2"))
         .groupBy("cluster")
@@ -1964,9 +1936,7 @@ def _hist_codebook(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def build() -> DataFrame:
         hist = _emb(spark, sf_dir).where(F.col("vec_id") % SPLIT_MOD != 0)
-        return _train_centroids(hist, KM_ITERS, IvfParams(hist.count())).select(
-            F.col("cid").alias("cell_id"), F.col("cv")
-        )
+        return _coarse_codebook(hist, IvfParams(hist.count()).k)
 
     return _stored_index(spark, sf_dir, "codebook_hist", "cell_id", build)
 
@@ -2133,9 +2103,7 @@ _COS = (
 
 
 def _knn_sql(candidate_filter: str) -> str:
-    from automotive_big_data_analysis_spark.functions.vectors import lsh_signature_sql
-
-    sig = lsh_signature_sql("v")
+    sig = V.lsh_signature_sql("v", V.HYPERPLANES)
     return f"""
         WITH e AS (
             SELECT vec_id, label, {_V} AS v,
@@ -2213,7 +2181,7 @@ def _km_update_sql(assigned: str, out: str) -> str:
 
 
 # Unrolled KM_ITERS=2 training rounds ending in the trained codebook
-# (`seeds`): the exact SQL mirror of _train_centroids / _codebook,
+# (`seeds`): the exact SQL mirror of _lloyd / _codebook,
 # prefixed by the derived-parameter row (``pk``). Every IVF-family
 # oracle shares this prefix so the index structure is bit-identical
 # across engines.
@@ -2330,8 +2298,8 @@ ORACLE: dict[str, str] = {
     # Spark side's distinct before ranking)
     "knn_lsh_multitable": _knn_sql(
         " OR ".join(
-            f"bit_count(xor({V.lsh_signature_mt_sql('e.v', t)}, "
-            f"{V.lsh_signature_mt_sql('q.qv', t)})) <= {LSH_MT_RADIUS}"
+            f"bit_count(xor({V.lsh_signature_sql('e.v', V.MT_HYPERPLANES[t])}, "
+            f"{V.lsh_signature_sql('q.qv', V.MT_HYPERPLANES[t])})) <= {LSH_MT_RADIUS}"
             for t in range(V.LSH_TABLES)
         )
     ),
@@ -2848,10 +2816,6 @@ def _tradeoff_sql() -> str:
     signatures and probe masks) is recomputed from the same
     deterministic definitions, so the Spark result is verified
     value-for-value including the scanned-row counts."""
-    from automotive_big_data_analysis_spark.functions.vectors import (
-        lsh_signature_sql,
-    )
-
     rd_vals = ", ".join(f"({x})" for x in TRADEOFF_RADII)
     rr_vals = ", ".join(f"({x})" for x in SQ8_RERANK_LEVELS)
     mask_vals = ", ".join(
@@ -2861,7 +2825,7 @@ def _tradeoff_sql() -> str:
     # masks, and the two level axes (radius reuses rd; tables get tl)
     emt_parts = "\n        UNION ALL ".join(
         f"SELECT {t} AS tbl, vec_id, v, "
-        f"{V.lsh_signature_mt_sql('v', t)} AS sig FROM e"
+        f"{V.lsh_signature_sql('v', V.MT_HYPERPLANES[t])} AS sig FROM e"
         for t in range(V.LSH_TABLES)
     )
     mt_mask_vals = ", ".join(
@@ -2875,7 +2839,7 @@ def _tradeoff_sql() -> str:
     )
     return f"""
     WITH e AS (
-        SELECT vec_id, {_V} AS v, {lsh_signature_sql(_V)} AS sig
+        SELECT vec_id, {_V} AS v, {V.lsh_signature_sql(_V, V.HYPERPLANES)} AS sig
         FROM embeddings
     ), q AS (
         SELECT vec_id AS query_id, v AS qv, sig AS qsig FROM e

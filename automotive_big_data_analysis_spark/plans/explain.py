@@ -1,10 +1,10 @@
 """Physical-plan introspection.
 
 Scale discipline is only real if it is observable: these helpers parse the
-executed plan string so tests (and the bench report) can assert that a
-query's plan has the shape intended for the 100 TB layout — filters
-reached the parquet scan, projections pruned columns, small dimensions
-broadcast, shuffles are few.
+executed plan string so tests (and ``scripts/audit_plans.py``'s plan
+inventory) can assert that a query's plan has the shape intended for the
+100 TB layout — filters reached the parquet scan, projections pruned
+columns, small dimensions broadcast, shuffles are few.
 """
 
 from __future__ import annotations
@@ -106,7 +106,8 @@ def whole_stage_codegen_spans(df: DataFrame) -> int:
 
 
 def plan_report(df: DataFrame) -> dict:
-    """One-line-able summary used by the bench harness."""
+    """One-line-able summary: the per-query plan inventory that
+    ``scripts/audit_plans.py`` records."""
     return {
         "pushed_filters": pushed_filters(df),
         "read_schemas": read_schemas(df),

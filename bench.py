@@ -241,33 +241,35 @@ def main() -> None:
         dedup as _dd,
         maintenance as _mt,
         similarity as _sim,
+        text_analysis as _ta,
     )
     from automotive_big_data_analysis_spark.sources import (
         bucketed as _bk,
         schema_evolution as _se,
+        stored as _st,
         text_formats as _tf,
     )
 
     # wipe ONLY this corpus's derived artifacts: other corpora keep
     # their indexes (their build cost stays attributed to their own
     # runs), and a concurrent session working a different sf_dir never
-    # has files deleted out from under its catalog
-    base_dot = os.path.basename(sf_dir.rstrip("/"))
-    base_us = base_dot.replace(".", "_")
+    # has files deleted out from under its catalog. Every store names
+    # its entries ``{corpus}`` or ``{corpus}_…``.
+    corpus = _st.corpus_name(sf_dir)
     for root in (
         _dd.PAIR_INDEX_LOCATION,
         _sim.ANN_INDEX_LOCATION,
+        _sim.GC_AUDIT_LOCATION,
         _bk.DEFAULT_LOCATION,
         _tf.TEXTFMT_LOCATION,
         _mt.MAINT_LOCATION,
+        _ta.PII_MIRROR_LOCATION,
         _se.SCHEMA_EVO_LOCATION,
     ):
         if not os.path.isdir(root):
             continue
         for d in os.listdir(root):
-            if d in (base_dot, base_us) or d.startswith(
-                (base_dot + "_", base_us + "_", base_dot + "_nb", base_us + "_nb")
-            ):
+            if d == corpus or d.startswith(corpus + "_"):
                 shutil.rmtree(os.path.join(root, d), ignore_errors=True)
     # gate the builds on a quiet window too — identical-code index
     # builds measured 2-5x apart across noise waves in round 7.

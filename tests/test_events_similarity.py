@@ -4,6 +4,7 @@ from __future__ import annotations
 
 from datetime import datetime, timedelta
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -78,8 +79,6 @@ def test_session_window_agrees_with_manual(spark, event_dir):
 @pytest.fixture(scope="module")
 def emb_dir(spark, tmp_path_factory):
     path = str(tmp_path_factory.mktemp("emb"))
-    import numpy as np
-
     rng = np.random.RandomState(0)
     base = rng.standard_normal(64)
     rows = []
@@ -278,20 +277,103 @@ def test_kmeans_derived_seed_count_partitions_corpus(spark, emb_dir):
 def test_kmeans_lloyd_iterations_never_increase_inertia(spark):
     from tests.conftest import SF_SMOKE
 
-    def total_inertia(iters):
-        rows = sim.embedding_kmeans(spark, SF_SMOKE, iters=iters).collect()
-        return sum(r.inertia for r in rows), rows
+    emb = sim._emb(spark, SF_SMOKE)
+    k = sim.ivf_params(spark, SF_SMOKE).k
+    seeds = sim._seed_rows(emb, k).select(
+        F.col("vec_id").alias("cid"), F.col("v").alias("cv")
+    )
 
-    i0, _ = total_inertia(0)
-    i2, rows = total_inertia(2)
-    assert i2 <= i0  # Lloyd monotonicity
+    def assignment(iters):
+        cents = sim._lloyd(emb, seeds, [], "v", "cv", iters=iters)
+        return sim._nearest(emb, cents, [], "v", "cv").select("s.*").collect()
+
+    a0 = assignment(0)
+    a2 = assignment(sim.KM_ITERS)
+    assert sum(r.d2 for r in a2) <= sum(r.d2 for r in a0)  # Lloyd monotonicity
     # every vector is assigned exactly once
-    from automotive_big_data_analysis_spark.catalog import load_table
-
-    n = load_table(spark, SF_SMOKE, "embeddings").count()
-    assert sum(r.n_vectors for r in rows) == n
+    assert len(a2) == emb.count()
     # cluster count is bounded by the derived seed count and never zero
-    assert 0 < len(rows) <= sim.ivf_params(spark, SF_SMOKE).k
+    assert 0 < len({r.cid for r in a2}) <= k
+
+
+# Crafted 2-d integer points: round 1 puts (2, 0) and (2, 2) at EQUAL
+# distance from centroids 1 and 2 (both must join cid 1), and centroid 3
+# attracts nothing and must drop out. Every cluster's member sums divide
+# evenly, so the means are exact on both sides.
+_LLOYD_POINTS = {
+    1: (0, 0), 2: (0, 2), 3: (2, 0), 4: (2, 2),
+    5: (4, 0), 6: (6, 0), 7: (4, 2), 8: (6, 2),
+}
+_LLOYD_SEEDS = {1: (0, 0), 2: (4, 0), 3: (100, 100)}
+
+
+def _numpy_lloyd(points, cents, iters):
+    """Reference Lloyd: nearest centroid by squared L2, ties to the
+    smaller cid, centroids = member means, memberless centroids drop."""
+    cents = {c: np.asarray(v, dtype=float) for c, v in cents.items()}
+    for _ in range(iters):
+        members = {}
+        for p in points.values():
+            p = np.asarray(p, dtype=float)
+            best = min(cents, key=lambda c: (float(((p - cents[c]) ** 2).sum()), c))
+            members.setdefault(best, []).append(p)
+        cents = {c: np.mean(ps, axis=0) for c, ps in members.items()}
+    return {c: [float(x) for x in v] for c, v in cents.items()}
+
+
+def test_lloyd_trainer_matches_numpy_reference(spark):
+    # unkeyed: one cross-joined codebook, as for the coarse quantizer
+    points = spark.createDataFrame(
+        [(i, [float(x) for x in p]) for i, p in _LLOYD_POINTS.items()],
+        "vec_id long, v array<double>",
+    )
+    seeds = spark.createDataFrame(
+        [(c, [float(x) for x in v]) for c, v in _LLOYD_SEEDS.items()],
+        "cid long, cv array<double>",
+    )
+    for iters in (1, sim.KM_ITERS):
+        got = {
+            r.cid: list(r.cv)
+            for r in sim._lloyd(points, seeds, [], "v", "cv", 2, iters).collect()
+        }
+        assert got == _numpy_lloyd(_LLOYD_POINTS, _LLOYD_SEEDS, iters)
+    assert got == {1: [1.0, 1.0], 2: [5.0, 1.0]}
+
+    # keyed by subspace m, as for the PQ sub-codebooks: subspace 1 holds
+    # the mirrored points and its own seeds, and trains only against them
+    mirror = {i: (10 - x, y) for i, (x, y) in _LLOYD_POINTS.items()}
+    mirror_seeds = {1: (10, 0), 2: (4, 2), 3: (100, 100)}
+    subs = spark.createDataFrame(
+        [
+            (i, m, [float(x) for x in pts[i]])
+            for m, pts in enumerate((_LLOYD_POINTS, mirror))
+            for i in pts
+        ],
+        "vec_id long, m int, sv array<double>",
+    )
+    sub_seeds = spark.createDataFrame(
+        [
+            (m, c, [float(x) for x in v])
+            for m, cs in enumerate((_LLOYD_SEEDS, mirror_seeds))
+            for c, v in cs.items()
+        ],
+        "m int, cid long, sc array<double>",
+    )
+    got = {
+        (r.m, r.cid): list(r.sc)
+        for r in sim._lloyd(
+            subs, sub_seeds, ["m"], "sv", "sc", 2, sim.KM_ITERS
+        ).collect()
+    }
+    want = {
+        (m, c): v
+        for m, (pts, cs) in enumerate(
+            ((_LLOYD_POINTS, _LLOYD_SEEDS), (mirror, mirror_seeds))
+        )
+        for c, v in _numpy_lloyd(pts, cs, sim.KM_ITERS).items()
+    }
+    assert got == want
+    assert want[(1, 1)] == [9.0, 1.0] and want[(1, 2)] == [5.0, 1.0]
 
 
 def test_similarity_stored_index_lifecycle(spark):

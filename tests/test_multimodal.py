@@ -44,6 +44,16 @@ def test_media_features_requires_codec(media):
     assert "NotImplementedError" in str(err.value) or "no codec" in str(err.value)
 
 
+def test_real_codec_request_fails_closed_even_with_codec_importable(monkeypatch):
+    """No real decode path exists, so ``require_real_codec=True`` must
+    raise even where a codec library would import — never fall through
+    to the fake decode."""
+    monkeypatch.setattr(mm, "_codec_available", lambda: True, raising=False)
+    with pytest.raises(NotImplementedError):
+        mm._decode_payload(b"\x01\x02", "image", True)
+    assert list(mm._decode_payload(b"\x01\x02", "image", False)) == [1, 2]
+
+
 def test_resize_requires_codec(media):
     with pytest.raises(Exception) as err:
         mm.resize_images(media, 32, require_real_codec=True).collect()
