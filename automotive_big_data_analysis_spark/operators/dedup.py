@@ -39,6 +39,7 @@ from automotive_big_data_analysis_spark.catalog import load_table, spread
 # the session memo's release hook, re-exported for long-lived callers
 from automotive_big_data_analysis_spark.catalog import release  # noqa: F401
 from automotive_big_data_analysis_spark.functions import text as tx
+from automotive_big_data_analysis_spark.sources import stored
 
 JACCARD_THRESHOLD = 0.6
 # 16 hashes in 8 bands of 2: P(candidate) = 1-(1-J²)⁸ ≈ 0.997 at J = 0.6,
@@ -64,18 +65,12 @@ def _shingles_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     index artifact: tokenization runs once per corpus
     snapshot; pair generation, MinHash signatures, and candidate
     verification all read fingerprint files bucketed by doc_id."""
-    from automotive_big_data_analysis_spark.sources.stored import stored_table
-
-    return stored_table(
+    return _stored_index(
         spark,
-        PAIR_INDEX_LOCATION,
-        "pair_idx",
         sf_dir,
-        _index_tag(),
         "shingles",
         "doc_id",
         lambda: _shingle_df(load_table(spark, sf_dir, "documents")),
-        src_table="documents",
     )
 
 
@@ -223,8 +218,6 @@ def _minhash_candidates_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The stored banded-LSH candidate pair list (see
     :func:`minhash_lsh_pairs` for the semantics) — split out so the
     bench harness can time the index build separately from searches."""
-    from automotive_big_data_analysis_spark.sources.stored import stored_table
-
     sh = _shingles_cached(spark, sf_dir)
 
     def build() -> DataFrame:
@@ -244,18 +237,7 @@ def _minhash_candidates_table(spark: SparkSession, sf_dir: str) -> DataFrame:
             .distinct()
         )
 
-    return stored_table(
-        spark,
-        PAIR_INDEX_LOCATION,
-        "pair_idx",
-        sf_dir,
-        _index_tag(),
-        "minhash_candidates",
-        "doc_a",
-        build,
-        n_buckets=PAIR_INDEX_BUCKETS,
-        src_table="documents",
-    )
+    return _stored_index(spark, sf_dir, "minhash_candidates", "doc_a", build)
 
 
 def build_indexes(spark: SparkSession, sf_dir: str) -> None:
@@ -265,19 +247,17 @@ def build_indexes(spark: SparkSession, sf_dir: str) -> None:
     as ``index_build_s`` — consumers then measure warm-index reads.
 
     The SimHash signature table depends only on the documents table —
-    independent of the shingle → candidates → pairs → labels chain —
-    so it builds on a driver thread concurrently with the chain and its
-    wall time hides inside the chain's (guide §2.6: overlap independent
-    jobs; measured ~4.6 s of the family's 19 s sequential build)."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=1) as pool:
-        sim_fut = pool.submit(_simhash_signature_table, spark, sf_dir)
-        _shingles_cached(spark, sf_dir)
-        _minhash_candidates_table(spark, sf_dir)
-        pair_index_table(spark, sf_dir)
-        component_labels(spark, sf_dir)
-        sim_fut.result()
+    independent of the shingle → candidates → pairs → labels chain of
+    small latency-bound jobs — so the two overlap."""
+    stored.overlap(
+        lambda: _simhash_signature_table(spark, sf_dir),
+        lambda: (
+            _shingles_cached(spark, sf_dir),
+            _minhash_candidates_table(spark, sf_dir),
+            pair_index_table(spark, sf_dir),
+            component_labels(spark, sf_dir),
+        ),
+    )
 
 
 def _verify_candidates(sh: DataFrame, candidates: DataFrame) -> DataFrame:
@@ -336,7 +316,6 @@ def keep_list_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 INCOMING_MOD = 5  # doc_id % 5 == 0 → the "incoming batch"; rest = history
 
 PAIR_INDEX_LOCATION = "/tmp/abda_dedup_pair_index"
-PAIR_INDEX_BUCKETS = 8
 
 
 def _index_tag() -> str:
@@ -344,6 +323,30 @@ def _index_tag() -> str:
     structures — a semantics change builds a fresh index instead of
     silently reading files computed under the old definition."""
     return f"j{int(JACCARD_THRESHOLD * 100)}w{SHINGLE_N}mh{N_MINHASH}b{BAND_SIZE}"
+
+
+def _stored_index(
+    spark: SparkSession,
+    sf_dir: str,
+    name: str,
+    bucket_col: str,
+    build,
+) -> DataFrame:
+    """Store-through dedup index table ``name``, bucketed by
+    ``bucket_col``: built from ``build()`` once per (documents snapshot,
+    :func:`_index_tag`) and read from its files after that
+    (``sources/stored.py``)."""
+    return stored.stored_table(
+        spark,
+        PAIR_INDEX_LOCATION,
+        "pair_idx",
+        sf_dir,
+        _index_tag(),
+        name,
+        bucket_col,
+        build,
+        src_table="documents",
+    )
 
 
 def pair_index_table(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -359,19 +362,8 @@ def pair_index_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     existing layout is reused; files that outlive the in-memory catalog
     (a NEW session — the nightly case) are re-attached via CLUSTERED BY
     DDL with no data movement (``sources/stored.py``)."""
-    from automotive_big_data_analysis_spark.sources.stored import stored_table
-
-    return stored_table(
-        spark,
-        PAIR_INDEX_LOCATION,
-        "pair_idx",
-        sf_dir,
-        _index_tag(),
-        "ngram_pairs",
-        "doc_a",
-        lambda: _computed_pairs(spark, sf_dir),
-        n_buckets=PAIR_INDEX_BUCKETS,
-        src_table="documents",
+    return _stored_index(
+        spark, sf_dir, "ngram_pairs", "doc_a", lambda: _computed_pairs(spark, sf_dir)
     )
 
 
@@ -506,19 +498,12 @@ def component_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``sample_leakage_safe_split``) previously re-ran the full
     iterative loop — ~6 sequential join+checkpoint rounds — per
     invocation."""
-    from automotive_big_data_analysis_spark.sources.stored import stored_table
-
-    return stored_table(
+    return _stored_index(
         spark,
-        PAIR_INDEX_LOCATION,
-        "pair_idx",
         sf_dir,
-        _index_tag(),
         "component_labels",
         "doc_id",
         lambda: _component_labels_df(spark, sf_dir),
-        n_buckets=PAIR_INDEX_BUCKETS,
-        src_table="documents",
     )
 
 
@@ -670,18 +655,12 @@ def _simhash_signature_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     query — the quality report's docstring already promised "both
     inputs are STORED index tables", which is now true. Built by
     :func:`build_indexes`, billed in the bench's ``index_build_s``."""
-    from automotive_big_data_analysis_spark.sources.stored import stored_table
-
-    return stored_table(
+    return _stored_index(
         spark,
-        PAIR_INDEX_LOCATION,
-        "pair_idx",
         sf_dir,
-        _index_tag(),
         "simhash_signatures",
         "doc_id",
         lambda: _simhash_signature_df(spark, sf_dir),
-        src_table="documents",
     )
 
 

@@ -49,6 +49,7 @@ from automotive_big_data_analysis_spark.catalog import load_table, memoized, spr
 from automotive_big_data_analysis_spark.catalog import release  # noqa: F401
 from automotive_big_data_analysis_spark.functions import exact as ex
 from automotive_big_data_analysis_spark.functions import vectors as V
+from automotive_big_data_analysis_spark.sources import stored
 
 N_QUERIES = 10  # vec_id < 10 are the demo query set
 TOP_K = 5
@@ -364,7 +365,6 @@ def _coarse_codebook(emb: DataFrame, k: int) -> DataFrame:
 
 
 ANN_INDEX_LOCATION = "/tmp/abda_ann_index"
-ANN_INDEX_BUCKETS = 8
 
 
 def _index_tag(p: IvfParams) -> str:
@@ -399,9 +399,7 @@ def _stored_index(
     layout, DDL re-attach across sessions). ``supersede_prefix`` GCs
     older same-family generations whose tag lives in the TABLE name
     (see ``stored_table``)."""
-    from automotive_big_data_analysis_spark.sources.stored import stored_table
-
-    return stored_table(
+    return stored.stored_table(
         spark,
         ANN_INDEX_LOCATION,
         "ann_idx",
@@ -410,7 +408,6 @@ def _stored_index(
         name,
         bucket_col,
         build,
-        n_buckets=ANN_INDEX_BUCKETS,
         src_table="embeddings",
         supersede_prefix=supersede_prefix,
     )
@@ -1253,33 +1250,24 @@ def build_indexes(spark: SparkSession, sf_dir: str) -> None:
     The artifact chains are INDEPENDENT of each other (each writes its
     own stored table; dependencies only run within a chain), and every
     build is a sequence of small latency-bound jobs that leaves most of
-    the cluster idle — so the chains run from a driver thread pool and
-    back-fill each other's stage tails (guide §2.6: overlap independent
-    jobs; Spark's scheduler runs concurrent jobs FIFO). Measured at
-    sf0.1: 32.4 s sequential → the pool wall is set by the longest
-    chain + the frontier sweep (which consumes every other artifact and
-    therefore runs after the pool joins)."""
-    from concurrent.futures import ThreadPoolExecutor
-
+    the cluster idle — so the chains overlap and back-fill each other's
+    stage tails (Spark's scheduler runs concurrent jobs FIFO). The
+    frontier sweep consumes every other artifact, so it runs after them."""
     _corpus_n(spark, sf_dir)  # prime the shared N lookup once
-    chains = [
+    stored.overlap(
         lambda: (_codebook(spark, sf_dir), _ranked_cells(spark, sf_dir)),
         lambda: (_pq_subcodebook(spark, sf_dir), _pq_codes(spark, sf_dir)),
         lambda: _lsh_postings(spark, sf_dir),
         lambda: _lsh_mt_postings(spark, sf_dir),
         lambda: _sq8_codes(spark, sf_dir),
         lambda: _bf_table(spark, sf_dir),
-    ]
-    with ThreadPoolExecutor(max_workers=4) as pool:
-        for fut in [pool.submit(fn) for fn in chains]:
-            fut.result()
+    )
     # the history-only codebook is the one artifact the frontier sweep
-    # does NOT consume — its Lloyd training (≈4 s) overlaps the sweep
-    # instead of delaying it
-    with ThreadPoolExecutor(max_workers=1) as pool:
-        hist_fut = pool.submit(_hist_codebook, spark, sf_dir)
-        _frontier_table(spark, sf_dir)
-        hist_fut.result()
+    # does NOT consume, so its Lloyd training overlaps the sweep
+    stored.overlap(
+        lambda: _frontier_table(spark, sf_dir),
+        lambda: _hist_codebook(spark, sf_dir),
+    )
 
 
 # IVF / IVF-PQ probe depths swept: corpus-derived fractions of K
@@ -1654,15 +1642,9 @@ def knn_index_gc_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     already deleted)."""
     import os
 
-    from automotive_big_data_analysis_spark.sources.stored import (
-        corpus_name,
-        gc_stale_generations,
-        source_fingerprint,
-    )
-
     p = ivf_params(spark, sf_dir)
-    corpus = corpus_name(sf_dir)
-    fp = source_fingerprint(sf_dir, "embeddings")
+    corpus = stored.corpus_name(sf_dir)
+    fp = stored.source_fingerprint(sf_dir, "embeddings")
     assert fp != "0" * 10  # the planted stale-corpus fingerprint
     tag = _index_tag(p)
     # pre-SQ8 tag format: every component up to (not including) the
@@ -1677,7 +1659,7 @@ def knn_index_gc_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     ]
     # nightly sweep first: reclaim lineage outside the current three
     # bases (superseded fingerprints from earlier corpus generations)
-    gc_stale_generations(
+    stored.gc_stale_generations(
         GC_AUDIT_LOCATION,
         f"{corpus}_",
         keep_bases={base for _, base, _, _ in gens},
@@ -1703,7 +1685,7 @@ def knn_index_gc_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
                 if os.path.isdir(os.path.join(loc, t))
             ]
         )
-        stored = functools.reduce(
+        files = functools.reduce(
             DataFrame.unionByName,
             [
                 spark.read.parquet(f"{loc}/{t}").select(F.lit(1).alias("one"))
@@ -1711,7 +1693,7 @@ def knn_index_gc_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             ],
         )
         parts.append(
-            stored.agg(F.count("*").cast("long").alias("n_rows")).select(
+            files.agg(F.count("*").cast("long").alias("n_rows")).select(
                 F.lit(gen).alias("generation"),
                 F.lit(n_tables).cast("long").alias("n_tables"),
                 "n_rows",

@@ -20,6 +20,7 @@ and let each bucket hold many row groups).
 
 from __future__ import annotations
 
+import functools
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -29,7 +30,6 @@ from automotive_big_data_analysis_spark.catalog import load_table
 from automotive_big_data_analysis_spark.functions import exact as ex
 from automotive_big_data_analysis_spark.sources import stored
 
-N_BUCKETS = 8
 DEFAULT_DB = "bucketed"
 DEFAULT_LOCATION = "/tmp/abda_bucketed_warehouse"
 
@@ -38,19 +38,21 @@ def write_bucketed_tables(
     spark: SparkSession,
     sf_dir: str,
     database: str = DEFAULT_DB,
-    location: str = DEFAULT_LOCATION,
+    location: str | None = None,
 ) -> None:
-    """Write orders and lineitem bucketed+sorted by order key.
+    """Write orders and lineitem bucketed+sorted by order key, under
+    ``location`` (``DEFAULT_LOCATION`` as it reads at call time).
 
     Idempotent per corpus snapshot: the one-time shuffle is the point, so
     an existing layout is reused — mirroring a production table that is
     bucketed once at ingest, not per query. The layout path carries the
     bucket count and both tables' source fingerprints, so a regenerated
     corpus lays out fresh files (superseded layouts are pruned) instead
-    of serving the old rows (``stored.ensure_bucketed_table``)."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    stem = f"{stored.corpus_name(sf_dir)}_nb{N_BUCKETS}_"
+    of serving the old rows (``stored.ensure_bucketed_table``). The two
+    ingest shuffles are independent writes to disjoint paths, so they
+    overlap."""
+    location = location or DEFAULT_LOCATION
+    stem = f"{stored.corpus_name(sf_dir)}_nb{stored.N_BUCKETS}_"
     base = stem + "_".join(
         stored.source_fingerprint(sf_dir, t) for t in ("orders", "lineitem")
     )
@@ -71,15 +73,9 @@ def write_bucketed_tables(
             f"{location}/{base}/{table}",
             key,
             lambda: load_table(spark, sf_dir, source),
-            N_BUCKETS,
         )
 
-    # the two ingest shuffles are independent writes to disjoint paths;
-    # overlap them so the smaller table's write hides inside the larger
-    # one's tail (guide §2.6)
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        for fut in [pool.submit(_ensure_one, *spec) for spec in specs]:
-            fut.result()
+    stored.overlap(*[functools.partial(_ensure_one, *spec) for spec in specs])
 
 
 def bucketed_join_revenue(

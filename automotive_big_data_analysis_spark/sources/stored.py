@@ -19,14 +19,21 @@ built over the previous one:
   siblings of its family; :func:`gc_stale_generations` is the standalone
   sweep for generations orphaned without a rebuild.
 
-Concurrency: pool threads share one session. The registration set lives
-on the session object (``vars(spark)``, dropped with the session) and is
-keyed by (database, table, path); its membership test, ``add`` and
-``discard`` are each atomic under the GIL, so no lock is needed. Two
-threads that miss at once both verify, and a duplicate verification only
-repeats idempotent DDL (``CREATE ... IF NOT EXISTS``). Concurrent FIRST
-builds of the same artifact are not deduplicated: the build pools give
-each thread disjoint artifacts.
+Every root these pieces write under is a module-level ``*_LOCATION``
+constant listed in :data:`STORE_ROOTS`, read at call time, so a harness
+that needs fresh stores points each one at a scratch directory.
+
+Concurrency: :func:`overlap` is the only place the package starts driver
+threads; the build entry points hand it independent chains of small,
+latency-bound jobs, which back-fill each other's idle cores. The threads
+share one session. The registration set lives on the session object
+(``vars(spark)``, dropped with the session) and is keyed by (database,
+table, path); its membership test, ``add`` and ``discard`` are each
+atomic under the GIL, so no lock is needed. Two threads that miss at
+once both verify, and a duplicate verification only repeats idempotent
+DDL (``CREATE ... IF NOT EXISTS``). Concurrent FIRST builds of the same
+artifact are not deduplicated: each build site hands its threads
+disjoint artifacts.
 """
 
 from __future__ import annotations
@@ -39,7 +46,35 @@ from urllib.parse import unquote, urlparse
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 
-DEFAULT_BUCKETS = 8
+# The bucket count of every stored table. It is part of each path
+# (``nb8``), so a changed count builds fresh files instead of
+# re-attaching old ones under a wrong declaration.
+N_BUCKETS = 8
+# Driver threads per :func:`overlap` call.
+POOL_WIDTH = 4
+# (module under the package, attribute) of every derived-store root.
+STORE_ROOTS = [
+    ("operators.dedup", "PAIR_INDEX_LOCATION"),
+    ("operators.similarity", "ANN_INDEX_LOCATION"),
+    ("operators.similarity", "GC_AUDIT_LOCATION"),
+    ("operators.maintenance", "MAINT_LOCATION"),
+    ("operators.text_analysis", "PII_MIRROR_LOCATION"),
+    ("sources.text_formats", "TEXTFMT_LOCATION"),
+    ("sources.schema_evolution", "SCHEMA_EVO_LOCATION"),
+    ("sources.bucketed", "DEFAULT_LOCATION"),
+]
+
+
+def overlap(*fns: Callable[[], object]) -> None:
+    """Run the zero-argument callables on ``min(POOL_WIDTH, len(fns))``
+    driver threads and wait for all of them; the first failure (in
+    argument order) is re-raised. Each callable is one chain: its own
+    steps run in order on one thread."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    with ThreadPoolExecutor(max_workers=min(POOL_WIDTH, len(fns))) as pool:
+        for fut in [pool.submit(fn) for fn in fns]:
+            fut.result()
 
 
 def corpus_name(sf_dir: str) -> str:
@@ -156,9 +191,7 @@ def gc_stale_generations(
     return gens
 
 
-def _register_existing(
-    spark: SparkSession, table: str, path: str, key: str, n_buckets: int
-) -> None:
+def _register_existing(spark: SparkSession, table: str, path: str, key: str) -> None:
     """Attach already-written bucket files as an external bucketed table.
 
     The session catalog is in-memory, so a new session forgets the table
@@ -167,11 +200,11 @@ def _register_existing(
     no data movement, and scans regain the no-shuffle bucket guarantee.
     The column list comes from the files' own footers.
 
-    ``n_buckets`` MUST match the count the files were written with: the
-    DDL is a declaration Spark trusts (co-location guarantees for
-    sort-merge joins ride on it), so a mismatch would silently mis-route
-    bucket pruning. The filename check below makes a wrong declaration a
-    loud error instead."""
+    The files MUST have been written with ``N_BUCKETS`` buckets: the DDL
+    is a declaration Spark trusts (co-location guarantees for sort-merge
+    joins ride on it), so a mismatch would silently mis-route bucket
+    pruning. The filename check below makes a wrong declaration a loud
+    error instead."""
     import re
 
     # bucketed part files are named part-...._00007.c000... — the
@@ -182,16 +215,16 @@ def _register_existing(
         for fn in os.listdir(path)
         if (m := re.search(r"_(\d{5})(?:\.|$)", fn)) and fn.startswith("part-")
     ]
-    if ids and max(ids) >= n_buckets:
+    if ids and max(ids) >= N_BUCKETS:
         raise ValueError(
             f"bucket files at {path} carry bucket id {max(ids)} but the "
-            f"re-attach DDL declares only {n_buckets} buckets"
+            f"re-attach DDL declares only {N_BUCKETS} buckets"
         )
     schema = spark.read.parquet(path).schema
     cols = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in schema)
     spark.sql(
         f"CREATE TABLE IF NOT EXISTS {table} ({cols}) USING PARQUET"
-        f" CLUSTERED BY ({key}) SORTED BY ({key}) INTO {n_buckets} BUCKETS"
+        f" CLUSTERED BY ({key}) SORTED BY ({key}) INTO {N_BUCKETS} BUCKETS"
         f" LOCATION '{path}'"
     )
 
@@ -213,7 +246,6 @@ def ensure_bucketed_table(
     path: str,
     bucket_col: str,
     build: Callable[[], DataFrame],
-    n_buckets: int = DEFAULT_BUCKETS,
 ) -> DataFrame:
     """Return ``db.name``, backed by the bucketed files at ``path``: the
     one register-or-write step. Files already complete there are
@@ -246,9 +278,9 @@ def ensure_bucketed_table(
         exists = False
     if not exists:
         if complete:
-            _register_existing(spark, table, path, bucket_col, n_buckets)
+            _register_existing(spark, table, path, bucket_col)
         else:
-            build().write.bucketBy(n_buckets, bucket_col).sortBy(
+            build().write.bucketBy(N_BUCKETS, bucket_col).sortBy(
                 bucket_col
             ).option("path", path).mode("overwrite").saveAsTable(table)
     registered.add(key)
@@ -264,15 +296,14 @@ def stored_table(
     name: str,
     bucket_col: str,
     build: Callable[[], DataFrame],
-    n_buckets: int = DEFAULT_BUCKETS,
-    src_table: str | None = None,
+    src_table: str,
     supersede_prefix: str | None = None,
 ) -> DataFrame:
     """Return the stored table ``name`` for (corpus, tag), building it
-    write-through from ``build()`` on first touch. Pass ``src_table``
-    (the corpus table the structure derives from) to fold its content
-    fingerprint into the path — regenerated source data then forces a
-    fresh build, and the superseded fingerprints' generations of this
+    write-through from ``build()`` on first touch. The content
+    fingerprint of ``src_table`` (the corpus table the structure derives
+    from) is part of the path: regenerated source data forces a fresh
+    build, and the superseded fingerprints' generations of this
     (corpus, tag) are pruned.
 
     ``supersede_prefix`` marks ``name`` as the SOLE live generation of a
@@ -281,22 +312,16 @@ def stored_table(
     sibling tables in the same database that share the prefix are
     dropped and their files removed — a tag-format change would
     otherwise orphan the old generation forever."""
-    # the bucket count shapes the physical layout exactly like any
-    # semantic parameter: in the path, a changed count builds a fresh
-    # layout instead of re-attaching old files under a wrong declaration
-    stem = f"{corpus_name(sf_dir)}_{tag}nb{n_buckets}"
-    base = f"{stem}_{source_fingerprint(sf_dir, src_table)}" if src_table else stem
+    stem = f"{corpus_name(sf_dir)}_{tag}nb{N_BUCKETS}"
+    base = f"{stem}_{source_fingerprint(sf_dir, src_table)}"
     db = f"{db_prefix}_{base}"
     path = f"{location}/{base}/{name}"
     if not os.path.exists(f"{path}/_SUCCESS"):
-        if src_table:
-            prune_superseded(location, f"{stem}_", keep=base)
+        prune_superseded(location, f"{stem}_", keep=base)
         if supersede_prefix:
             if spark.catalog.databaseExists(db):
                 for t in spark.catalog.listTables(db):
                     if t.name.startswith(supersede_prefix) and t.name != name:
                         spark.sql(f"DROP TABLE IF EXISTS {db}.{t.name}")
             prune_superseded(f"{location}/{base}", supersede_prefix, keep=name)
-    return ensure_bucketed_table(
-        spark, db, name, path, bucket_col, build, n_buckets
-    )
+    return ensure_bucketed_table(spark, db, name, path, bucket_col, build)

@@ -27,6 +27,8 @@ read path.
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -131,12 +133,8 @@ def ensure_mirrors(spark: SparkSession, sf_dir: str) -> None:
     times separately) so connector queries measure the READ path only.
 
     The seven format writes are independent single-action jobs against
-    disjoint output dirs, each leaving most of the cluster idle (8
-    write tasks on 32 cores, codec-bound for gzip/bzip2) — so they run
-    from a driver thread pool and back-fill each other (guide §2.6;
-    measured ~9.6 s sequential → bounded by the slowest codec)."""
-    from concurrent.futures import ThreadPoolExecutor
-
+    disjoint output dirs, each leaving most of the cluster idle (codec-
+    bound for gzip/bzip2), so they overlap."""
     fmts = (
         "jsonl",
         "csv",
@@ -146,11 +144,9 @@ def ensure_mirrors(spark: SparkSession, sf_dir: str) -> None:
         "parquet_zstd",
         "jsonl_dirty",
     )
-    with ThreadPoolExecutor(max_workers=4) as pool:
-        for fut in [
-            pool.submit(_ensure_written, spark, sf_dir, fmt) for fmt in fmts
-        ]:
-            fut.result()
+    stored.overlap(
+        *[functools.partial(_ensure_written, spark, sf_dir, fmt) for fmt in fmts]
+    )
 
 
 def _read_events_text(spark: SparkSession, sf_dir: str, fmt: str) -> DataFrame:

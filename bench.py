@@ -235,13 +235,13 @@ def main() -> None:
     # index_build_s. Per-query numbers are then DOCUMENTED warm-index
     # measurements — the production steady state, with the build cost
     # visible next to them instead of vanishing.
+    import importlib
     import shutil
 
     from automotive_big_data_analysis_spark.operators import (
         dedup as _dd,
         maintenance as _mt,
         similarity as _sim,
-        text_analysis as _ta,
     )
     from automotive_big_data_analysis_spark.sources import (
         bucketed as _bk,
@@ -256,16 +256,11 @@ def main() -> None:
     # has files deleted out from under its catalog. Every store names
     # its entries ``{corpus}`` or ``{corpus}_…``.
     corpus = _st.corpus_name(sf_dir)
-    for root in (
-        _dd.PAIR_INDEX_LOCATION,
-        _sim.ANN_INDEX_LOCATION,
-        _sim.GC_AUDIT_LOCATION,
-        _bk.DEFAULT_LOCATION,
-        _tf.TEXTFMT_LOCATION,
-        _mt.MAINT_LOCATION,
-        _ta.PII_MIRROR_LOCATION,
-        _se.SCHEMA_EVO_LOCATION,
-    ):
+    for mod, attr in _st.STORE_ROOTS:
+        root = getattr(
+            importlib.import_module(f".{mod}", "automotive_big_data_analysis_spark"),
+            attr,
+        )
         if not os.path.isdir(root):
             continue
         for d in os.listdir(root):

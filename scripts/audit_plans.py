@@ -15,6 +15,9 @@ Per query it also records the observability report the plan helpers
 expose (shuffle count, codegen spans, broadcast joins, scans) so the
 committed artifact doubles as a plan inventory.
 
+Every derived store starts empty (``check_oracle.fresh_stores``), so the
+audited plans read what this code builds.
+
 Usage: PYTHONPATH=/root/repo python scripts/audit_plans.py [sf_dir]
 """
 
@@ -23,6 +26,7 @@ from __future__ import annotations
 import sys
 import time
 
+from check_oracle import fresh_stores
 from pyspark.sql import SparkSession
 
 import __spark_entry__ as entry
@@ -55,6 +59,7 @@ TINY_UNPARTITIONED_WINDOW: dict[str, str] = {
 
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
+    fresh_stores()
     spark = (
         SparkSession.builder.master("local[8]")
         .config("spark.sql.shuffle.partitions", "32")

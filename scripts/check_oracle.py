@@ -5,14 +5,22 @@ Runs every ``__spark_entry__.queries()`` entry on Spark and, where an
 parquet files; compares row count, column names, and an order-insensitive
 value hash (columns sorted by name, rows sorted, values canonicalized).
 
+Every derived store starts empty (:func:`fresh_stores`), so the gate
+checks what this code builds, never files an earlier build left behind.
+
 Usage: PYTHONPATH=/root/repo python scripts/check_oracle.py [sf_dir] [name ...]
 """
 
 from __future__ import annotations
 
+import atexit
 import hashlib
+import importlib
 import math
+import os
+import shutil
 import sys
+import tempfile
 import time
 
 import duckdb
@@ -60,6 +68,23 @@ def dtype_splits(spark_pdf: pd.DataFrame, duck_pdf: pd.DataFrame) -> list[str]:
     return out
 
 
+def fresh_stores() -> None:
+    """Point every derived-store root (``stored.STORE_ROOTS``) at its own
+    directory under a new temporary directory, removed at exit. Call it
+    before the first query: stored artifacts carry parameter tags and
+    source fingerprints in their paths, not the code that built them, so
+    a default root could serve what an older build left there."""
+    from automotive_big_data_analysis_spark.sources import stored
+
+    root = tempfile.mkdtemp(prefix="fresh_stores_")
+    atexit.register(shutil.rmtree, root, ignore_errors=True)
+    for mod, attr in stored.STORE_ROOTS:
+        module = importlib.import_module(
+            f".{mod}", "automotive_big_data_analysis_spark"
+        )
+        setattr(module, attr, os.path.join(root, attr.lower()))
+
+
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
@@ -67,14 +92,13 @@ def main() -> int:
     import __spark_entry__ as entrymod
     from automotive_big_data_analysis_spark.catalog import TESTDATA_TABLES
 
+    fresh_stores()
     # Deliberately a PLAIN session (no get_spark) to replicate the driver's
     # correctness harness: every query must work without any build-time conf.
     # Time-zone note: queries over `events` are zone-safe regardless of host
     # TZ — catalog.load_table normalizes the NTZ timestamp column with a
     # zone-free expression (catalog.ntz_to_instant), matching DuckDB's
     # naive-as-UTC reading. Other tables carry no timestamp columns.
-    import os
-
     from pyspark.sql import SparkSession
 
     spark = (

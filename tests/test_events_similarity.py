@@ -397,14 +397,12 @@ def test_similarity_stored_index_lifecycle(spark):
     # store-through re-attaches via DDL and serves identical rows
     import os
 
-    from automotive_big_data_analysis_spark.sources.stored import (
-        source_fingerprint,
-    )
+    from automotive_big_data_analysis_spark.sources import stored
 
     tag = (
         f"{sim._index_tag(sim.ivf_params(spark, SF_SMOKE))}"
-        f"nb{sim.ANN_INDEX_BUCKETS}"
-        f"_{source_fingerprint(SF_SMOKE, 'embeddings')}"
+        f"nb{stored.N_BUCKETS}"
+        f"_{stored.source_fingerprint(SF_SMOKE, 'embeddings')}"
     )
     base = f"{os.path.basename(SF_SMOKE.rstrip('/')).replace('.', '_')}_{tag}"
     dropped = 0

@@ -369,15 +369,16 @@ def test_stored_table_reattaches_across_sessions_without_rebuild(
     def make():
         return stored.stored_table(
             spark, str(tmp_path / "wh"), "lc_test", src, "t1", "idx",
-            "doc_id", build, n_buckets=4, src_table="documents",
+            "doc_id", build, src_table="documents",
         )
 
     t1 = make()
     assert t1.count() == 20
     fp = stored.source_fingerprint(src, "documents")
     base = os.path.basename(src)
-    db = f"lc_test_{base}_t1nb4_{fp}"  # tag carries the bucket count
-    path = f"{tmp_path}/wh/{base}_t1nb4_{fp}/idx"
+    nb = stored.N_BUCKETS
+    db = f"lc_test_{base}_t1nb{nb}_{fp}"  # tag carries the bucket count
+    path = f"{tmp_path}/wh/{base}_t1nb{nb}_{fp}/idx"
     before = {
         fn: os.stat(os.path.join(path, fn)).st_mtime_ns
         for fn in os.listdir(path)
@@ -399,15 +400,21 @@ def test_stored_table_reattaches_across_sessions_without_rebuild(
     assert before == after  # re-attach moved no data
     # the DDL must declare the bucket count the files were written with
     detail = spark.sql(f"DESCRIBE TABLE EXTENDED {db}.idx").collect()
-    nb = [r.data_type for r in detail if r.col_name == "Num Buckets"]
-    assert nb == ["4"]
+    assert [r.data_type for r in detail if r.col_name == "Num Buckets"] == [
+        str(nb)
+    ]
 
-    # a wrong declared count must be a loud error, not a silent
-    # co-location lie
+    # files written with another bucket count must be a loud error on
+    # re-attach, not a silent co-location lie
     spark.sql(f"DROP TABLE {db}.idx")
+    wrong = f"{tmp_path}/wrong/idx"
+    spark.read.parquet(f"{src}/documents.parquet").write.bucketBy(
+        2 * nb, "doc_id"
+    ).sortBy("doc_id").option("path", wrong).saveAsTable("lc_test_wrong")
+    spark.sql("DROP TABLE lc_test_wrong")  # external: the files stay
     with pytest.raises(ValueError, match="bucket id"):
-        stored._register_existing(spark, f"{db}.idx", path, "doc_id", n_buckets=2)
-    stored._register_existing(spark, f"{db}.idx", path, "doc_id", n_buckets=4)
+        stored._register_existing(spark, f"{db}.idx", wrong, "doc_id")
+    stored._register_existing(spark, f"{db}.idx", path, "doc_id")
 
     # touching the source (new mtime, same bytes is enough — the
     # fingerprint is metadata-based) must route to a FRESH build
