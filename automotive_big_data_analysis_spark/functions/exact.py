@@ -77,7 +77,7 @@ def money4(price: Column | str, discount: Column | str) -> Column:
 
 
 def money4_sql(price: str, discount: str) -> str:
-    """DuckDB-side mirror of :func:`money4`."""
+    """DuckDB twin of :func:`money4`."""
     return (
         f"CAST(ROUND({price} * 100) AS BIGINT)"
         f" * CAST(ROUND((1 - {discount}) * 100) AS BIGINT)"
@@ -85,12 +85,12 @@ def money4_sql(price: str, discount: str) -> str:
 
 
 def dsum_sql(expr: str, scale: int = 2) -> str:
-    """DuckDB-side mirror of :func:`dsum` (returns the bare expression)."""
+    """DuckDB twin of :func:`dsum` (returns the bare expression)."""
     return f"ROUND(CAST(SUM(CAST({expr} AS {SQL_DEC})) AS DOUBLE), {scale})"
 
 
 def davg_sql(expr: str, scale: int = 6) -> str:
-    """DuckDB-side mirror of :func:`davg`."""
+    """DuckDB twin of :func:`davg`."""
     return (
         f"ROUND(CAST(SUM(CAST({expr} AS {SQL_DEC})) AS DOUBLE)"
         f" / COUNT({expr}), {scale})"

@@ -8,6 +8,9 @@ does the same cast); fold order is left-to-right in both engines.
 The LSH hyperplanes are deterministic literals generated from a seeded
 NumPy RNG at import time and inlined into BOTH the Spark expressions and
 the oracle SQL — the two engines run the exact same projection.
+
+Every kernel an oracle replays has its DuckDB twin (``*_sql``) defined
+right after it; the oracles call the twin instead of spelling the SQL.
 """
 
 from __future__ import annotations
@@ -84,6 +87,11 @@ def as_double(col: str | Column) -> Column:
     return F.transform(c, lambda x: x.cast("double"))
 
 
+def as_double_sql(col: str) -> str:
+    """DuckDB twin of :func:`as_double`."""
+    return f"list_transform({col}, x -> CAST(x AS DOUBLE))"
+
+
 def dot(a: Column, b: Column) -> Column:
     """Σ aᵢ·bᵢ via zip_with + left fold. DuckDB: ``list_dot_product``."""
     return F.aggregate(
@@ -111,14 +119,20 @@ def dot_unrolled(a: Column, b: Column) -> Column:
 
 def sq_dist(a: Column, b: Column) -> Column:
     """Σ (aᵢ−bᵢ)² via one zip_with + left fold — the same ascending-index
-    summation as DuckDB's ``list_dot_product(diff, diff)`` over
-    ``diff = list_transform(range(1, DIM+1), i -> a[i] - b[i])``, so the
-    doubles are bit-identical across engines."""
+    summation as DuckDB's ``list_dot_product`` of the difference list in
+    :func:`sq_dist_sql`, so the doubles are bit-identical across engines."""
     return F.aggregate(
         F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
         F.lit(0.0),
         lambda acc, x: acc + x,
     )
+
+
+def sq_dist_sql(a: str, b: str, dim: int = DIM) -> str:
+    """DuckDB twin of :func:`sq_dist` over ``dim``-long double lists (a
+    constant index range is folded once, not rebuilt per row)."""
+    diff = f"list_transform(range(1, {dim} + 1), i -> {a}[i] - {b}[i])"
+    return f"list_dot_product({diff}, {diff})"
 
 
 def sq_dist_unrolled(a: str, b: str, dim: int = DIM) -> Column:
@@ -175,8 +189,18 @@ def norm(a: Column) -> Column:
     return F.sqrt(dot(a, a))
 
 
+def norm_sql(a: str) -> str:
+    """DuckDB twin of :func:`norm` over a double-list expression."""
+    return f"sqrt(list_dot_product({a}, {a}))"
+
+
 def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (norm(a) * norm(b))
+
+
+def cosine_sql(a: str, b: str) -> str:
+    """DuckDB twin of :func:`cosine` over double-list expressions."""
+    return f"list_dot_product({a}, {b}) / ({norm_sql(a)} * {norm_sql(b)})"
 
 
 def mean_vector(df: DataFrame, keys: list[str], col: str) -> DataFrame:

@@ -22,7 +22,10 @@ from pyspark.sql import functions as F
 
 from automotive_big_data_analysis_spark.catalog import load_table
 from automotive_big_data_analysis_spark.functions import exact as ex
+from automotive_big_data_analysis_spark.functions import hashing
 from automotive_big_data_analysis_spark.functions import ranking as rk
+from automotive_big_data_analysis_spark.functions import text as tx
+from automotive_big_data_analysis_spark.functions import vectors as V
 
 _US_PER_DAY = 86_400 * 1_000_000
 
@@ -272,9 +275,6 @@ def embedding_quality_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: the join co-partitions two corpus-sized tables on their
     shared key (sort-merge at scale, no broadcast); moments aggregate
     with map-side combine to |labels| rows."""
-    from automotive_big_data_analysis_spark.functions import text as tx
-    from automotive_big_data_analysis_spark.functions import vectors as V
-
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", tx.quality_score("text").alias("q")
     )
@@ -451,8 +451,6 @@ def embedding_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     vec_id. Scale shape: the centroid table is |labels| × dim —
     broadcast; scoring is one map-side pass; the top-k window partitions
     by label over (label, vec_id, d2) triples only."""
-    from automotive_big_data_analysis_spark.functions import vectors as V
-
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", "label", V.as_double("embedding").alias("v")
     )
@@ -493,8 +491,6 @@ def quality_regression(spark: SparkSession, sf_dir: str) -> DataFrame:
     |langs| moment rows — the same single-pass sufficient-statistics
     trick that trains any GLM-by-IRLS step at 100 TB. Nothing iterative,
     nothing leaves the JVM."""
-    from automotive_big_data_analysis_spark.functions import text as tx
-
     docs = load_table(spark, sf_dir, "documents")
     xy = docs.select(
         "lang",
@@ -537,27 +533,16 @@ def quality_regression(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _corr_sql() -> str:
-    from automotive_big_data_analysis_spark.functions import text as tx
-
-    toks = r"regexp_extract_all(text, '\S+')"
     dsx, dsy = "CAST(sx AS DOUBLE)", "CAST(sy AS DOUBLE)"
     dsxx, dsyy = "CAST(sxx AS DOUBLE)", "CAST(syy AS DOUBLE)"
     return rf"""
-        WITH scored AS (
-            SELECT doc_id, len({toks}) AS n_tok, length(text) AS n_chars,
-                   len(list_filter({toks},
-                       x -> lower(x) IN ({tx.STOP_ALL_SQL}))) AS n_stop
+        WITH q AS (
+            SELECT doc_id, {tx.quality_score_sql("text")} AS q
             FROM documents
-        ), q AS (
-            SELECT doc_id,
-                   {tx.QUALITY_SQL} AS q
-            FROM scored
         ), e AS (
-            SELECT vec_id AS doc_id, label,
-                   ROUND(sqrt(list_dot_product(v, v)), 6) AS nrm
+            SELECT vec_id AS doc_id, label, ROUND({V.norm_sql("v")}, 6) AS nrm
             FROM (
-                SELECT vec_id, label,
-                       list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
+                SELECT vec_id, label, {V.as_double_sql("embedding")} AS v
                 FROM embeddings
             )
         ), m AS (
@@ -602,15 +587,9 @@ ORACLE["events_markov_transitions"] = """
 
 
 def _outliers_sql() -> str:
-    from automotive_big_data_analysis_spark.functions import vectors as V
-
-    diff = "list_transform(range(1, {d} + 1), i -> e.v[i] - c.cv[i])".format(
-        d=V.DIM
-    )
     return f"""
     WITH e AS (
-        SELECT vec_id, label,
-               list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
+        SELECT vec_id, label, {V.as_double_sql("embedding")} AS v
         FROM embeddings
     ), c AS (
         SELECT label, list(m ORDER BY dim) AS cv FROM (
@@ -622,7 +601,7 @@ def _outliers_sql() -> str:
         ) GROUP BY label
     ), scored AS (
         SELECT e.label, e.vec_id,
-               ROUND(list_dot_product({diff}, {diff}), 6) AS d2
+               ROUND({V.sq_dist_sql("e.v", "c.cv")}, 6) AS d2
         FROM e JOIN c ON e.label = c.label
     ), ranked AS (
         SELECT label, vec_id, d2,
@@ -641,21 +620,6 @@ ORACLE["embedding_outlier_scores"] = _outliers_sql()
 CMS_DEPTH = 4  # hash rows
 CMS_WIDTH = 256  # counters per row
 TOP_USERS_K = 10
-
-
-def _cms_bucket(key, d: int):
-    """Counter index of hash row ``d`` in [0, CMS_WIDTH) — md5-keyed so
-    the DuckDB oracle addresses the identical cells."""
-    return (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit(f"cms{d}:"), key.cast("string"))), 1, 8
-            ),
-            16,
-            10,
-        ).cast("long")
-        % CMS_WIDTH
-    )
 
 
 def heavy_hitters_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -692,7 +656,9 @@ def heavy_hitters_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
                     *[
                         F.struct(
                             F.lit(d).alias("d"),
-                            _cms_bucket(F.col("user_id"), d).alias("b"),
+                            hashing.bucket(
+                                F.col("user_id"), CMS_WIDTH, f"cms{d}:"
+                            ).alias("b"),
                         )
                         for d in range(CMS_DEPTH)
                     ]
@@ -716,7 +682,9 @@ def heavy_hitters_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
                 *[
                     F.struct(
                         F.lit(d).alias("d"),
-                        _cms_bucket(F.col("user_id"), d).alias("b"),
+                        hashing.bucket(
+                            F.col("user_id"), CMS_WIDTH, f"cms{d}:"
+                        ).alias("b"),
                     )
                     for d in range(CMS_DEPTH)
                 ]
@@ -737,15 +705,17 @@ def heavy_hitters_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# One scan per hash row: DuckDB runs four narrow scans faster than one
+# scan that builds a four-bucket list per event and unnests it.
+_CMS_CELLS_SQL = " UNION ALL ".join(
+    f"SELECT {d} AS d, {hashing.bucket_sql('user_id', CMS_WIDTH, f'cms{d}:')} AS b"
+    " FROM events"
+    for d in range(CMS_DEPTH)
+)
+
 ORACLE["events_heavy_hitters_cms"] = f"""
     WITH cellsrc AS (
-        SELECT d.d AS d,
-               (('0x' || substr(md5('cms' || d.d || ':'
-                    || CAST(user_id AS VARCHAR)), 1, 8))::BIGINT
-                % {CMS_WIDTH}) AS b
-        FROM events CROSS JOIN (
-            VALUES {", ".join(f"({d})" for d in range(CMS_DEPTH))}
-        ) AS d(d)
+        {_CMS_CELLS_SQL}
     ), cells AS (
         SELECT d, b, COUNT(*) AS n FROM cellsrc GROUP BY d, b
     ), top AS (
@@ -759,26 +729,18 @@ ORACLE["events_heavy_hitters_cms"] = f"""
     FROM top t
     {" ".join(
         f"JOIN cells c{d} ON c{d}.d = {d} AND c{d}.b = "
-        f"(('0x' || substr(md5('cms{d}:' || CAST(t.user_id AS VARCHAR)), 1, 8))::BIGINT % {CMS_WIDTH})"
+        + hashing.bucket_sql("t.user_id", CMS_WIDTH, f"cms{d}:")
         for d in range(CMS_DEPTH)
     )}
 """
 
 
 def _regression_sql() -> str:
-    from automotive_big_data_analysis_spark.functions import text as tx
-
-    toks = r"regexp_extract_all(text, '\S+')"
-    return rf"""
-        WITH scored AS (
-            SELECT lang, len({toks}) AS n_tok, length(text) AS n_chars,
-                   len(list_filter({toks},
-                       x -> lower(x) IN ({tx.STOP_ALL_SQL}))) AS n_stop
+    return f"""
+        WITH xy AS (
+            SELECT lang, CAST(len({tx.tokens_sql("text")}) AS BIGINT) AS x,
+                   {tx.quality_score_sql("text")} AS y
             FROM documents
-        ), xy AS (
-            SELECT lang, CAST(n_tok AS BIGINT) AS x,
-                   {tx.QUALITY_SQL} AS y
-            FROM scored
         ), m AS (
             SELECT lang, COUNT(*) AS n_docs,
                    SUM(CAST(x AS {ex.SQL_DEC})) AS sx,

@@ -38,6 +38,7 @@ from automotive_big_data_analysis_spark.catalog import load_table, spread
 
 # the session memo's release hook, re-exported for long-lived callers
 from automotive_big_data_analysis_spark.catalog import release  # noqa: F401
+from automotive_big_data_analysis_spark.functions import hashing
 from automotive_big_data_analysis_spark.functions import text as tx
 from automotive_big_data_analysis_spark.sources import stored
 
@@ -156,12 +157,9 @@ def _near_duplicates(inter: DataFrame, sh: DataFrame) -> DataFrame:
 
 
 def _minhash_signatures(sh: DataFrame) -> DataFrame:
-    """(doc_id, h0..h7): salted-md5 min-hash signature per document."""
-    aggs = [
-        F.min(F.md5(F.concat(F.lit(f"{j}:"), F.col("shingle")))).alias(f"h{j}")
-        for j in range(N_MINHASH)
-    ]
-    return sh.groupBy("doc_id").agg(*aggs)
+    """(doc_id, h0..h15): salted-md5 min-hash signature per document."""
+    aggs = hashing.minhash("shingle", N_MINHASH)
+    return sh.groupBy("doc_id").agg(*[h.alias(f"h{j}") for j, h in enumerate(aggs)])
 
 
 def minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -884,10 +882,8 @@ def corpus_overlap_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     sig = gsh.groupBy("source").agg(
         *[
-            F.min(F.md5(F.concat(F.lit(f"c{j}:"), F.col("shingle")))).alias(
-                f"m{j}"
-            )
-            for j in range(N_CORPUS_MINHASH)
+            h.alias(f"m{j}")
+            for j, h in enumerate(hashing.minhash("shingle", N_CORPUS_MINHASH, "c"))
         ],
         F.count("*").alias("sz"),
     )
@@ -1034,14 +1030,12 @@ _CDC_WSUM = " + ".join(
     for j in range(CDC_WINDOW)
 )
 
-_SHINGLES_CTE = r"""
+_SHINGLES_CTE = f"""
     WITH toks AS (
-        SELECT doc_id, regexp_extract_all(text, '\S+') AS t FROM documents
+        SELECT doc_id, {tx.tokens_sql("text")} AS t FROM documents
     ), sh AS (
-        SELECT doc_id, UNNEST(list_distinct(list_transform(
-                   range(1, GREATEST(len(t) - 2, 0) + 1),
-                   i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2]
-               ))) AS shingle
+        SELECT doc_id,
+               UNNEST(list_distinct({tx.ngrams_sql("t", SHINGLE_N)})) AS shingle
         FROM toks
     )
 """
@@ -1068,7 +1062,10 @@ _PAIR_SQL_TAIL = """
 _MINHASH_CAND_CTE = f"""
     , msig AS (
         SELECT doc_id,
-               {", ".join(f"MIN(md5('{j}:' || shingle)) AS h{j}" for j in range(N_MINHASH))}
+               {", ".join(
+                   f"{h} AS h{j}"
+                   for j, h in enumerate(hashing.minhash_sql("shingle", N_MINHASH))
+               )}
         FROM sh GROUP BY doc_id
     ), bands AS (
         SELECT doc_id, b.band_id,
@@ -1090,10 +1087,10 @@ _MINHASH_CAND_CTE = f"""
 # Per-document SimHash signature (stok → … → ssig), standalone over
 # ``documents`` — shared by the SimHash group oracle and the candidate
 # quality report.
-_SIMHASH_SIG_CTE = r"""
+_SIMHASH_SIG_CTE = f"""
     stok AS (
         SELECT DISTINCT doc_id, md5(t.t) AS h
-        FROM documents, UNNEST(list_distinct(regexp_extract_all(text, '\S+'))) AS t(t)
+        FROM documents, UNNEST(list_distinct({tx.tokens_sql("text")})) AS t(t)
     ), spos AS (
         SELECT doc_id, p.p AS p,
                strpos('0123456789abcdef', substr(h, p.p, 1)) - 1 AS nib
@@ -1375,16 +1372,13 @@ ORACLE["dedup_containment_pairs"] = (
 """
 )
 
-ORACLE["dedup_span_stats"] = rf"""
+ORACLE["dedup_span_stats"] = f"""
     WITH toks AS (
-        SELECT doc_id, lang, regexp_extract_all(text, '\S+') AS t
+        SELECT doc_id, lang, {tx.tokens_sql("text")} AS t
         FROM documents
     ), spans AS (
-        SELECT doc_id, lang,
-               md5(list_aggregate(
-                   list_slice(t, s.s, s.s + {SPAN_TOKENS} - 1),
-                   'string_agg', ' ')) AS h
-        FROM toks, UNNEST(range(1, len(t) - {SPAN_TOKENS} + 2)) AS s(s)
+        SELECT doc_id, lang, md5(g.g) AS h
+        FROM toks, UNNEST({tx.ngrams_sql("t", SPAN_TOKENS)}) AS g(g)
     ), per_span AS (
         SELECT lang, h, COUNT(*) AS n_pos, COUNT(DISTINCT doc_id) AS n_docs
         FROM spans GROUP BY lang, h
@@ -1409,7 +1403,12 @@ ORACLE["dedup_corpus_overlap"] = (
         FROM sh s JOIN documents d ON s.doc_id = d.doc_id
     ), csig AS (
         SELECT source,
-               {", ".join(f"MIN(md5('c{j}:' || shingle)) AS m{j}" for j in range(N_CORPUS_MINHASH))},
+               {", ".join(
+                   f"{h} AS m{j}"
+                   for j, h in enumerate(
+                       hashing.minhash_sql("shingle", N_CORPUS_MINHASH, "c")
+                   )
+               )},
                COUNT(*) AS sz
         FROM gsh GROUP BY source
     ), ovl AS (

@@ -32,10 +32,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from automotive_big_data_analysis_spark.catalog import load_table
-from automotive_big_data_analysis_spark.operators.sampling import (
-    _bucket_sql,
-    hash_bucket,
-)
+from automotive_big_data_analysis_spark.functions import hashing
 from automotive_big_data_analysis_spark.sources import stored
 
 MAINT_LOCATION = "/tmp/abda_maintenance"
@@ -48,7 +45,7 @@ US_PER_DAY = 86_400_000_000
 
 def _frag_col():
     """Content-keyed fragment id — stable across engines and layouts."""
-    return hash_bucket(F.col("event_id").cast("string"), N_FRAGMENTS)
+    return hashing.bucket(F.col("event_id").cast("string"), N_FRAGMENTS)
 
 
 def _events_us(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -262,7 +259,7 @@ def clustering_advisor(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounds = ev.agg(F.min(day).alias("dmin"), F.max(day).alias("dmax"))
     base = ev.select(
         day.alias("day"),
-        hash_bucket(F.col("user_id").cast("string"), N_LEVELS).alias("u16"),
+        hashing.bucket(F.col("user_id").cast("string"), N_LEVELS).alias("u16"),
     ).join(F.broadcast(bounds))
     cells = (
         base.select(
@@ -358,7 +355,7 @@ _DAY = f"(EPOCH_US(ts) // {US_PER_DAY})"
 
 _SKIP_SQL = f"""
     WITH ev AS (
-        SELECT {_bucket_sql("CAST(event_id AS VARCHAR)", N_FRAGMENTS)}
+        SELECT {hashing.bucket_sql("CAST(event_id AS VARCHAR)", N_FRAGMENTS)}
                    AS frag,
                {_DAY} AS day
         FROM events
@@ -398,7 +395,7 @@ ORACLE: dict[str, str] = {
     "maintenance_layout_skipping": _SKIP_SQL,
     "maintenance_compaction_plan": f"""
         WITH inv AS (
-            SELECT {_bucket_sql("CAST(event_id AS VARCHAR)", N_FRAGMENTS)}
+            SELECT {hashing.bucket_sql("CAST(event_id AS VARCHAR)", N_FRAGMENTS)}
                        AS frag,
                    COUNT(*) AS n_rows
             FROM events GROUP BY 1
@@ -426,7 +423,7 @@ _Z_SQL = " + ".join(
 ORACLE["maintenance_clustering_advisor"] = f"""
     WITH ev AS (
         SELECT {_DAY} AS day,
-               {_bucket_sql("CAST(user_id AS VARCHAR)", N_LEVELS)} AS u16
+               {hashing.bucket_sql("CAST(user_id AS VARCHAR)", N_LEVELS)} AS u16
         FROM events
     ), b AS (
         SELECT MIN(day) AS dmin, MAX(day) AS dmax FROM ev

@@ -30,13 +30,10 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from automotive_big_data_analysis_spark.catalog import load_table, spread
+from automotive_big_data_analysis_spark.functions import hashing
 from automotive_big_data_analysis_spark.functions import text as tx
 from automotive_big_data_analysis_spark.operators import dedup
-from automotive_big_data_analysis_spark.operators.sampling import (
-    SAMPLE_BUCKETS,
-    _bucket_sql,
-    hash_bucket,
-)
+from automotive_big_data_analysis_spark.operators.sampling import SAMPLE_BUCKETS
 
 QUALITY_MIN = 0.4
 SAMPLE_PERMILLE = 1000  # keep everything by default; tests dial it down
@@ -76,7 +73,9 @@ def mark_documents(
         .withColumn("_near", F.lit(1))
     )
     marked = ranked.join(near_removed, "doc_id", "left")
-    in_sample = hash_bucket(F.col("clean_text")) < sample_permille
+    in_sample = (
+        hashing.bucket(F.col("clean_text"), SAMPLE_BUCKETS) < sample_permille
+    )
     return marked.withColumn(
         "stage",
         F.when(is_lowq, F.lit("lowq"))
@@ -135,23 +134,7 @@ def curation_report(
 # mark_documents: strip tags → decode entities → redact PII → collapse
 # whitespace → quality → exact-dup rank among quality survivors →
 # near-dup removed set (raw-text n-gram pairs, dedup.py oracle CTEs) →
-# content-hash sample → first-match stage label. Regex patterns are
-# Java/RE2-compatible subsets so both engines match identical spans.
-_CLEAN_SQL = (
-    r"trim(regexp_replace("
-    r"regexp_replace("
-    r"regexp_replace("
-    r"regexp_replace("
-    r"replace(replace(replace(replace(replace("
-    r"regexp_replace(text, '<[^>]*>', ' ', 'g'),"
-    r" '&lt;', '<'), '&gt;', '>'), '&quot;', '\"'), '&#39;', ''''),"
-    r" '&amp;', '&'),"
-    r" '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '<EMAIL>', 'g'),"
-    r" '\+?[0-9][0-9()\-\s]{7,}[0-9]', '<PHONE>', 'g'),"
-    r" '\b(?:[0-9]{1,3}\.){3}[0-9]{1,3}\b', '<IP>', 'g'),"
-    r" '\s+', ' ', 'g'))"
-)
-
+# content-hash sample → first-match stage label.
 _REPORT_SQL = (
     dedup._SHINGLES_CTE
     + dedup._PAIR_SQL_TAIL
@@ -160,19 +143,12 @@ _REPORT_SQL = (
         SELECT DISTINCT doc_b AS doc_id FROM pairs
         WHERE jaccard >= {dedup.JACCARD_THRESHOLD}
     ), cleaned AS (
-        SELECT doc_id, lang, {_CLEAN_SQL} AS clean_text
+        SELECT doc_id, lang, {tx.clean_text_sql("text")} AS clean_text
         FROM documents
-    ), scored AS (
-        SELECT doc_id, lang, clean_text,
-               len(regexp_extract_all(clean_text, '\S+')) AS n_tok,
-               length(clean_text) AS n_chars,
-               len(list_filter(regexp_extract_all(clean_text, '\S+'),
-                   x -> lower(x) IN ({tx.STOP_ALL_SQL}))) AS n_stop
-        FROM cleaned
     ), quality AS (
         SELECT doc_id, lang, clean_text,
-               {tx.QUALITY_SQL} AS quality
-        FROM scored
+               {tx.quality_score_sql("clean_text")} AS quality
+        FROM cleaned
     ), ranked AS (
         SELECT *, ROW_NUMBER() OVER (
             PARTITION BY CASE WHEN quality < __QMIN__
@@ -186,8 +162,8 @@ _REPORT_SQL = (
                CASE WHEN q.quality < __QMIN__ THEN 'lowq'
                     WHEN q.rn > 1 THEN 'exact_dup'
                     WHEN r.doc_id IS NOT NULL THEN 'near_dup'
-                    WHEN {_bucket_sql("q.clean_text")} >= __PERMILLE__
-                         THEN 'sampled_out'
+                    WHEN {hashing.bucket_sql("q.clean_text", SAMPLE_BUCKETS)}
+                         >= __PERMILLE__ THEN 'sampled_out'
                     ELSE 'kept' END AS stage
         FROM ranked q LEFT JOIN removed r ON q.doc_id = r.doc_id
     )

@@ -287,12 +287,10 @@ def docs_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_TOKENS = r"regexp_extract_all(text, '\S+')"
-
 ORACLE: dict[str, str] = {
     "docs_chunk_stats": f"""
         WITH toks AS (
-            SELECT lang, {_TOKENS} AS t FROM documents
+            SELECT lang, {tx.tokens_sql("text")} AS t FROM documents
         ), chunks AS (
             SELECT lang,
                    md5(list_aggregate(
@@ -321,7 +319,7 @@ ORACLE: dict[str, str] = {
 _BM25_CTE = rf"""
     WITH toks AS (
         SELECT doc_id,
-               list_transform({_TOKENS}, t -> lower(t)) AS t
+               list_transform({tx.tokens_sql("text")}, t -> lower(t)) AS t
         FROM documents
     ), posting AS (
         SELECT doc_id, u.term
@@ -366,8 +364,6 @@ ORACLE["docs_bm25_topk"] = (
 """
 )
 
-_EMB_V = "list_transform(embedding, x -> CAST(x AS DOUBLE))"
-
 ORACLE["docs_hybrid_rrf"] = (
     _BM25_CTE
     + f"""
@@ -382,15 +378,13 @@ ORACLE["docs_hybrid_rrf"] = (
                    AS INTEGER) AS bm25_rank
         FROM bscore QUALIFY bm25_rank <= {RRF_DEPTH}
     ), exq AS (
-        SELECT {_EMB_V} AS qv
+        SELECT {V.as_double_sql("embedding")} AS qv
         FROM embeddings e JOIN branked b
           ON e.vec_id = b.doc_id AND b.bm25_rank = 1
     ), dscore AS (
         SELECT vec_id AS doc_id,
-               ROUND(list_dot_product(qv, v)
-                     / (sqrt(list_dot_product(qv, qv))
-                        * sqrt(list_dot_product(v, v))), 6) AS cos
-        FROM (SELECT vec_id, {_EMB_V} AS v FROM embeddings)
+               ROUND({V.cosine_sql("qv", "v")}, 6) AS cos
+        FROM (SELECT vec_id, {V.as_double_sql("embedding")} AS v FROM embeddings)
         CROSS JOIN exq
     ), dranked AS (
         SELECT doc_id,

@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 
 from automotive_big_data_analysis_spark.catalog import load_table, spread
 from automotive_big_data_analysis_spark.functions import exact as ex
+from automotive_big_data_analysis_spark.functions import hashing
 
 
 def small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -304,19 +305,6 @@ BLOOM_BUCKETS = 4096  # bits per hash table
 BLOOM_HASHES = 2
 
 
-def _bloom_bucket(key, j: int):
-    """Bucket of hash function ``j`` in [0, BLOOM_BUCKETS) — md5-keyed so
-    the DuckDB oracle computes the identical bit positions."""
-    return (
-        F.conv(
-            F.substring(F.md5(F.concat(F.lit(f"b{j}:"), key.cast("string"))), 1, 8),
-            16,
-            10,
-        ).cast("long")
-        % BLOOM_BUCKETS
-    )
-
-
 def bloom_prune_join_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Runtime Bloom-filter join pruning, made explicit and measured —
     the semi-join reduction every engine applies when a selective dim
@@ -351,7 +339,9 @@ def bloom_prune_join_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
                     *[
                         F.struct(
                             F.lit(j).alias("j"),
-                            _bloom_bucket(F.col("c_custkey"), j).alias("bucket"),
+                            hashing.bucket(
+                                F.col("c_custkey"), BLOOM_BUCKETS, f"b{j}:"
+                            ).alias("bucket"),
                         )
                         for j in range(BLOOM_HASHES)
                     ]
@@ -364,7 +354,9 @@ def bloom_prune_join_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     probe = orders.select(
         "o_custkey",
         *[
-            _bloom_bucket(F.col("o_custkey"), j).alias(f"b{j}")
+            hashing.bucket(F.col("o_custkey"), BLOOM_BUCKETS, f"b{j}:").alias(
+                f"b{j}"
+            )
             for j in range(BLOOM_HASHES)
         ],
     )
@@ -505,24 +497,19 @@ ORACLE["cube_order_stats"] = f"""
     GROUP BY CUBE (o_orderstatus, o_orderpriority)
 """
 
-def _bloom_bucket_sql(prefix: str, key_sql: str) -> str:
-    return (
-        f"(('0x' || substr(md5('{prefix}:' || CAST({key_sql} AS VARCHAR)),"
-        f" 1, 8))::BIGINT % {BLOOM_BUCKETS})"
-    )
-
-
 ORACLE["bloom_prune_join_stats"] = f"""
     WITH dim AS (
         SELECT c_custkey FROM customer WHERE c_mktsegment = 'AUTOMOBILE'
     ), b0 AS (
-        SELECT DISTINCT {_bloom_bucket_sql("b0", "c_custkey")} AS b FROM dim
+        SELECT DISTINCT {hashing.bucket_sql("c_custkey", BLOOM_BUCKETS, "b0:")} AS b
+        FROM dim
     ), b1 AS (
-        SELECT DISTINCT {_bloom_bucket_sql("b1", "c_custkey")} AS b FROM dim
+        SELECT DISTINCT {hashing.bucket_sql("c_custkey", BLOOM_BUCKETS, "b1:")} AS b
+        FROM dim
     ), flags AS (
-        SELECT CASE WHEN {_bloom_bucket_sql("b0", "o_custkey")}
+        SELECT CASE WHEN {hashing.bucket_sql("o_custkey", BLOOM_BUCKETS, "b0:")}
                         IN (SELECT b FROM b0)
-                    AND {_bloom_bucket_sql("b1", "o_custkey")}
+                    AND {hashing.bucket_sql("o_custkey", BLOOM_BUCKETS, "b1:")}
                         IN (SELECT b FROM b1)
                     THEN 1 ELSE 0 END AS pass,
                CASE WHEN o_custkey IN (SELECT c_custkey FROM dim)

@@ -23,6 +23,8 @@ from pyspark.sql import functions as F
 
 from automotive_big_data_analysis_spark.catalog import load_table
 from automotive_big_data_analysis_spark.functions import exact as ex
+from automotive_big_data_analysis_spark.functions import hashing
+from automotive_big_data_analysis_spark.functions import text as tx
 
 SAMPLE_BUCKETS = 1000
 
@@ -32,27 +34,13 @@ STRATA_RATES = {"en": 600, "zh": 400, "de": 300, "fr": 200}
 DEFAULT_RATE = 100
 
 
-def hash_bucket(key: Column, buckets: int = SAMPLE_BUCKETS) -> Column:
-    """Uniform bucket in [0, buckets) from the md5 of a stable row key.
-
-    The first 8 hex chars give 32 uniform bits — plenty for a permille
-    decision; ``conv`` runs JVM-side inside codegen."""
-    return (
-        F.conv(F.substring(F.md5(key), 1, 8), 16, 10).cast("long") % buckets
-    )
-
-
-def _bucket_sql(key_sql: str, buckets: int = SAMPLE_BUCKETS) -> str:
-    return f"(('0x' || substr(md5({key_sql}), 1, 8))::BIGINT % {buckets})"
-
-
 def lineitem_sample_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-returnflag aggregates over a deterministic 5% lineitem sample,
     with exact-population counts alongside so the sampling error is
     visible. One scan, no shuffle before the groupBy."""
     li = load_table(spark, sf_dir, "lineitem")
     key = F.concat_ws(":", F.col("l_orderkey"), F.col("l_linenumber"))
-    in_sample = (hash_bucket(key) < 50).cast("int")
+    in_sample = (hashing.bucket(key, SAMPLE_BUCKETS) < 50).cast("int")
     return (
         li.select("l_returnflag", "l_quantity", "l_extendedprice", in_sample.alias("s"))
         .groupBy("l_returnflag")
@@ -77,7 +65,8 @@ def stratified_document_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     rate = F.lit(DEFAULT_RATE)
     for lang, permille in STRATA_RATES.items():
         rate = F.when(F.col("lang") == lang, F.lit(permille)).otherwise(rate)
-    sampled = docs.where(hash_bucket(F.col("doc_id").cast("string")) < rate)
+    b = hashing.bucket(F.col("doc_id").cast("string"), SAMPLE_BUCKETS)
+    sampled = docs.where(b < rate)
     return (
         sampled.groupBy("lang")
         .agg(
@@ -96,7 +85,7 @@ def orders_sample_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     the oracle verifies both membership and disjointness (counts sum to
     the table total)."""
     orders = load_table(spark, sf_dir, "orders")
-    b = hash_bucket(F.col("o_orderkey").cast("string"))
+    b = hashing.bucket(F.col("o_orderkey").cast("string"), SAMPLE_BUCKETS)
     split = (
         F.when(b < 800, "train").when(b < 900, "val").otherwise("test")
     )
@@ -125,13 +114,11 @@ def weighted_document_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     double product on both engines — a bare int cast would diverge
     (Spark truncates, DuckDB rounds). Per-lang audit output; sampled
     quality averages accumulate in DECIMAL."""
-    from automotive_big_data_analysis_spark.functions import text as tx
-
     docs = load_table(spark, sf_dir, "documents")
     q = tx.quality_score("text")
     thresh = F.floor(q * WEIGHT_SCALE)
     inc = (
-        hash_bucket(F.col("doc_id").cast("string")) < thresh
+        hashing.bucket(F.col("doc_id").cast("string"), SAMPLE_BUCKETS) < thresh
     ).cast("int")
     marked = docs.select("lang", q.alias("q"), inc.alias("s"))
     return (
@@ -152,7 +139,7 @@ def weighted_document_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _split_col(key: Column):
     """80/10/10 split from the content-keyed hash bucket of ``key``."""
-    b = hash_bucket(key.cast("string"))
+    b = hashing.bucket(key.cast("string"), SAMPLE_BUCKETS)
     return (
         F.when(b < 800, "train").when(b < 900, "val").otherwise("test")
     )
@@ -260,6 +247,7 @@ def leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _LI_KEY = "CAST(l_orderkey AS VARCHAR) || ':' || CAST(l_linenumber AS VARCHAR)"
+_DOC_B = hashing.bucket_sql("CAST(doc_id AS VARCHAR)", SAMPLE_BUCKETS)
 
 ORACLE: dict[str, str] = {
     "sample_lineitem_stats": f"""
@@ -270,7 +258,8 @@ ORACLE: dict[str, str] = {
                {ex.dsum_sql("s * l_extendedprice")} AS sample_revenue
         FROM (
             SELECT l_returnflag, l_quantity, l_extendedprice,
-                   CASE WHEN {_bucket_sql(_LI_KEY)} < 50 THEN 1 ELSE 0 END AS s
+                   CASE WHEN {hashing.bucket_sql(_LI_KEY, SAMPLE_BUCKETS)} < 50
+                        THEN 1 ELSE 0 END AS s
             FROM lineitem
         ) GROUP BY l_returnflag ORDER BY l_returnflag
     """,
@@ -279,46 +268,18 @@ ORACLE: dict[str, str] = {
                ROUND(AVG(n_chars), 6) AS avg_chars,
                MIN(doc_id) AS min_doc, MAX(doc_id) AS max_doc
         FROM documents
-        WHERE {_bucket_sql("CAST(doc_id AS VARCHAR)")} <
+        WHERE {_DOC_B} <
               CASE {" ".join(f"WHEN lang = '{lang}' THEN {r}" for lang, r in STRATA_RATES.items())}
                    ELSE {DEFAULT_RATE} END
         GROUP BY lang ORDER BY lang
     """,
-    "sample_weighted_documents": None,  # filled below (needs quality SQL)
-    "sample_orders_split": f"""
-        SELECT CASE WHEN b < 800 THEN 'train'
-                    WHEN b < 900 THEN 'val'
-                    ELSE 'test' END AS split,
-               COUNT(*) AS n_orders,
-               {ex.dsum_sql("o_totalprice")} AS revenue
-        FROM (
-            SELECT o_totalprice,
-                   {_bucket_sql("CAST(o_orderkey AS VARCHAR)")} AS b
-            FROM orders
-        ) GROUP BY 1 ORDER BY 1
-    """,
-}
-
-def _weighted_sql() -> str:
-    from automotive_big_data_analysis_spark.functions import text as tx
-
-    toks = r"regexp_extract_all(text, '\S+')"
-    return rf"""
-        WITH scored AS (
-            SELECT lang, doc_id,
-                   len({toks}) AS n_tok,
-                   length(text) AS n_chars,
-                   len(list_filter({toks},
-                       x -> lower(x) IN ({tx.STOP_ALL_SQL}))) AS n_stop
+    "sample_weighted_documents": f"""
+        WITH q AS (
+            SELECT lang, doc_id, {tx.quality_score_sql("text")} AS q
             FROM documents
-        ), q AS (
-            SELECT lang, doc_id,
-                   {tx.QUALITY_SQL} AS q
-            FROM scored
         ), marked AS (
             SELECT lang, q,
-                   CASE WHEN {_bucket_sql("CAST(doc_id AS VARCHAR)")}
-                             < FLOOR(q * {WEIGHT_SCALE})
+                   CASE WHEN {_DOC_B} < FLOOR(q * {WEIGHT_SCALE})
                         THEN 1 ELSE 0 END AS s
             FROM q
         )
@@ -328,10 +289,21 @@ def _weighted_sql() -> str:
                      / NULLIF(SUM(s), 0), 6) AS avg_quality_sampled,
                ROUND(SUM(s) / CAST(COUNT(*) AS DOUBLE), 6) AS keep_rate
         FROM marked GROUP BY lang ORDER BY lang
-    """
-
-
-ORACLE["sample_weighted_documents"] = _weighted_sql()
+    """,
+    "sample_orders_split": f"""
+        SELECT CASE WHEN b < 800 THEN 'train'
+                    WHEN b < 900 THEN 'val'
+                    ELSE 'test' END AS split,
+               COUNT(*) AS n_orders,
+               {ex.dsum_sql("o_totalprice")} AS revenue
+        FROM (
+            SELECT o_totalprice,
+                   {hashing.bucket_sql("CAST(o_orderkey AS VARCHAR)", SAMPLE_BUCKETS)}
+                       AS b
+            FROM orders
+        ) GROUP BY 1 ORDER BY 1
+    """,
+}
 
 
 def _leakage_sql() -> str:
@@ -340,8 +312,10 @@ def _leakage_sql() -> str:
     then the identical md5 split arithmetic for both policies."""
     from automotive_big_data_analysis_spark.operators import dedup
 
-    doc_b = _bucket_sql("CAST(d.doc_id AS VARCHAR)")
-    grp_b = _bucket_sql("CAST(COALESCE(c.component, d.doc_id) AS VARCHAR)")
+    doc_b = hashing.bucket_sql("CAST(d.doc_id AS VARCHAR)", SAMPLE_BUCKETS)
+    grp_b = hashing.bucket_sql(
+        "CAST(COALESCE(c.component, d.doc_id) AS VARCHAR)", SAMPLE_BUCKETS
+    )
     return (
         dedup._SHINGLES_CTE.replace("WITH toks", "WITH RECURSIVE toks", 1)
         + dedup._PAIR_SQL_TAIL

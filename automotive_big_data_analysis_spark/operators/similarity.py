@@ -2077,25 +2077,19 @@ def norm_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_V = "list_transform(embedding, x -> CAST(x AS DOUBLE))"
-_COS = (
-    "list_dot_product(q.qv, e.v) / "
-    "(sqrt(list_dot_product(q.qv, q.qv)) * sqrt(list_dot_product(e.v, e.v)))"
-)
-
-
 def _knn_sql(candidate_filter: str) -> str:
     sig = V.lsh_signature_sql("v", V.HYPERPLANES)
     return f"""
         WITH e AS (
-            SELECT vec_id, label, {_V} AS v,
+            SELECT vec_id, label, {V.as_double_sql("embedding")} AS v,
                    {sig} AS sig
             FROM embeddings
         ), q AS (
             SELECT vec_id AS query_id, v AS qv, sig AS qsig FROM e
             WHERE vec_id < {N_QUERIES}
         ), scored AS (
-            SELECT q.query_id, e.vec_id, ROUND({_COS}, 6) AS cosine
+            SELECT q.query_id, e.vec_id,
+                   ROUND({V.cosine_sql("q.qv", "e.v")}, 6) AS cosine
             FROM e CROSS JOIN q
             WHERE e.vec_id != q.query_id AND ({candidate_filter})
         ), ranked AS (
@@ -2133,12 +2127,11 @@ _PARAMS_CTE = f"""
 def _km_assign_sql(cent: str, out: str) -> str:
     """One Lloyd assignment round: nearest centroid by squared L2 with a
     centroid-id tiebreak (same fold order as Spark's sq_dist)."""
-    diff = f"list_transform(range(1, {V.DIM} + 1), i -> e.v[i] - c.cv[i])"
     return f"""
     , {out} AS (
         SELECT vec_id, v, cid, d2 FROM (
             SELECT e.vec_id, e.v, c.cid,
-                   list_dot_product({diff}, {diff}) AS d2,
+                   {V.sq_dist_sql("e.v", "c.cv")} AS d2,
                    ROW_NUMBER() OVER (
                        PARTITION BY e.vec_id ORDER BY d2, c.cid) AS r
             FROM e CROSS JOIN {cent} c
@@ -2189,12 +2182,10 @@ _TRAIN_CTES = (
 
 _IVF_SQL = f"""
     WITH e AS (
-        SELECT vec_id, {_V} AS v FROM embeddings
+        SELECT vec_id, {V.as_double_sql("embedding")} AS v FROM embeddings
     ){_TRAIN_CTES}, scored_cells AS (
         SELECT e.vec_id, e.v, s.cell_id,
-               ROUND(list_dot_product(e.v, s.cv)
-                     / (sqrt(list_dot_product(e.v, e.v))
-                        * sqrt(list_dot_product(s.cv, s.cv))), 6) AS cell_cos
+               ROUND({V.cosine_sql("e.v", "s.cv")}, 6) AS cell_cos
         FROM e CROSS JOIN seeds s
     ), ranked_cells AS (
         SELECT vec_id, v, cell_id, cell_cos,
@@ -2211,9 +2202,7 @@ _IVF_SQL = f"""
         SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id < {N_QUERIES}
     ), scored AS (
         SELECT p.query_id, a.vec_id,
-               ROUND(list_dot_product(q.qv, a.v)
-                     / (sqrt(list_dot_product(q.qv, q.qv))
-                        * sqrt(list_dot_product(a.v, a.v))), 6) AS cosine
+               ROUND({V.cosine_sql("q.qv", "a.v")}, 6) AS cosine
         FROM probes p
         JOIN assign a ON a.cell_id = p.cell_id AND a.vec_id != p.query_id
         JOIN q ON q.query_id = p.query_id
@@ -2229,12 +2218,10 @@ _IVF_SQL = f"""
 
 _IVF_FILTERED_SQL = f"""
     WITH e AS (
-        SELECT vec_id, label, {_V} AS v FROM embeddings
+        SELECT vec_id, label, {V.as_double_sql("embedding")} AS v FROM embeddings
     ){_TRAIN_CTES}, scored_cells AS (
         SELECT e.vec_id, e.label, e.v, s.cell_id,
-               ROUND(list_dot_product(e.v, s.cv)
-                     / (sqrt(list_dot_product(e.v, e.v))
-                        * sqrt(list_dot_product(s.cv, s.cv))), 6) AS cell_cos
+               ROUND({V.cosine_sql("e.v", "s.cv")}, 6) AS cell_cos
         FROM e CROSS JOIN seeds s
     ), ranked_cells AS (
         SELECT vec_id, label, v, cell_id, cell_cos,
@@ -2252,9 +2239,7 @@ _IVF_FILTERED_SQL = f"""
         SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id < {N_QUERIES}
     ), scored AS (
         SELECT p.query_id, a.vec_id,
-               ROUND(list_dot_product(q.qv, a.v)
-                     / (sqrt(list_dot_product(q.qv, q.qv))
-                        * sqrt(list_dot_product(a.v, a.v))), 6) AS cosine
+               ROUND({V.cosine_sql("q.qv", "a.v")}, 6) AS cosine
         FROM probes p
         JOIN assign a ON a.cell_id = p.cell_id AND a.vec_id != p.query_id
         JOIN q ON q.query_id = p.query_id
@@ -2289,7 +2274,7 @@ ORACLE: dict[str, str] = {
     "knn_ivf_filtered": _IVF_FILTERED_SQL,
     "embedding_cosine_dups": None,  # filled below
     "embedding_label_centroids": f"""
-        WITH e AS (SELECT label, {_V} AS v FROM embeddings),
+        WITH e AS (SELECT label, {V.as_double_sql("embedding")} AS v FROM embeddings),
         x AS (
             SELECT label, d.d AS dim, v[d.d + 1] AS x
             FROM e CROSS JOIN (SELECT UNNEST(range(0, {V.DIM})) AS d) AS d
@@ -2300,7 +2285,7 @@ ORACLE: dict[str, str] = {
     """,
     "embedding_norm_stats": f"""
         WITH e AS (
-            SELECT label, sqrt(list_dot_product({_V}, {_V})) AS nrm
+            SELECT label, {V.norm_sql(V.as_double_sql("embedding"))} AS nrm
             FROM embeddings
         )
         SELECT label, COUNT(*) AS n_vectors,
@@ -2312,15 +2297,19 @@ ORACLE: dict[str, str] = {
 }
 
 
+# L2-normalized double image of the embedding (unit-safe for PQ: for
+# unit vectors ADC's squared-L2 ordering equals the cosine ordering)
+_VN = f"list_transform(v, x -> x / {V.norm_sql('v')})"
+
+
 def _dup_sql() -> str:
     # mirror the Spark plan exactly: L2-normalize first, then plain dot
     return f"""
         WITH e AS (
-            SELECT vec_id, {_V} AS v FROM embeddings
+            SELECT vec_id, {V.as_double_sql("embedding")} AS v FROM embeddings
         ), n AS (
             SELECT vec_id,
-                   list_transform(v, x -> x / sqrt(list_dot_product(v, v)))
-                       AS vn
+                   {_VN} AS vn
             FROM e
         )
         SELECT * FROM (
@@ -2354,7 +2343,7 @@ ORACLE["embedding_semantic_keep_stats"] = f"""
 ORACLE["embedding_kmeans"] = (
     f"""
     WITH e AS (
-        SELECT vec_id, {_V} AS v FROM embeddings
+        SELECT vec_id, {V.as_double_sql("embedding")} AS v FROM embeddings
     ){_TRAIN_CTES}"""
     + _km_assign_sql("tc2", "af")
     + f"""
@@ -2365,22 +2354,16 @@ ORACLE["embedding_kmeans"] = (
 """
 )
 
-# L2-normalized double image of the embedding (unit-safe for PQ: for
-# unit vectors ADC's squared-L2 ordering equals the cosine ordering)
-_VN = "list_transform(v, x -> x / sqrt(list_dot_product(v, v)))"
 
 def _pq_assign_sql(cent: str, out: str) -> str:
     """One per-subspace Lloyd assignment round: nearest sub-centroid by
     squared L2 with a (d2, cid) tiebreak — ``m`` rides along as a plain
     grouping column, so one CTE trains all PQ_M subspaces."""
-    diff = (
-        f"list_transform(range(1, {PQ_SUBDIM} + 1), i -> s.sv[i] - c.sc[i])"
-    )
     return f"""
     , {out} AS (
         SELECT vec_id, m, sv, cid FROM (
             SELECT s.vec_id, s.m, s.sv, c.cid,
-                   list_dot_product({diff}, {diff}) AS d2,
+                   {V.sq_dist_sql("s.sv", "c.sc", PQ_SUBDIM)} AS d2,
                    ROW_NUMBER() OVER (
                        PARTITION BY s.vec_id, s.m ORDER BY d2, c.cid) AS r
             FROM subs s JOIN {cent} c ON c.m = s.m
@@ -2439,11 +2422,7 @@ def _pq_ctes() -> str:
     , sseeds AS (SELECT m, cid AS cell_id, sc FROM sc2)
     , dists AS (
         SELECT s.vec_id, s.m, ss.cell_id,
-               list_dot_product(
-                   list_transform(range(1, {PQ_SUBDIM} + 1),
-                                  i -> s.sv[i] - ss.sc[i]),
-                   list_transform(range(1, {PQ_SUBDIM} + 1),
-                                  i -> s.sv[i] - ss.sc[i])) AS d2
+               {V.sq_dist_sql("s.sv", "ss.sc", PQ_SUBDIM)} AS d2
         FROM subs s JOIN sseeds ss ON s.m = ss.m
     ), codes AS (
         SELECT vec_id, m, cell_id AS code FROM (
@@ -2460,7 +2439,7 @@ def _pq_ctes() -> str:
 
 ORACLE["knn_pq"] = f"""
     WITH e AS (
-        SELECT vec_id, {_V} AS v FROM embeddings
+        SELECT vec_id, {V.as_double_sql("embedding")} AS v FROM embeddings
     ){_pq_ctes()}, scored AS (
         SELECT q.query_id, c.vec_id,
                SUM(CAST(q.qd2 AS {ex.SQL_DEC})) AS adec
@@ -2486,12 +2465,10 @@ def _ivfpq_sql(rerank: bool) -> str:
     SQL mirror of :func:`knn_ivfpq` / :func:`knn_ivfpq_rerank`)."""
     prefix = f"""
     WITH e AS (
-        SELECT vec_id, {_V} AS v FROM embeddings
+        SELECT vec_id, {V.as_double_sql("embedding")} AS v FROM embeddings
     ){_TRAIN_CTES}, cr AS (
         SELECT e.vec_id, s.cell_id,
-               ROUND(list_dot_product(e.v, s.cv)
-                     / (sqrt(list_dot_product(e.v, e.v))
-                        * sqrt(list_dot_product(s.cv, s.cv))), 6) AS cell_cos
+               ROUND({V.cosine_sql("e.v", "s.cv")}, 6) AS cell_cos
         FROM e CROSS JOIN seeds s
     ), rc AS (
         SELECT vec_id, cell_id, r FROM (
@@ -2547,9 +2524,7 @@ def _ivfpq_sql(rerank: bool) -> str:
         WHERE vec_id < {N_QUERIES}
     ), exact AS (
         SELECT s.query_id, s.vec_id,
-               ROUND(list_dot_product(q.qv, e.v)
-                     / (sqrt(list_dot_product(q.qv, q.qv))
-                        * sqrt(list_dot_product(e.v, e.v))), 6) AS cosine
+               ROUND({V.cosine_sql("q.qv", "e.v")}, 6) AS cosine
         FROM shortlist s
         JOIN e ON e.vec_id = s.vec_id
         JOIN qv q ON q.query_id = s.query_id
@@ -2574,7 +2549,7 @@ ORACLE["knn_ivfpq_rerank"] = _ivfpq_sql(rerank=True)
 # integer codes, and the symmetric integer dot. Every ranked comparison
 # is BIGINT, so the replay is bit-deterministic by construction.
 ORACLE["knn_sq8"] = f"""
-    WITH e AS (SELECT vec_id, {_V} AS v FROM embeddings),
+    WITH e AS (SELECT vec_id, {V.as_double_sql("embedding")} AS v FROM embeddings),
     u AS (SELECT vec_id, {_VN} AS vn FROM e),
     s AS (
         SELECT {SQ8_LEVELS}.0
@@ -2610,7 +2585,7 @@ ORACLE["knn_sq8"] = f"""
 # chain through ``scored`` is shared with the rerank variant.
 _IVF_SQ8_SCORED_CTES = f"""
     WITH e AS (
-        SELECT vec_id, {_V} AS v FROM embeddings
+        SELECT vec_id, {V.as_double_sql("embedding")} AS v FROM embeddings
     ){_TRAIN_CTES}, u AS (
         SELECT vec_id, {_VN} AS vn FROM e
     ), s8 AS (
@@ -2624,9 +2599,7 @@ _IVF_SQ8_SCORED_CTES = f"""
         FROM u CROSS JOIN s8
     ), scored_cells AS (
         SELECT e.vec_id, s.cell_id,
-               ROUND(list_dot_product(e.v, s.cv)
-                     / (sqrt(list_dot_product(e.v, e.v))
-                        * sqrt(list_dot_product(s.cv, s.cv))), 6) AS cell_cos
+               ROUND({V.cosine_sql("e.v", "s.cv")}, 6) AS cell_cos
         FROM e CROSS JOIN seeds s
     ), ranked_cells AS (
         SELECT vec_id, cell_id, cell_cos,
@@ -2672,9 +2645,7 @@ ORACLE["knn_sq8_rerank"] = f"""{_IVF_SQ8_SCORED_CTES}, sl AS (
         FROM scored
     ), rx AS (
         SELECT s.query_id, s.vec_id,
-               ROUND(list_dot_product(qe.v, e.v)
-                     / (sqrt(list_dot_product(qe.v, qe.v))
-                        * sqrt(list_dot_product(e.v, e.v))), 6) AS cosine
+               ROUND({V.cosine_sql("qe.v", "e.v")}, 6) AS cosine
         FROM sl s
         JOIN e ON e.vec_id = s.vec_id
         JOIN e qe ON qe.vec_id = s.query_id
@@ -2814,20 +2785,16 @@ def _tradeoff_sql() -> str:
         f"({m}, {d})" for m, d in _lsh_probe_masks(LSH_MT_RADIUS)
     )
     tl_vals = ", ".join(f"({x})" for x in range(1, V.LSH_TABLES + 1))
-    cosev = (
-        "ROUND(list_dot_product(q.qv, {v}) / "
-        "(sqrt(list_dot_product(q.qv, q.qv)) * "
-        "sqrt(list_dot_product({v}, {v}))), 6)"
-    )
+    v = V.as_double_sql("embedding")
     return f"""
     WITH e AS (
-        SELECT vec_id, {_V} AS v, {V.lsh_signature_sql(_V, V.HYPERPLANES)} AS sig
+        SELECT vec_id, {v} AS v, {V.lsh_signature_sql(v, V.HYPERPLANES)} AS sig
         FROM embeddings
     ), q AS (
         SELECT vec_id AS query_id, v AS qv, sig AS qsig FROM e
         WHERE vec_id < {N_QUERIES}
     ), bf_sc AS (
-        SELECT q.query_id, e.vec_id, {cosev.format(v="e.v")} AS cosine
+        SELECT q.query_id, e.vec_id, ROUND({V.cosine_sql("q.qv", "e.v")}, 6) AS cosine
         FROM e CROSS JOIN q WHERE e.vec_id != q.query_id
     ), bf AS (
         SELECT query_id, vec_id FROM (
@@ -2841,9 +2808,7 @@ def _tradeoff_sql() -> str:
         SELECT query_id, COUNT(*) AS n_true FROM bf GROUP BY query_id
     ){_TRAIN_CTES}, cr AS (
         SELECT e.vec_id, s.cell_id,
-               ROUND(list_dot_product(e.v, s.cv)
-                     / (sqrt(list_dot_product(e.v, e.v))
-                        * sqrt(list_dot_product(s.cv, s.cv))), 6) AS cell_cos
+               ROUND({V.cosine_sql("e.v", "s.cv")}, 6) AS cell_cos
         FROM e CROSS JOIN seeds s
     ), rc AS (
         SELECT vec_id, cell_id, r FROM (
@@ -2862,7 +2827,8 @@ def _tradeoff_sql() -> str:
         FROM iprobes p
         JOIN ca a ON a.vcell = p.cell_id AND a.vec_id != p.query_id
     ), ivf_scored AS (
-        SELECT c.query_id, c.vec_id, c.pr, {cosev.format(v="c.v")} AS cos
+        SELECT c.query_id, c.vec_id, c.pr,
+               ROUND({V.cosine_sql("q.qv", "c.v")}, 6) AS cos
         FROM icand c JOIN q ON q.query_id = c.query_id
     ){_pq_ctes()}, pq_scored AS (
         SELECT c.query_id, c.vec_id, c.pr,
@@ -2879,9 +2845,7 @@ def _tradeoff_sql() -> str:
         FROM q CROSS JOIN masks m
     ), lsh_scored AS (
         SELECT p.query_id, e.vec_id, p.pr,
-               ROUND(list_dot_product(p.qv, e.v) /
-                     (sqrt(list_dot_product(p.qv, p.qv)) *
-                      sqrt(list_dot_product(e.v, e.v))), 6) AS cos
+               ROUND({V.cosine_sql("p.qv", "e.v")}, 6) AS cos
         FROM e JOIN psigs p
              ON e.sig = p.psig AND e.vec_id != p.query_id
     ), emt AS (
@@ -2901,7 +2865,7 @@ def _tradeoff_sql() -> str:
         GROUP BY 1, 2
     ), mt_scored AS (
         SELECT mp.query_id, mp.vec_id, mp.pr_r, mp.pr_t,
-               {cosev.format(v="e2.v")} AS cos
+               ROUND({V.cosine_sql("q.qv", "e2.v")}, 6) AS cos
         FROM mtpairs mp
         JOIN q ON q.query_id = mp.query_id
         JOIN e e2 ON e2.vec_id = mp.vec_id
@@ -2936,7 +2900,8 @@ def _tradeoff_sql() -> str:
                ) AS pr
         FROM sq8dots
     ), sq8rr_scored AS (
-        SELECT r.query_id, r.vec_id, r.pr, {cosev.format(v="e2.v")} AS cos
+        SELECT r.query_id, r.vec_id, r.pr,
+               ROUND({V.cosine_sql("q.qv", "e2.v")}, 6) AS cos
         FROM sq8rk r
         JOIN q ON q.query_id = r.query_id
         JOIN e e2 ON e2.vec_id = r.vec_id
@@ -2977,7 +2942,7 @@ _FOOTPRINT_CONST_FRONTIER_ROWS = (
 )
 ORACLE["knn_index_footprint"] = f"""
     WITH e AS (
-        SELECT vec_id, {_V} AS v FROM embeddings
+        SELECT vec_id, {V.as_double_sql("embedding")} AS v FROM embeddings
     ){_TRAIN_CTES}{_pq_ctes()}, nl AS (
         SELECT COUNT(*) AS nl FROM (
             SELECT DISTINCT UNNEST([(k + 15) // 16, (k + 7) // 8,
@@ -3063,11 +3028,10 @@ def _projection_quality_sql() -> str:
     pn2 = " + ".join(f"({c}) * ({c})" for c in comps)
     return f"""
         WITH e AS (
-            SELECT label, {_V} AS v FROM embeddings
+            SELECT label, {V.as_double_sql("embedding")} AS v FROM embeddings
         ), r AS (
             SELECT label,
-                   ROUND(sqrt({pn2})
-                         / sqrt(list_dot_product(v, v)), 6) AS r
+                   ROUND(sqrt({pn2}) / {V.norm_sql("v")}, 6) AS r
             FROM e
         )
         SELECT label, COUNT(*) AS n_vectors,
@@ -3085,14 +3049,12 @@ ORACLE["embedding_projection_quality"] = _projection_quality_sql()
 # vectors with the (cosine DESC, cell_id) tie rule, split-labelled.
 ORACLE["knn_index_update_stats"] = f"""
     WITH eall AS (
-        SELECT vec_id, {_V} AS v FROM embeddings
+        SELECT vec_id, {V.as_double_sql("embedding")} AS v FROM embeddings
     ), e AS (
         SELECT * FROM eall WHERE vec_id % {SPLIT_MOD} != 0
     ){_TRAIN_CTES}, sc AS (
         SELECT a.vec_id, s.cell_id,
-               ROUND(list_dot_product(a.v, s.cv)
-                     / (sqrt(list_dot_product(a.v, a.v))
-                        * sqrt(list_dot_product(s.cv, s.cv))), 6) AS c
+               ROUND({V.cosine_sql("a.v", "s.cv")}, 6) AS c
         FROM eall a CROSS JOIN seeds s
     ), asn AS (
         SELECT vec_id, cell_id, c,

@@ -17,10 +17,6 @@ from automotive_big_data_analysis_spark.functions import exact as ex
 from automotive_big_data_analysis_spark.functions import text as tx
 from automotive_big_data_analysis_spark.sources import stored
 
-_STOP_EN_SQL = ", ".join(f"'{w}'" for w in tx.STOPWORDS_EN)
-_STOP_ES_SQL = ", ".join(f"'{w}'" for w in tx.STOPWORDS_ES)
-
-
 def token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per language: document count, token totals/averages, char average.
     One scan, map-side tokenization, |langs|-row shuffle."""
@@ -466,13 +462,11 @@ def _pii_oracle_sql(source_sql: str = "documents") -> str:
     """
 
 
-_TOKENS = r"regexp_extract_all(text, '\S+')"
-
-
 ORACLE: dict[str, str] = {
     "text_token_stats": f"""
         WITH t AS (
-            SELECT lang, len({_TOKENS}) AS n_tok, length(text) AS n_chars
+            SELECT lang, len({tx.tokens_sql("text")}) AS n_tok,
+                   length(text) AS n_chars
             FROM documents
         )
         SELECT lang, COUNT(*) AS n_docs,
@@ -484,10 +478,11 @@ ORACLE: dict[str, str] = {
     "text_quality_scores": f"""
         WITH t AS (
             SELECT doc_id, lang, length(text) AS n_chars,
-                   {_TOKENS} AS toks,
-                   len({_TOKENS}) AS n_tok,
-                   len(list_filter({_TOKENS},
-                       x -> lower(x) IN ({tx.STOP_ALL_SQL}))) AS n_stop
+                   len({tx.tokens_sql("text")}) AS n_tok,
+                   {tx.stopword_count_sql(
+                       tx.tokens_sql("text"), tx.STOPWORDS_EN + tx.STOPWORDS_ES
+                   )} AS n_stop,
+                   {tx.quality_score_sql("text")} AS quality
             FROM documents
         )
         SELECT doc_id, lang,
@@ -498,39 +493,23 @@ ORACLE: dict[str, str] = {
                ROUND(CASE WHEN n_tok > 0
                           THEN CAST(n_chars AS DOUBLE) / n_tok ELSE 0.0 END, 6)
                    AS mean_token_len,
-               {tx.QUALITY_SQL} AS quality
+               quality
         FROM t
     """,
     "text_word_topk": f"""
         SELECT lower(w.w) AS word, COUNT(*) AS n
-        FROM documents, UNNEST({_TOKENS}) AS w(w)
+        FROM documents, UNNEST({tx.tokens_sql("text")}) AS w(w)
         GROUP BY 1 ORDER BY n DESC, word LIMIT 20
     """,
     "text_lang_confusion": f"""
-        WITH t AS (
-            SELECT lang, length(text) AS n_chars,
-                   len(regexp_extract_all(text, '[\\x{{4e00}}-\\x{{9fff}}]'))
-                       AS n_cjk,
-                   len(list_filter({_TOKENS},
-                       x -> lower(x) IN ({_STOP_ES_SQL}))) AS es_hits,
-                   len(list_filter({_TOKENS},
-                       x -> lower(x) IN ({_STOP_EN_SQL}))) AS en_hits
-            FROM documents
-        )
-        SELECT lang,
-               CASE WHEN n_chars = 0 THEN 'unknown'
-                    WHEN n_cjk * 10 > n_chars * 3 THEN 'zh'
-                    WHEN es_hits > en_hits THEN 'es'
-                    ELSE 'en' END AS predicted,
-               COUNT(*) AS n_docs
-        FROM t GROUP BY 1, 2
+        SELECT lang, {tx.lang_id_sql("text")} AS predicted, COUNT(*) AS n_docs
+        FROM documents GROUP BY 1, 2
     """,
     "text_wordpiece_stats": rf"""
         WITH t AS (
             SELECT lang,
-                   len({_TOKENS}) AS n_ws,
-                   len(regexp_extract_all(text,
-                       '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]')) AS n_wp
+                   len({tx.tokens_sql("text")}) AS n_ws,
+                   len({tx.wordpieces_sql("text")}) AS n_wp
             FROM documents
         )
         SELECT lang, COUNT(*) AS n_docs,
@@ -539,11 +518,9 @@ ORACLE: dict[str, str] = {
                {ex.davg_sql("CASE WHEN n_ws > 0 THEN CAST(n_wp AS DOUBLE) / n_ws ELSE 0.0 END")} AS avg_fanout
         FROM t GROUP BY lang
     """,
-    "text_fingerprint_stats": """
+    "text_fingerprint_stats": f"""
         WITH t AS (
-            SELECT source,
-                   md5(trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')))
-                       AS fp
+            SELECT source, {tx.normalized_fingerprint_sql("text")} AS fp
             FROM documents
         )
         SELECT source, COUNT(*) AS n_docs,
@@ -595,13 +572,8 @@ ORACLE["text_lang_trigram_confusion"] = rf"""
 
 ORACLE["text_repetition_stats"] = rf"""
     WITH g AS (
-        SELECT lang,
-               list_transform(
-                   range(1, GREATEST(len({_TOKENS}) - {REP_N - 1}, 0) + 1),
-                   i -> list_aggregate(
-                       list_slice({_TOKENS}, i, i + {REP_N - 1}),
-                       'string_agg', ' ')) AS gs
-        FROM documents
+        SELECT lang, {tx.ngrams_sql("t", REP_N)} AS gs
+        FROM (SELECT lang, {tx.tokens_sql("text")} AS t FROM documents)
     ), r AS (
         SELECT lang,
                CASE WHEN len(gs) > 0
@@ -669,7 +641,7 @@ def tfidf_topterms(spark: SparkSession, sf_dir: str) -> DataFrame:
 ORACLE["text_tfidf_topterms"] = f"""
     WITH tf AS (
         SELECT doc_id, lower(t.w) AS word, COUNT(*) AS tf
-        FROM documents, UNNEST({_TOKENS}) AS t(w)
+        FROM documents, UNNEST({tx.tokens_sql("text")}) AS t(w)
         GROUP BY 1, 2
     ), df AS (
         SELECT word, COUNT(*) AS df FROM tf GROUP BY word
@@ -759,16 +731,13 @@ def collocation_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 ORACLE["text_collocation_lift"] = rf"""
     WITH toks AS (
-        SELECT {_TOKENS} AS t FROM documents
+        SELECT {tx.tokens_sql("text")} AS t FROM documents
     ), uni AS (
         SELECT w.w AS w, COUNT(*) AS c
         FROM toks, UNNEST(t) AS w(w) GROUP BY 1
     ), bi AS (
         SELECT bg.bg AS bg, COUNT(*) AS c_ab
-        FROM toks, UNNEST(list_transform(
-            range(1, GREATEST(len(t) - 1, 0) + 1),
-            i -> t[i] || ' ' || t[i+1]
-        )) AS bg(bg)
+        FROM toks, UNNEST({tx.ngrams_sql("t", 2)}) AS bg(bg)
         GROUP BY 1 HAVING COUNT(*) >= {COLLOC_MIN_PAIRS}
     ), n AS (
         SELECT SUM(GREATEST(len(t) - 1, 0)) AS n_bigrams FROM toks
@@ -875,7 +844,7 @@ def unigram_surprisal(spark: SparkSession, sf_dir: str) -> DataFrame:
 ORACLE["docs_unigram_surprisal"] = f"""
     WITH toks AS (
         SELECT doc_id, lang, lower(t.w) AS word
-        FROM documents, UNNEST({_TOKENS}) AS t(w)
+        FROM documents, UNNEST({tx.tokens_sql("text")}) AS t(w)
     ), freq AS (
         SELECT word, COUNT(*) AS cnt FROM toks GROUP BY word
     ), n AS (

@@ -34,11 +34,9 @@ from pyspark.sql import functions as F
 
 from automotive_big_data_analysis_spark.catalog import load_table, spread
 from automotive_big_data_analysis_spark.functions import exact as ex
+from automotive_big_data_analysis_spark.functions import hashing
 from automotive_big_data_analysis_spark.functions import text as tx
-from automotive_big_data_analysis_spark.operators.sampling import (
-    _bucket_sql,
-    hash_bucket,
-)
+from automotive_big_data_analysis_spark.operators.sampling import SAMPLE_BUCKETS
 
 # --- benchmark contamination ------------------------------------------------
 
@@ -214,7 +212,8 @@ def temperature_rebalance(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs.select("doc_id", "lang")
         .join(F.broadcast(rates), "lang")
         .where(
-            hash_bucket(F.col("doc_id").cast("string")) < F.col("rate_permille")
+            hashing.bucket(F.col("doc_id").cast("string"), SAMPLE_BUCKETS)
+            < F.col("rate_permille")
         )
         .groupBy("lang")
         .agg(F.count("*").alias("n_kept"))
@@ -546,9 +545,7 @@ def _bpe_train_ctes() -> list[str]:
         ctes.append(
             f"""p{r} AS (
             SELECT pair, CAST(SUM(cnt) AS BIGINT) AS c FROM (
-                SELECT cnt, UNNEST(list_transform(
-                    range(1, GREATEST(len(arr), 1)),
-                    i -> arr[i] || ' ' || arr[i+1])) AS pair
+                SELECT cnt, UNNEST({tx.ngrams_sql("arr", 2)}) AS pair
                 FROM (SELECT cnt, string_split(trim(s), ' ') AS arr FROM v{p})
             ) GROUP BY pair
         ), t{r} AS (
@@ -608,20 +605,16 @@ def _bpe_apply_sql() -> str:
 
 # --- DuckDB oracles ---------------------------------------------------------
 
-_TOKENS = r"regexp_extract_all(text, '\S+')"
-_PIECES = r"regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]')"
-
 ORACLE: dict[str, str] = {
     "contamination_stats": f"""
-        WITH grams AS (
+        WITH toks AS (
+            SELECT doc_id, lang, source, {tx.tokens_sql("text")} AS t
+            FROM documents
+        ), grams AS (
             SELECT doc_id, lang, source,
                    list_distinct(list_transform(
-                       range(1, GREATEST(len({_TOKENS}) - {CONTAM_N - 1}, 0) + 1),
-                       i -> md5(list_aggregate(
-                           list_slice({_TOKENS}, i, i + {CONTAM_N - 1}),
-                           'string_agg', ' '))
-                   )) AS gs
-            FROM documents
+                       {tx.ngrams_sql("t", CONTAM_N)}, g -> md5(g))) AS gs
+            FROM toks
         ), bench AS (
             SELECT DISTINCT UNNEST(gs) AS g FROM grams
             WHERE source = '{BENCH_SOURCE}'
@@ -651,7 +644,7 @@ ORACLE: dict[str, str] = {
     "pack_token_shards": f"""
         WITH base AS (
             SELECT doc_id, md5(text) AS h,
-                   CAST(len({_TOKENS}) AS BIGINT) AS tok
+                   CAST(len({tx.tokens_sql("text")}) AS BIGINT) AS tok
             FROM documents
         ), placed AS (
             SELECT tok,
@@ -678,7 +671,8 @@ ORACLE: dict[str, str] = {
         ), kept AS (
             SELECT d.lang, COUNT(*) AS n_kept
             FROM documents d JOIN rates r ON d.lang = r.lang
-            WHERE {_bucket_sql("CAST(d.doc_id AS VARCHAR)")} < r.rate_permille
+            WHERE {hashing.bucket_sql("CAST(d.doc_id AS VARCHAR)", SAMPLE_BUCKETS)}
+                  < r.rate_permille
             GROUP BY d.lang
         )
         SELECT r.lang, r.n_docs, r.rate_permille,
@@ -709,12 +703,9 @@ ORACLE: dict[str, str] = {
     """,
     "text_bpe_pairs": f"""
         WITH pieces AS (
-            SELECT {_PIECES} AS p FROM documents
+            SELECT {tx.wordpieces_sql("text")} AS p FROM documents
         ), pairs AS (
-            SELECT UNNEST(list_transform(
-                range(1, GREATEST(len(p), 1)),
-                i -> p[i] || ' ' || p[i+1])) AS pair
-            FROM pieces
+            SELECT UNNEST({tx.ngrams_sql("p", 2)}) AS pair FROM pieces
         )
         SELECT pair, COUNT(*) AS n FROM pairs
         GROUP BY pair ORDER BY n DESC, pair LIMIT {BPE_TOP_K}

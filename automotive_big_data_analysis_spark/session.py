@@ -28,18 +28,16 @@ DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 def get_spark(
     app_name: str = "automotive_big_data_analysis_spark",
-    master: str | None = None,
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or reuse) the engine's SparkSession.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` for local runs; on a
-    cluster, leave it unset and let spark-submit provide it.
+    The master is ``$SPARK_MASTER`` when set (a cluster URL), else
+    ``local[$SPARK_GRAFT_CPUS]``.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    if master is None:
-        master = os.environ.get("SPARK_MASTER", f"local[{cpus}]")
+    master = os.environ.get("SPARK_MASTER", f"local[{cpus}]")
     if shuffle_partitions is None:
         shuffle_partitions = DEFAULT_SHUFFLE_PARTITIONS
 

@@ -182,28 +182,18 @@ def stream_curated_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _curated_oracle_sql() -> str:
-    """Batch replay of the streaming curation: clean + quality score
-    (the ``pipeline.py`` SQL mirrors), survivors = distinct (lang,
-    cleaned text) among quality passers."""
+    """Batch replay of the streaming curation: clean + quality score,
+    survivors = distinct (lang, cleaned text) among quality passers."""
     from automotive_big_data_analysis_spark.functions import exact as ex
-    from automotive_big_data_analysis_spark.operators.pipeline import (
-        _CLEAN_SQL,
-    )
 
-    return rf"""
+    return f"""
     WITH cleaned AS (
-        SELECT doc_id, lang, {_CLEAN_SQL} AS clean_text FROM documents
-    ), scored AS (
-        SELECT lang, clean_text,
-               len(regexp_extract_all(clean_text, '\S+')) AS n_tok,
-               length(clean_text) AS n_chars,
-               len(list_filter(regexp_extract_all(clean_text, '\S+'),
-                   x -> lower(x) IN ({tx.STOP_ALL_SQL}))) AS n_stop
-        FROM cleaned
+        SELECT doc_id, lang, {tx.clean_text_sql("text")} AS clean_text
+        FROM documents
     ), quality AS (
         SELECT lang, clean_text,
-               {tx.QUALITY_SQL} AS quality
-        FROM scored
+               {tx.quality_score_sql("clean_text")} AS quality
+        FROM cleaned
     ), survivors AS (
         SELECT lang, clean_text, MAX(quality) AS q
         FROM quality WHERE quality >= {QUALITY_MIN}

@@ -10,7 +10,7 @@ discipline rests on:
 - sessionization partitions events with the gap invariant (intra-session
   gaps ≤ 30 min, session starts follow a > 30 min silence) for ANY event
   layout;
-- ``sampling.hash_bucket`` is deterministic and in-range for any key.
+- ``hashing.bucket`` is deterministic and in-range for any key.
 """
 
 from __future__ import annotations
@@ -22,8 +22,8 @@ from hypothesis import given, settings, strategies as st
 from pyspark.sql import functions as F
 
 from automotive_big_data_analysis_spark.functions import exact as ex
+from automotive_big_data_analysis_spark.functions import hashing
 from automotive_big_data_analysis_spark.operators import events as ev_ops
-from automotive_big_data_analysis_spark.operators.sampling import hash_bucket
 
 T0 = datetime(2024, 1, 1)
 
@@ -108,8 +108,8 @@ def test_sessionize_gap_invariants(spark, tmp_path_factory, rows):
 def test_hash_bucket_deterministic_and_in_range(spark, keys):
     df = spark.createDataFrame([(k,) for k in keys], "k string")
     got = df.select(
-        hash_bucket(F.col("k")).alias("b1"),
-        hash_bucket(F.col("k")).alias("b2"),
+        hashing.bucket(F.col("k"), 1000).alias("b1"),
+        hashing.bucket(F.col("k"), 1000).alias("b2"),
     ).collect()
     for r in got:
         assert r.b1 == r.b2

@@ -6,10 +6,8 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from automotive_big_data_analysis_spark.operators.sampling import (
-    SAMPLE_BUCKETS,
-    hash_bucket,
-)
+from automotive_big_data_analysis_spark.functions import hashing
+from automotive_big_data_analysis_spark.operators.sampling import SAMPLE_BUCKETS
 
 
 def test_membership_invariant_under_partitioning(spark):
@@ -18,7 +16,7 @@ def test_membership_invariant_under_partitioning(spark):
         set(
             r.k
             for r in ids.repartition(n)
-            .where(hash_bucket(F.col("k")) < 100)
+            .where(hashing.bucket(F.col("k"), SAMPLE_BUCKETS) < 100)
             .collect()
         )
         for n in (1, 3, 32)
@@ -31,7 +29,7 @@ def test_membership_invariant_under_partitioning(spark):
 def test_buckets_cover_range_uniformly(spark):
     ids = spark.range(0, 20_000).select(F.col("id").cast("string").alias("k"))
     stats = (
-        ids.select(hash_bucket(F.col("k")).alias("b"))
+        ids.select(hashing.bucket(F.col("k"), SAMPLE_BUCKETS).alias("b"))
         .agg(
             F.min("b").alias("lo"),
             F.max("b").alias("hi"),
@@ -45,7 +43,7 @@ def test_buckets_cover_range_uniformly(spark):
 
 def test_split_partitions_are_disjoint_and_exhaustive(spark):
     ids = spark.range(0, 3000).select(F.col("id").cast("string").alias("k"))
-    b = hash_bucket(F.col("k"))
+    b = hashing.bucket(F.col("k"), SAMPLE_BUCKETS)
     split = F.when(b < 800, "train").when(b < 900, "val").otherwise("test")
     got = {
         r.split: r.n
