@@ -1,10 +1,21 @@
-"""Benchmark harness: runs the headline queries at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) and prints ONE JSON line with per-query and
-total wall-clock seconds.
+"""Benchmark harness: builds every stored index, runs the registered
+queries on the corpus at $SPARK_GRAFT_SF_DIR (default sf0.1) and prints
+ONE JSON line with per-query and total wall-clock seconds, the build
+seconds per index family and the noise probes that attest them.
 
-Each query is executed once after a session-warmup no-op; timing covers
-plan + execution + result materialization (``collect``), which is what a
-user of the engine pays.
+Usage: python bench.py [query ...]
+
+With no names the whole suite runs, and a query whose first run takes
+over 2 s is re-run in probe-bracketed reps and recorded as their median.
+Named queries run alone and every one of them takes the bracketed reps,
+so a named run pins each query. An unknown name fails before a session
+starts. Timing covers plan + execution + result materialization
+(``collect``), which is what a user of the engine pays.
+
+Environment: SPARK_GRAFT_SF_DIR (the corpus), SPARK_GRAFT_BENCH_MAX_WAIT
+(seconds to wait for a quiet window before the builds and the queries,
+default 300) and SPARK_GRAFT_BENCH_RETRY_WAIT (the wait budget shared by
+the bracketed reps, default 240).
 """
 
 from __future__ import annotations
@@ -14,7 +25,8 @@ import os
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+ROOT = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, ROOT)
 
 import __spark_entry__ as entrymod  # noqa: E402
 from automotive_big_data_analysis_spark import get_spark  # noqa: E402
@@ -67,12 +79,12 @@ def _calibrate_io() -> float:
     4 MiB, ``fsync`` it, drop its pages (``posix_fadvise DONTNEED``),
     read it back, unlink.
 
-    Round-9 lesson: the CPU probe is blind to an IO-side wave class —
-    two bench retries measured 8-21 s under QUIET CPU brackets on
-    queries that pin at ~2 s isolated (shuffle/checkpoint writes were
-    the inflated path, not compute). fsync latency and post-drop read
-    throughput are exactly what device contention inflates, so gating
-    on BOTH probes closes that blind spot."""
+    The CPU probe is blind to an IO-side wave class: bench retries have
+    measured 8-21 s under QUIET CPU brackets on queries that pin at
+    ~2 s isolated (shuffle/checkpoint writes were the inflated path,
+    not compute). fsync latency and post-drop read throughput are
+    exactly what device contention inflates, so gating on BOTH probes
+    closes that blind spot."""
     import tempfile
     import time as _time
 
@@ -96,15 +108,15 @@ def _calibrate_io() -> float:
     return round(_time.time() - t0, 3)
 
 
-# Quiet-window gate (round-7 verdict item 1): this host's ambient noise
-# comes in WAVES — the same code has measured 175.6 s in a quiet window
-# (probes 0.09-0.12) and 220.5 s in a degraded one (probes 0.285/0.315),
-# with individual medians inflated 2-4.5x. A probe above this threshold
-# means the window would overstate steady-state cost, so the harness
-# WAITS for a quiet window (bounded) instead of recording noise as the
-# number of record; if the budget runs out it proceeds but marks the
-# JSON ``degraded: true`` so no reader mistakes the total for steady
-# state. CPU threshold ~2x its quiet baseline; IO threshold ~6-10x its
+# Quiet-window gate: this host's ambient noise comes in WAVES — the
+# same code has measured 175.6 s in a quiet window (probes 0.09-0.12)
+# and 220.5 s in a degraded one (probes 0.285/0.315), with individual
+# medians inflated 2-4.5x. A probe above this threshold means the window
+# would overstate steady-state cost, so the harness WAITS for a quiet
+# window (bounded) instead of recording noise as the number of record;
+# if the budget runs out it proceeds but marks the JSON
+# ``degraded: true`` so no reader mistakes the total for steady state.
+# CPU threshold ~2x its quiet baseline; IO threshold ~6-10x its
 # (spikier — fsync latency jitters even on a quiet host) ~0.010-0.016 s
 # quiet baseline. A window is quiet only when BOTH probes pass.
 QUIET_PROBE_S = 0.2
@@ -135,7 +147,12 @@ def _wait_quiet(
     return cpu, io
 
 
-def main() -> None:
+def main(names: list[str]) -> None:
+    queries = entrymod.queries()
+    unknown = [n for n in names if n not in queries]
+    if unknown:
+        raise SystemExit(f"bench.py: unknown query name(s): {' '.join(unknown)}")
+    selected = set(names) or set(queries)
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = float(os.path.basename(sf_dir.rstrip("/")).removeprefix("sf") or "0.1")
     spark = get_spark(app_name="bench")
@@ -180,15 +197,22 @@ def main() -> None:
         F.percentile_approx((F.col("id") / 7.0).alias("x"), 0.5, 1000),
     ).collect()
 
-    queries = entrymod.queries()
-
     # The dedup and similarity families read stored index FILES; all that
     # stays in the session is the catalog memo's derived entries (the
     # BM25 postings checkpoint, the IVF corpus count). Group each
     # family's consumers together and release() those entries when it
     # finishes, so resident blocks never tax unrelated queries with
     # eviction/GC pressure.
-    from automotive_big_data_analysis_spark.operators import dedup, similarity
+    from automotive_big_data_analysis_spark.operators import (
+        dedup,
+        maintenance as _mt,
+        similarity,
+    )
+    from automotive_big_data_analysis_spark.sources import (
+        bucketed as _bk,
+        schema_evolution as _se,
+        text_formats as _tf,
+    )
 
     def _uses_dedup_cache(name: str) -> bool:
         return name.startswith("dedup_") or name.startswith("pipeline_")
@@ -196,10 +220,10 @@ def main() -> None:
     def _uses_sim_cache(name: str) -> bool:
         return name.startswith("knn_") or name.startswith("embedding_")
 
-    rest = [n for n in sorted(queries) if n not in HEADLINE]
+    rest = [n for n in sorted(selected) if n not in HEADLINE]
     groups = [
         (
-            [n for n in HEADLINE if n in queries]
+            [n for n in HEADLINE if n in selected]
             + [
                 n
                 for n in rest
@@ -225,49 +249,25 @@ def main() -> None:
                     pass
     corpus_preread = round(time.time() - t0, 3)
 
-    # Stored-index build cost, ON the books (round-6 verdict): the
-    # dedup/ANN index tables, the bucketed layout, and the text-mirror
-    # scaffolding persist in /tmp across runs, so without this step the
-    # one-time build would be charged to whichever historical run first
-    # touched the corpus — and every per-query number would silently be
-    # a warm-index read. Instead: wipe the derived stores, rebuild each
-    # family explicitly, and report the build seconds per family as
-    # index_build_s. Per-query numbers are then DOCUMENTED warm-index
-    # measurements — the production steady state, with the build cost
-    # visible next to them instead of vanishing.
-    import importlib
-    import shutil
+    # Stored-index build cost, ON the books: the dedup/ANN index tables,
+    # the bucketed layout, and the text-mirror scaffolding outlive the
+    # process, so a run that read earlier files would charge the
+    # one-time build to whichever earlier run first touched the corpus
+    # — and every per-query number would silently be a warm-index read.
+    # Instead: point every store root at a new empty directory (removed
+    # at exit), rebuild each family explicitly, and report the build
+    # seconds per family as index_build_s. Per-query numbers are then
+    # DOCUMENTED warm-index measurements — the production steady state,
+    # with the build cost visible next to them instead of vanishing.
+    # Fresh roots also mean files an older build of the same tags left
+    # behind are never re-attached, and no run writes to or deletes
+    # from the default roots another session may be reading.
+    sys.path.insert(0, os.path.join(ROOT, "scripts"))
+    import check_oracle
 
-    from automotive_big_data_analysis_spark.operators import (
-        dedup as _dd,
-        maintenance as _mt,
-        similarity as _sim,
-    )
-    from automotive_big_data_analysis_spark.sources import (
-        bucketed as _bk,
-        schema_evolution as _se,
-        stored as _st,
-        text_formats as _tf,
-    )
-
-    # wipe ONLY this corpus's derived artifacts: other corpora keep
-    # their indexes (their build cost stays attributed to their own
-    # runs), and a concurrent session working a different sf_dir never
-    # has files deleted out from under its catalog. Every store names
-    # its entries ``{corpus}`` or ``{corpus}_…``.
-    corpus = _st.corpus_name(sf_dir)
-    for mod, attr in _st.STORE_ROOTS:
-        root = getattr(
-            importlib.import_module(f".{mod}", "automotive_big_data_analysis_spark"),
-            attr,
-        )
-        if not os.path.isdir(root):
-            continue
-        for d in os.listdir(root):
-            if d == corpus or d.startswith(corpus + "_"):
-                shutil.rmtree(os.path.join(root, d), ignore_errors=True)
+    check_oracle.fresh_stores()
     # gate the builds on a quiet window too — identical-code index
-    # builds measured 2-5x apart across noise waves in round 7.
+    # builds have measured 2-5x apart across noise waves.
     # Default budgets are sized so a fully-noisy window adds <= ~9 min
     # to the run (an unattended harness must finish even when the host
     # never goes quiet — the degraded flag then carries the verdict);
@@ -283,8 +283,8 @@ def main() -> None:
     for fam, build in (
         ("text_mirror", lambda: _tf.ensure_mirrors(spark, sf_dir)),
         ("bucketed_layout", lambda: _bk.ensure_layout(spark, sf_dir)),
-        ("dedup_pair_index", lambda: _dd.build_indexes(spark, sf_dir)),
-        ("ann_index", lambda: _sim.build_indexes(spark, sf_dir)),
+        ("dedup_pair_index", lambda: dedup.build_indexes(spark, sf_dir)),
+        ("ann_index", lambda: similarity.build_indexes(spark, sf_dir)),
         ("layout_mirrors", lambda: _mt.ensure_layout_mirrors(spark, sf_dir)),
         ("schema_evo_mirror", lambda: _se.ensure_generations(spark, sf_dir)),
     ):
@@ -305,32 +305,32 @@ def main() -> None:
     # before/after probe pair brackets runs where one query measured 23 s
     # vs a 0.57 s isolated median) — so queries whose first measurement
     # exceeds the threshold re-run twice more and record the MEDIAN of
-    # the three (round-5 verdict: min-of-two mildly flatters the
-    # headline; the median is the honest noise-robust estimator). Every
-    # raw run is preserved in the JSON. Since the stored-index migration
-    # EVERY run of an index-consuming query — first or retry — is a
-    # warm-index read by design (the build happened above and is billed
-    # in index_build_s), so first runs and retries measure the same
-    # thing and the median is estimator-consistent. release() between
-    # family groups still drops any session-resident build memos so
-    # resident blocks never tax later groups.
-    retry_threshold = 2.0
+    # the three (min-of-two mildly flatters the headline; the median is
+    # the honest noise-robust estimator). Every raw run is preserved in
+    # the JSON. EVERY run of an index-consuming query — first or retry
+    # — is a warm-index read by design (the build happened above and is
+    # billed in index_build_s), so first runs and retries measure the
+    # same thing and the median is estimator-consistent. release()
+    # between family groups still drops any session-resident build
+    # memos so resident blocks never tax later groups. A named run
+    # pins its queries: threshold 0 sends every one of them through
+    # the bracketed reps.
+    retry_threshold = 0.0 if names else 2.0
     n_reruns = 2
     # Noise waves are INTERMITTENT — a quiet before/after bracket does
     # not preclude a mid-suite burst landing on one rep (observed: a
     # 72 s first run retrying to 1.1/0.8 s under quiet brackets). Each
-    # RETRY rep is therefore probe-BRACKETED (round-9 fix for the r8
-    # blind spot, where one stream_conversions rep passed its 0.17 s
-    # gate probe and then caught a burst MID-rep — the artifact of
-    # record said 6.89 s against a 2.87 s pin): wait (against a shared,
-    # bounded budget) until the host is quiet before timing, probe
-    # AGAIN right after the rep, and count a rep as attested-quiet only
-    # when BOTH brackets are under the threshold. If a mid-rep wave
-    # disqualifies reps, run extras (bounded) until two reps are
-    # attested-quiet or the budget is gone. retry_probes[name][i] is
-    # the CPU [gate, after] pair for raw_runs[name][1:][i];
-    # retry_io_probes[name][i] is the same rep's IO [gate, after] pair
-    # (round-10: a rep is attested-quiet only when all FOUR pass).
+    # RETRY rep is therefore probe-BRACKETED (a rep that passed its
+    # 0.17 s gate probe has caught a burst MID-rep and recorded 6.89 s
+    # against a 2.87 s pin): wait (against a shared, bounded budget)
+    # until the host is quiet before timing, probe AGAIN right after
+    # the rep, and count a rep as attested-quiet only when BOTH
+    # brackets are under the threshold. If a mid-rep wave disqualifies
+    # reps, run extras (bounded) until two reps are attested-quiet or
+    # the budget is gone. retry_probes[name][i] is the CPU [gate,
+    # after] pair for raw_runs[name][1:][i]; retry_io_probes[name][i]
+    # is the same rep's IO [gate, after] pair (a rep is attested-quiet
+    # only when all FOUR pass).
     retry_probes: dict[str, list[list[float]]] = {}
     retry_io_probes: dict[str, list[list[float]]] = {}
     fallback_medians: list[str] = []
@@ -338,10 +338,10 @@ def main() -> None:
         os.environ.get("SPARK_GRAFT_BENCH_RETRY_WAIT", "240")
     )
     max_extra_reruns = 4
-    # Mid-rep waves can slip through ALL FOUR bracket probes (round 10:
-    # a 27 s reading on a query whose other quiet reps measured 6.9 s
-    # carried quiet CPU and IO brackets on both sides — the burst began
-    # and ended between the probe instants). Bracket attestation is
+    # Mid-rep waves can slip through ALL FOUR bracket probes (a 27 s
+    # reading on a query whose other quiet reps measured 6.9 s carried
+    # quiet CPU and IO brackets on both sides — the burst began and
+    # ended between the probe instants). Bracket attestation is
     # necessary but not sufficient; the number of record additionally
     # requires the quiet reps to AGREE. A warm-index deterministic
     # query's legitimate rep-to-rep variance is ~10-20%, so a quiet rep
@@ -436,11 +436,10 @@ def main() -> None:
     probe_history.append(calib_after)
     io_probe_history.append(calib_io_after)
     total = round(sum(timings.values()), 3)
-    # Key order matters: the driver records only the TAIL of stdout
-    # (BENCH_r03.json shows the line truncated from the front with
-    # parsed=null once per-query entries outgrew the window), so the
-    # summary fields go LAST — whatever window survives always contains
-    # metric/value/sf.
+    # Key order matters: a harness that keeps only the TAIL of stdout
+    # truncates the line from the front once per-query entries outgrow
+    # its window, so the summary fields go LAST — whatever window
+    # survives always contains metric/value/sf.
     print(
         json.dumps(
             {
@@ -474,8 +473,7 @@ def main() -> None:
                 "io_probe_history": io_probe_history,
                 # gate iterations where EITHER probe family exceeded
                 # its threshold (waves are intermittent — the brackets
-                # alone can miss them; round 10 adds the IO family the
-                # r9 artifact went degraded on)
+                # alone can miss them)
                 "noise_waves": sum(
                     1
                     for p, pio in zip(probe_history, io_probe_history)
@@ -484,29 +482,28 @@ def main() -> None:
                 # True = some recorded number is NOT attested steady
                 # state: the suite's start/end bracket was noisy on
                 # either probe family, OR any retried query's median
-                # fell back to non-quiet reps (round-9 ADVICE: the old
-                # expression tested only the suite brackets, so a
-                # mid-suite wave that forced the fallback left
-                # degraded=false). Treat the totals as upper bounds,
-                # not steady state.
+                # fell back to non-quiet reps (testing the suite
+                # brackets alone would leave degraded=false after a
+                # mid-suite wave that forced the fallback). Treat the
+                # totals as upper bounds, not steady state.
                 "degraded": bool(
                     not _quiet(calib_before, calib_io_before)
                     or not _quiet(calib_after, calib_io_after)
                     or fallback_medians
                 ),
                 "corpus_preread_s": corpus_preread,
-                # one-time per-corpus-snapshot builds (wiped + rebuilt
-                # every run); per-query numbers are warm-index reads
+                # one-time per-corpus-snapshot builds (rebuilt on fresh
+                # stores every run); per-query numbers are warm-index
+                # reads
                 "index_build_s": index_build,
-                # Accounting-honest total (round-13 VERDICT item 3):
-                # query seconds PLUS the index-build seconds, so moving
-                # work between a stored-index build and its consumer
-                # queries can never inflate the round-over-round
-                # comparison — a precompute shift is net-neutral under
-                # this metric and only a REAL reduction moves it. The
-                # legacy ``value`` (queries only, builds billed
-                # separately) is unchanged for comparability with every
-                # prior round's artifact.
+                # Accounting-honest total: query seconds PLUS the
+                # index-build seconds, so moving work between a
+                # stored-index build and its consumer queries can never
+                # inflate a before/after comparison — a precompute
+                # shift is net-neutral under this metric and only a
+                # REAL reduction moves it. The legacy ``value`` (queries
+                # only, builds billed separately) is unchanged for
+                # comparability with every earlier artifact.
                 "value_with_index_build": round(
                     total + sum(index_build.values()), 3
                 ),
@@ -519,4 +516,4 @@ def main() -> None:
 
 
 if __name__ == "__main__":
-    main()
+    main(sys.argv[1:])

@@ -92,6 +92,20 @@ def test_every_store_root_is_listed():
     assert len(stored.STORE_ROOTS) == len(roots)
 
 
+def test_perfbench_redirects_every_store_root():
+    """perfbench keeps its own list of the roots it points under its
+    wiped work tree; a root missing there would be written outside it.
+    The list is read from the source, so no perfbench code runs."""
+    path = pathlib.Path(pkg.__file__).parent.parent / "perfbench" / "common.py"
+    (listed,) = [
+        ast.literal_eval(node.value)
+        for node in ast.parse(path.read_text()).body
+        if isinstance(node, ast.Assign)
+        and [getattr(t, "id", None) for t in node.targets] == ["STORE_ROOTS"]
+    ]
+    assert {tuple(r) for r in listed} == set(stored.STORE_ROOTS)
+
+
 def test_overlap_runs_each_chain_in_order_and_the_chains_at_once():
     barrier = threading.Barrier(2, timeout=10)
     log: list[tuple[str, int]] = []
