@@ -14,9 +14,8 @@ Two data models live here:
    orders lineitem events documents embeddings``) — one parquet per table
    under a scale-factor directory.
 
-Loaders return plain DataFrames; nothing is collected. ``load_tables`` also
-registers temp views so operators can be written in either the DataFrame or
-the SQL API — Catalyst produces the same plan for both.
+``load_table`` returns one table as a plain DataFrame; nothing is
+collected.
 """
 
 from __future__ import annotations
@@ -226,17 +225,6 @@ def spread(df: DataFrame) -> DataFrame:
     if len(df.inputFiles()) >= n and df.rdd.getNumPartitions() >= n:
         return df
     return df.repartition(n)
-
-
-def load_tables(
-    spark: SparkSession, sf_dir: str, register_views: bool = True
-) -> dict[str, DataFrame]:
-    """Load the full corpus; optionally register each as a temp view."""
-    tables = {name: load_table(spark, sf_dir, name) for name in TESTDATA_TABLES}
-    if register_views:
-        for name, df in tables.items():
-            df.createOrReplaceTempView(name)
-    return tables
 
 
 def car_data_from_rows(spark: SparkSession, rows: list[dict]) -> DataFrame:

@@ -231,6 +231,9 @@ def clean_text_sql(expr: str) -> str:
     return f"trim(regexp_replace({out}, '{_re2(WHITESPACE_RUN)}', ' ', 'g'))"
 
 
+QUALITY_MIN = 0.4  # the curation gate: a document scoring below is dropped
+
+
 def quality_score(col: str | Column = "text") -> Column:
     """Composite [0,1] quality heuristic: length band + stopword presence
     + mean token length band (the reference has no quality scoring; this

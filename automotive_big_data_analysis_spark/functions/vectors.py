@@ -101,20 +101,30 @@ def dot(a: Column, b: Column) -> Column:
     )
 
 
-def dot_unrolled(a: Column, b: Column) -> Column:
-    """Σ aᵢ·bᵢ as an unrolled left-to-right addition chain of
-    ``element_at`` products. Unlike ``aggregate``/``zip_with`` lambdas
-    (interpreted per element), the unrolled tree is whole-stage-codegen'd —
-    ~10× faster in pairwise-scoring loops. Summation order is ascending i,
-    identical to the fold and to DuckDB's ``list_dot_product``, so results
-    are bit-equal."""
-    terms = [
-        F.element_at(a, i) * F.element_at(b, i) for i in range(1, DIM + 1)
-    ]
-    out = terms[0]
-    for t in terms[1:]:
-        out = out + t
-    return out
+def _chain_sql(term, dim: int = DIM) -> str:
+    """``term(1) + term(2) + … + term(dim)``: the unrolled ascending
+    addition chain every ``*_unrolled`` kernel parses. Unlike
+    ``aggregate``/``zip_with`` lambdas (interpreted per element), the
+    unrolled tree is whole-stage-codegen'd — ~10× faster in pairwise
+    scoring loops. One SQL string for ``F.expr``: building the same tree
+    through py4j Column operators costs one JVM round trip per operator,
+    the parser builds it in one call, and a left-associative ``+`` chain
+    parses to the same ascending fold as the lambdas and DuckDB's
+    ``list_dot_product``."""
+    return " + ".join(term(i) for i in range(1, dim + 1))
+
+
+def _dot_chain_sql(a: str, b: str) -> str:
+    return _chain_sql(lambda i: f"(element_at({a}, {i}) * element_at({b}, {i}))")
+
+
+def dot_unrolled(a: str, b: str) -> Column:
+    """Σ aᵢ·bᵢ over the columns named ``a`` and ``b`` as a SEEDLESS
+    unrolled chain, so integer lists keep an integer sum (the SQ8 code
+    dot). Over doubles the seedless chain may differ from :func:`dot`'s
+    0.0-seeded fold in the sign of an exact-zero sum, which is why
+    :func:`cosine_unrolled` seeds its chains."""
+    return F.expr(_dot_chain_sql(a, b))
 
 
 def sq_dist(a: Column, b: Column) -> Column:
@@ -136,53 +146,32 @@ def sq_dist_sql(a: str, b: str, dim: int = DIM) -> str:
 
 
 def sq_dist_unrolled(a: str, b: str, dim: int = DIM) -> Column:
-    """Σ (aᵢ−bᵢ)² as an unrolled ascending addition chain (cf.
-    :func:`dot_unrolled`): whole-stage-codegen'd, ~10× faster than the
-    interpreted fold in scoring loops, bit-identical summation order.
-
-    Unlike :func:`_dot_chain_sql`, this chain deliberately omits the
-    ``CAST(0 AS DOUBLE) +`` fold seed: every term is a non-negative
-    square, so no partial sum can be ``-0.0`` and the seedless chain is
-    bit-equal to the 0.0-seeded fold. That safety argument does NOT hold
-    for signed terms — a seedless signed chain could produce ``-0.0``
-    where the fold gives ``0.0`` — which is why the dot-product chain
-    keeps its seed.
-
-    Takes column NAMES and parses one SQL string: building the 256-node
-    tree through py4j Column operators costs ~0.5 s of driver time PER
-    CONSTRUCTION (one JVM round trip per operator); ``F.expr`` parses the
-    same tree in one call (~3 ms). A left-associative ``+`` chain parses
-    to the same ascending fold."""
-    terms = " + ".join(
-        f"((element_at({a}, {i}) - element_at({b}, {i}))"
-        f" * (element_at({a}, {i}) - element_at({b}, {i})))"
-        for i in range(1, dim + 1)
+    """Σ (aᵢ−bᵢ)² over the columns named ``a`` and ``b`` as one unrolled
+    chain (:func:`_chain_sql`), bit-equal to :func:`sq_dist`. The chain
+    omits the fold's 0.0 seed: every term is a non-negative square, so
+    no partial sum can be ``-0.0`` and the seedless chain equals the
+    seeded fold. That argument does NOT hold for signed terms, which is
+    why :func:`cosine_unrolled` keeps the seed."""
+    return F.expr(
+        _chain_sql(
+            lambda i: f"((element_at({a}, {i}) - element_at({b}, {i}))"
+            f" * (element_at({a}, {i}) - element_at({b}, {i})))",
+            dim,
+        )
     )
-    return F.expr(terms)
-
-
-def _dot_chain_sql(a: str, b: str) -> str:
-    """Unrolled ascending dot-product SQL. The leading ``CAST(0 AS
-    DOUBLE) +`` replicates :func:`dot`'s fold seed exactly (a fold
-    starting at 0.0 and a bare term chain differ only in the sign of an
-    exact-zero partial, but hash-gated parity tolerates no exception)."""
-    terms = " + ".join(
-        f"(element_at({a}, {i}) * element_at({b}, {i}))"
-        for i in range(1, DIM + 1)
-    )
-    return f"(CAST(0 AS DOUBLE) + {terms})"
 
 
 def cosine_unrolled(a: str, b: str) -> Column:
-    """Cosine similarity as one parsed, codegen'd unrolled expression —
-    bit-identical to :func:`cosine` (same ascending folds, same seed),
-    ~10× faster in |corpus|×|cells| scoring loops, ~3 ms to construct
-    (vs ~1.5 s for the py4j operator tree)."""
-    return F.expr(
-        f"{_dot_chain_sql(a, b)}"
-        f" / (sqrt({_dot_chain_sql(a, a)})"
-        f" * sqrt({_dot_chain_sql(b, b)}))"
-    )
+    """Cosine similarity as one parsed unrolled expression, bit-identical
+    to :func:`cosine`: each dot chain carries the fold's seed (``CAST(0
+    AS DOUBLE) +``) — a fold starting at 0.0 and a bare signed chain
+    differ in the sign of an exact-zero partial, and hash-gated parity
+    tolerates no exception."""
+
+    def dot0(x: str, y: str) -> str:
+        return f"(CAST(0 AS DOUBLE) + {_dot_chain_sql(x, y)})"
+
+    return F.expr(f"{dot0(a, b)} / (sqrt({dot0(a, a)}) * sqrt({dot0(b, b)}))")
 
 
 def norm(a: Column) -> Column:
@@ -220,6 +209,21 @@ def mean_vector(df: DataFrame, keys: list[str], col: str) -> DataFrame:
             ).alias(col)
         )
     )
+
+
+def mean_vector_sql(rel: str, keys: list[str], col: str, dim: int = DIM) -> str:
+    """DuckDB twin of :func:`mean_vector`: a SELECT over ``rel`` giving
+    (*keys, col), each dimension's DECIMAL(25,10) sum divided by the
+    count in double, repacked in dimension order (``dim``-long lists)."""
+    k = ", ".join(keys)
+    return f"""
+        SELECT {k}, list(mu ORDER BY dim) AS {col} FROM (
+            SELECT {k}, d.d AS dim,
+                   CAST(SUM(CAST({col}[d.d + 1] AS {ex.SQL_DEC})) AS DOUBLE)
+                       / COUNT(*) AS mu
+            FROM {rel} CROSS JOIN (SELECT UNNEST(range(0, {dim})) AS d) AS d
+            GROUP BY {k}, d.d
+        ) GROUP BY {k}"""
 
 
 def lsh_signature(a: Column, planes: list[list[float]]) -> Column:

@@ -591,17 +591,10 @@ def _outliers_sql() -> str:
     WITH e AS (
         SELECT vec_id, label, {V.as_double_sql("embedding")} AS v
         FROM embeddings
-    ), c AS (
-        SELECT label, list(m ORDER BY dim) AS cv FROM (
-            SELECT label, d.d AS dim,
-                   CAST(SUM(CAST(v[d.d + 1] AS {ex.SQL_DEC})) AS DOUBLE)
-                       / COUNT(*) AS m
-            FROM e CROSS JOIN (SELECT UNNEST(range(0, {V.DIM})) AS d) AS d
-            GROUP BY label, d.d
-        ) GROUP BY label
+    ), c AS ({V.mean_vector_sql("e", ["label"], "v")}
     ), scored AS (
         SELECT e.label, e.vec_id,
-               ROUND({V.sq_dist_sql("e.v", "c.cv")}, 6) AS d2
+               ROUND({V.sq_dist_sql("e.v", "c.v")}, 6) AS d2
         FROM e JOIN c ON e.label = c.label
     ), ranked AS (
         SELECT label, vec_id, d2,

@@ -1040,14 +1040,18 @@ _SHINGLES_CTE = f"""
     )
 """
 
-_PAIR_SQL_TAIL = """
+# Shingle-set sizes and every co-occurring pair's intersection count,
+# chaining off ``sh``; ``pairs`` adds the Jaccard of each.
+_INTER_CTES = """
     , sizes AS (
         SELECT doc_id, COUNT(*) AS sz FROM sh GROUP BY doc_id
     ), inter AS (
         SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS inter
         FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
         GROUP BY 1, 2
-    ), pairs AS (
+    )"""
+
+_PAIR_SQL_TAIL = _INTER_CTES + """, pairs AS (
         SELECT doc_a, doc_b,
                ROUND(CAST(inter AS DOUBLE) / (sa.sz + sb.sz - inter), 6) AS jaccard
         FROM inter
@@ -1117,6 +1121,30 @@ _SIMHASH_SIG_CTE = f"""
     )
 """
 
+# Connected components of the verified near-dup graph: the thresholded
+# pairs ``fpairs`` and ``comp(doc_id, component)``, the smallest doc id
+# each doc reaches through a recursive CTE — the ``dedup_components``
+# oracle, reused by ``sampling``'s leakage-safe split.
+_COMPONENTS_CTES = (
+    _SHINGLES_CTE.replace("WITH toks", "WITH RECURSIVE toks", 1)
+    + _PAIR_SQL_TAIL
+    + f"""
+    , fpairs AS (
+        SELECT doc_a, doc_b FROM pairs WHERE jaccard >= {JACCARD_THRESHOLD}
+    ), edges AS (
+        SELECT doc_a AS src, doc_b AS dst FROM fpairs
+        UNION
+        SELECT doc_b, doc_a FROM fpairs
+    ), reach(src, dst) AS (
+        SELECT src, dst FROM edges
+        UNION
+        SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src
+    ), comp AS (
+        SELECT src AS doc_id, LEAST(src, MIN(dst)) AS component
+        FROM reach GROUP BY src
+    )"""
+)
+
 ORACLE: dict[str, str] = {
     "dedup_exact_stats": """
         WITH t AS (SELECT lang, md5(text) AS h FROM documents)
@@ -1167,23 +1195,8 @@ ORACLE: dict[str, str] = {
            CAST(t.n_docs - COALESCE(k.n_kept, 0) AS BIGINT) AS n_removed
     FROM totals t LEFT JOIN kept k ON t.lang = k.lang
     """,
-    "dedup_components": _SHINGLES_CTE.replace("WITH toks", "WITH RECURSIVE toks", 1)
-    + _PAIR_SQL_TAIL
-    + f"""
-    , fpairs AS (
-        SELECT doc_a, doc_b FROM pairs WHERE jaccard >= {JACCARD_THRESHOLD}
-    ), edges AS (
-        SELECT doc_a AS src, doc_b AS dst FROM fpairs
-        UNION
-        SELECT doc_b, doc_a FROM fpairs
-    ), reach(src, dst) AS (
-        SELECT src, dst FROM edges
-        UNION
-        SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src
-    ), comp AS (
-        SELECT src AS doc_id, LEAST(src, MIN(dst)) AS component
-        FROM reach GROUP BY src
-    )
+    "dedup_components": _COMPONENTS_CTES
+    + """
     SELECT component, COUNT(*) AS n_docs,
            MIN(doc_id) AS min_doc, MAX(doc_id) AS max_doc
     FROM comp GROUP BY component HAVING COUNT(*) > 1
@@ -1344,14 +1357,8 @@ QUERIES = {
 
 ORACLE["dedup_containment_pairs"] = (
     _SHINGLES_CTE
-    + f"""
-    , sizes AS (
-        SELECT doc_id, COUNT(*) AS sz FROM sh GROUP BY doc_id
-    ), inter AS (
-        SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS inter
-        FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-        GROUP BY 1, 2
-    ), scored AS (
+    + _INTER_CTES
+    + f""", scored AS (
         SELECT ROUND(CAST(inter AS DOUBLE) / LEAST(sa.sz, sb.sz), 6)
                    AS containment,
                ROUND(CAST(inter AS DOUBLE) / (sa.sz + sb.sz - inter), 6)

@@ -35,14 +35,12 @@ from automotive_big_data_analysis_spark.functions import text as tx
 from automotive_big_data_analysis_spark.operators import dedup
 from automotive_big_data_analysis_spark.operators.sampling import SAMPLE_BUCKETS
 
-QUALITY_MIN = 0.4
 SAMPLE_PERMILLE = 1000  # keep everything by default; tests dial it down
 
 
 def mark_documents(
     spark: SparkSession,
     sf_dir: str,
-    quality_min: float = QUALITY_MIN,
     sample_permille: int = SAMPLE_PERMILLE,
 ) -> DataFrame:
     """One marked frame with the pipeline's drop/keep decisions.
@@ -57,7 +55,7 @@ def mark_documents(
     )
     # exact-dup rank among quality survivors only (drops don't shadow
     # kept docs); rank 1 = keeper, deterministic by doc_id
-    is_lowq = F.col("quality") < quality_min
+    is_lowq = F.col("quality") < tx.QUALITY_MIN
     w = Window.partitionBy(
         F.when(
             is_lowq, F.concat(F.lit("lowq:"), F.col("doc_id").cast("string"))
@@ -90,14 +88,13 @@ def curate_documents(
     spark: SparkSession,
     sf_dir: str,
     out_dir: str | None = None,
-    quality_min: float = QUALITY_MIN,
     sample_permille: int = SAMPLE_PERMILLE,
 ) -> DataFrame:
     """The surviving corpus (doc_id, lang, cleaned text, quality). With
     ``out_dir``, also written as parquet partitioned by ``lang`` — the
     layout downstream per-language jobs prune on."""
     kept = (
-        mark_documents(spark, sf_dir, quality_min, sample_permille)
+        mark_documents(spark, sf_dir, sample_permille)
         .where(F.col("stage") == "kept")
         .select("doc_id", "lang", F.col("clean_text").alias("text"), "quality")
     )
@@ -110,12 +107,11 @@ def curate_documents(
 def curation_report(
     spark: SparkSession,
     sf_dir: str,
-    quality_min: float = QUALITY_MIN,
     sample_permille: int = SAMPLE_PERMILLE,
 ) -> DataFrame:
     """Per-lang stage accounting in ONE aggregation over the marked frame;
     stage counts sum to n_docs exactly (first-match drop semantics)."""
-    marked = mark_documents(spark, sf_dir, quality_min, sample_permille)
+    marked = mark_documents(spark, sf_dir, sample_permille)
     return (
         marked.groupBy("lang")
         .pivot("stage", ["kept", "lowq", "exact_dup", "near_dup", "sampled_out"])
@@ -193,10 +189,10 @@ ORACLE: dict[str, str] = {
     # plain token replacement — .format() would choke on the regex
     # quantifier braces ({2,}, {1,3}) inside the cleaning patterns
     "pipeline_curation_report": _REPORT_SQL.replace(
-        "__QMIN__", str(QUALITY_MIN)
+        "__QMIN__", str(tx.QUALITY_MIN)
     ).replace("__PERMILLE__", str(SAMPLE_PERMILLE)),
     "pipeline_curation_sampled": _REPORT_SQL.replace(
-        "__QMIN__", str(QUALITY_MIN)
+        "__QMIN__", str(tx.QUALITY_MIN)
     ).replace("__PERMILLE__", str(SAMPLED_PERMILLE)),
 }
 

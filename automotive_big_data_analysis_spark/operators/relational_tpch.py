@@ -69,9 +69,9 @@ def nation_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     (year, input partition) collapse map-side (bounded by rows-per-task
     × max row value ≈ 1e15 ≪ 2⁶³, so they cannot overflow), then the
     DECIMAL exact sum merges the |years| × |partitions| tiny
-    intermediate. This keeps the per-row hot loop primitive (the r4
-    DECIMAL(25,10)-over-raw-facts formulation measured ~2× slower,
-    pin_bench r5) while the final total is exact integer arithmetic at
+    intermediate. This keeps the per-row hot loop primitive (a
+    DECIMAL(25,10)-over-raw-facts formulation measured ~2× slower)
+    while the final total is exact integer arithmetic at
     ANY scale — the same result as a direct decimal sum, order-free."""
     li = load_table(spark, sf_dir, "lineitem")
     orders = load_table(spark, sf_dir, "orders")

@@ -84,9 +84,9 @@ def important_parts_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     DECIMAL widening sum — decimal addition is exact, so the two-level
     total equals the direct one while the facts are scanned ONCE and the
     wide-decimal path only ever sees |parts| rows, not |lineitem|.
-    The r1→r4 DECIMAL(25,10)-over-raw-facts formulation measured ~3×
-    slower (pin_bench r5); this layout restores the r1 cost with the r4
-    exactness."""
+    A DECIMAL(25,10)-over-raw-facts formulation is exact too but
+    measured ~3× slower; this layout keeps the primitive per-row cost
+    with the same exactness."""
     li = load_table(spark, sf_dir, "lineitem")
     c4 = ex.money4("l_extendedprice", "l_discount")
     per_part = li.groupBy("l_partkey").agg(F.sum(c4).alias("c4"))

@@ -307,9 +307,10 @@ ORACLE: dict[str, str] = {
 
 
 def _leakage_sql() -> str:
-    """DuckDB replay: recursive-CTE connected components over the same
-    verified pair list (the ``dedup_components`` oracle formulation),
-    then the identical md5 split arithmetic for both policies."""
+    """DuckDB replay: the recursive-CTE connected components of the
+    verified pair list (``dedup._COMPONENTS_CTES``, shared with the
+    ``dedup_components`` oracle), then the identical md5 split
+    arithmetic for both policies."""
     from automotive_big_data_analysis_spark.operators import dedup
 
     doc_b = hashing.bucket_sql("CAST(d.doc_id AS VARCHAR)", SAMPLE_BUCKETS)
@@ -317,24 +318,8 @@ def _leakage_sql() -> str:
         "CAST(COALESCE(c.component, d.doc_id) AS VARCHAR)", SAMPLE_BUCKETS
     )
     return (
-        dedup._SHINGLES_CTE.replace("WITH toks", "WITH RECURSIVE toks", 1)
-        + dedup._PAIR_SQL_TAIL
-        + f"""
-    , fpairs AS (
-        SELECT doc_a, doc_b FROM pairs
-        WHERE jaccard >= {dedup.JACCARD_THRESHOLD}
-    ), edges AS (
-        SELECT doc_a AS src, doc_b AS dst FROM fpairs
-        UNION
-        SELECT doc_b, doc_a FROM fpairs
-    ), reach(src, dst) AS (
-        SELECT src, dst FROM edges
-        UNION
-        SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src
-    ), comp AS (
-        SELECT src AS doc_id, LEAST(src, MIN(dst)) AS component
-        FROM reach GROUP BY src
-    ), assigned AS (
+        dedup._COMPONENTS_CTES
+        + f""", assigned AS (
         SELECT d.doc_id,
                CASE WHEN {doc_b} < 800 THEN 'train'
                     WHEN {doc_b} < 900 THEN 'val'

@@ -227,6 +227,7 @@ def knn_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 IVF_K_FACTOR = 2.0
 IVF_K_MIN = 8
 IVF_K_MAX = 65536  # a 2^16-cell codebook covers ~10^9-vector corpora
+PROBE_DIVISORS = (16, 8, 4, 3, 2)  # frontier probe depths ceil(K/d)
 
 
 class IvfParams:
@@ -244,18 +245,8 @@ class IvfParams:
         k = self.k
         self.nprobe = (k + 2) // 3
         self.maxprobe = (k + 1) // 2
-        # tradeoff sweep depths: ceil(K/16, K/8, K/4, K/3, K/2)
-        self.levels = tuple(
-            sorted(
-                {
-                    (k + 15) // 16,
-                    (k + 7) // 8,
-                    (k + 3) // 4,
-                    (k + 2) // 3,
-                    (k + 1) // 2,
-                }
-            )
-        )
+        # tradeoff sweep depths: ceil(K/d) for each divisor d
+        self.levels = tuple(sorted({(k + d - 1) // d for d in PROBE_DIVISORS}))
 
 
 def _corpus_n(spark: SparkSession, sf_dir: str) -> int:
@@ -983,8 +974,8 @@ def _sq8_clamped_code(x, scale):
 
 
 # the DuckDB mirror of _sq8_clamped_code, over a list element ``x`` and
-# the corpus-scale column ``sc`` (both oracles and the frontier replay
-# splice this single definition, so clamp semantics cannot drift)
+# the corpus-scale column ``sc`` (spliced into ``_SQ8_CTES``, the one SQ8
+# encoder every oracle shares)
 _SQ8_CODE_SQL = (
     f"LEAST({SQ8_LEVELS}, GREATEST(-{SQ8_LEVELS}, "
     "CAST(FLOOR(x * sc + 0.5) AS BIGINT)))"
@@ -1035,7 +1026,7 @@ def _sq8_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _sq8_dot():
     """The symmetric integer SQ8 dot of ``qv`` and ``v`` (≤ 64 · 127² ≈
     10⁶ per pair — overflow-free in long)."""
-    return V.dot_unrolled(F.col("qv"), F.col("v")).cast("long").alias("qdot")
+    return V.dot_unrolled("qv", "v").cast("long").alias("qdot")
 
 
 def knn_sq8(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1271,7 +1262,7 @@ def build_indexes(spark: SparkSession, sf_dir: str) -> None:
 
 
 # IVF / IVF-PQ probe depths swept: corpus-derived fractions of K
-# (ceil of K/16, K/8, K/4, K/3, K/2 — ``IvfParams.levels``); max level
+# (ceil(K/d) for d in ``PROBE_DIVISORS`` — ``IvfParams.levels``); max level
 # = the stored postings depth by construction. LSH radii stay static
 # (the signature width is corpus-independent).
 TRADEOFF_RADII = (0, 1, 2)  # LSH Hamming multi-probe radii swept
@@ -1467,8 +1458,9 @@ def knn_recall_tradeoff(spark: SparkSession, sf_dir: str) -> DataFrame:
     — the evaluation that picks an operating point (at the defaults LSH
     reached recall@5 0.04 and IVF-PQ 0.10 — too low to ship, so sweep
     the knobs): IVF and IVF-PQ over the corpus-derived probe depths
-    (``IvfParams.levels`` — ceil of K/16 … K/2; the shipped ceil(K/3)
-    point and the stored-depth maximum are both levels), LSH over
+    (``IvfParams.levels`` — ceil(K/d) per ``PROBE_DIVISORS``; the
+    shipped ceil(K/3) point and the stored-depth maximum are both
+    levels), LSH over
     Hamming multi-probe radius ∈ ``TRADEOFF_RADII``, the MULTI-TABLE
     family over both of its knobs — ``lsh_mt`` sweeps the radius at the
     full L stored tables, ``lsh_mt_tables`` sweeps the table count at
@@ -2077,6 +2069,43 @@ def norm_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# --- DuckDB oracles ----------------------------------------------------
+# Each ANN stage has one SQL spelling, the mirror of its one Spark
+# function: ``_top_sql`` ↔ ``_top``, ``_nearest_sql``/``_lloyd_sql`` ↔
+# ``_nearest``/``_lloyd``, ``_cells_sql`` ↔ ``_ranked_cells``,
+# ``_ivf_cand_sql`` ↔ ``_ivf_candidates``, ``_exact_sql`` ↔
+# ``_exact_scored``, ``_SQ8_CTES`` ↔ ``_sq8_codes``, ``_rerank_sql`` ↔
+# ``_rerank_exact``. The oracles compose them.
+
+
+def _top_sql(scored: str, order: str, depth=TOP_K, keys: str = "query_id") -> str:
+    """Mirror of :func:`_top`: the rows of ``scored`` ranked within each
+    ``keys`` group by ``order`` then ``vec_id``, cut to ``rank ≤ depth``."""
+    return f"""
+        SELECT * FROM (
+            SELECT *, CAST(ROW_NUMBER() OVER (
+                PARTITION BY {keys} ORDER BY {order}, vec_id
+            ) AS INTEGER) AS rank
+            FROM {scored}
+        ) WHERE rank <= {depth}"""
+
+
+def _knn_out_sql(scored: str, order: str, score: str) -> str:
+    """The final (query_id, rank, vec_id, score) top-``TOP_K`` rows."""
+    return f"SELECT query_id, rank, vec_id, {score} FROM ({_top_sql(scored, order)})"
+
+
+def _exact_sql(pairs: str, where: str = "TRUE") -> str:
+    """Mirror of :func:`_exact_scored`: ``pairs`` (query_id, vec_id, …)
+    plus their exact ``cosine``; needs the ``e`` and ``q`` CTEs."""
+    return f"""
+        SELECT p.*, ROUND({V.cosine_sql("q.qv", "e.v")}, 6) AS cosine
+        FROM {pairs} p
+        JOIN e ON e.vec_id = p.vec_id
+        JOIN q ON q.query_id = p.query_id
+        WHERE {where}"""
+
+
 def _knn_sql(candidate_filter: str) -> str:
     sig = V.lsh_signature_sql("v", V.HYPERPLANES)
     return f"""
@@ -2092,16 +2121,20 @@ def _knn_sql(candidate_filter: str) -> str:
                    ROUND({V.cosine_sql("q.qv", "e.v")}, 6) AS cosine
             FROM e CROSS JOIN q
             WHERE e.vec_id != q.query_id AND ({candidate_filter})
-        ), ranked AS (
-            SELECT query_id, vec_id, cosine,
-                   CAST(ROW_NUMBER() OVER (
-                       PARTITION BY query_id ORDER BY cosine DESC, vec_id
-                   ) AS INTEGER) AS rank
-            FROM scored
         )
-        SELECT query_id, rank, vec_id, cosine FROM ranked WHERE rank <= {TOP_K}
+        {_knn_out_sql("scored", "cosine DESC", "cosine")}
     """
 
+
+# The relation the IVF, PQ and SQ8 oracles start from: the double image
+# ``e`` of the corpus and its query rows ``q``.
+_E_CTES = f"""
+    WITH e AS (
+        SELECT vec_id, label, {V.as_double_sql("embedding")} AS v
+        FROM embeddings
+    ), q AS (
+        SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id < {N_QUERIES}
+    )"""
 
 # The SQL mirror of ``IvfParams``: one row (n, k, nprobe, maxprobe)
 # derived from COUNT(*) of the ``e`` CTE it follows — the oracle sizes
@@ -2122,136 +2155,135 @@ _PARAMS_CTE = f"""
             FROM (SELECT COUNT(*) AS n FROM e)
         )
     )"""
+_NPROBE = "(SELECT nprobe FROM pk)"
+_MAXPROBE = "(SELECT maxprobe FROM pk)"
+
+# ``IvfParams.levels`` in SQL: the distinct probe depths ``np(probe)``
+_LEVELS_CTE = f"""
+    , np AS (
+        SELECT DISTINCT CAST(probe AS INTEGER) AS probe FROM (
+            SELECT UNNEST([{", ".join(f"(k + {d - 1}) // {d}" for d in PROBE_DIVISORS)}])
+                AS probe
+            FROM pk
+        )
+    )"""
 
 
-def _km_assign_sql(cent: str, out: str) -> str:
-    """One Lloyd assignment round: nearest centroid by squared L2 with a
-    centroid-id tiebreak (same fold order as Spark's sq_dist)."""
+def _seed_rows_sql(rel: str, k) -> str:
+    """Mirror of :func:`_seed_rows`: the ``k`` rows of ``rel`` with the
+    smallest md5(vec_id)."""
+    return f"""
+        SELECT * FROM (
+            SELECT *, ROW_NUMBER() OVER (
+                ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) AS sr
+            FROM {rel}
+        ) WHERE sr <= {k}"""
+
+
+def _nearest_sql(
+    points: str, cents: str, out: str, keys: list[str], x: str, c: str, dim: int
+) -> str:
+    """Mirror of :func:`_nearest`: CTE ``out`` (vec_id, *keys, cid, d2,
+    c) — each ``points`` row's nearest ``cents`` centroid of its own
+    ``keys`` group by squared L2, ties to the smaller cid; the point's
+    vector ``x`` rides along under the centroid column name ``c``."""
+    pkeys = "".join(f", p.{key}" for key in keys)
+    on = " AND ".join(f"k.{key} = p.{key}" for key in keys)
+    join = f"JOIN {cents} k ON {on}" if keys else f"CROSS JOIN {cents} k"
     return f"""
     , {out} AS (
-        SELECT vec_id, v, cid, d2 FROM (
-            SELECT e.vec_id, e.v, c.cid,
-                   {V.sq_dist_sql("e.v", "c.cv")} AS d2,
+        SELECT * EXCLUDE (r) FROM (
+            SELECT p.vec_id{pkeys}, k.cid, p.{x} AS {c},
+                   {V.sq_dist_sql(f"p.{x}", f"k.{c}", dim)} AS d2,
                    ROW_NUMBER() OVER (
-                       PARTITION BY e.vec_id ORDER BY d2, c.cid) AS r
-            FROM e CROSS JOIN {cent} c
+                       PARTITION BY p.vec_id{pkeys} ORDER BY d2, k.cid) AS r
+            FROM {points} p {join}
         ) WHERE r = 1
     )"""
 
 
-def _km_update_sql(assigned: str, out: str) -> str:
-    """Centroid update: per-dimension DECIMAL-exact mean, repacked into a
-    dim-ordered list."""
-    return f"""
-    , {out} AS (
-        SELECT cid, list(m ORDER BY dim) AS cv FROM (
-            SELECT cid, d.d AS dim,
-                   CAST(SUM(CAST(v[d.d + 1] AS {ex.SQL_DEC})) AS DOUBLE)
-                       / COUNT(*) AS m
-            FROM {assigned} CROSS JOIN
-                 (SELECT UNNEST(range(0, {V.DIM})) AS d) AS d
-            GROUP BY cid, d.d
-        ) GROUP BY cid
-    )"""
+def _lloyd_sql(
+    points: str, tag: str, keys: list[str], x: str, c: str, dim: int
+) -> str:
+    """Mirror of :func:`_lloyd`: KM_ITERS unrolled rounds from the
+    initial centroid CTE ``{tag}c0`` (*keys, cid, c); round i assigns
+    (``{tag}a{i}``) and recomputes each centroid as its members'
+    DECIMAL-exact mean (``{tag}c{i+1}``)."""
+    out = ""
+    for i in range(KM_ITERS):
+        out += _nearest_sql(points, f"{tag}c{i}", f"{tag}a{i}", keys, x, c, dim)
+        mean = V.mean_vector_sql(f"{tag}a{i}", [*keys, "cid"], c, dim)
+        out += f"""
+    , {tag}c{i + 1} AS ({mean})"""
+    return out
 
 
-# Unrolled KM_ITERS=2 training rounds ending in the trained codebook
-# (`seeds`): the exact SQL mirror of _lloyd / _codebook,
-# prefixed by the derived-parameter row (``pk``). Every IVF-family
-# oracle shares this prefix so the index structure is bit-identical
-# across engines.
+# The trained coarse codebook ``seeds(cell_id, cv)``: the derived
+# parameter row ``pk``, the md5 seed rows, and the Lloyd rounds — the
+# exact SQL mirror of _coarse_codebook, so the index structure is
+# bit-identical across engines. Expects an ``e(vec_id, v)`` CTE.
 _TRAIN_CTES = (
     _PARAMS_CTE
-    + """
-    , c0 AS (
-        SELECT cid, cv FROM (
-            SELECT vec_id AS cid, v AS cv,
-                   ROW_NUMBER() OVER (
-                       ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id
-                   ) AS sr
-            FROM e
-        ), pk WHERE sr <= pk.k
+    + f"""
+    , tc0 AS (
+        SELECT vec_id AS cid, v AS cv FROM ({_seed_rows_sql("e", "(SELECT k FROM pk)")})
     )"""
-    + _km_assign_sql("c0", "ta0")
-    + _km_update_sql("ta0", "tc1")
-    + _km_assign_sql("tc1", "ta1")
-    + _km_update_sql("ta1", "tc2")
-    + """
-    , seeds AS (SELECT cid AS cell_id, cv FROM tc2)"""
+    + _lloyd_sql("e", "t", [], "v", "cv", V.DIM)
+    + f"""
+    , seeds AS (SELECT cid AS cell_id, cv FROM tc{KM_ITERS})"""
 )
 
-_IVF_SQL = f"""
-    WITH e AS (
-        SELECT vec_id, {V.as_double_sql("embedding")} AS v FROM embeddings
-    ){_TRAIN_CTES}, scored_cells AS (
-        SELECT e.vec_id, e.v, s.cell_id,
-               ROUND({V.cosine_sql("e.v", "s.cv")}, 6) AS cell_cos
-        FROM e CROSS JOIN seeds s
-    ), ranked_cells AS (
-        SELECT vec_id, v, cell_id, cell_cos,
-               ROW_NUMBER() OVER (
-                   PARTITION BY vec_id ORDER BY cell_cos DESC, cell_id
-               ) AS r
-        FROM scored_cells
-    ), assign AS (
-        SELECT vec_id, v, cell_id FROM ranked_cells WHERE r = 1
-    ), probes AS (
-        SELECT vec_id AS query_id, cell_id FROM ranked_cells
-        WHERE vec_id < {N_QUERIES} AND r <= (SELECT nprobe FROM pk)
-    ), q AS (
-        SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id < {N_QUERIES}
-    ), scored AS (
-        SELECT p.query_id, a.vec_id,
-               ROUND({V.cosine_sql("q.qv", "a.v")}, 6) AS cosine
-        FROM probes p
-        JOIN assign a ON a.cell_id = p.cell_id AND a.vec_id != p.query_id
-        JOIN q ON q.query_id = p.query_id
-    ), ranked AS (
-        SELECT query_id, vec_id, cosine,
-               CAST(ROW_NUMBER() OVER (
-                   PARTITION BY query_id ORDER BY cosine DESC, vec_id
-               ) AS INTEGER) AS rank
-        FROM scored
-    )
-    SELECT query_id, rank, vec_id, cosine FROM ranked WHERE rank <= {TOP_K}
+
+def _cells_sql(depth: str, points: str = "e") -> str:
+    """Mirror of :func:`_ranked_cells`: CTE ``cells`` (vec_id, cell_id,
+    cell_cos, r ≤ depth) — each ``points`` vector's nearest ``seeds``
+    cells by rounded cosine, ties to the smaller cell_id."""
+    return f"""
+    , cells AS (
+        SELECT * FROM (
+            SELECT *, ROW_NUMBER() OVER (
+                PARTITION BY vec_id ORDER BY cell_cos DESC, cell_id) AS r
+            FROM (
+                SELECT p.vec_id, s.cell_id,
+                       ROUND({V.cosine_sql("p.v", "s.cv")}, 6) AS cell_cos
+                FROM {points} p CROSS JOIN seeds s
+            )
+        ) WHERE r <= {depth}
+    )"""
+
+
+def _ivf_cand_sql(depth: str) -> str:
+    """Mirror of :func:`_ivf_candidates`: CTE ``cand`` (query_id,
+    vec_id, pr) — every vector assigned (r = 1) to one of the query's
+    ``depth`` nearest cells, ``pr`` that cell's rank."""
+    return _cells_sql(depth) + f"""
+    , cand AS (
+        SELECT p.vec_id AS query_id, a.vec_id, p.r AS pr
+        FROM cells p
+        JOIN cells a
+          ON a.cell_id = p.cell_id AND a.r = 1 AND a.vec_id != p.vec_id
+        WHERE p.vec_id < {N_QUERIES}
+    )"""
+
+
+def _ivf_sql(depth: str, where: str = "TRUE") -> str:
+    """knn_ivf / knn_ivf_filtered: the IVF candidates at ``depth``,
+    exactly scored where the candidate row satisfies ``where``."""
+    return f"""{_E_CTES}{_TRAIN_CTES}{_ivf_cand_sql(depth)}
+    , scored AS ({_exact_sql("cand", where)})
+    {_knn_out_sql("scored", "cosine DESC", "cosine")}
 """
 
-_IVF_FILTERED_SQL = f"""
-    WITH e AS (
-        SELECT vec_id, label, {V.as_double_sql("embedding")} AS v FROM embeddings
-    ){_TRAIN_CTES}, scored_cells AS (
-        SELECT e.vec_id, e.label, e.v, s.cell_id,
-               ROUND({V.cosine_sql("e.v", "s.cv")}, 6) AS cell_cos
-        FROM e CROSS JOIN seeds s
-    ), ranked_cells AS (
-        SELECT vec_id, label, v, cell_id, cell_cos,
-               ROW_NUMBER() OVER (
-                   PARTITION BY vec_id ORDER BY cell_cos DESC, cell_id
-               ) AS r
-        FROM scored_cells
-    ), assign AS (
-        SELECT vec_id, v, cell_id FROM ranked_cells
-        WHERE r = 1 AND label % {FILTER_LABEL_MOD} = 0
-    ), probes AS (
-        SELECT vec_id AS query_id, cell_id FROM ranked_cells
-        WHERE vec_id < {N_QUERIES} AND r <= (SELECT maxprobe FROM pk)
-    ), q AS (
-        SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id < {N_QUERIES}
-    ), scored AS (
-        SELECT p.query_id, a.vec_id,
-               ROUND({V.cosine_sql("q.qv", "a.v")}, 6) AS cosine
-        FROM probes p
-        JOIN assign a ON a.cell_id = p.cell_id AND a.vec_id != p.query_id
-        JOIN q ON q.query_id = p.query_id
-    ), ranked AS (
-        SELECT query_id, vec_id, cosine,
-               CAST(ROW_NUMBER() OVER (
-                   PARTITION BY query_id ORDER BY cosine DESC, vec_id
-               ) AS INTEGER) AS rank
-        FROM scored
-    )
-    SELECT query_id, rank, vec_id, cosine FROM ranked WHERE rank <= {TOP_K}
+
+def _rerank_sql(scored: str, order: str, depth: int) -> str:
+    """Mirror of :func:`_rerank_exact`: the per-query top-``depth``
+    shortlist of ``scored`` under ``order``, re-scored exactly."""
+    return f"""
+    , shortlist AS (SELECT query_id, vec_id FROM ({_top_sql(scored, order, depth)}))
+    , exact AS ({_exact_sql("shortlist")})
+    {_knn_out_sql("exact", "cosine DESC", "cosine")}
 """
+
 
 ORACLE: dict[str, str] = {
     "knn_bruteforce": _knn_sql("TRUE"),
@@ -2270,8 +2302,8 @@ ORACLE: dict[str, str] = {
             for t in range(V.LSH_TABLES)
         )
     ),
-    "knn_ivf": _IVF_SQL,
-    "knn_ivf_filtered": _IVF_FILTERED_SQL,
+    "knn_ivf": _ivf_sql(_NPROBE),
+    "knn_ivf_filtered": _ivf_sql(_MAXPROBE, f"e.label % {FILTER_LABEL_MOD} = 0"),
     "embedding_cosine_dups": None,  # filled below
     "embedding_label_centroids": f"""
         WITH e AS (SELECT label, {V.as_double_sql("embedding")} AS v FROM embeddings),
@@ -2341,11 +2373,9 @@ ORACLE["embedding_semantic_keep_stats"] = f"""
 
 
 ORACLE["embedding_kmeans"] = (
-    f"""
-    WITH e AS (
-        SELECT vec_id, {V.as_double_sql("embedding")} AS v FROM embeddings
-    ){_TRAIN_CTES}"""
-    + _km_assign_sql("tc2", "af")
+    _E_CTES
+    + _TRAIN_CTES
+    + _nearest_sql("e", f"tc{KM_ITERS}", "af", [], "v", "cv", V.DIM)
     + f"""
     SELECT cid AS cluster, COUNT(*) AS n_vectors,
            {ex.dsum_sql("d2", 6)} AS inertia,
@@ -2355,71 +2385,25 @@ ORACLE["embedding_kmeans"] = (
 )
 
 
-def _pq_assign_sql(cent: str, out: str) -> str:
-    """One per-subspace Lloyd assignment round: nearest sub-centroid by
-    squared L2 with a (d2, cid) tiebreak — ``m`` rides along as a plain
-    grouping column, so one CTE trains all PQ_M subspaces."""
-    return f"""
-    , {out} AS (
-        SELECT vec_id, m, sv, cid FROM (
-            SELECT s.vec_id, s.m, s.sv, c.cid,
-                   {V.sq_dist_sql("s.sv", "c.sc", PQ_SUBDIM)} AS d2,
-                   ROW_NUMBER() OVER (
-                       PARTITION BY s.vec_id, s.m ORDER BY d2, c.cid) AS r
-            FROM subs s JOIN {cent} c ON c.m = s.m
-        ) WHERE r = 1
-    )"""
-
-
-def _pq_update_sql(assigned: str, out: str) -> str:
-    """Per-subspace sub-centroid update: DECIMAL-exact per-dimension
-    mean, repacked into a dim-ordered list (mirror of the Spark
-    trainer's posexplode → mean → array_sort collect)."""
-    return f"""
-    , {out} AS (
-        SELECT m, cid, list(mu ORDER BY dim) AS sc FROM (
-            SELECT m, cid, d.d AS dim,
-                   CAST(SUM(CAST(sv[d.d + 1] AS {ex.SQL_DEC})) AS DOUBLE)
-                       / COUNT(*) AS mu
-            FROM {assigned} CROSS JOIN
-                 (SELECT UNNEST(range(0, {PQ_SUBDIM})) AS d) AS d
-            GROUP BY m, cid, d.d
-        ) GROUP BY m, cid
-    )"""
-
-
-# Shared PQ CTE block (expects an ``e(vec_id, v, ...)`` CTE): normalized
-# subvectors → KM_ITERS=2 unrolled per-subspace training rounds → the
-# trained sub-codebooks → encode distances / codes / query ADC table.
-# The exact SQL mirror of _subvectors / _pq_subcodebook / _pq_codes /
-# _pq_query_dists. A function (not a module constant) so the PQ
-# resolution sweep can rebuild it under patched PQ_M / PQ_SUBK.
-def _pq_ctes() -> str:
-    return (
-        f"""
+# The PQ CTE block (expects an ``e(vec_id, v, ...)`` CTE): normalized
+# subvectors → the per-subspace Lloyd rounds (keyed by ``m``: one CTE
+# trains every subspace) → the trained sub-codebooks → encode distances
+# / codes / query ADC table. The exact SQL mirror of _subvectors /
+# _pq_subcodebook / _pq_codes / _pq_query_dists.
+_PQ_CTES = (
+    f"""
     , subs AS (
         SELECT vec_id, m.m AS m,
                ({_VN})[m.m * {PQ_SUBDIM} + 1 : (m.m + 1) * {PQ_SUBDIM}]
                    AS sv
         FROM e CROSS JOIN (SELECT UNNEST(range(0, {PQ_M})) AS m) AS m
-    ), pqseed AS (
-        SELECT vec_id FROM (
-            SELECT vec_id,
-                   ROW_NUMBER() OVER (
-                       ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id
-                   ) AS sr
-            FROM e
-        ) WHERE sr <= {PQ_SUBK}
     ), sc0 AS (
         SELECT s.m, s.vec_id AS cid, s.sv AS sc
-        FROM subs s JOIN pqseed p ON p.vec_id = s.vec_id
+        FROM subs s JOIN ({_seed_rows_sql("e", PQ_SUBK)}) p ON p.vec_id = s.vec_id
     )"""
-        + _pq_assign_sql("sc0", "sa0")
-        + _pq_update_sql("sa0", "sc1")
-        + _pq_assign_sql("sc1", "sa1")
-        + _pq_update_sql("sa1", "sc2")
-        + f"""
-    , sseeds AS (SELECT m, cid AS cell_id, sc FROM sc2)
+    + _lloyd_sql("subs", "s", ["m"], "sv", "sc", PQ_SUBDIM)
+    + f"""
+    , sseeds AS (SELECT m, cid AS cell_id, sc FROM sc{KM_ITERS})
     , dists AS (
         SELECT s.vec_id, s.m, ss.cell_id,
                {V.sq_dist_sql("s.sv", "ss.sc", PQ_SUBDIM)} AS d2
@@ -2434,231 +2418,97 @@ def _pq_ctes() -> str:
         SELECT vec_id AS query_id, m, cell_id, d2 AS qd2
         FROM dists WHERE vec_id < {N_QUERIES}
     )"""
-    )
+)
 
+# Mirror of :func:`_ivfpq_adc_scored`: each ``cand`` pair's ADC distance
+# from its PQ codes.
+_ADC_SQL = f"""
+        SELECT c.query_id, c.vec_id, c.pr,
+               SUM(CAST(qd.qd2 AS {ex.SQL_DEC})) AS adec
+        FROM cand c
+        JOIN codes k ON k.vec_id = c.vec_id
+        JOIN qdists qd ON qd.query_id = c.query_id
+             AND qd.m = k.m AND qd.cell_id = k.code
+        GROUP BY 1, 2, 3"""
+_APPROX_D2 = "ROUND(CAST(adec AS DOUBLE), 6) AS approx_d2"
 
-ORACLE["knn_pq"] = f"""
-    WITH e AS (
-        SELECT vec_id, {V.as_double_sql("embedding")} AS v FROM embeddings
-    ){_pq_ctes()}, scored AS (
+ORACLE["knn_pq"] = f"""{_E_CTES}{_PQ_CTES}, scored AS (
         SELECT q.query_id, c.vec_id,
                SUM(CAST(q.qd2 AS {ex.SQL_DEC})) AS adec
         FROM codes c
         JOIN qdists q ON q.m = c.m AND q.cell_id = c.code
         WHERE c.vec_id != q.query_id
         GROUP BY q.query_id, c.vec_id
-    ), ranked AS (
-        SELECT query_id, vec_id, adec,
-               CAST(ROW_NUMBER() OVER (
-                   PARTITION BY query_id ORDER BY adec, vec_id
-               ) AS INTEGER) AS rank
-        FROM scored
     )
-    SELECT query_id, rank, vec_id,
-           ROUND(CAST(adec AS DOUBLE), 6) AS approx_d2
-    FROM ranked WHERE rank <= {TOP_K}
+    {_knn_out_sql("scored", "adec", _APPROX_D2)}
 """
 
-
-def _ivfpq_sql(rerank: bool) -> str:
-    """IVF-PQ oracle, optionally with the exact-rerank third stage (the
-    SQL mirror of :func:`knn_ivfpq` / :func:`knn_ivfpq_rerank`)."""
-    prefix = f"""
-    WITH e AS (
-        SELECT vec_id, {V.as_double_sql("embedding")} AS v FROM embeddings
-    ){_TRAIN_CTES}, cr AS (
-        SELECT e.vec_id, s.cell_id,
-               ROUND({V.cosine_sql("e.v", "s.cv")}, 6) AS cell_cos
-        FROM e CROSS JOIN seeds s
-    ), rc AS (
-        SELECT vec_id, cell_id, r FROM (
-            SELECT *, ROW_NUMBER() OVER (
-                PARTITION BY vec_id ORDER BY cell_cos DESC, cell_id) AS r
-            FROM cr
-        ) WHERE r <= (SELECT nprobe FROM pk)
-    ), ca AS (
-        SELECT vec_id, cell_id AS vcell FROM rc WHERE r = 1
-    ), probes AS (
-        SELECT vec_id AS query_id, cell_id FROM rc
-        WHERE vec_id < {N_QUERIES}
-    ){_pq_ctes()}, cand AS (
-        SELECT p.query_id, ca.vec_id
-        FROM ca JOIN probes p ON ca.vcell = p.cell_id
-        WHERE ca.vec_id != p.query_id
-    ), scored AS (
-        SELECT c.query_id, c.vec_id,
-               SUM(CAST(q.qd2 AS {ex.SQL_DEC})) AS adec
-        FROM cand c
-        JOIN codes k ON k.vec_id = c.vec_id
-        JOIN qdists q ON q.query_id = c.query_id
-             AND q.m = k.m AND q.cell_id = k.code
-        GROUP BY 1, 2
-    )"""
-    if not rerank:
-        return (
-            prefix
-            + f""", ranked AS (
-        SELECT query_id, vec_id, adec,
-               CAST(ROW_NUMBER() OVER (
-                   PARTITION BY query_id ORDER BY adec, vec_id
-               ) AS INTEGER) AS rank
-        FROM scored
-    )
-    SELECT query_id, rank, vec_id,
-           ROUND(CAST(adec AS DOUBLE), 6) AS approx_d2
-    FROM ranked WHERE rank <= {TOP_K}
+# IVF-PQ: the IVF candidates at nprobe, ADC-scored (the SQL mirror of
+# :func:`knn_ivfpq`); the rerank variant re-scores the ADC shortlist
+# exactly (:func:`knn_ivfpq_rerank`).
+_IVFPQ_SCORED_CTES = (
+    f"{_E_CTES}{_TRAIN_CTES}{_ivf_cand_sql(_NPROBE)}{_PQ_CTES}, scored AS ({_ADC_SQL})"
+)
+ORACLE["knn_ivfpq"] = f"""{_IVFPQ_SCORED_CTES}
+    {_knn_out_sql("scored", "adec", _APPROX_D2)}
 """
-        )
-    return (
-        prefix
-        + f""", shortlist AS (
-        SELECT query_id, vec_id FROM (
-            SELECT query_id, vec_id,
-                   ROW_NUMBER() OVER (
-                       PARTITION BY query_id ORDER BY adec, vec_id
-                   ) AS rr
-            FROM scored
-        ) WHERE rr <= {RERANK_R}
-    ), qv AS (
-        SELECT vec_id AS query_id, v AS qv FROM e
-        WHERE vec_id < {N_QUERIES}
-    ), exact AS (
-        SELECT s.query_id, s.vec_id,
-               ROUND({V.cosine_sql("q.qv", "e.v")}, 6) AS cosine
-        FROM shortlist s
-        JOIN e ON e.vec_id = s.vec_id
-        JOIN qv q ON q.query_id = s.query_id
-    ), rranked AS (
-        SELECT query_id, vec_id, cosine,
-               CAST(ROW_NUMBER() OVER (
-                   PARTITION BY query_id ORDER BY cosine DESC, vec_id
-               ) AS INTEGER) AS rank
-        FROM exact
-    )
-    SELECT query_id, rank, vec_id, cosine
-    FROM rranked WHERE rank <= {TOP_K}
-"""
-    )
+ORACLE["knn_ivfpq_rerank"] = _IVFPQ_SCORED_CTES + _rerank_sql(
+    "scored", "adec", RERANK_R
+)
 
-
-ORACLE["knn_ivfpq"] = _ivfpq_sql(rerank=False)
-ORACLE["knn_ivfpq_rerank"] = _ivfpq_sql(rerank=True)
-
-# SQ8 mirror: re-derives the normalized image, the corpus-derived scale
-# (one MAX scalar subquery — the sq8 analog of _PARAMS_CTE's COUNT), the
-# integer codes, and the symmetric integer dot. Every ranked comparison
-# is BIGINT, so the replay is bit-deterministic by construction.
-ORACLE["knn_sq8"] = f"""
-    WITH e AS (SELECT vec_id, {V.as_double_sql("embedding")} AS v FROM embeddings),
-    u AS (SELECT vec_id, {_VN} AS vn FROM e),
-    s AS (
-        SELECT {SQ8_LEVELS}.0
-               / MAX(list_aggregate(list_transform(vn, x -> ABS(x)), 'max'))
-                   AS sc
-        FROM u
-    ),
-    c AS (
-        SELECT vec_id,
-               list_transform(vn, x -> {_SQ8_CODE_SQL}) AS qv
-        FROM u CROSS JOIN s
-    ),
-    q AS (SELECT vec_id AS query_id, qv AS qq FROM c
-          WHERE vec_id < {N_QUERIES}),
-    scored AS (
-        SELECT q.query_id, c.vec_id,
-               CAST(list_dot_product(q.qq, c.qv) AS BIGINT) AS qdot
-        FROM c CROSS JOIN q WHERE c.vec_id != q.query_id
-    ),
-    ranked AS (
-        SELECT query_id, vec_id, qdot,
-               CAST(ROW_NUMBER() OVER (
-                   PARTITION BY query_id ORDER BY qdot DESC, vec_id
-               ) AS INTEGER) AS rank
-        FROM scored
-    )
-    SELECT query_id, rank, vec_id, qdot FROM ranked WHERE rank <= {TOP_K}
-"""
-
-# IVF × SQ8 composition mirror: the IVF training/assignment CTEs
-# (identical to _IVF_SQL) prune to the probed cells; candidates score
-# by the same integer code dot as the standalone sq8 oracle. The CTE
-# chain through ``scored`` is shared with the rerank variant.
-_IVF_SQ8_SCORED_CTES = f"""
-    WITH e AS (
-        SELECT vec_id, {V.as_double_sql("embedding")} AS v FROM embeddings
-    ){_TRAIN_CTES}, u AS (
+# SQ8 mirror of :func:`_sq8_codes`: the normalized image, the
+# corpus-derived scale (one MAX scalar subquery — the sq8 analog of
+# _PARAMS_CTE's COUNT), the integer codes ``c8`` and the query codes
+# ``q8``; ``_SQ8_DOT_SQL`` is the symmetric integer dot. Every ranked
+# comparison is BIGINT, so the replay is bit-deterministic by
+# construction.
+_SQ8_CTES = f"""
+    , u8 AS (
         SELECT vec_id, {_VN} AS vn FROM e
-    ), s8 AS (
-        SELECT {SQ8_LEVELS}.0
-               / MAX(list_aggregate(list_transform(vn, x -> ABS(x)), 'max'))
-                   AS sc
-        FROM u
     ), c8 AS (
-        SELECT vec_id,
-               list_transform(vn, x -> {_SQ8_CODE_SQL}) AS qv
-        FROM u CROSS JOIN s8
-    ), scored_cells AS (
-        SELECT e.vec_id, s.cell_id,
-               ROUND({V.cosine_sql("e.v", "s.cv")}, 6) AS cell_cos
-        FROM e CROSS JOIN seeds s
-    ), ranked_cells AS (
-        SELECT vec_id, cell_id, cell_cos,
-               ROW_NUMBER() OVER (
-                   PARTITION BY vec_id ORDER BY cell_cos DESC, cell_id
-               ) AS r
-        FROM scored_cells
-    ), assign AS (
-        SELECT vec_id, cell_id FROM ranked_cells WHERE r = 1
-    ), probes AS (
-        SELECT vec_id AS query_id, cell_id FROM ranked_cells
-        WHERE vec_id < {N_QUERIES} AND r <= (SELECT nprobe FROM pk)
+        SELECT vec_id, list_transform(vn, x -> {_SQ8_CODE_SQL}) AS qv
+        FROM u8 CROSS JOIN (
+            SELECT {SQ8_LEVELS}.0
+                   / MAX(list_aggregate(list_transform(vn, x -> ABS(x)), 'max'))
+                       AS sc
+            FROM u8
+        )
     ), q8 AS (
-        SELECT vec_id AS query_id, qv AS qq FROM c8
-        WHERE vec_id < {N_QUERIES}
-    ), scored AS (
-        SELECT p.query_id, a.vec_id,
-               CAST(list_dot_product(q8.qq, c8.qv) AS BIGINT) AS qdot
-        FROM probes p
-        JOIN assign a ON a.cell_id = p.cell_id AND a.vec_id != p.query_id
-        JOIN c8 ON c8.vec_id = a.vec_id
-        JOIN q8 ON q8.query_id = p.query_id
+        SELECT vec_id AS query_id, qv AS qq FROM c8 WHERE vec_id < {N_QUERIES}
     )"""
+_SQ8_DOT_SQL = "CAST(list_dot_product(q8.qq, c8.qv) AS BIGINT) AS qdot"
 
-ORACLE["knn_ivf_sq8"] = f"""{_IVF_SQ8_SCORED_CTES}, ranked AS (
-        SELECT query_id, vec_id, qdot,
-               CAST(ROW_NUMBER() OVER (
-                   PARTITION BY query_id ORDER BY qdot DESC, vec_id
-               ) AS INTEGER) AS rank
-        FROM scored
+ORACLE["knn_sq8"] = f"""{_E_CTES}{_SQ8_CTES}, scored AS (
+        SELECT q8.query_id, c8.vec_id, {_SQ8_DOT_SQL}
+        FROM c8 CROSS JOIN q8 WHERE c8.vec_id != q8.query_id
     )
-    SELECT query_id, rank, vec_id, qdot FROM ranked WHERE rank <= {TOP_K}
+    {_knn_out_sql("scored", "qdot DESC", "qdot")}
 """
 
-# Rerank mirror: the same scored relation shortlists by integer dot
-# (rr <= SQ8_RERANK_R), then the ORIGINAL float vectors re-score the
-# shortlist exactly — the identical two-window shape as the Spark side.
-ORACLE["knn_sq8_rerank"] = f"""{_IVF_SQ8_SCORED_CTES}, sl AS (
-        SELECT query_id, vec_id,
-               ROW_NUMBER() OVER (
-                   PARTITION BY query_id ORDER BY qdot DESC, vec_id
-               ) AS rr
-        FROM scored
-    ), rx AS (
-        SELECT s.query_id, s.vec_id,
-               ROUND({V.cosine_sql("qe.v", "e.v")}, 6) AS cosine
-        FROM sl s
-        JOIN e ON e.vec_id = s.vec_id
-        JOIN e qe ON qe.vec_id = s.query_id
-        WHERE s.rr <= {SQ8_RERANK_R}
-    ), ranked AS (
-        SELECT query_id, vec_id, cosine,
-               CAST(ROW_NUMBER() OVER (
-                   PARTITION BY query_id ORDER BY cosine DESC, vec_id
-               ) AS INTEGER) AS rank
-        FROM rx
-    )
-    SELECT query_id, rank, vec_id, cosine FROM ranked WHERE rank <= {TOP_K}
+
+def _ivf_sq8_sql(cand: str) -> str:
+    """Mirror of :func:`_ivf_sq8_scored`: the ``cand`` pairs scored by
+    the integer SQ8 code dot."""
+    return f"""
+        SELECT c.query_id, c.vec_id, {_SQ8_DOT_SQL}
+        FROM {cand} c
+        JOIN c8 ON c8.vec_id = c.vec_id
+        JOIN q8 ON q8.query_id = c.query_id"""
+
+
+# IVF × SQ8 composition: the IVF candidates at nprobe scored by the same
+# integer code dot as the standalone sq8 oracle; the rerank variant
+# re-scores the integer-dot shortlist with the ORIGINAL float vectors.
+_IVF_SQ8_SCORED_CTES = (
+    f"{_E_CTES}{_TRAIN_CTES}{_ivf_cand_sql(_NPROBE)}{_SQ8_CTES}"
+    f", scored AS ({_ivf_sq8_sql('cand')})"
+)
+ORACLE["knn_ivf_sq8"] = f"""{_IVF_SQ8_SCORED_CTES}
+    {_knn_out_sql("scored", "qdot DESC", "qdot")}
 """
+ORACLE["knn_sq8_rerank"] = _IVF_SQ8_SCORED_CTES + _rerank_sql(
+    "scored", "qdot DESC", SQ8_RERANK_R
+)
 
 # Recall oracles: each method's full oracle SQL nests as a CTE (DuckDB
 # allows WITH inside a CTE body), so the ground truth and every
@@ -2720,6 +2570,7 @@ def _recall_report_sql(methods: tuple[str, ...]) -> str:
 for _fam, _fam_methods in RECALL_FAMILIES.items():
     ORACLE[f"knn_recall_report_{_fam}"] = _recall_report_sql(_fam_methods)
 
+
 def _frontier_sql(method: str, scored: str, levels: str, order: str) -> str:
     """CTE chain for one method's frontier rows: level the scored
     candidates (pr ≤ probe), rank within (probe, query), count hits vs
@@ -2732,14 +2583,8 @@ def _frontier_sql(method: str, scored: str, levels: str, order: str) -> str:
     ), {method}_cr AS (
         SELECT probe, COUNT(*) AS cand_rows FROM {method}_lv GROUP BY probe
     ), {method}_tk AS (
-        SELECT probe, query_id, vec_id FROM (
-            SELECT probe, query_id, vec_id,
-                   ROW_NUMBER() OVER (
-                       PARTITION BY probe, query_id
-                       ORDER BY {order}, vec_id
-                   ) AS rk
-            FROM {method}_lv
-        ) WHERE rk <= {TOP_K}
+        SELECT probe, query_id, vec_id
+        FROM ({_top_sql(f"{method}_lv", order, TOP_K, "probe, query_id")})
     ), {method}_h AS (
         SELECT t.probe, t.query_id, COUNT(*) AS n_hits
         FROM {method}_tk t
@@ -2785,6 +2630,13 @@ def _tradeoff_sql() -> str:
         f"({m}, {d})" for m, d in _lsh_probe_masks(LSH_MT_RADIUS)
     )
     tl_vals = ", ".join(f"({x})" for x in range(1, V.LSH_TABLES + 1))
+    # sq8_rr depth = the candidate's integer-dot rank among the IVF×SQ8
+    # candidates at the shipped nprobe, cut at the deepest level
+    sq8_short = _top_sql(
+        f"({_ivf_sq8_sql(f'(SELECT * FROM cand WHERE pr <= {_NPROBE})')})",
+        "qdot DESC",
+        max(SQ8_RERANK_LEVELS),
+    )
     v = V.as_double_sql("embedding")
     return f"""
     WITH e AS (
@@ -2793,51 +2645,12 @@ def _tradeoff_sql() -> str:
     ), q AS (
         SELECT vec_id AS query_id, v AS qv, sig AS qsig FROM e
         WHERE vec_id < {N_QUERIES}
-    ), bf_sc AS (
-        SELECT q.query_id, e.vec_id, ROUND({V.cosine_sql("q.qv", "e.v")}, 6) AS cosine
-        FROM e CROSS JOIN q WHERE e.vec_id != q.query_id
-    ), bf AS (
-        SELECT query_id, vec_id FROM (
-            SELECT query_id, vec_id,
-                   ROW_NUMBER() OVER (
-                       PARTITION BY query_id ORDER BY cosine DESC, vec_id
-                   ) AS rk
-            FROM bf_sc
-        ) WHERE rk <= {TOP_K}
+    ), bf AS ({ORACLE["knn_bruteforce"]}
     ), truth AS (
         SELECT query_id, COUNT(*) AS n_true FROM bf GROUP BY query_id
-    ){_TRAIN_CTES}, cr AS (
-        SELECT e.vec_id, s.cell_id,
-               ROUND({V.cosine_sql("e.v", "s.cv")}, 6) AS cell_cos
-        FROM e CROSS JOIN seeds s
-    ), rc AS (
-        SELECT vec_id, cell_id, r FROM (
-            SELECT *, ROW_NUMBER() OVER (
-                PARTITION BY vec_id ORDER BY cell_cos DESC, cell_id) AS r
-            FROM cr
-        ) WHERE r <= (SELECT maxprobe FROM pk)
-    ), ca AS (
-        SELECT rc.vec_id, rc.cell_id AS vcell, e.v
-        FROM rc JOIN e ON e.vec_id = rc.vec_id WHERE rc.r = 1
-    ), iprobes AS (
-        SELECT vec_id AS query_id, cell_id, r AS pr FROM rc
-        WHERE vec_id < {N_QUERIES}
-    ), icand AS (
-        SELECT p.query_id, a.vec_id, p.pr, a.v
-        FROM iprobes p
-        JOIN ca a ON a.vcell = p.cell_id AND a.vec_id != p.query_id
-    ), ivf_scored AS (
-        SELECT c.query_id, c.vec_id, c.pr,
-               ROUND({V.cosine_sql("q.qv", "c.v")}, 6) AS cos
-        FROM icand c JOIN q ON q.query_id = c.query_id
-    ){_pq_ctes()}, pq_scored AS (
-        SELECT c.query_id, c.vec_id, c.pr,
-               SUM(CAST(qd.qd2 AS {ex.SQL_DEC})) AS adec
-        FROM icand c
-        JOIN codes k ON k.vec_id = c.vec_id
-        JOIN qdists qd ON qd.query_id = c.query_id
-             AND qd.m = k.m AND qd.cell_id = k.code
-        GROUP BY 1, 2, 3
+    ){_TRAIN_CTES}{_ivf_cand_sql(_MAXPROBE)}
+    , ivf_scored AS ({_exact_sql("cand")}
+    ){_PQ_CTES}, pq_scored AS ({_ADC_SQL}
     ), masks AS (
         SELECT * FROM (VALUES {mask_vals}) AS m(mask, d)
     ), psigs AS (
@@ -2845,7 +2658,7 @@ def _tradeoff_sql() -> str:
         FROM q CROSS JOIN masks m
     ), lsh_scored AS (
         SELECT p.query_id, e.vec_id, p.pr,
-               ROUND({V.cosine_sql("p.qv", "e.v")}, 6) AS cos
+               ROUND({V.cosine_sql("p.qv", "e.v")}, 6) AS cosine
         FROM e JOIN psigs p
              ON e.sig = p.psig AND e.vec_id != p.query_id
     ), emt AS (
@@ -2863,62 +2676,23 @@ def _tradeoff_sql() -> str:
           ON c.tbl = p.ptbl AND c.sig = p.psig
          AND c.vec_id != p.query_id
         GROUP BY 1, 2
-    ), mt_scored AS (
-        SELECT mp.query_id, mp.vec_id, mp.pr_r, mp.pr_t,
-               ROUND({V.cosine_sql("q.qv", "e2.v")}, 6) AS cos
-        FROM mtpairs mp
-        JOIN q ON q.query_id = mp.query_id
-        JOIN e e2 ON e2.vec_id = mp.vec_id
+    ), mt_scored AS ({_exact_sql("mtpairs")}
     ), mt_scored_r AS (
-        SELECT query_id, vec_id, pr_r AS pr, cos FROM mt_scored
+        SELECT query_id, vec_id, pr_r AS pr, cosine FROM mt_scored
     ), mt_scored_t AS (
-        SELECT query_id, vec_id, pr_t AS pr, cos FROM mt_scored
-    ), u8 AS (
-        SELECT vec_id, {_VN} AS vn FROM e
-    ), s8 AS (
-        SELECT {SQ8_LEVELS}.0
-               / MAX(list_aggregate(list_transform(vn, x -> ABS(x)), 'max'))
-                   AS sc
-        FROM u8
-    ), c8 AS (
-        SELECT vec_id, list_transform(vn, x -> {_SQ8_CODE_SQL}) AS qv
-        FROM u8 CROSS JOIN s8
-    ), q8 AS (
-        SELECT vec_id AS query_id, qv AS qq FROM c8
-        WHERE vec_id < {N_QUERIES}
-    ), sq8dots AS (
-        SELECT c.query_id, c.vec_id,
-               CAST(list_dot_product(q8.qq, c8.qv) AS BIGINT) AS qdot
-        FROM icand c
-        JOIN c8 ON c8.vec_id = c.vec_id
-        JOIN q8 ON q8.query_id = c.query_id
-        WHERE c.pr <= (SELECT nprobe FROM pk)
-    ), sq8rk AS (
-        SELECT query_id, vec_id,
-               ROW_NUMBER() OVER (
-                   PARTITION BY query_id ORDER BY qdot DESC, vec_id
-               ) AS pr
-        FROM sq8dots
-    ), sq8rr_scored AS (
-        SELECT r.query_id, r.vec_id, r.pr,
-               ROUND({V.cosine_sql("q.qv", "e2.v")}, 6) AS cos
-        FROM sq8rk r
-        JOIN q ON q.query_id = r.query_id
-        JOIN e e2 ON e2.vec_id = r.vec_id
-    ), np AS (
-        SELECT DISTINCT CAST(probe AS INTEGER) AS probe FROM (
-            SELECT UNNEST([(k + 15) // 16, (k + 7) // 8, (k + 3) // 4,
-                           (k + 2) // 3, (k + 1) // 2]) AS probe FROM pk
-        )
-    ), rd AS (SELECT * FROM (VALUES {rd_vals}) AS l(probe)
+        SELECT query_id, vec_id, pr_t AS pr, cosine FROM mt_scored
+    ){_SQ8_CTES}, sq8rk AS (
+        SELECT query_id, vec_id, rank AS pr FROM ({sq8_short})
+    ), sq8rr_scored AS ({_exact_sql("sq8rk")}
+    ){_LEVELS_CTE}, rd AS (SELECT * FROM (VALUES {rd_vals}) AS l(probe)
     ), tl AS (SELECT * FROM (VALUES {tl_vals}) AS l(probe)
     ), rrl AS (SELECT * FROM (VALUES {rr_vals}) AS l(probe)
-    ){_frontier_sql("lsh", "lsh_scored", "rd", "cos DESC")}
-    {_frontier_sql("ivf", "ivf_scored", "np", "cos DESC")}
+    ){_frontier_sql("lsh", "lsh_scored", "rd", "cosine DESC")}
+    {_frontier_sql("ivf", "ivf_scored", "np", "cosine DESC")}
     {_frontier_sql("ivfpq", "pq_scored", "np", "adec ASC")}
-    {_frontier_sql("lsh_mt", "mt_scored_r", "rd", "cos DESC")}
-    {_frontier_sql("lsh_mt_tables", "mt_scored_t", "tl", "cos DESC")}
-    {_frontier_sql("sq8_rr", "sq8rr_scored", "rrl", "cos DESC")}
+    {_frontier_sql("lsh_mt", "mt_scored_r", "rd", "cosine DESC")}
+    {_frontier_sql("lsh_mt_tables", "mt_scored_t", "tl", "cosine DESC")}
+    {_frontier_sql("sq8_rr", "sq8rr_scored", "rrl", "cosine DESC")}
     SELECT * FROM lsh_out
     UNION ALL SELECT * FROM ivf_out
     UNION ALL SELECT * FROM ivfpq_out
@@ -2940,17 +2714,8 @@ _FOOTPRINT_CONST_FRONTIER_ROWS = (
     + V.LSH_TABLES  # lsh_mt_tables axis
     + len(SQ8_RERANK_LEVELS)  # sq8_rr rerank-depth axis
 )
-ORACLE["knn_index_footprint"] = f"""
-    WITH e AS (
-        SELECT vec_id, {V.as_double_sql("embedding")} AS v FROM embeddings
-    ){_TRAIN_CTES}{_pq_ctes()}, nl AS (
-        SELECT COUNT(*) AS nl FROM (
-            SELECT DISTINCT UNNEST([(k + 15) // 16, (k + 7) // 8,
-                                    (k + 3) // 4, (k + 2) // 3,
-                                    (k + 1) // 2]) AS probe
-            FROM pk
-        )
-    ), counts AS (
+ORACLE["knn_index_footprint"] = f"""{_E_CTES}{_TRAIN_CTES}{_PQ_CTES}{_LEVELS_CTE}
+    , counts AS (
         SELECT 'ground_truth' AS artifact,
                {N_QUERIES} * {TOP_K} AS n_rows
         UNION ALL SELECT 'ivf_codebook', (SELECT COUNT(*) FROM seeds)
@@ -2964,7 +2729,7 @@ ORACLE["knn_index_footprint"] = f"""
         UNION ALL SELECT 'pq_codes', (SELECT n FROM pk) * {PQ_M}
         UNION ALL SELECT 'pq_subcodebook', (SELECT COUNT(*) FROM sseeds)
         UNION ALL SELECT 'recall_frontier',
-            {_FOOTPRINT_CONST_FRONTIER_ROWS} + 2 * (SELECT nl FROM nl)
+            {_FOOTPRINT_CONST_FRONTIER_ROWS} + 2 * (SELECT COUNT(*) FROM np)
         UNION ALL SELECT 'sq8_codes', (SELECT n FROM pk)
     )
     SELECT artifact, CAST(n_rows AS BIGINT) AS n_rows,
@@ -3052,18 +2817,10 @@ ORACLE["knn_index_update_stats"] = f"""
         SELECT vec_id, {V.as_double_sql("embedding")} AS v FROM embeddings
     ), e AS (
         SELECT * FROM eall WHERE vec_id % {SPLIT_MOD} != 0
-    ){_TRAIN_CTES}, sc AS (
-        SELECT a.vec_id, s.cell_id,
-               ROUND({V.cosine_sql("a.v", "s.cv")}, 6) AS c
-        FROM eall a CROSS JOIN seeds s
-    ), asn AS (
-        SELECT vec_id, cell_id, c,
+    ){_TRAIN_CTES}{_cells_sql("1", "eall")}, asn AS (
+        SELECT cell_id, cell_cos AS c,
                (vec_id % {SPLIT_MOD} = 0) AS incoming
-        FROM (
-            SELECT *, ROW_NUMBER() OVER (
-                PARTITION BY vec_id ORDER BY c DESC, cell_id) AS r
-            FROM sc
-        ) WHERE r = 1
+        FROM cells
     )
     SELECT cell_id,
            CAST(SUM(CASE WHEN NOT incoming THEN 1 ELSE 0 END) AS BIGINT)

@@ -45,7 +45,6 @@ DOCUMENT_SCHEMA = T.StructType(
 )
 
 DEFAULT_WATERMARK = "1 hour"
-QUALITY_MIN = 0.4
 
 
 def read_document_stream(spark: SparkSession, path: str) -> DataFrame:
@@ -54,23 +53,20 @@ def read_document_stream(spark: SparkSession, path: str) -> DataFrame:
     return file_stream(spark, path, DOCUMENT_SCHEMA)
 
 
-def clean_quality_stream(
-    docs: DataFrame, quality_min: float = QUALITY_MIN
-) -> DataFrame:
+def clean_quality_stream(docs: DataFrame) -> DataFrame:
     """Stateless clean + quality gate: strip markup, redact PII, collapse
     whitespace, score, and drop below-threshold docs. Identical column
     expressions to the batch pipeline — pure projections, zero state."""
     return (
         docs.withColumn("clean_text", tx.clean_text("text"))
         .withColumn("quality", tx.quality_score("clean_text"))
-        .where(F.col("quality") >= quality_min)
+        .where(F.col("quality") >= tx.QUALITY_MIN)
         .select("doc_id", "ingest_ts", "lang", "source", "clean_text", "quality")
     )
 
 
 def curated_stream(
     docs: DataFrame,
-    quality_min: float = QUALITY_MIN,
     watermark: str = DEFAULT_WATERMARK,
 ) -> DataFrame:
     """Clean → quality gate → streaming exact dedup on the cleaned text's
@@ -78,7 +74,7 @@ def curated_stream(
     content hash and evicts state older than the watermark — bounded
     state, the streaming analog of the batch pipeline's keep-first
     exact-dedup stage."""
-    gated = clean_quality_stream(docs, quality_min).withColumn(
+    gated = clean_quality_stream(docs).withColumn(
         "content_hash", F.md5("clean_text")
     )
     return gated.withWatermark("ingest_ts", watermark).dropDuplicatesWithinWatermark(
@@ -90,7 +86,6 @@ def write_curated_stream(
     docs: DataFrame,
     out_dir: str,
     checkpoint_dir: str,
-    quality_min: float = QUALITY_MIN,
     watermark: str = DEFAULT_WATERMARK,
 ):
     """Continuously write the curated survivors as lang-partitioned
@@ -104,7 +99,7 @@ def write_curated_stream(
     makes re-delivery rare, and re-delivered docs are exact duplicates a
     downstream exact-dedup pass removes — acceptable for corpus ingest.
     Returns the started StreamingQuery (caller stops/awaits)."""
-    kept = curated_stream(docs, quality_min, watermark)
+    kept = curated_stream(docs, watermark)
 
     def _write(batch_df: DataFrame, _batch_id: int) -> None:
         batch_df.write.mode("append").partitionBy("lang").parquet(out_dir)
@@ -196,7 +191,7 @@ def _curated_oracle_sql() -> str:
         FROM cleaned
     ), survivors AS (
         SELECT lang, clean_text, MAX(quality) AS q
-        FROM quality WHERE quality >= {QUALITY_MIN}
+        FROM quality WHERE quality >= {tx.QUALITY_MIN}
         GROUP BY lang, clean_text
     )
     SELECT lang, COUNT(*) AS n_kept,
@@ -217,14 +212,13 @@ QUERIES = {
 
 def curation_counters_stream(
     docs: DataFrame,
-    quality_min: float = QUALITY_MIN,
     watermark: str = DEFAULT_WATERMARK,
 ) -> DataFrame:
     """Per-lang survivor accounting over the curated stream (windowed by
     ingest hour so the aggregation state finalizes and evicts with the
     watermark — an unwindowed running count would hold every lang×total
     row open forever in append mode)."""
-    kept = curated_stream(docs, quality_min, watermark)
+    kept = curated_stream(docs, watermark)
     return (
         kept.groupBy(F.window("ingest_ts", "1 hour").alias("w"), "lang")
         .agg(

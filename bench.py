@@ -44,7 +44,7 @@ HEADLINE = [
 
 
 def _calibrate() -> float:
-    """Fixed ALL-CORES CPU probe (~0.2-0.4 s on this host when quiet).
+    """Fixed ALL-CORES CPU probe (0.07-0.10 s on a quiet 4-core host).
 
     Repeated runs of identical code on this VM have measured totals from
     74.7 s to 135.9 s — ambient neighbor noise, diffuse across unrelated

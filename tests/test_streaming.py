@@ -363,7 +363,7 @@ def test_streaming_curation_dedups_and_gates(spark, doc_stream_dir):
     batch = (
         static.withColumn("clean_text", tx.clean_text("text"))
         .withColumn("quality", tx.quality_score("clean_text"))
-        .where(F.col("quality") >= ds.QUALITY_MIN)
+        .where(F.col("quality") >= tx.QUALITY_MIN)
         .select(F.md5("clean_text").alias("h"))
         .distinct()
     )
@@ -412,7 +412,7 @@ def test_streaming_curated_partitioned_sink(spark, doc_stream_dir, tmp_path):
     batch_n = (
         static.withColumn("clean_text", tx.clean_text("text"))
         .withColumn("quality", tx.quality_score("clean_text"))
-        .where(F.col("quality") >= ds.QUALITY_MIN)
+        .where(F.col("quality") >= tx.QUALITY_MIN)
         .select(F.md5("clean_text"))
         .distinct()
         .count()

@@ -192,3 +192,52 @@ def test_vector_twins(spark, dim):
     assert [r.norm for r in row] == _duck_vectors(V.norm_sql(sa), a, b)
     assert [r.d2 for r in row] == _duck_vectors(V.sq_dist_sql(sa, sb, dim), a, b)
     assert [r.cos for r in row] == _duck_vectors(V.cosine_sql(sa, sb), a, b)
+
+
+@pytest.mark.parametrize("dim", [4, V.DIM])
+def test_mean_vector_twin(spark, dim):
+    vs = _vectors(12, dim)
+    groups = [0, 0, 0, 1, 1, 2, 2, 2, 2, 3, 0, 1]
+    df = spark.createDataFrame(
+        list(zip(groups, vs)), "g int, v array<float>"
+    ).select("g", V.as_double("v").alias("v")).repartition(3)
+    got = sorted(tuple(r) for r in V.mean_vector(df, ["g"], "v").collect())
+    con = duckdb.connect()
+    con.execute(
+        "CREATE TABLE t0 AS SELECT UNNEST(?) AS g, CAST(UNNEST(?) AS FLOAT[]) AS v",
+        [groups, vs],
+    )
+    con.execute(f"CREATE TABLE t AS SELECT g, {V.as_double_sql('v')} AS v FROM t0")
+    want = sorted(con.execute(V.mean_vector_sql("t", ["g"], "v", dim)).fetchall())
+    assert got == want
+    assert [len(v) for _, v in got] == [dim] * 4
+
+
+def test_unrolled_kernels_equal_their_folds(spark):
+    """Each codegen'd unrolled chain returns exactly its fold's value:
+    ``dot_unrolled`` over integer SQ8-range codes (and stays integer),
+    ``sq_dist_unrolled`` and ``cosine_unrolled`` over doubles."""
+    rng = np.random.RandomState(5)
+    codes = rng.randint(-127, 128, (8, V.DIM)).tolist()
+    vs = _vectors(16, V.DIM)
+    df = spark.createDataFrame(
+        list(zip(range(8), codes, codes[::-1], vs[:8], vs[8:])),
+        "rid int, qa array<long>, qb array<long>, a array<float>, b array<float>",
+    ).select("rid", "qa", "qb", V.as_double("a").alias("a"), V.as_double("b").alias("b"))
+    out = df.select(
+        "rid",
+        V.dot_unrolled("qa", "qb").alias("qdot"),
+        V.dot(F.col("qa"), F.col("qb")).alias("qdot_fold"),
+        V.sq_dist_unrolled("a", "b").alias("d2"),
+        V.sq_dist(F.col("a"), F.col("b")).alias("d2_fold"),
+        V.sq_dist_unrolled("a", "b", 5).alias("d2_5"),
+        V.sq_dist(F.slice("a", 1, 5), F.slice("b", 1, 5)).alias("d2_5_fold"),
+        V.cosine_unrolled("a", "b").alias("cos"),
+        V.cosine(F.col("a"), F.col("b")).alias("cos_fold"),
+    )
+    assert dict(out.dtypes)["qdot"] == "bigint"
+    rows = out.orderBy("rid").collect()
+    for r in rows:
+        assert r.qdot == r.qdot_fold
+        assert (r.d2, r.d2_5, r.cos) == (r.d2_fold, r.d2_5_fold, r.cos_fold)
+    assert len({r.qdot for r in rows}) > 1
